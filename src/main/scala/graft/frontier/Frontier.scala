@@ -130,26 +130,10 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
   /** Exposed for tests asserting the executor-visible conf contents. */
   private[frontier] def taskHadoopConfBroadcast = taskConfB
 
-  // ----------------------------------------------------------------
-  // Driver-side listing caches
-  // ----------------------------------------------------------------
-  // The wave loop used to re-list the seen/maint/fence delta roots and
-  // every backlog bucket dir on EVERY read (refill phases A and B,
-  // accounting, compaction probes) — O(dirs) FS round-trips per wave
-  // from the driver. Delta dirs are immutable once written and only
-  // this instance writes or compacts them (single-writer crawl), so
-  // the listings are memoized: the wave-number sets update on write /
-  // compact, and per-dir bucket listings are invalidated only for the
-  // dir being (re)written. External deletions are part of the crash
-  // contract only for the latest UNCOMMITTED wave — whose dirs a
-  // re-run rewrites (and re-caches) before any read. Every real
-  // listStatus bumps `Frontier.fsListCount` (test instrumentation for
-  // the O(changed-dirs) contract).
-
   /** Per-instance count of real FileSystem list/exists calls issued by
-    * the cached listing helpers (the companion-level counter aggregates
-    * across instances; tests assert on THIS one to stay immune to
-    * suites running in parallel). */
+    * the memoized listings (the state stores' marker and delta listings
+    * and the backlog `bkb=` child listings) — a steady wave must issue
+    * O(changed dirs), not O(all delta dirs × buckets). */
   private[frontier] val fsListOps = new java.util.concurrent.atomic.AtomicLong
 
   /** Thread-local job description — makes GRAFT_JOBLOG attribution
@@ -157,46 +141,20 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
   private def jd(label: String): Unit =
     spark.sparkContext.setJobDescription(label)
 
-  private val seenWavesCache = new java.util.concurrent.atomic.AtomicReference[Set[Int]](null)
-  private val spillWavesCache = new java.util.concurrent.atomic.AtomicReference[Set[Int]](null)
-  private val fenceWavesCache = new java.util.concurrent.atomic.AtomicReference[Set[Int]](null)
+  private val markers = new Markers(spark, cfg.checkpointDir)
+
+  // The three versioned state stores (protocol: see StateStore).
+  private[frontier] val seenStore = new StateStore(spark, markers, cfg.checkpointDir,
+    "seen_base", "SEEN_BASE-", "seen", None, fsListOps)
+  private[frontier] val fenceStore = new StateStore(spark, markers, cfg.checkpointDir,
+    "fence_base", "FENCE_BASE-", "fence_delta", None, fsListOps)
+  private[frontier] val backlogStore = new StateStore(spark, markers, cfg.checkpointDir,
+    "backlog_base", "BACKLOG_BASE-", "maint", Some("dest=spill"), fsListOps)
+
+  /** Memoized `bkb=` child listings of backlog dirs (immutable once
+    * written; the writer invalidates the one dir it rewrites). */
   private val bucketDirCache =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, String)]]()
-
-  /** Committed-or-pending delta wave numbers under `<root>/wave=N`,
-    * memoized. `sub` optionally requires a child (e.g. dest=spill). */
-  private def listWaveDirs(root: String, sub: Option[String]): Set[Int] = {
-    val p = new org.apache.hadoop.fs.Path(cfg.checkpointDir, root)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    Frontier.fsListCount.incrementAndGet(); fsListOps.incrementAndGet()
-    if (!fs.exists(p)) return Set.empty
-    fs.listStatus(p).toSeq.flatMap { st =>
-      st.getPath.getName.stripPrefix("wave=").toIntOption
-        .filter(_ => st.getPath.getName.startsWith("wave="))
-        .filter { _ =>
-          sub.forall { s =>
-            Frontier.fsListCount.incrementAndGet(); fsListOps.incrementAndGet()
-            fs.exists(new org.apache.hadoop.fs.Path(st.getPath, s))
-          }
-        }
-    }.toSet
-  }
-
-  private def cachedWaves(cache: java.util.concurrent.atomic.AtomicReference[Set[Int]],
-                          root: String, sub: Option[String] = None): Set[Int] = {
-    val cur = cache.get()
-    if (cur != null) cur
-    else { val fresh = listWaveDirs(root, sub); cache.set(fresh); fresh }
-  }
-
-  private def cacheAdd(cache: java.util.concurrent.atomic.AtomicReference[Set[Int]],
-                       w: Int): Unit = {
-    val cur = cache.get(); if (cur != null) cache.set(cur + w)
-  }
-  private def cacheDrop(cache: java.util.concurrent.atomic.AtomicReference[Set[Int]],
-                        upTo: Int): Unit = {
-    val cur = cache.get(); if (cur != null) cache.set(cur.filter(_ > upTo))
-  }
 
   // ----------------------------------------------------------------
   // URL canonicalization + keys
@@ -354,139 +312,29 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     } catch { case _: Exception => }
   }
 
-  /** Compacted base (`seen_base/upto=B`) + per-wave seen DELTAS for
-    * waves in (B, wave]. Seen state is stored as deltas — each wave
-    * persists ONLY its fresh keys — so per-wave seen maintenance
-    * writes O(fresh), not O(total seen) (at 10^10 URLs a full rewrite
-    * would move ~1 TB of key strings every wave). Paths are
-    * enumerated explicitly, so an uncommitted (crashed) later wave's
-    * partial files — and any delta dir already folded into the base —
-    * are never read. */
+  /** Seen membership as of `wave`: the seen store's read set. Seen
+    * state is stored as deltas — each wave persists ONLY its fresh keys
+    * — so per-wave seen maintenance writes O(fresh), not O(total seen)
+    * (at 10^10 URLs a full rewrite would move ~1 TB of key strings
+    * every wave). */
   private def seenUpTo(wave: Int): DataFrame = {
     import org.apache.spark.sql.types.{StructType, StructField, StringType}
     val schema = StructType(Seq(StructField("surt_key", StringType)))
-    val base = latestSeenBase(wave)
-    val b = base.getOrElse(-1)
-    val paths = base.map(bb => dir("seen_base", s"upto=$bb")).toSeq ++
-      seenDeltaWaves().filter(w => w > b && w <= wave).sorted.map(w => dir("seen", s"wave=$w"))
+    val paths = seenStore.readSet(wave)
     if (paths.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     else spark.read.schema(schema).parquet(paths: _*).select("surt_key")
   }
 
-  /** Committed delta-dir wave numbers present on disk (memoized). */
-  private def seenDeltaWaves(): Seq[Int] =
-    cachedWaves(seenWavesCache, "seen").toSeq
-
-  /** Reclaim base dirs whose publish marker never landed (a crash
-    * between the O(state)-sized base write and the marker): readers
-    * already ignore them, but nothing else ever deletes them — each
-    * crash would otherwise strand a full state-sized directory
-    * forever. Runs at the next compaction of the same kind. */
-  private def sweepOrphanBases(baseDir: String, markerPrefix: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(cfg.checkpointDir, baseDir)
-    try {
-      val fs = root.getFileSystem(conf)
-      if (!fs.exists(root)) return
-      fs.listStatus(root).foreach { st =>
-        st.getPath.getName.stripPrefix("upto=").toIntOption.foreach { u =>
-          if (!markerExists(s"$markerPrefix$u.json"))
-            try { fs.delete(st.getPath, true); () } catch { case _: Exception => }
-        }
-      }
-    } catch { case _: Exception => }
-  }
-
-  /** Largest published compaction base ≤ wave, if any. */
-  private def latestSeenBase(wave: Int): Option[Int] = {
-    val re = "SEEN_BASE-(\\d+)\\.json".r
-    val best = listMarkerWaves(re).filter(_ <= wave)
-    if (best.isEmpty) None else Some(best.max)
-  }
-
-  /** Wave numbers of marker files `<re>` in the checkpoint root —
-    * through the checkpoint's Hadoop FileSystem (NOT java.nio), so the
-    * commit protocol works on hdfs:/s3a:/file: alike. */
-  private def listMarkerWaves(re: scala.util.matching.Regex): Seq[Int] = {
-    val d = new org.apache.hadoop.fs.Path(cfg.checkpointDir)
-    val fs = Frontier.rawFs(d, spark.sessionState.newHadoopConf())
-    if (!fs.exists(d)) return Nil
-    fs.listStatus(d).toSeq.flatMap(st => st.getPath.getName match {
-      case re(n) => Some(n.toInt)
-      case _     => None
-    })
-  }
-
-  /** Atomic marker publish: write to a dot-tmp on the SAME filesystem,
-    * then rename onto the final name (atomic on HDFS and posix local
-    * fs; the accepted create-then-rename pattern on object stores). */
-  private def publishMarker(name: String, json: String): Unit = {
-    val d = new org.apache.hadoop.fs.Path(cfg.checkpointDir)
-    val fs = Frontier.rawFs(d, spark.sessionState.newHadoopConf())
-    fs.mkdirs(d)
-    val tmp = new org.apache.hadoop.fs.Path(d, s".$name.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(d, name)
-    fs.delete(dst, false) // idempotent re-publish (wave re-run)
-    require(fs.rename(tmp, dst), s"marker publish failed: $dst")
-  }
-
-  private def markerExists(name: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(cfg.checkpointDir, name)
-    Frontier.rawFs(p, spark.sessionState.newHadoopConf()).exists(p)
-  }
-
-  /** Content of a published marker, or None when absent/unreadable. */
-  private def readMarker(name: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(cfg.checkpointDir, name)
-    try {
-      val fs = Frontier.rawFs(p, spark.sessionState.newHadoopConf())
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
-      }
-    } catch { case _: Exception => None }
-  }
-
-  private def deleteMarker(name: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(cfg.checkpointDir, name)
-    try { Frontier.rawFs(p, spark.sessionState.newHadoopConf()).delete(p, false); () }
-    catch { case _: Exception => }
-  }
-
-  /** Compact seen string deltas: fold waves ≤ `upTo` (which must be
-    * committed) into one base dir, publish it with an atomic marker,
-    * then GC the folded delta dirs and the superseded base. Readers
-    * enumerate (base, deltas > base) explicitly, so a crash anywhere
-    * in the GC leaves only unread garbage — never a duplicate or a
-    * dangling reference — and a resumed wave > `upTo` still rewrites
-    * only its own delta (exactly-once semantics untouched). Run every
-    * K waves so `seenUpTo` unions O(K) dirs instead of O(waves) —
-    * a 10^4-wave crawl otherwise pays 10^4-dir listing+planning per
-    * observability read. */
+  /** Fold seen deltas ≤ `upTo` (which must be committed) and every live
+    * base into one new base. Run every K waves so `seenUpTo` unions
+    * O(K) dirs instead of O(waves) — a 10^4-wave crawl otherwise pays
+    * 10^4-dir listing+planning per observability read. */
   def compactSeen(upTo: Int): Unit = {
     require(upTo <= latestCommittedWave(), s"wave $upTo not committed yet")
-    val prevBase = latestSeenBase(upTo)
-    if (prevBase.contains(upTo)) return // already compacted to here
-    sweepOrphanBases("seen_base", "SEEN_BASE-")
-    seenUpTo(upTo).write.mode("overwrite").parquet(dir("seen_base", s"upto=$upTo"))
-    publishMarker(s"SEEN_BASE-$upTo.json", s"""{"upto":$upTo}""")
-    // GC (failures harmless; read path already ignores all of these)
-    val conf = spark.sessionState.newHadoopConf()
-    def rm(path: String): Unit =
-      try {
-        val p = new org.apache.hadoop.fs.Path(path)
-        p.getFileSystem(conf).delete(p, true); ()
-      } catch { case _: Exception => }
-    prevBase.foreach { b =>
-      deleteMarker(s"SEEN_BASE-$b.json")
-      rm(dir("seen_base", s"upto=$b"))
-    }
-    seenDeltaWaves().filter(_ <= upTo).foreach(w => rm(dir("seen", s"wave=$w")))
-    cacheDrop(seenWavesCache, upTo)
+    if (seenStore.needsFold(upTo))
+      seenStore.commit(upTo, seenStore.liveRuns())(
+        seenUpTo(upTo).write.mode("overwrite").parquet(_))
   }
 
   /** OFFLINE seen-shard RESHARD — lets a crawl that outgrew its
@@ -690,17 +538,9 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     * keeps the RFC 9309 fetch-time check until its state dies, while
     * the unchanged-snapshot common case pays nothing (VERDICT r5 #1b). */
   private[frontier] lazy val gateUnchanged: Boolean = {
-    val re = "ROBOTS_EVER-(.+)\\.m".r
-    val d = new org.apache.hadoop.fs.Path(cfg.checkpointDir)
-    val fs = Frontier.rawFs(d, spark.sessionState.newHadoopConf())
-    val seen: Set[String] =
-      if (!fs.exists(d)) Set.empty
-      else fs.listStatus(d).toSeq.flatMap(st => st.getPath.getName match {
-        case re(fp) => Some(fp)
-        case _      => None
-      }).toSet
+    val seen = markers.names("ROBOTS_EVER-(.+)\\.m".r).toSet
     if (!seen.contains(gateFingerprint))
-      publishMarker(s"ROBOTS_EVER-$gateFingerprint.m", "{}")
+      markers.publish(s"ROBOTS_EVER-$gateFingerprint.m", "{}")
     (seen - gateFingerprint).isEmpty
   }
 
@@ -714,21 +554,16 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
       StructField("host", StringType), StructField("crawl_delay", DoubleType)))
     val fp = gateFingerprint
     val markerName = s"ROBOTS_PARSED-$fp.marker"
-    val markerP = new org.apache.hadoop.fs.Path(cfg.checkpointDir, markerName)
-    val fs = Frontier.rawFs(markerP, spark.sessionState.newHadoopConf())
-    if (!fs.exists(markerP)) {
+    if (!markers.exists(markerName)) {
       // retire superseded markers BEFORE touching the shared parquet:
       // a crash mid-overwrite must never leave an old marker
       // validating new or partially-written rule data
-      try fs.listStatus(new org.apache.hadoop.fs.Path(cfg.checkpointDir))
-        .filter(_.getPath.getName.startsWith("ROBOTS_PARSED-"))
-        .foreach(st => fs.delete(st.getPath, false))
-      catch { case _: Exception => }
+      markers.names("(ROBOTS_PARSED-.+)".r).foreach(markers.delete)
       Robots.hostRules(r, cfg.agent)
         .write.mode("overwrite").parquet(dir("robots_parsed", "rules"))
       Robots.crawlDelays(r, cfg.agent)
         .write.mode("overwrite").parquet(dir("robots_parsed", "delays"))
-      publishMarker(markerName, s"""{"fingerprint":"$fp"}""")
+      markers.publish(markerName, s"""{"fingerprint":"$fp"}""")
     }
     // explicit schemas: an all-allowed crawl yields an EMPTY delays
     // table, whose parquet dir has no data file to infer from
@@ -854,11 +689,11 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     * subdir) and `dest=spill/bkb=<bucket*16+band>` (the backlog
     * delta), written as two concurrent jobs; per-host head/spill
     * counts come back as cheap columnar reads of what was written.
-    * (The per-host fence table lives separately under
-    * `fence/wave=N`.) */
+    * (The per-host fence deltas live separately under
+    * `fence_delta/wave=N`.) */
   private def maintDir(wave: Int): String = dir("maint", s"wave=$wave")
   private def headDir(wave: Int): String = maintDir(wave) + "/dest=head"
-  private def spillDir(wave: Int): String = maintDir(wave) + "/dest=spill"
+  private def spillDir(wave: Int): String = backlogStore.deltaDir(wave)
 
   private def pathExists(d: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(d)
@@ -900,35 +735,24 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
   private def emptyFence: DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], FenceSchema)
 
-  /** FENCE DELTA STORE (round 5 — replaces the per-wave full fence
-    * rewrite, which was O(hosts-ever-spilled) per wave; at 10^8 fenced
-    * hosts that was a few GB of full_outer + rewrite every wave even
-    * when almost every host was drained and dormant). Same pattern as
-    * the seen/backlog deltas: a wave appends ONE small delta
-    * (`fence_delta/wave=N`) holding a row ONLY for hosts whose fence
-    * state changed this wave — new first-spill fences, hosts that
-    * received spill (bn grew), refilled hosts (fp/fs raised, bn
-    * shrank), epoch re-cuts — and readers take the latest row per host
-    * over (compacted base, deltas). `compactFence` folds deltas into
-    * `fence_base/upto=B` (marker-published, crash-safe like the other
-    * two compactions) every `compactEvery` waves.
-    *
-    * A fence row is (host, fp, fs, bn, epoch): the fence watermark
-    * (always non-null in a stored row — only spilled hosts have rows),
-    * the live-backlog count, and the host's backlog EPOCH. Backlog
-    * rows carry the epoch they were spilled under; a read only
-    * believes rows whose epoch matches the host's current fence epoch,
-    * which is what lets an adversarially-overgrown head be RE-CUT
-    * (fence reset + epoch bump) without resurrecting stale refill
-    * copies — see maintainFrontier step 5. */
-  private def latestFenceBase(wave: Int): Option[Int] = {
-    val re = "FENCE_BASE-(\\d+)\\.json".r
-    val c = listMarkerWaves(re).filter(_ <= wave)
-    if (c.isEmpty) None else Some(c.max)
-  }
-
-  private def fenceDeltaWaves(): Seq[Int] =
-    cachedWaves(fenceWavesCache, "fence_delta").toSeq
+  // FENCE DELTA STORE (round 5 — replaces the per-wave full fence
+  // rewrite, which was O(hosts-ever-spilled) per wave; at 10^8 fenced
+  // hosts that was a few GB of full_outer + rewrite every wave even
+  // when almost every host was drained and dormant). A wave appends ONE
+  // small delta (`fence_delta/wave=N`) holding a row ONLY for hosts
+  // whose fence state changed this wave — new first-spill fences, hosts
+  // that received spill (bn grew), refilled hosts (fp/fs raised, bn
+  // shrank), epoch re-cuts — and readers take the latest row per host
+  // over the fence store's read set.
+  //
+  // A fence row is (host, fp, fs, bn, epoch): the fence watermark
+  // (always non-null in a stored row — only spilled hosts have rows),
+  // the live-backlog count, and the host's backlog EPOCH. Backlog rows
+  // carry the epoch they were spilled under; a read only believes rows
+  // whose epoch matches the host's current fence epoch, which is what
+  // lets an adversarially-overgrown head be RE-CUT (fence reset + epoch
+  // bump) without resurrecting stale refill copies — see
+  // maintainFrontier step 5.
 
   /** INCREMENTAL fence view (round 6 — the SCALE.md "tracked" fold):
     * the reduced latest-per-host view of the wave just maintained,
@@ -950,22 +774,20 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     * what every consumer joins on. Served from the in-instance
     * incremental view when the asked-for wave is the one it holds. */
   private def fenceDf(wave: Int): DataFrame = {
+    require(layoutChecked)
     val cached = fenceViewCache.get()
     if (cached != null && cached._1 == wave) return cached._2
     fenceDfFull(wave)
   }
 
   private def fenceDfFull(wave: Int): DataFrame = {
-    val base = latestFenceBase(wave)
-    val b = base.getOrElse(-1)
-    val deltaW = fenceDeltaWaves().filter(w => w > b && w <= wave).toSeq.sorted
     // per-dir reads with a LITERAL recency stamp (delta count is
     // bounded by compactEvery, so the union stays a handful of scans)
-    val parts = base.map(bb =>
-        spark.read.schema(FenceSchema).parquet(dir("fence_base", s"upto=$bb"))
-          .withColumn("__w", lit(-1))).toSeq ++
-      deltaW.map(w =>
-        spark.read.schema(FenceSchema).parquet(dir("fence_delta", s"wave=$w"))
+    val parts = fenceStore.liveRuns(wave).map(b =>
+        spark.read.schema(FenceSchema).parquet(fenceStore.baseDir(b))
+          .withColumn("__w", lit(b))) ++
+      fenceStore.newDeltas(wave).map(w =>
+        spark.read.schema(FenceSchema).parquet(fenceStore.deltaDir(w))
           .withColumn("__w", lit(w)))
     parts match {
       case Seq() => emptyFence
@@ -981,131 +803,18 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
   }
 
   /** Fold fence deltas ≤ `upTo` (committed) into one compacted base.
-    * Marker-published; readers enumerate (base, deltas > base), so a
-    * crash anywhere leaves only unread garbage. Wired into the wave
-    * loop with the seen/backlog compactions. */
+    * Wired into the wave loop with the seen/backlog compactions. */
   def compactFence(upTo: Int): Unit = {
     require(upTo <= latestCommittedWave(), s"wave $upTo not committed yet")
-    if (latestFenceBase(upTo).contains(upTo)) return
-    if (fenceDeltaWaves().forall(_ > upTo)) return // nothing to fold
-    sweepOrphanBases("fence_base", "FENCE_BASE-")
-    val prevBase = latestFenceBase(upTo)
-    fenceDf(upTo).write.mode("overwrite").parquet(dir("fence_base", s"upto=$upTo"))
-    publishMarker(s"FENCE_BASE-$upTo.json", s"""{"upto":$upTo}""")
-    val conf = spark.sessionState.newHadoopConf()
-    def rm(path: String): Unit =
-      try {
-        val p = new org.apache.hadoop.fs.Path(path)
-        p.getFileSystem(conf).delete(p, true); ()
-      } catch { case _: Exception => }
-    prevBase.foreach { bb =>
-      deleteMarker(s"FENCE_BASE-$bb.json")
-      rm(dir("fence_base", s"upto=$bb"))
-    }
-    fenceDeltaWaves().filter(_ <= upTo).foreach(w => rm(dir("fence_delta", s"wave=$w")))
-    cacheDrop(fenceWavesCache, upTo)
+    if (fenceStore.needsFold(upTo))
+      fenceStore.commit(upTo, fenceStore.liveRuns())(
+        fenceDf(upTo).write.mode("overwrite").parquet(_))
   }
 
-  /** Wave numbers whose maint dir still holds a spill (backlog delta)
-    * partition (memoized). */
-  private def backlogDeltaWaves(): Seq[Int] =
-    cachedWaves(spillWavesCache, "maint", Some("dest=spill")).toSeq
+  /** Top-level backlog dirs readable as of `wave`: the backlog store's
+    * read set (compacted runs + newer spill deltas). */
+  private def backlogDirs(wave: Int): Seq[String] = backlogStore.readSet(wave)
 
-  /** Compacted RUNS readable as of `wave` — the backlog store is
-    * TIERED (round 5): a compaction normally folds only the
-    * accumulated deltas into one new rank-banded run, and merges runs
-    * into each other only when the smaller tiers grow to a fraction
-    * of the largest (classic LSM tiering). The previous
-    * rewrite-everything compaction was O(backlog) every compactEvery
-    * waves = O(backlog/K) per wave — NOT flat in pending, and at 20M+
-    * rows it dominated the deep-crawl wave cost. */
-  private def backlogRuns(wave: Int): Seq[Int] = {
-    val re = "BACKLOG_BASE-(\\d+)\\.json".r
-    val marked = listMarkerWaves(re)
-    // a run claimed as `folded` by any marker is fully contained in the
-    // claiming run: reading it would duplicate every merged row. The
-    // claim (not the folded marker's deletion) is the commit — a crash
-    // between the new marker's publish and the folded markers' GC must
-    // not resurrect them.
-    val folded = marked.flatMap(foldedClaims).toSet
-    marked.filterNot(folded).filter(_ <= wave).toSeq.sorted
-  }
-
-  /** Run ids the BACKLOG_BASE-`run` marker claims to have folded into
-    * itself (empty for pre-tiering markers without the field). Cached:
-    * marker content is immutable once published. */
-  private def foldedClaims(run: Int): Seq[Int] =
-    foldedClaimsCache.computeIfAbsent(run, { r =>
-      readMarker(s"BACKLOG_BASE-$r.json").toSeq.flatMap { js =>
-        FoldedRe.findFirstMatchIn(js).toSeq.flatMap(
-          _.group(1).split(",").toSeq.map(_.trim).flatMap(_.toIntOption))
-      }
-    })
-
-  private val FoldedRe = """"folded"\s*:\s*\[([0-9,\s]*)\]""".r
-  private val foldedClaimsCache =
-    new java.util.concurrent.ConcurrentHashMap[Int, Seq[Int]]()
-
-  /** Finish an interrupted backlog-merge GC: delete the marker + dir of
-    * every run some present marker claims as folded (their rows live in
-    * the claiming run; `backlogRuns` already refuses to read them). */
-  private def healFoldedBacklog(): Unit = {
-    val re = "BACKLOG_BASE-(\\d+)\\.json".r
-    val marked = listMarkerWaves(re).toSet
-    val claimed = marked.toSeq.flatMap(foldedClaims).toSet
-    val conf = spark.sessionState.newHadoopConf()
-    (claimed & marked).foreach { b =>
-      deleteMarker(s"BACKLOG_BASE-$b.json")
-      try {
-        val p = new org.apache.hadoop.fs.Path(dir("backlog_base", s"upto=$b"))
-        p.getFileSystem(conf).delete(p, true); ()
-      } catch { case _: Exception => }
-      bucketDirCache.remove(dir("backlog_base", s"upto=$b"))
-    }
-  }
-
-  private def latestBacklogBase(wave: Int): Option[Int] =
-    backlogRuns(wave).lastOption
-
-  /** Top-level backlog dirs readable as of `wave`: compacted runs +
-    * newer deltas, enumerated explicitly (an uncommitted crashed
-    * wave's partial delta and folded deltas are never read). */
-  private def backlogDirs(wave: Int): Seq[String] = {
-    val runs = backlogRuns(wave)
-    val b = runs.lastOption.getOrElse(-1)
-    runs.map(bb => dir("backlog_base", s"upto=$bb")) ++
-      backlogDeltaWaves().filter(w => w > b && w <= wave).sorted.map(spillDir)
-  }
-
-  /** Live backlog rows as of `wave` (with their epoch): the fence join
-    * drops stale copies of refilled rows (≤ fence) AND rows from
-    * superseded epochs (re-cut hosts). O(backlog) — observability /
-    * compaction path only, never part of a wave. */
-  private def backlogLive(wave: Int, fence: DataFrame): DataFrame = {
-    // enumerate concrete bucket dirs (partition discovery would treat
-    // the delta=N roots as conflicting partition structures)
-    val dirs = backlogBucketDirs(wave, (0 until cfg.backlogBuckets).toSet)
-    if (dirs.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], BacklogSchema)
-    val raw = spark.read.schema(BacklogSchema)
-      .option("recursiveFileLookup", "true").parquet(dirs: _*)
-      .select("surt_key", "canonical_url", "host", "priority", "epoch")
-    raw.join(fence.select(col("host"), col("fp"), col("fs"),
-        col("epoch").as("__fe")), Seq("host"), "inner")
-      .filter(col("fp").isNotNull &&
-        coalesce(col("epoch"), lit(0)) === coalesce(col("__fe"), lit(0)) &&
-        (col("priority") > col("fp") ||
-          (col("priority") === col("fp") && col("surt_key") > col("fs"))))
-      .select("surt_key", "canonical_url", "host", "priority", "epoch")
-  }
-
-  /** The bkb=<bucket*16+band> subdirectories of the readable backlog
-    * dirs whose logical bucket is in `buckets` and which physically
-    * exist — the directory-pruned refill read set. `bandZeroOnly`
-    * keeps only band-0 dirs. Per-dir child listings are memoized
-    * (delta/base dirs are immutable; the writer invalidates the one
-    * dir it rewrites). */
   /** Memoized `bkb=` child listing of one backlog store dir (the
     * single listing path shared by the data-dir and bounds-sidecar
     * readers — the two differ only in which bkb values they collect). */
@@ -1114,7 +823,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     bucketDirCache.computeIfAbsent(d, { dd =>
       val p = new org.apache.hadoop.fs.Path(dd)
       val fs = p.getFileSystem(conf)
-      Frontier.fsListCount.incrementAndGet(); fsListOps.incrementAndGet()
+      fsListOps.incrementAndGet()
       if (!fs.exists(p)) Nil
       else fs.listStatus(p).toSeq.flatMap { st =>
         val n = st.getPath.getName
@@ -1125,10 +834,15 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
       }
     })
 
-  private def backlogBucketDirs(wave: Int, buckets: Set[Int],
+  /** The bkb=<bucket*16+band> data subdirectories of the backlog dirs
+    * `tops` whose logical bucket is in `buckets` and which physically
+    * exist — the directory-pruned read set. `bandZeroOnly` keeps only
+    * band-0 dirs. */
+  private def backlogBucketDirs(tops: Seq[String],
+                                buckets: Set[Int] = (0 until cfg.backlogBuckets).toSet,
                                 bandZeroOnly: Boolean = false): Seq[String] = {
     val conf = spark.sessionState.newHadoopConf()
-    backlogDirs(wave).flatMap { d =>
+    tops.flatMap { d =>
       bkbChildren(d, conf).collect {
         // v == -1 is the per-host BOUNDS sidecar, never row data
         case (v, path) if v >= 0 && buckets.contains(v / (MaxBand + 1)) &&
@@ -1137,6 +851,29 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     }
   }
 
+  /** Strictly above the host's fence (fp, fs). */
+  private def aboveFence: org.apache.spark.sql.Column =
+    col("fp").isNotNull &&
+      (col("priority") > col("fp") ||
+        (col("priority") === col("fp") && col("surt_key") > col("fs")))
+
+  /** Backlog rows joined to their host's fence (`epoch` renamed `__fe`,
+    * other fence columns kept), keeping only LIVE rows: strictly above
+    * the fence (stale copies of refilled rows drop out) AND of the
+    * host's current epoch (rows of re-cut hosts' old epochs drop out).
+    * The one liveness rule of every backlog read. */
+  private def backlogLive(dirs: Seq[String], fence: DataFrame): DataFrame =
+    backlogRows(dirs).join(fence.withColumnRenamed("epoch", "__fe"), Seq("host"), "inner")
+      .filter(liveBacklogRow)
+
+  /** Schema-pinned recursive read of backlog data dirs. */
+  private def backlogRows(dirs: Seq[String]): DataFrame =
+    if (dirs.isEmpty) emptyBacklog
+    else spark.read.schema(BacklogSchema)
+      .option("recursiveFileLookup", "true").parquet(dirs: _*)
+
+  private def liveBacklogRow: org.apache.spark.sql.Column =
+    aboveFence && coalesce(col("epoch"), lit(0)) === coalesce(col("__fe"), lit(0))
 
   /** Per-host BOUNDS sidecar schema: the best (priority, surt) among a
     * banded store's rows OUTSIDE band 0 — written as the `bkb=-1`
@@ -1182,103 +919,51 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     * fraction of the WHOLE backlog (O(pending/16) per refill wave,
     * measured linear at 20M→40M pending) and their static settle
     * check stopped working once fences rose past the first band.
-    * Marker-published; readers enumerate (runs, deltas > newest run)
-    * and a merge's marker CLAIMS the runs it folded (`"folded":[..]`)
-    * so readers exclude them even before their markers are GC'd — a
-    * crash anywhere leaves only unread garbage, never a duplicate. */
+    * A merge passes the runs it folds to the store commit, whose marker
+    * claims them. */
   def compactBacklog(upTo: Int): Unit = {
     require(upTo <= latestCommittedWave(), s"wave $upTo not committed yet")
-    healFoldedBacklog() // before the early return: a retry after a
-    // crash-between-publish-and-GC must still finish the folded GC
-    if (latestBacklogBase(upTo).contains(upTo)) return
-    sweepOrphanBases("backlog_base", "BACKLOG_BASE-")
-    val runs = backlogRuns(upTo)
-    val newestRun = runs.lastOption.getOrElse(-1)
-    val deltaDirs = backlogDeltaWaves()
-      .filter(w => w > newestRun && w <= upTo).sorted.map(spillDir)
-    if (deltaDirs.isEmpty && runs.size <= 1) return // nothing to fold
+    if (!backlogStore.needsFold(upTo)) return
+    val runs = backlogStore.liveRuns(upTo)
+    val deltaDirs = backlogStore.newDeltas(upTo).map(backlogStore.deltaDir)
     val conf = spark.sessionState.newHadoopConf()
     def bytesOf(d: String): Long =
       try {
         val pp = new org.apache.hadoop.fs.Path(d)
         pp.getFileSystem(conf).getContentSummary(pp).getLength
       } catch { case _: Exception => 0L }
-    val runSizes = runs.map(r => r -> bytesOf(dir("backlog_base", s"upto=$r")))
+    val runSizes = runs.map(r => r -> bytesOf(backlogStore.baseDir(r)))
     val largest = runSizes.map(_._2).maxOption.getOrElse(0L)
     val smallSum = runSizes.map(_._2).sum - largest + deltaDirs.map(bytesOf).sum
     val merge = runs.nonEmpty && (runs.size >= 4 || smallSum * 2 >= largest)
     val foldedRuns = if (merge) runs else Seq.empty
     // source data dirs: bkb>=0 children only (the bkb=-1 bounds
     // sidecars are a different schema and are regenerated below)
-    val srcTops = foldedRuns.map(r => dir("backlog_base", s"upto=$r")) ++ deltaDirs
-    val srcData = srcTops.flatMap { d =>
-      val pp = new org.apache.hadoop.fs.Path(d)
-      val fs = pp.getFileSystem(conf)
-      if (!fs.exists(pp)) Nil
-      else fs.listStatus(pp).toSeq.map(_.getPath)
-        .filter(_.getName.startsWith("bkb="))
-        .filter(_.getName.stripPrefix("bkb=").toIntOption.exists(_ >= 0))
-        .map(_.toString)
-    }
+    val srcData = backlogBucketDirs(foldedRuns.map(backlogStore.baseDir) ++ deltaDirs)
     if (srcData.isEmpty) return
-    val raw = spark.read.schema(BacklogSchema)
-      .option("recursiveFileLookup", "true").parquet(srcData: _*)
-      .select("surt_key", "canonical_url", "host", "priority", "epoch")
-    val fence = fenceDf(upTo)
-    val live = raw.join(fence.select(col("host"), col("fp"), col("fs"),
-        col("epoch").as("__fe")), Seq("host"), "inner")
-      .filter(col("fp").isNotNull &&
-        coalesce(col("epoch"), lit(0)) === coalesce(col("__fe"), lit(0)) &&
-        (col("priority") > col("fp") ||
-          (col("priority") === col("fp") && col("surt_key") > col("fs"))))
+    val live = backlogLive(srcData, fenceDf(upTo).select("host", "fp", "fs", "epoch"))
       .select("surt_key", "canonical_url", "host", "priority", "epoch")
     val b0 = math.max(2 * headM, 16)
     val wrk = Window.partitionBy(col("host")).orderBy(col("priority"), col("surt_key"))
-    val banded = live
-      .withColumn("__rk", row_number().over(wrk))
-      .withColumn("__band",
-        when(col("__rk") <= b0, lit(0)).otherwise(
-          least(lit(MaxBand), (floor(
-            log(4.0, (col("__rk") - 1).cast("double") / b0)) + 1).cast("int"))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    banded.select(col("surt_key"), col("canonical_url"), col("host"), col("priority"),
-        col("epoch"), (bucketCol * lit(MaxBand + 1) + col("__band")).as("bkb"))
-      .repartition(col("bkb"))
-      .write.partitionBy("bkb").mode("overwrite")
-      .parquet(dir("backlog_base", s"upto=$upTo"))
-    writeBounds(banded, col("__band"), dir("backlog_base", s"upto=$upTo"))
-    banded.unpersist(blocking = false)
-    bucketDirCache.remove(dir("backlog_base", s"upto=$upTo"))
-    // the folded-run claim rides the marker itself: publishing it is the
-    // single commit point for the whole swap. Readers (backlogRuns)
-    // exclude claimed runs even while their markers still exist, so the
-    // GC below is pure space reclamation — a crash anywhere in it
-    // duplicates nothing and the next compaction's heal finishes it.
-    publishMarker(s"BACKLOG_BASE-$upTo.json",
-      s"""{"upto":$upTo,"folded":[${foldedRuns.mkString(",")}]}""")
-    def rm(path: String): Unit =
-      try {
-        val p = new org.apache.hadoop.fs.Path(path)
-        p.getFileSystem(conf).delete(p, true); ()
-      } catch { case _: Exception => }
-    foldedRuns.foreach { b =>
-      deleteMarker(s"BACKLOG_BASE-$b.json")
-      rm(dir("backlog_base", s"upto=$b"))
-      bucketDirCache.remove(dir("backlog_base", s"upto=$b"))
+    backlogStore.commit(upTo, foldedRuns) { out =>
+      val banded = live
+        .withColumn("__rk", row_number().over(wrk))
+        .withColumn("__band",
+          when(col("__rk") <= b0, lit(0)).otherwise(
+            least(lit(MaxBand), (floor(
+              log(4.0, (col("__rk") - 1).cast("double") / b0)) + 1).cast("int"))))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      banded.select(col("surt_key"), col("canonical_url"), col("host"), col("priority"),
+          col("epoch"), (bucketCol * lit(MaxBand + 1) + col("__band")).as("bkb"))
+        .repartition(col("bkb"))
+        .write.partitionBy("bkb").mode("overwrite").parquet(out)
+      writeBounds(banded, col("__band"), out)
+      banded.unpersist(blocking = false)
+      bucketDirCache.remove(out)
     }
-    // folded spill deltas go; their maint dir disappears once the
-    // head/fence partitions were pruned too (non-recursive no-op else)
-    backlogDeltaWaves().filter(_ <= upTo).foreach { w =>
-      rm(spillDir(w))
-      bucketDirCache.remove(spillDir(w))
-      try {
-        val p = new org.apache.hadoop.fs.Path(maintDir(w))
-        val fs = p.getFileSystem(conf)
-        fs.delete(new org.apache.hadoop.fs.Path(p, "_SUCCESS"), false)
-        fs.delete(p, false); ()
-      } catch { case _: Exception => }
-    }
-    cacheDrop(spillWavesCache, upTo)
+    // drop the child listings of the dirs the commit GC'd
+    import scala.jdk.CollectionConverters._
+    bucketDirCache.keySet().retainAll(backlogDirs(Int.MaxValue).asJava)
   }
 
   /** Delete superseded per-wave state: stale FENCES markers and the
@@ -1288,8 +973,8 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     * Self-healing (diffs the disk, not a fixed offset). */
   private def pruneFrontierState(wave: Int): Unit = {
     val conf = spark.sessionState.newHadoopConf()
-    for (w <- listMarkerWaves("FENCES-(\\d+)\\.m".r) if w <= wave - 2)
-      deleteMarker(s"FENCES-$w.m")
+    for (w <- markers.list("FENCES-(\\d+)\\.m".r) if w <= wave - 2)
+      markers.delete(s"FENCES-$w.m")
     def waveDirs(kind: String): Seq[(Int, org.apache.hadoop.fs.Path)] = {
       val root = new org.apache.hadoop.fs.Path(cfg.checkpointDir, kind)
       try {
@@ -1332,7 +1017,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
 
   def latestCommittedWave(): Int = {
     val re = "MANIFEST-(\\d+)\\.json".r
-    val waves = listMarkerWaves(re)
+    val waves = markers.list(re)
     if (waves.isEmpty) -1 else waves.max
   }
 
@@ -1342,7 +1027,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
          |"fresh":${result.fresh},"allowed":${result.allowed},"scheduled":${result.scheduled},
          |"seen_total":${result.seenTotal},"pending_total":${result.pendingTotal},
          |"elapsed_sec":${result.elapsedSec}}""".stripMargin.replace("\n", "")
-    publishMarker(s"MANIFEST-$wave.json", json)
+    markers.publish(s"MANIFEST-$wave.json", json)
   }
 
   // ----------------------------------------------------------------
@@ -1381,7 +1066,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     val obs = org.apache.spark.sql.Observation()
     val fSeen = Frontier.guarded {
       canon.select("surt_key").observe(obs, count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(dir("seen", "wave=0"))
+        .write.mode("overwrite").parquet(seenStore.deltaDir(0))
     }
     val fShards = Frontier.guarded {
       writeIndex(0, updateShardFiles(Map.empty, canon.select("surt_key"), 0))
@@ -1413,13 +1098,13 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     res
   }
 
-  /** Run the next wave after the latest committed one. */
   /** Fail loudly on a pre-round-5 checkpoint: its fence lived in
     * fence/wave=N dirs, which the fence_base/fence_delta reader never
     * consults — resuming one would silently produce an EMPTY fence
     * view, so every previously fenced host's backlog would never
     * refill. Same loud-failure contract as the seen-shard mismatch
-    * above. Checked once per instance. */
+    * above. Required by `runWave` and by every fence-store read
+    * (`fenceDf`); passes at most once per instance. */
   private lazy val layoutChecked: Boolean = {
     val legacy = new org.apache.hadoop.fs.Path(cfg.checkpointDir, "fence")
     val fs = Frontier.rawFs(legacy, spark.sessionState.newHadoopConf())
@@ -1430,6 +1115,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     true
   }
 
+  /** Run the next wave after the latest committed one. */
   def runWave(): WaveResult = {
     val prev = latestCommittedWave()
     require(prev >= 0, "frontier not initialized")
@@ -1451,7 +1137,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     // has a fence (a tiny disk marker — no job). Most crawls' early
     // waves have none, and then the fence-view read, the needy probe
     // and the accounting joins all vanish.
-    val hasFences = markerExists(s"FENCES-$prev.m")
+    val hasFences = markers.exists(s"FENCES-$prev.m")
     // latest-per-host fence VIEW, persisted for the wave — consumed by
     // the schedule join, the fresh-routing join and the accounting
     // joins (one O(hosts) reduce instead of three recomputations; the
@@ -1593,8 +1279,8 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
       jd("wave:seenDelta")
       val t = System.nanoTime()
       // seen DELTA: persist only this wave's fresh keys (O(fresh) write)
-      fresh.select("surt_key").write.mode("overwrite").parquet(dir("seen", s"wave=$wave"))
-      cacheAdd(seenWavesCache, wave)
+      fresh.select("surt_key").write.mode("overwrite").parquet(seenStore.deltaDir(wave))
+      seenStore.addDelta(wave)
       if (debug) System.err.println(
         f"[frontier]     fSeen: ${(System.nanoTime() - t) / 1e9}%.2fs")
     }
@@ -1758,9 +1444,6 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
         fencePrev.select(col("host"), col("fp"), col("fs"), col("epoch"))
           .unionByName(fenceRouteNew)
       else fenceRouteNew
-    val aboveFence = col("fp").isNotNull &&
-      (col("priority") > col("fp") ||
-        (col("priority") === col("fp") && col("surt_key") > col("fs")))
     // routed fresh, persisted: head/spill slices, the head write, the
     // accounting aggregate and a possible re-cut all scan it
     val fj = applyRobots(fresh.select(pcols.map(col): _*))
@@ -1788,7 +1471,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
       // settle exactly against the unread bands; single-band deltas
       // have no unread rows and need none
       if (bandIt) writeBounds(rows, bandCol, spillDir(wave))
-      cacheAdd(spillWavesCache, wave)
+      backlogStore.addDelta(wave)
       bucketDirCache.remove(spillDir(wave))
     }
     def writeHead(rows: DataFrame): Unit =
@@ -1963,18 +1646,14 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
               org.apache.spark.sql.types.StructField("host",
                 org.apache.spark.sql.types.StringType))))
           .select(bucketCol.as("b")).collect().map(_.getInt(0)).toSet
-        val oldDirs = backlogBucketDirs(wave, bucketsOf)
-        val oldRaw =
-          if (oldDirs.isEmpty) emptyBacklog
-          else spark.read.schema(BacklogSchema)
-            .option("recursiveFileLookup", "true").parquet(oldDirs: _*)
         val fenceOf = typedlit(expR.map(r => r.getString(0) ->
           ((r.getInt(1), r.getString(2), r.getInt(3)))).toMap)
-        val liveOld = oldRaw.filter(col("host").isin(expHosts: _*))
+        val liveOld = backlogRows(backlogBucketDirs(backlogDirs(wave), bucketsOf))
+          .filter(col("host").isin(expHosts: _*))
           .withColumn("__f", element_at(fenceOf, col("host")))
-          .filter((col("priority") > col("__f._1") ||
-              (col("priority") === col("__f._1") && col("surt_key") > col("__f._2"))) &&
-            coalesce(col("epoch"), lit(0)) === col("__f._3"))
+          .withColumn("fp", col("__f._1")).withColumn("fs", col("__f._2"))
+          .withColumn("__fe", col("__f._3"))
+          .filter(liveBacklogRow)
           .select(pcols.map(col): _*)
         val liveNew = spillRows.filter(col("host").isin(expHosts: _*))
           .select(pcols.map(col): _*)
@@ -2060,15 +1739,8 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
         // this wave's spill dir does not exist yet) plus this wave's
         // routed spill for them from the CACHED frame
         val rBuckets = expens.select("bucket").distinct().as[Int].collect().toSet
-        val oldDirs = backlogBucketDirs(wave, rBuckets)
-        val oldRaw =
-          if (oldDirs.isEmpty) emptyBacklog
-          else spark.read.schema(BacklogSchema)
-            .option("recursiveFileLookup", "true").parquet(oldDirs: _*)
-        val liveOld = oldRaw
-          .join(expens.select(col("host"), col("fp"), col("fs"),
-            col("epoch").as("__fe")), Seq("host"), "inner")
-          .filter(aboveFence && coalesce(col("epoch"), lit(0)) === col("__fe"))
+        val liveOld = backlogLive(backlogBucketDirs(backlogDirs(wave), rBuckets),
+            expens.select("host", "fp", "fs", "epoch"))
           .select(pcols.map(col): _*)
         val liveNew = spillRows.join(expens.select("host"), Seq("host"), "left_semi")
           .select(pcols.map(col): _*)
@@ -2122,8 +1794,8 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     val deltaObs = org.apache.spark.sql.Observation()
     def writeDelta(rows: DataFrame): Unit = {
       rows.observe(deltaObs, count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(dir("fence_delta", s"wave=$wave"))
-      cacheAdd(fenceWavesCache, wave)
+        .write.mode("overwrite").parquet(fenceStore.deltaDir(wave))
+      fenceStore.addDelta(wave)
     }
     locally {
       import scala.concurrent.Await
@@ -2176,19 +1848,10 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       refillPersists ::= needy
       val buckets = needy.select("bucket").distinct().as[Int].collect().toSet
-      def liveRanked(dirs: Seq[String], who: DataFrame): DataFrame = {
-        val raw =
-          if (dirs.isEmpty) emptyBacklog
-          else spark.read.schema(BacklogSchema)
-            .option("recursiveFileLookup", "true").parquet(dirs: _*)
-        raw.join(who.select(col("host"), col("fp"), col("fs"),
-            col("epoch").as("__fe"), col("deficit")), Seq("host"), "inner")
-          // strictly above the fence (stale refill copies drop out) AND
-          // of the host's current epoch (re-cut invalidation)
-          .filter(aboveFence && coalesce(col("epoch"), lit(0)) === col("__fe"))
+      def liveRanked(dirs: Seq[String], who: DataFrame): DataFrame =
+        backlogLive(dirs, who.select("host", "fp", "fs", "epoch", "deficit"))
           .withColumn("rk", row_number().over(wHost))
-      }
-      val rlA = liveRanked(backlogBucketDirs(wave, buckets, bandZeroOnly = true), needy)
+      val rlA = liveRanked(backlogBucketDirs(backlogDirs(wave), buckets, bandZeroOnly = true), needy)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       refillPersists ::= rlA
       // per-host phase-A outcome: settled iff the full deficit arrived
@@ -2230,7 +1893,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
         if (!anyB) (emptyPending, None)
         else {
           val bBuckets = needyB.select("bucket").distinct().as[Int].collect().toSet
-          val rlB = liveRanked(backlogBucketDirs(wave, bBuckets), needyB)
+          val rlB = liveRanked(backlogBucketDirs(backlogDirs(wave), bBuckets), needyB)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           refillPersists ::= rlB
           val agg = rlB.groupBy("host").agg(
@@ -2301,11 +1964,11 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
         .unionByName(recutRows.select(fcols.map(col): _*)))
       sub("fence delta write")
     }
-    deleteMarker(s"FENCES-$wave.m")
+    markers.delete(s"FENCES-$wave.m")
     // fences are monotone: once any host is fenced the marker stays
     val nDelta = deltaObs.get("n").asInstanceOf[Long]
     if (hasFences || nDelta > 0L)
-      publishMarker(s"FENCES-$wave.m", "{}")
+      markers.publish(s"FENCES-$wave.m", "{}")
     // incremental fence-view fold for the next wave (see fenceViewCache):
     // (previous view ∖ delta hosts) ∪ delta, checkpointed to a leaf so
     // the chain never regrows lineage. Skipped (empty view, no job)
@@ -2313,7 +1976,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     if (!hasFences && nDelta == 0L) fenceViewCache.set((wave, emptyFence))
     else {
       val deltaDf = spark.read.schema(FenceSchema)
-        .parquet(dir("fence_delta", s"wave=$wave"))
+        .parquet(fenceStore.deltaDir(wave))
       val newView = fencePrev
         .join(deltaDf.select(col("host")), Seq("host"), "left_anti")
         .unionByName(deltaDf)
@@ -2350,7 +2013,8 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     * are pruned). */
   def pendingDf(wave: Int): DataFrame =
     headDf(wave).unionByName(
-      backlogLive(wave, fenceDf(wave))
+      backlogLive(backlogBucketDirs(backlogDirs(wave)),
+          fenceDf(wave).select("host", "fp", "fs", "epoch"))
         .select("surt_key", "canonical_url", "host", "priority"))
   /** Per-host queue-head table as of `wave` (the rows wave+1's
     * scheduling actually consults). */
@@ -2363,11 +2027,6 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
 }
 
 object Frontier {
-
-  /** Driver-side FileSystem LIST/EXISTS calls issued by the frontier's
-    * cached listing helpers — test instrumentation: a steady wave must
-    * issue O(changed dirs), not O(all delta dirs × buckets). */
-  val fsListCount = new java.util.concurrent.atomic.AtomicLong
 
   /** Small shared pool for concurrent state-write job submission (the
     * jobs themselves run on the cluster; these threads only block on

@@ -441,6 +441,10 @@ class FrontierSpec extends AnyFunSuite with SparkTestBase {
       "folded run's marker not healed")
     assert(!Files.exists(Paths.get(ckDir, "backlog_base", "upto=2")),
       "folded run's dir not healed")
+    spills.foreach { w =>
+      assert(!Files.exists(Paths.get(ckDir, "maint", w, "dest=spill")),
+        s"folded spill delta $w not healed")
+    }
     val healed = f2.pendingDf(6).select("surt_key").collect()
       .map(_.getString(0)).sorted.toVector
     assert(healed == truth, "healing changed the pending view")
@@ -460,6 +464,12 @@ class FrontierSpec extends AnyFunSuite with SparkTestBase {
     val f2 = new Frontier(spark, cfg)
     val e = intercept[IllegalArgumentException] { f2.runWave() }
     assert(e.getMessage.contains("legacy fence"), e.getMessage)
+    // every fence-store read refuses too, not only the wave loop
+    Seq[() => Any](() => f2.pendingDf(1), () => f2.fenceTableDf(1),
+        () => f2.compactBacklog(1)).foreach { read =>
+      val e2 = intercept[IllegalArgumentException] { read() }
+      assert(e2.getMessage.contains("legacy fence"), e2.getMessage)
+    }
   }
 
   test("shard maintenance writes O(fresh) per wave: level files reused across waves") {
