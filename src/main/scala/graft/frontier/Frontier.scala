@@ -3,6 +3,8 @@ package graft.frontier
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 import graft.Functions
 
 /** The crawl frontier + fetch scheduler (north rule, BASELINE.json):
@@ -83,15 +85,6 @@ final case class FrontierConfig(
       * jobs); beyond it the distributed join path runs instead. ~100 B
       * per host of driver memory at the cap. */
     recutCollectMax: Int = 20000,
-    /** spread refills across waves (EARLY refill below 2×budget on a
-      * host-hash phase) instead of letting same-seeded hosts pulse one
-      * big refill wave every ~headMult−1 waves. Flattens per-wave
-      * variance at a real mean cost — each refill wave pays the
-      * band-0 read + window fixed costs, so paying them every wave
-      * instead of every (headMult−1) raises the average (measured in
-      * BENCH.md). Opt-in: pulses are throughput-neutral, spikes in
-      * wall-clock variance usually aren't worth the mean. */
-    refillSpread: Boolean = false,
     /** synthetic discovery shape: "zipf" (default crawl-like skew) or
       * "adversarial" (a tiny host set emitting always-best priorities —
       * the fenced-host head-overgrowth adversary the epoch'd re-cut
@@ -283,33 +276,42 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     if (wave < 2) return
     val live: Set[String] =
       (readIndex(wave).values.flatten ++ readIndex(wave - 1).values.flatten).toSet
-    val conf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(cfg.checkpointDir, "shards")
-    try {
-      val fs = root.getFileSystem(conf)
-      if (!fs.exists(root)) return
-      val waveDirRe = "wave=(\\d+)".r
-      fs.listStatus(root).foreach { d =>
-        d.getPath.getName match {
-          case waveDirRe(w) =>
-            val dirWave = w.toInt
-            fs.listStatus(d.getPath).foreach { f =>
-              val name = f.getPath.getName
-              val rel = s"wave=$dirWave/$name"
-              val dead =
-                if (name.endsWith(".lvl")) !live.contains(rel)
-                else if (name == "INDEX.txt" || name == "INDEX.txt.reshard")
-                  dirWave < wave - 1
-                else false
-              if (dead) { try { fs.delete(f.getPath, false); () } catch { case _: Exception => } }
-            }
-            // reclaims the wave dir once empty (non-recursive delete is
-            // a harmless no-op while anything inside is still live)
-            try { fs.delete(d.getPath, false); () } catch { case _: Exception => }
-          case _ =>
-        }
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(root)) return
+    val waveDirRe = "wave=(\\d+)".r
+    fs.listStatus(root).foreach { d =>
+      d.getPath.getName match {
+        case waveDirRe(w) =>
+          val dirWave = w.toInt
+          val left = fs.listStatus(d.getPath).count { f =>
+            val name = f.getPath.getName
+            val dead =
+              if (name.endsWith(".lvl")) !live.contains(s"wave=$dirWave/$name")
+              else if (name == "INDEX.txt" || name == "INDEX.txt.reshard")
+                dirWave < wave - 1
+              else false
+            !(dead && pruneDelete(fs, f.getPath, recursive = false))
+          }
+          // the wave dir goes once its listing shows nothing left
+          if (left == 0) pruneDelete(fs, d.getPath, recursive = false)
+        case _ =>
       }
-    } catch { case _: Exception => }
+    }
+  }
+
+  /** Failed deletes of the per-wave prunes (`pruneSupersededShardFiles`,
+    * `pruneFrontierState`), counted instead of dropped; both prunes diff
+    * the disk, so the next committed wave retries them. */
+  private[frontier] val pruneFailures = new java.util.concurrent.atomic.AtomicLong
+
+  /** One prune delete: true iff `p` is gone afterwards. */
+  private def pruneDelete(fs: org.apache.hadoop.fs.FileSystem, p: org.apache.hadoop.fs.Path,
+                          recursive: Boolean): Boolean = {
+    val ok = try fs.delete(p, recursive) || !fs.exists(p)
+      catch { case _: java.io.IOException => false }
+    if (!ok) pruneFailures.incrementAndGet()
+    ok
   }
 
   /** Seen membership as of `wave`: the seen store's read set. Seen
@@ -763,7 +765,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     * hash-agg shuffle) per wave. Cold start / resume / off-wave reads
     * fall back to the full reduce below; the fold is EXACT because a
     * wave's delta carries at most one row per host (deltaBase /
-    * needyRows / recutRows partition the touched hosts), so replacing
+    * refill / re-cut rows partition the touched hosts), so replacing
     * those hosts' rows reproduces the max_by-recency reduce. */
   private val fenceViewCache =
     new java.util.concurrent.atomic.AtomicReference[(Int, DataFrame)](null)
@@ -927,11 +929,10 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     val runs = backlogStore.liveRuns(upTo)
     val deltaDirs = backlogStore.newDeltas(upTo).map(backlogStore.deltaDir)
     val conf = spark.sessionState.newHadoopConf()
-    def bytesOf(d: String): Long =
-      try {
-        val pp = new org.apache.hadoop.fs.Path(d)
-        pp.getFileSystem(conf).getContentSummary(pp).getLength
-      } catch { case _: Exception => 0L }
+    def bytesOf(d: String): Long = {
+      val pp = new org.apache.hadoop.fs.Path(d)
+      pp.getFileSystem(conf).getContentSummary(pp).getLength
+    }
     val runSizes = runs.map(r => r -> bytesOf(backlogStore.baseDir(r)))
     val largest = runSizes.map(_._2).maxOption.getOrElse(0L)
     val smallSum = runSizes.map(_._2).sum - largest + deltaDirs.map(bytesOf).sum
@@ -944,10 +945,9 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     val live = backlogLive(srcData, fenceDf(upTo).select("host", "fp", "fs", "epoch"))
       .select("surt_key", "canonical_url", "host", "priority", "epoch")
     val b0 = math.max(2 * headM, 16)
-    val wrk = Window.partitionBy(col("host")).orderBy(col("priority"), col("surt_key"))
     backlogStore.commit(upTo, foldedRuns) { out =>
       val banded = live
-        .withColumn("__rk", row_number().over(wrk))
+        .withColumn("__rk", row_number().over(hostOrder))
         .withColumn("__band",
           when(col("__rk") <= b0, lit(0)).otherwise(
             least(lit(MaxBand), (floor(
@@ -972,28 +972,20 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     * fence STATE — both live until their compactions fold them).
     * Self-healing (diffs the disk, not a fixed offset). */
   private def pruneFrontierState(wave: Int): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
     for (w <- markers.list("FENCES-(\\d+)\\.m".r) if w <= wave - 2)
       markers.delete(s"FENCES-$w.m")
-    def waveDirs(kind: String): Seq[(Int, org.apache.hadoop.fs.Path)] = {
-      val root = new org.apache.hadoop.fs.Path(cfg.checkpointDir, kind)
-      try {
-        val fs = root.getFileSystem(conf)
-        if (!fs.exists(root)) Nil
-        else fs.listStatus(root).toSeq.flatMap { d =>
-          d.getPath.getName.stripPrefix("wave=").toIntOption
-            .filter(_ => d.getPath.getName.startsWith("wave="))
-            .map(w => (w, d.getPath))
+    val root = new org.apache.hadoop.fs.Path(cfg.checkpointDir, "maint")
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.exists(root)) fs.listStatus(root).foreach { d =>
+      val name = d.getPath.getName
+      if (name.startsWith("wave=") && name.stripPrefix("wave=").toIntOption.exists(_ <= wave - 2)) {
+        val left = fs.listStatus(d.getPath).count { st =>
+          !(Set("dest=head", "_SUCCESS")(st.getPath.getName) &&
+            pruneDelete(fs, st.getPath, recursive = true))
         }
-      } catch { case _: Exception => Nil }
-    }
-    for ((w, p) <- waveDirs("maint") if w <= wave - 2) {
-      val fs = p.getFileSystem(conf)
-      for (sub <- Seq("dest=head", "_SUCCESS"))
-        try { fs.delete(new org.apache.hadoop.fs.Path(p, sub), true); () }
-        catch { case _: Exception => }
-      // reclaim the wave dir once the spill partition is also gone
-      try { fs.delete(p, false); () } catch { case _: Exception => }
+        // the wave dir goes once its spill partition is gone too
+        if (left == 0) pruneDelete(fs, d.getPath, recursive = false)
+      }
     }
   }
 
@@ -1048,21 +1040,12 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     // re-gate-skip decision depends on every snapshot that ever gated
     // inserts into this checkpoint — see gateUnchanged)
     gateUnchanged
-    val debug = sys.env.get("GRAFT_DEBUG").contains("1")
-    var tPhase = t0
-    def phase(name: String): Unit = if (debug) {
-      val now = System.nanoTime()
-      System.err.println(f"[frontier] init $name: ${(now - tPhase) / 1e9}%.2fs")
-      tPhase = now
-    }
     val canon = canonicalized(seeds)
       .groupBy("surt_key")
       .agg(min("priority").as("priority"),
         min("canonical_url").as("canonical_url"), min("host").as("host"))
       .select("surt_key", "canonical_url", "host", "priority")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    import scala.concurrent.Await
-    import scala.concurrent.duration.Duration
     val obs = org.apache.spark.sql.Observation()
     val fSeen = Frontier.guarded {
       canon.select("surt_key").observe(obs, count(lit(1)).as("n"))
@@ -1083,11 +1066,8 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
       // no fence state at init: the fence VIEW is empty until the first
       // spill writes a delta (wave 1's lazy cut)
     }
-    Await.result(fSeen, Duration.Inf)
-    Await.result(fShards, Duration.Inf)
-    Await.result(fState, Duration.Inf)
+    Seq(fSeen, fShards, fState).foreach(Await.result(_, Duration.Inf))
     canon.unpersist(blocking = false)
-    phase("seen+shards+head/backlog split (concurrent)")
     val n = obs.get("n").asInstanceOf[Long]
     // allowed/pending reflect the robots-gated head actually written;
     // candidates/deduped/seen reflect pre-gate admission (seen parity)
@@ -1115,58 +1095,116 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     true
   }
 
-  /** Run the next wave after the latest committed one. */
+  /** Run the next wave after the latest committed one, as named steps
+    * called in order: schedule window → discover + seen probe → (in
+    * `maintainFrontier`, concurrent with the seen and shard writes)
+    * route → accounting → re-cut → head/spill/delta writes → refill →
+    * fence delta + view fold → commit. Every frame a step persists goes
+    * through `keep` onto ONE per-wave list, unpersisted once the wave's
+    * state writes are done. */
   def runWave(): WaveResult = {
     val prev = latestCommittedWave()
     require(prev >= 0, "frontier not initialized")
     require(layoutChecked)
     val wave = prev + 1
     val t0 = System.nanoTime()
-    val debug = sys.env.get("GRAFT_DEBUG").contains("1")
-    val fast = cfg.fastMode
-    var tPhase = t0
-    def phase(name: String): Unit = if (debug) {
-      val now = System.nanoTime()
-      System.err.println(f"[frontier] wave=$wave $name: ${(now - tPhase) / 1e9}%.2fs")
-      tPhase = now
+    val persisted = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
+    val keep: DataFrame => DataFrame = { df =>
+      persisted.add(df)
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
+    val (nFresh, nScheduled) =
+      try {
+        val prevIdx = readIndex(prev)
+        // FENCE-FREE FAST PATH: the previous wave records whether ANY
+        // host has a fence (a tiny disk marker — no job). Most crawls'
+        // early waves have none, and then the fence-view read, the needy
+        // probe and the accounting joins all vanish.
+        val hasFences = markers.exists(s"FENCES-$prev.m")
+        // latest-per-host fence VIEW, persisted for the wave — consumed
+        // by the schedule join, the fresh-routing join and the
+        // accounting joins (one O(hosts) reduce instead of three)
+        val fencePrev = keep(if (hasFences) fenceDf(prev) else emptyFence)
+        val (ranked, saltDropped) = scheduleWindow(headDf(prev), fencePrev, hasFences, keep)
+        val scheduled0 = ranked.filter(col("rank_in_host") <= col("k_eff"))
+          .withColumn("wave", lit(wave))
+          .select("host", "surt_key", "canonical_url", "priority", "rank_in_host", "wave")
+        val scheduled = regate(scheduled0, keep)
+        val fSched = writeSchedule(scheduled, wave)
+        val (fresh, nFresh) = discoverFresh(scheduled, prevIdx, wave, keep)
+        // state updates. The three sinks (seen delta, shard files, and
+        // the head/fence/backlog maintenance chain) all hang off the
+        // PERSISTED `fresh` and are mutually independent, so their jobs
+        // are submitted CONCURRENTLY. Crash consistency is unaffected:
+        // any subset of the writes is invisible until the manifest
+        // commits, and a re-run overwrites everything idempotently.
+        val fSeen = Frontier.guarded {
+          jd("wave:seenDelta")
+          // seen DELTA: persist only this wave's fresh keys (O(fresh) write)
+          fresh.select("surt_key").write.mode("overwrite").parquet(seenStore.deltaDir(wave))
+          seenStore.addDelta(wave)
+        }
+        val fShards = Frontier.guarded {
+          jd("wave:shards")
+          // incremental shard maintenance: insert only this wave's fresh keys
+          writeIndex(wave, prevIdx ++ updateShardFiles(prevIdx, fresh.select("surt_key"), wave))
+        }
+        val fState = Frontier.guarded {
+          jd("wave:maint")
+          // scheduled0, NOT the robots-re-gated frame: the accounting
+          // needs the pre-gate SUPERSET so a host whose whole slice the
+          // re-gate suppressed still gets its per-host row — otherwise its
+          // bn>0 backlog would never trigger needyCond and the host would
+          // starve permanently after a robots-snapshot change.
+          maintainFrontier(ranked, fencePrev, scheduled0, fresh, saltDropped, hasFences,
+            wave, keep)
+        }
+        val nScheduled = Await.result(fSched, Duration.Inf)
+        Seq(fSeen, fShards, fState).foreach(Await.result(_, Duration.Inf))
+        (nFresh, nScheduled)
+      } finally persisted.forEach(_.unpersist(false))
+    commitWave(wave, nFresh, nScheduled, t0)
+  }
 
-    val prevIdx = readIndex(prev)
-    val head = headDf(prev)
-    // FENCE-FREE FAST PATH: the previous wave records whether ANY host
-    // has a fence (a tiny disk marker — no job). Most crawls' early
-    // waves have none, and then the fence-view read, the needy probe
-    // and the accounting joins all vanish.
-    val hasFences = markers.exists(s"FENCES-$prev.m")
-    // latest-per-host fence VIEW, persisted for the wave — consumed by
-    // the schedule join, the fresh-routing join and the accounting
-    // joins (one O(hosts) reduce instead of three recomputations; the
-    // full per-wave fence REWRITE it replaces is gone — see the fence
-    // delta store above)
-    val fencePrev =
-      (if (hasFences) fenceDf(prev) else emptyFence)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  private def hostOrder = Window.partitionBy(col("host")).orderBy(col("priority"), col("surt_key"))
+  private def pcols: Seq[org.apache.spark.sql.Column] = PendingSchema.fieldNames.toSeq.map(col)
+  private def bcols: Seq[org.apache.spark.sql.Column] = BacklogSchema.fieldNames.toSeq.map(col)
+  private def fcols: Seq[org.apache.spark.sql.Column] = FenceSchema.fieldNames.toSeq.map(col)
 
-    // 1. UNIFIED schedule/cut window over the HEAD only — O(heads),
-    // never O(pending). FENCED hosts (heads bounded ~M) rank in a
-    // plain per-host window. UNFENCED hosts — the whole seed queue
-    // after init, or a newly discovered host's one-wave arrivals
-    // (possibly Zipf-head-sized) — first pass a SALTED per-(host,salt)
-    // top-M pre-cut so no single hot host can serialize one reducer
-    // (r4 review: the cliff used to hit a NEW hot host's first fenced
-    // wave): a row dropped by its salt group has ≥ M better rows in
-    // that group alone, hence is outside the host's true top-M and
-    // spills directly — exact. The same ranked frame yields the
-    // scheduled rows (rank ≤ k_eff), the head remainder, the LAZY CUT
-    // (rank > M spills, the rank-M row becomes the first fence) and
-    // has_next (per-host count join for unfenced hosts — survivor-
-    // local lead() cannot see salt-dropped rows).
+  /** Salted per-host top-M, the wave's defence against host skew
+    * (DS2-style): `rows` first pass a per-(host, salt) top-M pre-cut, so
+    * no hot host serializes one reducer, and the survivors — together
+    * with `unsalted` rows, whose hosts are host-disjoint from `rows` and
+    * already bounded near M — are ranked per host into `rankCol`.
+    * EXACT for every rank ≤ M: a row dropped by its salt group has ≥ M
+    * better rows in that group alone, hence lies outside its host's
+    * true top-M. Returns the ranked survivors and the dropped rows; the
+    * pre-cut frame is persisted (through `keep`) since both read it. */
+  private def saltedTopM(rows: DataFrame, rankCol: String, keep: DataFrame => DataFrame,
+                         unsalted: Option[DataFrame] = None): (DataFrame, DataFrame) = {
     val M = headM
-    val w = Window.partitionBy(col("host")).orderBy(col("priority"), col("surt_key"))
-    val wSalt = Window
+    val salted = keep(rows.withColumn("rn1", row_number().over(Window
       .partitionBy(col("host"), pmod(hash(col("surt_key")), lit(cfg.salt)))
-      .orderBy(col("priority"), col("surt_key"))
-    val base = (
+      .orderBy(col("priority"), col("surt_key")))))
+    val survivors = salted.filter(col("rn1") <= M).drop("rn1")
+    (unsalted.fold(survivors)(_.unionByName(survivors))
+        .withColumn(rankCol, row_number().over(hostOrder)),
+      salted.filter(col("rn1") > M).select(pcols: _*))
+  }
+
+  /** Schedule-window step: ONE ranked window over the HEAD only —
+    * O(heads), never O(pending). FENCED hosts (heads bounded ~M) rank in
+    * a plain per-host window; UNFENCED hosts — the whole seed queue
+    * after init, or a newly discovered host's one-wave arrivals
+    * (possibly Zipf-head-sized) — pass the salted pre-cut first. The
+    * ranked frame yields the scheduled rows (rank ≤ k_eff), the head
+    * remainder, the LAZY CUT (rank > M spills, the rank-M row becomes
+    * the first fence) and has_next (a per-host count join for unfenced
+    * hosts — survivor-local lead() cannot see salt-dropped rows).
+    * Returns (ranked, salt-dropped rows). */
+  private def scheduleWindow(head: DataFrame, fencePrev: DataFrame, hasFences: Boolean,
+                             keep: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+    val base = keep(
       if (hasFences)
         withKeff(head).join(
           fencePrev.select(col("host"), col("fp"), col("fs"), col("epoch")),
@@ -1175,151 +1213,82 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
         withKeff(head)
           .withColumn("fp", lit(null).cast("int"))
           .withColumn("fs", lit(null).cast("string"))
-          .withColumn("epoch", lit(null).cast("int"))
-      ).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .withColumn("epoch", lit(null).cast("int")))
     val nullSlice = base.filter(col("fp").isNull)
-    val p1 = nullSlice.withColumn("rn1", row_number().over(wSalt))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cnts = nullSlice.groupBy("host").agg(count(lit(1)).as("cnt"))
-    val ranked = base.filter(col("fp").isNotNull)
-      .unionByName(p1.filter(col("rn1") <= M).drop("rn1"))
-      .withColumn("rank_in_host", row_number().over(w))
+    val (top, saltDropped) = saltedTopM(nullSlice, "rank_in_host", keep,
+      Some(base.filter(col("fp").isNotNull)))
+    val ranked = keep(top
       // NO broadcast hint: cnts has one row per unfenced host with head
       // rows — on the first cut wave that is EVERY seed host, and at
-      // 10^8 hosts a forced broadcast collects gigabytes to the driver
-      // (same rule as the accounting joins below). Spark's stats pick a
-      // BHJ at small scale on their own; at large scale the host-keyed
-      // shuffle is the correct plan.
+      // 10^8 hosts a forced broadcast collects gigabytes to the driver.
+      // Spark's stats pick a BHJ at small scale on their own; at large
+      // scale the host-keyed shuffle is the correct plan.
       .join(cnts, Seq("host"), "left")
       .withColumn("has_next",
         coalesce(col("cnt") > col("rank_in_host"), lit(false)))
-      .drop("cnt")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val saltDropped = p1.filter(col("rn1") > M)
-      .select("surt_key", "canonical_url", "host", "priority")
+      .drop("cnt"))
+    (ranked, saltDropped)
+  }
 
-    val scheduled0 = ranked.filter(col("rank_in_host") <= col("k_eff"))
-      .withColumn("wave", lit(wave))
-      .select("host", "surt_key", "canonical_url", "priority", "rank_in_host", "wave")
-    // RE-GATE the scheduled rows against the CURRENT robots snapshot
-    // (r4 advice): rows were robots-gated at INSERT under the snapshot
-    // current THEN; a crawl resumed with a newer snapshot must not
-    // fetch a queued URL the new rules disallow (RFC 9309 — checks
-    // apply at fetch time). O(scheduled) rows, and provably a no-op
-    // while the snapshot is unchanged (every scheduled row passed the
-    // same rules at insert), so parity/oracles/determinism are
-    // untouched. A suppressed row is consumed-not-fetched; the inverse
-    // case — disallowed at insert, re-allowed later — stays uncrawled
-    // (insert-time seen membership is the documented semantics, shared
-    // with the reference comparator).
-    // with a real robots table the re-gate is a join against the parsed
-    // rules parquet, and BOTH the schedule write and discovery evaluate
-    // `scheduled` — persist so the join runs once per wave. Without
-    // robots the gate is identity (no extra plan node), so persisting
-    // would only duplicate the already-cached `ranked` blocks.
-    // SKIPPED outright when every insert this checkpoint ever took was
-    // gated under the current snapshot (gateUnchanged): the re-gate is
-    // then provably the identity on `scheduled0` (VERDICT r5 #1b).
-    val scheduled = {
-      if (gateUnchanged) scheduled0
-      else {
-        val s = applyRobots(scheduled0)
-        if (robots.isDefined) s.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else s
-      }
-    }
-    val scheduledOut = if (fast) scheduled else scheduled.orderBy("priority", "host", "surt_key")
-    import scala.concurrent.Await
-    import scala.concurrent.duration.Duration
-    // 2. the schedule WRITE runs concurrently with discovery: both hang
-    // off the same cached `ranked` frame (whichever job arrives first
-    // materializes it; the other reuses the blocks) and neither reads
-    // the other's output — discovery feeds from the CACHED frame, not
-    // the written parquet (r4 fixed-cost item). The write is awaited
-    // before the wave's state block completes, well before commit.
-    // count observed on the write job itself — no read-back count job
-    val schedObs = org.apache.spark.sql.Observation()
-    val fSched = Frontier.guarded {
+  /** RE-GATE the scheduled rows against the CURRENT robots snapshot:
+    * rows were robots-gated at INSERT under the snapshot current THEN; a
+    * crawl resumed with a newer snapshot must not fetch a queued URL the
+    * new rules disallow (RFC 9309 — checks apply at fetch time).
+    * O(scheduled) rows. A suppressed row is consumed-not-fetched; the
+    * inverse case — disallowed at insert, re-allowed later — stays
+    * uncrawled (insert-time seen membership is the documented semantics,
+    * shared with the reference comparator). SKIPPED outright when every
+    * insert this checkpoint ever took was gated under the current
+    * snapshot (gateUnchanged): the re-gate is then provably the
+    * identity. With a real robots table the re-gate is a join that both
+    * the schedule write and discovery evaluate — persisted so it runs
+    * once; without one the gate is a filter over the cached `ranked`. */
+  private def regate(scheduled: DataFrame, keep: DataFrame => DataFrame): DataFrame =
+    if (gateUnchanged) scheduled
+    else if (robots.isDefined) keep(applyRobots(scheduled))
+    else applyRobots(scheduled)
+
+  /** Schedule-write step, submitted concurrently with discovery: both
+    * hang off the same cached `ranked` frame and neither reads the
+    * other's output. The future yields the scheduled count, observed on
+    * the write job itself (no read-back count job). */
+  private def writeSchedule(scheduled: DataFrame, wave: Int): scala.concurrent.Future[Long] = {
+    val out = if (cfg.fastMode) scheduled else scheduled.orderBy("priority", "host", "surt_key")
+    val obs = org.apache.spark.sql.Observation()
+    Frontier.guarded {
       jd(s"wave$wave:schedule")
-      val t = System.nanoTime()
-      scheduledOut.observe(schedObs, count(lit(1)).as("n"))
+      out.observe(obs, count(lit(1)).as("n"))
         .write.mode("overwrite").parquet(dir("scheduled", s"wave=$wave"))
       // per-partition lineage metrics (over the artifact just written)
-      if (!fast) {
+      if (!cfg.fastMode) {
         spark.read.parquet(dir("scheduled", s"wave=$wave"))
           .groupBy(spark_partition_id().as("partition_id"))
           .agg(count(lit(1)).as("n_scheduled"), countDistinct(col("host")).as("n_hosts"))
           .withColumn("wave", lit(wave))
           .write.mode("overwrite").parquet(dir("metrics", s"wave=$wave"))
       }
-      if (debug) System.err.println(
-        f"[frontier]     fSched: ${(System.nanoTime() - t) / 1e9}%.2fs")
+      obs.get("n").asInstanceOf[Long]
     }
+  }
 
-    // 3. discover outlinks of the scheduled batch; canonicalize,
-    // then dedup + seen-subtract in ONE shard-keyed shuffle (the
-    // in-batch groupBy-min dedup is fused into the shard probe —
-    // subtractSeen). `fresh` feeds the state updates below — persist
-    // so the discovery + subtraction DAG runs once.
+  /** Discover + seen-probe step: outlinks of the scheduled batch,
+    * canonicalized, then dedup + seen-subtract in ONE shard-keyed
+    * shuffle (`subtractSeen`). Returns the persisted fresh rows — every
+    * state sink reads them — and their count. */
+  private def discoverFresh(scheduled: DataFrame, prevIdx: Map[Int, Seq[String]], wave: Int,
+                            keep: DataFrame => DataFrame): (DataFrame, Long) = {
     val discovered = canonicalized(discoverOutlinks(scheduled))
     jd(s"wave$wave:discover")
-    val fresh = subtractSeen(
-      discovered.select("surt_key", "canonical_url", "host", "priority"), prevIdx)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nFresh = fresh.count()
-    phase("discover+subtract (schedule write concurrent)")
+    val fresh = keep(subtractSeen(discovered.select(pcols: _*), prevIdx))
+    (fresh, fresh.count())
+  }
 
-    // 4. state updates. The three sinks (seen delta, shard files, and
-    // the head/fence/backlog maintenance chain) all hang off the
-    // PERSISTED `fresh` and are mutually independent, so their jobs
-    // are submitted CONCURRENTLY. Crash consistency is unaffected: any
-    // subset of the writes is invisible until the manifest commits,
-    // and a re-run overwrites everything idempotently.
-    val fSeen = Frontier.guarded {
-      jd("wave:seenDelta")
-      val t = System.nanoTime()
-      // seen DELTA: persist only this wave's fresh keys (O(fresh) write)
-      fresh.select("surt_key").write.mode("overwrite").parquet(seenStore.deltaDir(wave))
-      seenStore.addDelta(wave)
-      if (debug) System.err.println(
-        f"[frontier]     fSeen: ${(System.nanoTime() - t) / 1e9}%.2fs")
-    }
-    val fShards = Frontier.guarded {
-      jd("wave:shards")
-      val t = System.nanoTime()
-      // incremental shard maintenance: insert only this wave's fresh keys
-      val updatedShards = updateShardFiles(prevIdx, fresh.select("surt_key"), wave)
-      writeIndex(wave, prevIdx ++ updatedShards)
-      if (debug) System.err.println(
-        f"[frontier]     fShards: ${(System.nanoTime() - t) / 1e9}%.2fs")
-      updatedShards
-    }
-    val fState = Frontier.guarded {
-      jd("wave:maint")
-      // scheduled0, NOT the robots-re-gated frame: the accounting needs
-      // the pre-gate SUPERSET so a host whose whole slice the re-gate
-      // suppressed still gets its per-host row — otherwise its bn>0
-      // backlog would never trigger needyCond and the host would starve
-      // permanently after a robots-snapshot change (consumed heads, no
-      // spill, no fresh ⇒ absent from stats ⇒ never refilled).
-      maintainFrontier(ranked, fencePrev, scheduled0, fresh, wave, hasFences,
-        saltDropped)
-    }
-    Await.result(fSched, Duration.Inf)
-    Await.result(fSeen, Duration.Inf)
-    Await.result(fShards, Duration.Inf)
-    Await.result(fState, Duration.Inf)
-    fresh.unpersist(blocking = false)
-    ranked.unpersist(blocking = false)
-    base.unpersist(blocking = false)
-    p1.unpersist(blocking = false)
-    fencePrev.unpersist(blocking = false)
-    if (robots.isDefined && !gateUnchanged) scheduled.unpersist(blocking = false)
-    phase("state writes (head/fence/backlog+seen+shards, concurrent)")
-
-    // scheduled count came from the write job's Observation; state-size
-    // reports are observability, skipped in bench mode
-    val nScheduled = schedObs.get("n").asInstanceOf[Long]
+  /** Commit step: state-size reports (observability, skipped in bench
+    * mode), the manifest, then GC and the periodic compaction. */
+  private def commitWave(wave: Int, nFresh: Long, nScheduled: Long, t0: Long): WaveResult = {
+    jd(s"wave$wave:commit")
+    val fast = cfg.fastMode
     val nSeen = if (fast) -1L else seenUpTo(wave).count()
     val nPending = if (fast) -1L
       else headDf(wave).count() +
@@ -1333,10 +1302,10 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     pruneSupersededShardFiles(wave)
     pruneFrontierState(wave)
     // periodic compaction, part of the wave loop (not a manual API):
-    // fold seen + backlog deltas ≤ wave-1 — strictly-older-than-latest,
-    // the crash-replay shape the resume suite proves — every K
-    // committed waves. O(state) I/O amortized to O(state/K) per wave.
-    if (cfg.compactEvery > 0 && wave > 0 && wave % cfg.compactEvery == 0) {
+    // fold deltas ≤ wave-1 — strictly-older-than-latest, the
+    // crash-replay shape the resume suite proves — every K committed
+    // waves. O(state) I/O amortized to O(state/K) per wave.
+    if (cfg.compactEvery > 0 && wave % cfg.compactEvery == 0) {
       compactSeen(wave - 1)
       compactBacklog(wave - 1)
       compactFence(wave - 1)
@@ -1344,10 +1313,22 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     res
   }
 
+  /** Refill trigger: a fenced host with live backlog whose head fell
+    * below the politeness budget (budget ≤ M, so it is short of M too). */
+  private def needyCond: org.apache.spark.sql.Column =
+    col("fp").isNotNull && col("bn") > 0 && col("hc") < cfg.hostBudget
+
+  /** Re-cut trigger. No fp.isNotNull gate: a host FIRST discovered this
+    * wave (no prior fence, no spill) whose fresh flood exceeds 2×M must
+    * be cut too, or the "head ≤ 2×M post-wave" bound fails for one wave
+    * per new hot host. Such a host is rf=false by construction (never
+    * refilled), so it takes the cheap path: its rank-M row becomes its
+    * FIRST fence (epoch 0) and bn = hc − M exactly. */
+  private def recutCond: org.apache.spark.sql.Column = col("hc") > 2L * headM
+
   /** The wave's head/fence/backlog maintenance — every step costs
     * O(head + fresh + hosts-touched + refilled-backlog), never
-    * O(pending) and (new in round 5) the fence WRITE is never
-    * O(hosts-ever-spilled):
+    * O(pending), and the fence WRITE is never O(hosts-ever-spilled):
     *
     *  1. LAZY CUT, fused into the schedule window: the ranked head
     *     frame (already sorted per host for scheduling) trims each
@@ -1360,22 +1341,15 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     *     and ROUTES with no window at all: above-fence rows append to
     *     the wave's backlog delta TAGGED WITH THE HOST'S EPOCH;
     *     everything else goes straight to the head.
-    *  3. state lands in TWO writes (shuffle-free head from cached
-    *     scans; one small bucketed/banded spill shuffle), submitted
-    *     concurrently with the per-host accounting aggregate `info` —
-    *     which derives from the SAME cached frames (the r4 read-back
-    *     of the freshly-written parquet is gone). `info` holds one row
-    *     per host this wave might touch (scheduled, or receiving
-    *     cut/fresh rows) with its prior fence, spill count and head
-    *     count — O(wave work) rows, not O(hosts).
-    *  4. REFILL, deamortized: mandatory when the head dropped below
-    *     the politeness budget; EARLY for draining hosts below
-    *     2×budget on their host-hash phase — hosts seeded together
-    *     otherwise drain together and pulse one expensive refill wave
-    *     every ~headMult−1 waves. An early refill only ADDS rows that
-    *     are worse than every current head row (backlog > fence), so
-    *     the schedule is provably unchanged. Two-phase banded reads,
-    *     fences RAISE to the max refilled row, as before.
+    *  3. the per-host accounting aggregate `info` — one row per host
+    *     this wave might touch (scheduled, or receiving cut/fresh rows)
+    *     with its prior fence, spill count and head count, O(wave work)
+    *     rows, not O(hosts) — decides refill, re-cut and banding before
+    *     anything is written; state then lands in TWO concurrent writes
+    *     (shuffle-free head from cached scans; one small bucketed/banded
+    *     spill shuffle).
+    *  4. REFILL when the head dropped below the politeness budget:
+    *     two-phase banded reads; fences RAISE to the max refilled row.
     *  5. EPOCH'D PER-HOST RE-CUT — the fenced-host head-overgrowth
     *     adversary (discovery persistently emitting better-than-fence
     *     rows grows a head without bound; the fence cannot be lowered
@@ -1390,53 +1364,66 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     *     host's head is ≤ 2×M by construction.
     *  6. the wave's FENCE DELTA — one row per touched, refilled or
     *     re-cut host — appends to the fence store; dormant and
-    *     merely-draining hosts write NOTHING (the r4 full rewrite was
-    *     O(hosts-ever-spilled) per wave).
+    *     merely-draining hosts write NOTHING.
     */
   private def maintainFrontier(ranked: DataFrame, fencePrev: DataFrame,
-                               schedPreGate: DataFrame,
-                               fresh: DataFrame, wave: Int,
-                               hasFences: Boolean,
-                               saltDropped: DataFrame): Unit = {
-    import spark.implicits._
-    val debug = sys.env.get("GRAFT_DEBUG").contains("1")
-    var tSub = System.nanoTime()
-    def sub(name: String): Unit = if (debug) {
-      val now = System.nanoTime()
-      System.err.println(f"[frontier]   maint $name: ${(now - tSub) / 1e9}%.2fs")
-      tSub = now
-    }
-    val M = headM
-    val budget = cfg.hostBudget
-    val pcols = Seq("surt_key", "canonical_url", "host", "priority")
-    val bcols = pcols :+ "epoch"
-    val wHost = Window.partitionBy(col("host")).orderBy(col("priority"), col("surt_key"))
+                               schedPreGate: DataFrame, fresh: DataFrame,
+                               saltDropped: DataFrame, hasFences: Boolean, wave: Int,
+                               keep: DataFrame => DataFrame): Unit = {
     // a crashed earlier attempt may have left partial subdirs; the
     // wave's state is rebuilt from scratch (invisible until commit)
-    try {
-      val p = new org.apache.hadoop.fs.Path(maintDir(wave))
-      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true); ()
-    } catch { case _: Exception => }
+    val md = new org.apache.hadoop.fs.Path(maintDir(wave))
+    val mfs = md.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!mfs.delete(md, true) && mfs.exists(md))
+      throw new java.io.IOException(s"cannot reset $md")
     bucketDirCache.remove(spillDir(wave))
 
-    // 1. lazy cut from the schedule frame (all cached scans)
+    val (headRows, spillRows, schedFence) =
+      route(ranked, fencePrev, fresh, saltDropped, hasFences, keep)
+    val (info, nNeedy, nRecut, nRecutEpoch, bandIt) =
+      accounting(headRows, spillRows, schedPreGate, schedFence, fencePrev)
+    val (headFinal, spillFinal, recutRows) =
+      if (nRecut == 0) (headRows, spillRows, emptyFence)
+      else if (nRecut <= cfg.recutCollectMax) recutOnDriver(info, headRows, spillRows, wave, keep)
+      else recutDistributed(info, headRows, spillRows, nRecutEpoch > 0, wave, keep)
+    val deltaBase = info.filter(col("touched") && !needyCond && !recutCond)
+      .select(fcols: _*)
+    val recutDelta = recutRows.select(fcols: _*)
+    val nDelta =
+      if (nNeedy == 0)
+        writeState(headFinal, spillFinal, bandIt, wave, Some(deltaBase.unionByName(recutDelta))).get
+      else {
+        // the fence delta waits for the refill: refilled fences are part
+        // of it, and the refill must see this wave's spill dir
+        writeState(headFinal, spillFinal, bandIt, wave, None)
+        val refilled = refill(info, wave, keep).select(fcols: _*)
+        writeFenceDelta(deltaBase.unionByName(refilled).unionByName(recutDelta), wave)
+      }
+    foldFenceView(fencePrev, hasFences, nDelta, wave)
+  }
+
+  /** Route step (scaladoc steps 1–2): the lazy cut from the cached
+    * schedule frame, then fresh routing against the POST-CUT fence view.
+    * Returns (head rows, spill rows, first-spill fences as host/nfp/nfs),
+    * all before any re-cut. */
+  private def route(ranked: DataFrame, fencePrev: DataFrame, fresh: DataFrame,
+                    saltDropped: DataFrame, hasFences: Boolean,
+                    keep: DataFrame => DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val M = headM
     val keepHead = ranked.filter(col("rank_in_host") > col("k_eff") &&
         (col("fp").isNotNull || col("rank_in_host") <= M))
-      .select(pcols.map(col): _*)
+      .select(pcols: _*)
     val schedSpill = ranked.filter(col("fp").isNull && col("rank_in_host") > M)
-      .select(pcols.map(col): _*)
-      // phase-1 salt drops are provably outside the per-host top-M
+      .select(pcols: _*)
+      // salt-dropped rows are provably outside the per-host top-M
       .unionByName(saltDropped)
       .withColumn("epoch", lit(0)) // a first fence starts at epoch 0
     // first-spill fences: one row per overflowing never-spilled host
     val schedFence = ranked.filter(col("fp").isNull &&
         col("rank_in_host") === M && col("has_next"))
       .select(col("host"), col("priority").as("nfp"), col("surt_key").as("nfs"))
-
-    // 2. fresh routing against the POST-CUT fence view. A schedFence
-    // host was unfenced, so it has NO row in the fence view — the
-    // post-cut view is a disjoint UNION (the r4 full_outer join over
-    // the whole fence table is gone).
+    // a schedFence host was unfenced, so it has NO row in the fence
+    // view — the post-cut view is a disjoint UNION
     val fenceRouteNew = schedFence.select(col("host"), col("nfp").as("fp"),
       col("nfs").as("fs"), lit(0).as("epoch"))
     val fenceRoute =
@@ -1446,57 +1433,27 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
       else fenceRouteNew
     // routed fresh, persisted: head/spill slices, the head write, the
     // accounting aggregate and a possible re-cut all scan it
-    val fj = applyRobots(fresh.select(pcols.map(col): _*))
-      .join(fenceRoute, Seq("host"), "left")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val freshHead = fj.filter(!aboveFence).select(pcols.map(col): _*)
-    val freshSpill = fj.filter(aboveFence).select(bcols.map(col): _*)
+    val fj = keep(applyRobots(fresh.select(pcols: _*)).join(fenceRoute, Seq("host"), "left"))
+    (keepHead.unionByName(fj.filter(!aboveFence).select(pcols: _*)),
+      schedSpill.unionByName(fj.filter(aboveFence).select(bcols: _*)),
+      schedFence)
+  }
 
-    val headRows = keepHead.unionByName(freshHead)
-    val spillRows = schedSpill.unionByName(freshSpill)
-    // banded like the compacted base — but ONLY when this wave's spill
-    // is big enough for bands to carry real mass (per-dir create+commit
-    // is a fixed cost; small deltas collapse into band 0, which phase-A
-    // refills always read anyway — superset reads stay exact). The
-    // EXACT spill total comes back with the accounting aggregate, so
-    // the rule is volume-measured, not proxied: cut waves included (a
-    // 10^7-row seed cut bands; a 10^5-row one collapses to band 0 and
-    // dodges ~1000 per-dir commits).
-    var bandIt = true // assigned from the accounting aggregate below
-    def writeSpill(rows: DataFrame): Unit = {
-      rows.withColumn("bkb", if (bandIt) bkbCol else bucketCol * lit(MaxBand + 1))
-        .repartition(col("bkb")) // one file per (bucket, band) dir
-        .write.partitionBy("bkb").mode("overwrite").parquet(spillDir(wave))
-      // banded stores carry a bounds sidecar so phase-A refills can
-      // settle exactly against the unread bands; single-band deltas
-      // have no unread rows and need none
-      if (bandIt) writeBounds(rows, bandCol, spillDir(wave))
-      backlogStore.addDelta(wave)
-      bucketDirCache.remove(spillDir(wave))
-    }
-    def writeHead(rows: DataFrame): Unit =
-      // narrow coalesce: the union doubles partition count; halve it
-      // back so the head dir keeps ~one file per core
-      rows.coalesce(spark.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(headDir(wave))
-
-    // per-host accounting over the SAME cached frames the writes scan
-    // (r4 re-read the just-written parquet for these counts): one row
-    // per candidate host — scheduled (pre-robots-re-gate, the safe
-    // superset) or receiving rows — with prior fence state, this
-    // wave's spill count and pre-refill head count. Everything the
-    // needy/re-cut decisions and the fence delta need, O(wave work).
-    // ONE union-aggregate instead of two count shuffles + a distinct +
-    // four joins: every broadcast join in this chain was a separate
-    // driver job (the broadcast build executes its agg subplan), and
-    // the ~6-job serial chain dominated the wave's fixed cost. The
-    // union carries tag columns; a single host-keyed hash-agg yields
-    // head count, spill count and the first-spill fence in one
-    // shuffle, leaving exactly one small join (the prior fence view).
-    // pure-sum aggregate — stays a pipelined HashAggregate (a struct
-    // max in here would demote the whole 3-way union to a
-    // SortAggregate over every head+spill row); the tiny first-fence
-    // slice and the prior fence view broadcast-join onto the result
+  /** Accounting step (scaladoc step 3), ONE job: per-host accounting
+    * over the SAME cached frames the writes scan — one row per candidate
+    * host (scheduled pre-robots-re-gate, the safe superset, or receiving
+    * rows) with prior fence state, this wave's spill count and pre-refill
+    * head count. Returns (info, needy hosts, re-cut hosts, epoch-bump
+    * re-cut hosts, whether the spill is banded). */
+  private def accounting(headRows: DataFrame, spillRows: DataFrame, schedPreGate: DataFrame,
+                         schedFence: DataFrame, fencePrev: DataFrame)
+      : (DataFrame, Long, Long, Long, Boolean) = {
+    // ONE union-aggregate: every broadcast join in a chain of count
+    // shuffles and joins is a separate serial driver job. Pure sums keep
+    // it a pipelined HashAggregate (a struct max in here would demote
+    // the whole 3-way union to a SortAggregate over every head+spill
+    // row); the tiny first-fence slice and the prior fence view join
+    // onto the result.
     val stats = headRows.select(col("host"), lit(1L).as("hc1"), lit(0L).as("sp1"))
       .unionByName(spillRows.select(col("host"), lit(0L).as("hc1"), lit(1L).as("sp1")))
       .unionByName(schedPreGate.select(col("host"), lit(0L).as("hc1"), lit(0L).as("sp1")))
@@ -1518,130 +1475,86 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
         (coalesce(col("pbn"), lit(0L)) + col("spilled")).as("bn"),
         col("hc"), col("spilled"),
         (col("spilled") > 0L || col("nfp").isNotNull).as("touched"))
-    // refill trigger: mandatory below budget; optionally deamortized
-    // (see scaladoc step 4 and cfg.refillSpread)
-    val spreadPeriod = math.max(1, cfg.headMult - 1)
-    val needyCond = col("fp").isNotNull && col("bn") > 0 && col("hc") < M &&
-      (col("hc") < budget ||
-        (lit(cfg.refillSpread) && col("hc") < 2L * budget &&
-          pmod(xxhash64(col("host")), lit(spreadPeriod.toLong)) ===
-            lit((wave % spreadPeriod).toLong)))
-    // no fp.isNotNull gate: a host FIRST discovered this wave (fp null —
-    // no prior fence, no spill) whose fresh flood exceeds 2×M must be
-    // cut too, or the "head ≤ 2×M post-wave" bound fails for one wave
-    // per new hot host. Such a host is rf=false by construction (never
-    // refilled), so it takes the cheap path: its rank-M row becomes its
-    // FIRST fence (epoch 0) and bn = hc − M exactly.
-    val recutCond = col("hc") > 2L * M
+    jd("maint:accounting")
+    // LAZY localCheckpoint, materialized by the aggregate right below:
+    // it truncates the plan to a leaf. Every later step references
+    // `info` several times over, and each reference would otherwise
+    // embed the ENTIRE schedule/routing subtree again — the per-job
+    // plan-description string grows exponentially in chain depth. The
+    // blocks die with the wave's frames; a lost executor fails the wave,
+    // whose re-run is exact (writes invisible until commit).
+    val info = info0.localCheckpoint(false)
+    val r = info.agg(
+      sum(when(needyCond, 1L).otherwise(0L)),
+      sum(when(recutCond, 1L).otherwise(0L)),
+      sum(when(recutCond && col("rf"), 1L).otherwise(0L)),
+      sum(col("spilled"))).head()
+    def n(i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
+    // the spill is banded like the compacted base only when it is big
+    // enough for bands to carry real mass (per-dir create+commit is a
+    // fixed cost; small deltas collapse into band 0, which phase-A
+    // refills always read anyway — superset reads stay exact)
+    (info, n(0), n(1), n(2), n(3) > 5000L * cfg.backlogBuckets * (MaxBand + 1))
+  }
 
-    // 3. accounting FIRST (one job): the re-cut decision must fold
-    // into the head/spill frames BEFORE they are written — deciding
-    // after the writes means rewriting both dirs on every overgrowth
-    // wave (a steady Zipf crawl overgrows its hottest hosts most
-    // waves, so that double write was a per-wave cost, not a rare
-    // one). `info` materializes via an EAGER localCheckpoint: besides
-    // caching the rows, it truncates the plan to a leaf. Every later
-    // step (refill, re-cut, fence delta) references `info` several
-    // times over, and each reference would otherwise embed the ENTIRE
-    // schedule/routing subtree again — plan TREES print subtrees per
-    // reference, so the per-job plan-description string (built
-    // unconditionally for the SQL listener event) grows exponentially
-    // in chain depth. The checkpoint blocks die with the wave's
-    // frames; a lost executor fails the wave, whose re-run is exact
-    // (writes invisible until commit).
-    val (info, nNeedy, nRecut, nRecutEpoch) = locally {
-      jd("maint:accounting")
-      // LAZY checkpoint: the accounting aggregate right below is the
-      // first action and materializes it — one driver job instead of
-      // two (eager checkpoint + agg), same truncated-leaf semantics
-      // for every later reference
-      val ck = info0.localCheckpoint(false)
-      val r = ck.agg(
-        sum(when(needyCond, 1L).otherwise(0L)),
-        sum(when(recutCond, 1L).otherwise(0L)),
-        sum(when(recutCond && col("rf"), 1L).otherwise(0L)),
-        sum(col("spilled"))).head()
-      bandIt = (if (r.isNullAt(3)) 0L else r.getLong(3)) >
-        5000L * cfg.backlogBuckets * (MaxBand + 1)
-      (ck,
-        if (r.isNullAt(0)) 0L else r.getLong(0),
-        if (r.isNullAt(1)) 0L else r.getLong(1),
-        if (r.isNullAt(2)) 0L else r.getLong(2))
-    }
-    if (debug) System.err.println(
-      s"[frontier]     accounting: nNeedy=$nNeedy nRecut=$nRecut (epoch=$nRecutEpoch) bandIt=$bandIt")
-    sub("accounting")
+  /** The re-cut hosts' head rows `hr` cut back to their true top-M
+    * through the salted window (overgrown hosts are by definition the
+    * hot hosts, exactly where salt matters): (kept top-M rows, overflow
+    * rows, new rank-M fences as host/rfp/rfs). */
+  private def cutHeads(hr: DataFrame,
+                       keep: DataFrame => DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val M = headM
+    val (top, dropped) = saltedTopM(hr, "rk", keep)
+    val ranked = keep(top)
+    (ranked.filter(col("rk") <= M).select(pcols: _*),
+      ranked.filter(col("rk") > M).select(pcols: _*).unionByName(dropped),
+      ranked.filter(col("rk") === M)
+        .select(col("host"), col("priority").as("rfp"), col("surt_key").as("rfs")))
+  }
 
-    // 5. epoch'd / in-place per-host RE-CUT, folded into the frames
-    // before any write. A host whose head exceeded 2×M is cut back to
-    // its true top-M (salted two-phase window over the cached head
-    // frame — overgrown hosts are by definition the hot hosts, exactly
-    // where salt matters) and its fence moves DOWN to the new rank-M
-    // boundary. Two prices, chosen per host by `rf`:
-    //  - CHEAP (rf=false — the host never refilled in its current
-    //    epoch): the epoch provably holds NO stale backlog copies, so
-    //    the lowered fence can resurrect nothing; the overflow spills
-    //    as plain current-epoch rows and bn grows by exactly that
-    //    count. O(overflow). The common case — a Zipf-hot host keeps
-    //    receiving better-than-fence rows and never drains enough to
-    //    refill.
-    //  - EPOCH BUMP (rf=true — refill copies may sit in (newFence,
-    //    oldFence]): the host's live backlog is rewritten under
-    //    epoch+1 together with the overflow; every older row dies by
-    //    epoch mismatch. O(that host's backlog), rare — needs
-    //    refill-then-flood within one epoch.
-    var recutRows: DataFrame = emptyFence
-    var recutPersists: List[DataFrame] = Nil
-    var headFinal = headRows
-    var spillFinal = spillRows
-    if (nRecut > 0 && nRecut <= cfg.recutCollectMax) {
-      // DRIVER-LITERAL path (the norm — re-cut hosts are the few Zipf-
-      // hot heads of a wave): one tiny collect off the checkpointed
-      // accounting leaf replaces five broadcast joins, each of which
-      // was a separate serial driver job. Host predicates become
-      // InSet literals, per-host epochs a map literal, and the fence
-      // delta rows are built ON the driver with zero lineage — the
-      // overflow count needs no job at all (it is exactly hc − M).
-      val rws = info.filter(recutCond)
-        .select("host", "fp", "fs", "epoch", "rf", "rc", "bn", "hc").collect()
-      val allHosts = rws.map(_.getString(0)).toSeq
-      val cheapR = rws.filter(!_.getBoolean(4))
-      val expR = rws.filter(_.getBoolean(4))
-      val wSaltR = Window
-        .partitionBy(col("host"), pmod(hash(col("surt_key")), lit(cfg.salt)))
-        .orderBy(col("priority"), col("surt_key"))
-      val hr = headRows.filter(col("host").isin(allHosts: _*))
-      val rp1 = hr.withColumn("rn1", row_number().over(wSaltR))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      recutPersists ::= rp1
-      val rRanked = rp1.filter(col("rn1") <= M).drop("rn1")
-        .withColumn("rk", row_number().over(wHost))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      recutPersists ::= rRanked
-      val keepR = rRanked.filter(col("rk") <= M).select(pcols.map(col): _*)
-      val overflowR = rRanked.filter(col("rk") > M).select(pcols.map(col): _*)
-        .unionByName(rp1.filter(col("rn1") > M).select(pcols.map(col): _*))
-      val newFenceR = rRanked.filter(col("rk") === M)
-        .select(col("host"), col("priority").as("rfp"), col("surt_key").as("rfs"))
-      val epochByHost = rws.map(r => r.getString(0) ->
-        (if (r.getBoolean(4)) r.getInt(3) + 1 else r.getInt(3))).toMap
-      val spillRecut = overflowR
-        .withColumn("epoch",
-          element_at(typedlit(epochByHost), col("host")))
-        .select(bcols.map(col): _*)
-      var spillEpoch: DataFrame = emptyBacklog
-      var epochCnt = Map.empty[String, Long]
-      if (expR.nonEmpty) {
-        // EPOCH path (rare): the hosts' live backlog — committed dirs
-        // (this wave's spill dir does not exist yet) plus this wave's
-        // routed spill for them from the CACHED frame — is rewritten
-        // under epoch+1; one recount collect yields the new bn.
-        val expHosts = expR.map(_.getString(0)).toSeq
-        // bucket ids via the engine's own hash expression (exactness:
-        // never re-derive the bucketing function on the driver)
+  /** Re-cut step (scaladoc step 5), DRIVER-LITERAL path — the norm, for
+    * ≤ recutCollectMax hosts (re-cut hosts are the few Zipf-hot heads of
+    * a wave): one tiny collect off the checkpointed accounting leaf
+    * replaces five broadcast joins, each a separate serial driver job.
+    * Host predicates become InSet literals, per-host epochs a map
+    * literal, and the fence delta rows are built ON the driver — the
+    * overflow count needs no job at all (it is exactly hc − M). Two
+    * prices, chosen per host by `rf`:
+    *  - CHEAP (rf=false — never refilled in its current epoch): the
+    *    epoch provably holds NO stale backlog copies, so the lowered
+    *    fence resurrects nothing; the overflow spills as plain
+    *    current-epoch rows and bn grows by exactly that count.
+    *  - EPOCH BUMP (rf=true — refill copies may sit in (newFence,
+    *    oldFence]): the host's live backlog is rewritten under epoch+1
+    *    together with the overflow; every older row dies by epoch
+    *    mismatch. Rare — needs refill-then-flood within one epoch.
+    * Returns (final head rows, final spill rows, re-cut fence rows). */
+  private def recutOnDriver(info: DataFrame, headRows: DataFrame, spillRows: DataFrame,
+                            wave: Int, keep: DataFrame => DataFrame)
+      : (DataFrame, DataFrame, DataFrame) = {
+    jd("maint:recut")
+    val M = headM
+    val rws = info.filter(recutCond)
+      .select("host", "fp", "fs", "epoch", "rf", "rc", "bn", "hc").collect()
+    val allHosts = rws.map(_.getString(0)).toSeq
+    val expR = rws.filter(_.getBoolean(4))
+    val expHosts = expR.map(_.getString(0)).toSeq
+    val (keepR, overflowR, newFenceR) = cutHeads(headRows.filter(col("host").isin(allHosts: _*)), keep)
+    val epochByHost = rws.map(r => r.getString(0) ->
+      (if (r.getBoolean(4)) r.getInt(3) + 1 else r.getInt(3))).toMap
+    val spillRecut = overflowR
+      .withColumn("epoch", element_at(typedlit(epochByHost), col("host")))
+      .select(bcols: _*)
+    val (spillEpoch, epochCnt) =
+      if (expR.isEmpty) (emptyBacklog, Map.empty[String, Long])
+      else {
+        // the hosts' live backlog — committed dirs (this wave's spill dir
+        // does not exist yet) plus this wave's routed spill for them from
+        // the CACHED frame — is rewritten under epoch+1; one recount
+        // collect yields the new bn. Bucket ids come from the engine's
+        // own hash expression (never re-derive bucketing on the driver).
         val bucketsOf = spark.createDataFrame(
-            spark.sparkContext.parallelize(expR.map(r =>
-              org.apache.spark.sql.Row(r.getString(0))).toSeq, 1),
+            spark.sparkContext.parallelize(expHosts.map(org.apache.spark.sql.Row(_)), 1),
             org.apache.spark.sql.types.StructType(Seq(
               org.apache.spark.sql.types.StructField("host",
                 org.apache.spark.sql.types.StringType))))
@@ -1654,340 +1567,280 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
           .withColumn("fp", col("__f._1")).withColumn("fs", col("__f._2"))
           .withColumn("__fe", col("__f._3"))
           .filter(liveBacklogRow)
-          .select(pcols.map(col): _*)
-        val liveNew = spillRows.filter(col("host").isin(expHosts: _*))
-          .select(pcols.map(col): _*)
+          .select(pcols: _*)
+        val liveNew = spillRows.filter(col("host").isin(expHosts: _*)).select(pcols: _*)
         val nep = typedlit(expR.map(r => r.getString(0) -> (r.getInt(3) + 1)).toMap)
-        spillEpoch = liveOld.unionByName(liveNew)
+        val rewritten = keep(liveOld.unionByName(liveNew)
           .withColumn("epoch", element_at(nep, col("host")))
-          .select(bcols.map(col): _*)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        recutPersists ::= spillEpoch
-        epochCnt = spillEpoch.groupBy("host").agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+          .select(bcols: _*))
+        (rewritten, rewritten.groupBy("host").agg(count(lit(1)).as("n"))
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
       }
-      headFinal = headRows.filter(!col("host").isin(allHosts: _*))
-        .unionByName(keepR)
-      spillFinal = (if (expR.nonEmpty)
-          spillRows.filter(!col("host").isin(expR.map(_.getString(0)).toSeq: _*))
+    val headFinal = headRows.filter(!col("host").isin(allHosts: _*)).unionByName(keepR)
+    val spillFinal = (if (expR.nonEmpty) spillRows.filter(!col("host").isin(expHosts: _*))
         else spillRows)
-        .unionByName(spillRecut).unionByName(spillEpoch)
-      // fence delta rows for the re-cut hosts: everything except the
-      // new boundary is driver-built (cheap bn = bn + overflow = bn +
-      // (hc−M); epoch bn = live recount + overflow, under epoch+1);
-      // the boundary itself joins in from the CACHED rank-M slice
-      // inside the concurrent delta write — no serial job here.
-      val fenceRows = rws.map { r =>
-        val h = r.getString(0)
-        val rfFlag = r.getBoolean(4)
-        val bnNew =
-          if (!rfFlag) r.getLong(6) + (r.getLong(7) - M)
-          else epochCnt.getOrElse(h, 0L) + (r.getLong(7) - M)
-        org.apache.spark.sql.Row(h, bnNew,
-          if (rfFlag) r.getInt(3) + 1 else r.getInt(3), false, r.getInt(5) + 1)
-      }
-      val localSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("host", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("bn", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("epoch", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("rf", org.apache.spark.sql.types.BooleanType),
-        org.apache.spark.sql.types.StructField("rc", org.apache.spark.sql.types.IntegerType)))
-      recutRows = spark.createDataFrame(
-          spark.sparkContext.parallelize(fenceRows.toSeq, 1), localSchema)
-        .join(broadcast(newFenceR), Seq("host"))
-        .select(col("host"), col("rfp").as("fp"), col("rfs").as("fs"),
-          col("bn"), col("epoch"), col("rf"), col("rc"))
-      sub("re-cut fold")
-    } else if (nRecut > 0) {
-      // JOIN fallback — an adversarial wave re-cutting more hosts than
-      // the driver should hold; same semantics, distributed bookkeeping
-      val recutHosts = info.filter(recutCond)
-        .select(col("host"), col("fp"), col("fs"), col("epoch"), col("rf"),
-          col("rc"), col("bn"), bucketCol.as("bucket"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      recutPersists ::= recutHosts
-      val wSaltR = Window
-        .partitionBy(col("host"), pmod(hash(col("surt_key")), lit(cfg.salt)))
-        .orderBy(col("priority"), col("surt_key"))
-      val hr = headRows.join(recutHosts.select("host"), Seq("host"), "left_semi")
-      val rp1 = hr.withColumn("rn1", row_number().over(wSaltR))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      recutPersists ::= rp1
-      val rRanked = rp1.filter(col("rn1") <= M).drop("rn1")
-        .withColumn("rk", row_number().over(wHost))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      recutPersists ::= rRanked
-      val keepR = rRanked.filter(col("rk") <= M).select(pcols.map(col): _*)
-      val overflowR = rRanked.filter(col("rk") > M).select(pcols.map(col): _*)
-        .unionByName(rp1.filter(col("rn1") > M).select(pcols.map(col): _*))
-      val newFenceR = rRanked.filter(col("rk") === M)
-        .select(col("host"), col("priority").as("rfp"), col("surt_key").as("rfs"))
-      val cheap = recutHosts.filter(!col("rf"))
-      // cheap overflow keeps the host's CURRENT epoch
-      val spillCheap = overflowR
-        .join(cheap.select(col("host"), col("epoch").as("nep")), Seq("host"))
-        .withColumn("epoch", col("nep")).drop("nep")
-        .select(bcols.map(col): _*)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      recutPersists ::= spillCheap
-      var spillEpoch: DataFrame = emptyBacklog
-      if (nRecutEpoch > 0) {
-        val expens = recutHosts.filter(col("rf"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        recutPersists ::= expens
+      .unionByName(spillRecut).unionByName(spillEpoch)
+    // fence delta rows: everything except the new boundary is
+    // driver-built (cheap bn = bn + (hc−M); epoch bn = live recount +
+    // (hc−M), under epoch+1); the boundary joins in from the CACHED
+    // rank-M slice inside the concurrent delta write — no serial job
+    val fenceRows = rws.map { r =>
+      val h = r.getString(0)
+      val rfFlag = r.getBoolean(4)
+      val bnNew =
+        if (!rfFlag) r.getLong(6) + (r.getLong(7) - M)
+        else epochCnt.getOrElse(h, 0L) + (r.getLong(7) - M)
+      org.apache.spark.sql.Row(h, bnNew,
+        if (rfFlag) r.getInt(3) + 1 else r.getInt(3), false, r.getInt(5) + 1)
+    }
+    val localSchema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("host", org.apache.spark.sql.types.StringType),
+      org.apache.spark.sql.types.StructField("bn", org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("epoch", org.apache.spark.sql.types.IntegerType),
+      org.apache.spark.sql.types.StructField("rf", org.apache.spark.sql.types.BooleanType),
+      org.apache.spark.sql.types.StructField("rc", org.apache.spark.sql.types.IntegerType)))
+    val recutRows = spark.createDataFrame(
+        spark.sparkContext.parallelize(fenceRows.toSeq, 1), localSchema)
+      .join(broadcast(newFenceR), Seq("host"))
+      .select(col("host"), col("rfp").as("fp"), col("rfs").as("fs"),
+        col("bn"), col("epoch"), col("rf"), col("rc"))
+    (headFinal, spillFinal, recutRows)
+  }
+
+  /** Re-cut step, DISTRIBUTED JOIN path — a wave re-cutting more hosts
+    * than the driver should hold (> recutCollectMax); the same semantics
+    * as `recutOnDriver`, with host-keyed joins instead of literals.
+    * `anyEpoch` tells whether some re-cut host takes the epoch bump.
+    * Returns (final head rows, final spill rows, re-cut fence rows). */
+  private def recutDistributed(info: DataFrame, headRows: DataFrame, spillRows: DataFrame,
+                               anyEpoch: Boolean, wave: Int, keep: DataFrame => DataFrame)
+      : (DataFrame, DataFrame, DataFrame) = {
+    jd("maint:recut")
+    val recutHosts = keep(info.filter(recutCond)
+      .select(col("host"), col("fp"), col("fs"), col("epoch"), col("rf"),
+        col("rc"), col("bn"), bucketCol.as("bucket")))
+    val (keepR, overflowR, newFenceR) =
+      cutHeads(headRows.join(recutHosts.select("host"), Seq("host"), "left_semi"), keep)
+    val cheap = recutHosts.filter(!col("rf"))
+    // cheap overflow keeps the host's CURRENT epoch
+    val spillCheap = keep(overflowR
+      .join(cheap.select(col("host"), col("epoch").as("nep")), Seq("host"))
+      .withColumn("epoch", col("nep")).drop("nep")
+      .select(bcols: _*))
+    val spillEpoch =
+      if (!anyEpoch) emptyBacklog
+      else {
+        val expens = keep(recutHosts.filter(col("rf")))
         // the hosts' live backlog: committed dirs (epoch-filtered —
         // this wave's spill dir does not exist yet) plus this wave's
         // routed spill for them from the CACHED frame
         val rBuckets = expens.select("bucket").distinct().as[Int].collect().toSet
         val liveOld = backlogLive(backlogBucketDirs(backlogDirs(wave), rBuckets),
             expens.select("host", "fp", "fs", "epoch"))
-          .select(pcols.map(col): _*)
+          .select(pcols: _*)
         val liveNew = spillRows.join(expens.select("host"), Seq("host"), "left_semi")
-          .select(pcols.map(col): _*)
-        spillEpoch = overflowR
+          .select(pcols: _*)
+        keep(overflowR
           .join(expens.select("host"), Seq("host"), "left_semi")
           .unionByName(liveOld).unionByName(liveNew)
           .join(expens.select(col("host"), (col("epoch") + 1).as("nep")), Seq("host"))
           .withColumn("epoch", col("nep")).drop("nep")
-          .select(bcols.map(col): _*)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        recutPersists ::= spillEpoch
+          .select(bcols: _*))
       }
-      // final frames: re-cut hosts' head rows are replaced by their
-      // top-M; an epoch-bumped host's routed spill is replaced by its
-      // rewritten backlog (cheap hosts' routed spill stands, plus the
-      // overflow)
-      headFinal = headRows.join(recutHosts.select("host"), Seq("host"), "left_anti")
-        .unionByName(keepR)
-      spillFinal = (if (nRecutEpoch > 0)
-          spillRows.join(recutHosts.filter(col("rf")).select("host"),
-            Seq("host"), "left_anti")
-        else spillRows)
-        .unionByName(spillCheap).unionByName(spillEpoch)
-      val cheapCnt = spillCheap.groupBy("host").agg(count(lit(1)).as("xn"))
-      val epochCnt = spillEpoch.groupBy("host").agg(count(lit(1)).as("xn"))
-      val cheapRows = cheap.join(newFenceR, Seq("host"))
-        .join(cheapCnt, Seq("host"), "left")
-        .select(col("host"), col("rfp").as("fp"), col("rfs").as("fs"),
-          (col("bn") + coalesce(col("xn"), lit(0L))).as("bn"),
-          col("epoch"), lit(false).as("rf"), (col("rc") + 1).as("rc"))
-      val epochRows = recutHosts.filter(col("rf")).join(newFenceR, Seq("host"))
-        .join(epochCnt, Seq("host"), "left")
-        .select(col("host"), col("rfp").as("fp"), col("rfs").as("fs"),
-          coalesce(col("xn"), lit(0L)).as("bn"),
-          (col("epoch") + 1).as("epoch"), lit(false).as("rf"),
-          (col("rc") + 1).as("rc"))
-      recutRows = cheapRows.unionByName(epochRows)
-      sub("re-cut fold")
-    }
+    // re-cut hosts' head rows are replaced by their top-M; an
+    // epoch-bumped host's routed spill is replaced by its rewritten
+    // backlog (cheap hosts' routed spill stands, plus the overflow)
+    val headFinal = headRows.join(recutHosts.select("host"), Seq("host"), "left_anti")
+      .unionByName(keepR)
+    val spillFinal = (if (anyEpoch)
+        spillRows.join(recutHosts.filter(col("rf")).select("host"), Seq("host"), "left_anti")
+      else spillRows)
+      .unionByName(spillCheap).unionByName(spillEpoch)
+    val cheapCnt = spillCheap.groupBy("host").agg(count(lit(1)).as("xn"))
+    val epochCnt = spillEpoch.groupBy("host").agg(count(lit(1)).as("xn"))
+    val cheapRows = cheap.join(newFenceR, Seq("host"))
+      .join(cheapCnt, Seq("host"), "left")
+      .select(col("host"), col("rfp").as("fp"), col("rfs").as("fs"),
+        (col("bn") + coalesce(col("xn"), lit(0L))).as("bn"),
+        col("epoch"), lit(false).as("rf"), (col("rc") + 1).as("rc"))
+    val epochRows = recutHosts.filter(col("rf")).join(newFenceR, Seq("host"))
+      .join(epochCnt, Seq("host"), "left")
+      .select(col("host"), col("rfp").as("fp"), col("rfs").as("fs"),
+        coalesce(col("xn"), lit(0L)).as("bn"),
+        (col("epoch") + 1).as("epoch"), lit(false).as("rf"),
+        (col("rc") + 1).as("rc"))
+    (headFinal, spillFinal, cheapRows.unionByName(epochRows))
+  }
 
-    // 3b. the final head/spill writes — ONE write each, re-cut already
-    // folded in — and, when no refill is pending, the fence delta too:
-    // all three sinks read only cached/checkpointed frames and prior
-    // waves' dirs, so they are independent jobs, submitted together.
-    // (With a pending refill the delta must wait: refilled fences are
-    // part of it, and the refill must see this wave's spill dir.)
-    val deltaBase = info
-      .filter(col("touched") && !needyCond && !recutCond)
-      .select(col("host"), col("fp"), col("fs"), col("bn"), col("epoch"),
-        col("rf"), col("rc"))
-    val deltaObs = org.apache.spark.sql.Observation()
-    def writeDelta(rows: DataFrame): Unit = {
-      rows.observe(deltaObs, count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(fenceStore.deltaDir(wave))
-      fenceStore.addDelta(wave)
+  /** Head/spill/delta write step: ONE write each, re-cut already folded
+    * in, submitted together — all sinks read only cached/checkpointed
+    * frames and prior waves' dirs. The fence delta is written here when
+    * given; returns its row count then. */
+  private def writeState(headFinal: DataFrame, spillFinal: DataFrame, bandIt: Boolean,
+                         wave: Int, delta: Option[DataFrame]): Option[Long] = {
+    val fHead = Frontier.guarded {
+      jd("maint:writeHead")
+      // narrow coalesce: the union doubles partition count; halve it
+      // back so the head dir keeps ~one file per core
+      headFinal.coalesce(spark.sparkContext.defaultParallelism)
+        .write.mode("overwrite").parquet(headDir(wave))
     }
-    locally {
-      import scala.concurrent.Await
-      import scala.concurrent.duration.Duration
-      val fHead = Frontier.guarded {
-        jd("maint:writeHead")
-        val t = System.nanoTime()
-        writeHead(headFinal)
-        if (debug) System.err.println(
-          f"[frontier]     fHead: ${(System.nanoTime() - t) / 1e9}%.2fs")
-      }
-      val fSpill = Frontier.guarded {
-        jd("maint:writeSpill")
-        val t = System.nanoTime()
-        writeSpill(spillFinal)
-        if (debug) System.err.println(
-          f"[frontier]     fSpill: ${(System.nanoTime() - t) / 1e9}%.2fs")
-      }
-      val fDelta =
-        if (nNeedy > 0) None
-        else Some(Frontier.guarded {
-          jd("maint:writeDelta")
-          val t = System.nanoTime()
-          writeDelta(deltaBase
-            .unionByName(recutRows.select("host", "fp", "fs", "bn", "epoch", "rf", "rc")))
-          if (debug) System.err.println(
-            f"[frontier]     fDelta: ${(System.nanoTime() - t) / 1e9}%.2fs")
-        })
-      Await.result(fHead, Duration.Inf)
-      Await.result(fSpill, Duration.Inf)
-      fDelta.foreach(Await.result(_, Duration.Inf))
+    val fSpill = Frontier.guarded {
+      jd("maint:writeSpill")
+      spillFinal.withColumn("bkb", if (bandIt) bkbCol else bucketCol * lit(MaxBand + 1))
+        .repartition(col("bkb")) // one file per (bucket, band) dir
+        .write.partitionBy("bkb").mode("overwrite").parquet(spillDir(wave))
+      // banded stores carry a bounds sidecar so phase-A refills can
+      // settle exactly against the unread bands; single-band deltas
+      // have no unread rows and need none
+      if (bandIt) writeBounds(spillFinal, bandCol, spillDir(wave))
+      backlogStore.addDelta(wave)
+      bucketDirCache.remove(spillDir(wave))
     }
-    sub("head+spill(+delta) writes (concurrent)")
+    val fDelta = delta.map(rows => Frontier.guarded(writeFenceDelta(rows, wave)))
+    Await.result(fHead, Duration.Inf)
+    Await.result(fSpill, Duration.Inf)
+    fDelta.map(Await.result(_, Duration.Inf))
+  }
 
-    // 4. refill — needy hosts only (the r4 full-fence-table chain is
-    // gone; `info` already scoped the candidates to this wave's work).
-    // TWO-PHASE BANDED read: phase A reads the needy buckets' spill
-    // deltas plus only the BAND-0 slice of the compacted base; a host
-    // settles there when its full deficit arrives with every taken
-    // priority strictly inside band 0 (all unread rows provably
-    // worse); the rest re-read their buckets whole (phase B).
-    var needyRows: DataFrame = emptyFence
-    var refillPersists: List[DataFrame] = Nil
-    if (nNeedy > 0) {
-      jd("maint:refill")
-      val needy = info.filter(needyCond)
-        .select(col("host"), col("fp"), col("fs"), col("epoch"), col("rf"),
-          col("rc"), col("bn"),
-          (lit(M.toLong) - col("hc")).as("deficit"), bucketCol.as("bucket"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      refillPersists ::= needy
-      val buckets = needy.select("bucket").distinct().as[Int].collect().toSet
-      def liveRanked(dirs: Seq[String], who: DataFrame): DataFrame =
-        backlogLive(dirs, who.select("host", "fp", "fs", "epoch", "deficit"))
-          .withColumn("rk", row_number().over(wHost))
-      val rlA = liveRanked(backlogBucketDirs(backlogDirs(wave), buckets, bandZeroOnly = true), needy)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      refillPersists ::= rlA
-      // per-host phase-A outcome: settled iff the full deficit arrived
-      // with every taken row strictly better than the host's best row
-      // OUTSIDE band 0 (the bkb=-1 bounds sidecars, reduced per host;
-      // a host with no bounds row has no unread banded rows at all).
-      // This is exact at any fence height — the old static
-      // `worstA < BandWidth` check stopped settling once fences rose
-      // past the first priority band, silently degrading every later
-      // refill to a full phase-B read.
-      val boundsDirs = backlogBoundsDirs(wave)
-      val boundsMin =
-        if (boundsDirs.isEmpty) null
-        else spark.read.schema(BoundsSchema).parquet(boundsDirs: _*)
-          .groupBy("host")
-          .agg(min(struct(col("bp").as("p"), col("bs").as("s"))).as("minb"))
-      val aAgg = rlA.groupBy("host").agg(
-        sum(when(col("rk") <= col("deficit"), 1L).otherwise(0L)).as("takenA"),
-        max(when(col("rk") <= col("deficit"),
-          struct(col("priority").as("p"), col("surt_key").as("s")))).as("worstA"))
-      val settled0 = needy.join(aAgg, Seq("host"), "left")
-      val settled = (if (boundsMin == null) settled0.withColumn("minb",
-          lit(null).cast("struct<p:int,s:string>"))
-        else settled0.join(boundsMin, Seq("host"), "left"))
-        .select(col("host"), col("deficit"),
-          (coalesce(col("takenA"), lit(0L)) === col("deficit") &&
-            (col("minb").isNull || col("worstA") < col("minb"))).as("ok"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      refillPersists ::= settled
-      val needyB = needy.join(settled.filter(!col("ok")).select("host"), Seq("host"), "inner")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      refillPersists ::= needyB
-      val anyB = !needyB.isEmpty
-      val takenARows = rlA
-        .join(settled.filter(col("ok")).select("host"), Seq("host"), "inner")
-        .filter(col("rk") <= col("deficit"))
-        .select(pcols.map(col): _*)
-      val (takenBRows, bAgg) =
-        if (!anyB) (emptyPending, None)
-        else {
-          val bBuckets = needyB.select("bucket").distinct().as[Int].collect().toSet
-          val rlB = liveRanked(backlogBucketDirs(backlogDirs(wave), bBuckets), needyB)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          refillPersists ::= rlB
-          val agg = rlB.groupBy("host").agg(
-            count(lit(1)).as("liveCnt"),
-            sum(when(col("rk") <= col("deficit"), 1L).otherwise(0L)).as("takenCnt"),
-            max(when(col("rk") <= col("deficit"),
-              struct(col("priority").as("p"), col("surt_key").as("s")))).as("mx"))
-          (rlB.filter(col("rk") <= col("deficit")).select(pcols.map(col): _*), Some(agg))
-        }
-      // refilled rows APPEND to the head partition (as a subdir of the
-      // already-written head dir; needy and re-cut host sets are
-      // provably disjoint, so the re-cut fold never touched these)
-      takenARows.unionByName(takenBRows)
-        .write.mode("overwrite").parquet(headDir(wave) + "/refill")
-      // fence/bn updates for the NEEDY hosts only: settled hosts
-      // advance arithmetically (bn was exact, deficit rows left);
-      // phase-B hosts resync from the rows actually read — exact even
-      // if a compaction physically dropped dead rows
-      val aFence = rlA
-        .join(settled.filter(col("ok")).select("host"), Seq("host"), "inner")
-        .filter(col("rk") <= col("deficit"))
-        .groupBy("host").agg(
-          count(lit(1)).as("takenCntA"),
-          max(struct(col("priority").as("p"), col("surt_key").as("s"))).as("mxA"))
-      // a refill that TOOK rows plants stale copies in the current
-      // epoch — flip rf so a later re-cut of this host knows the cheap
-      // fence-lowering is no longer safe (aFence only has hosts with
-      // taken rows, so isNotNull == took > 0)
-      val withA = needy.join(aFence, Seq("host"), "left")
-        .select(col("host"),
-          when(col("takenCntA").isNotNull, col("mxA.p")).otherwise(col("fp")).as("fp"),
-          when(col("takenCntA").isNotNull, col("mxA.s")).otherwise(col("fs")).as("fs"),
-          when(col("takenCntA").isNotNull, col("bn") - col("takenCntA"))
-            .otherwise(col("bn")).as("bn"),
-          col("epoch"),
-          (col("rf") || col("takenCntA").isNotNull).as("rf"), col("rc"))
-      needyRows = bAgg match {
-        case None => withA
-        case Some(agg) =>
-          val adj = needyB.select(col("host"), lit(true).as("isNeedy"))
-            .join(agg, Seq("host"), "left")
-          withA.join(adj, Seq("host"), "left")
-            .select(col("host"),
-              when(col("takenCnt").isNotNull && col("takenCnt") > 0, col("mx.p"))
-                .otherwise(col("fp")).as("fp"),
-              when(col("takenCnt").isNotNull && col("takenCnt") > 0, col("mx.s"))
-                .otherwise(col("fs")).as("fs"),
-              when(col("isNeedy"),
-                coalesce(col("liveCnt"), lit(0L)) - coalesce(col("takenCnt"), lit(0L)))
-                .otherwise(col("bn")).as("bn"),
-              col("epoch"),
-              (col("rf") ||
-                (col("takenCnt").isNotNull && col("takenCnt") > 0)).as("rf"),
-              col("rc"))
-      }
-      sub("refill")
-    }
+  /** Append the wave's fence delta; returns its row count. */
+  private def writeFenceDelta(rows: DataFrame, wave: Int): Long = {
+    jd("maint:writeDelta")
+    val obs = org.apache.spark.sql.Observation()
+    rows.observe(obs, count(lit(1)).as("n"))
+      .write.mode("overwrite").parquet(fenceStore.deltaDir(wave))
+    fenceStore.addDelta(wave)
+    obs.get("n").asInstanceOf[Long]
+  }
 
-    // 6. the wave's fence DELTA: one row per touched / refilled /
-    // re-cut host; dormant and merely-draining hosts write nothing —
-    // the write is O(hosts-touched), never O(hosts-ever-spilled).
-    // Already written concurrently with head/spill above unless a
-    // refill ran (its fence raises are part of the delta).
-    val fcols = Seq("host", "fp", "fs", "bn", "epoch", "rf", "rc")
-    if (nNeedy > 0) {
-      writeDelta(deltaBase
-        .unionByName(needyRows.select(fcols.map(col): _*))
-        .unionByName(recutRows.select(fcols.map(col): _*)))
-      sub("fence delta write")
+  /** Refill step (scaladoc step 4) — needy hosts only. TWO-PHASE BANDED
+    * read: phase A reads the needy buckets' spill deltas plus only the
+    * BAND-0 slice of the compacted base; a host settles there when its
+    * full deficit arrives with every taken row strictly better than its
+    * best unread row; the rest re-read their buckets whole (phase B).
+    * Refilled rows append to the head partition; returns the needy
+    * hosts' fence rows. */
+  private def refill(info: DataFrame, wave: Int, keep: DataFrame => DataFrame): DataFrame = {
+    jd("maint:refill")
+    val needy = keep(info.filter(needyCond)
+      .select(col("host"), col("fp"), col("fs"), col("epoch"), col("rf"),
+        col("rc"), col("bn"),
+        (lit(headM.toLong) - col("hc")).as("deficit"), bucketCol.as("bucket")))
+    val buckets = needy.select("bucket").distinct().as[Int].collect().toSet
+    def liveRanked(dirs: Seq[String], who: DataFrame): DataFrame =
+      backlogLive(dirs, who.select("host", "fp", "fs", "epoch", "deficit"))
+        .withColumn("rk", row_number().over(hostOrder))
+    val rlA = keep(liveRanked(
+      backlogBucketDirs(backlogDirs(wave), buckets, bandZeroOnly = true), needy))
+    // per-host phase-A outcome: settled iff the full deficit arrived
+    // with every taken row strictly better than the host's best row
+    // OUTSIDE band 0 (the bkb=-1 bounds sidecars, reduced per host; a
+    // host with no bounds row has no unread banded rows at all) — exact
+    // at any fence height
+    val boundsDirs = backlogBoundsDirs(wave)
+    val boundsMin =
+      if (boundsDirs.isEmpty) null
+      else spark.read.schema(BoundsSchema).parquet(boundsDirs: _*)
+        .groupBy("host")
+        .agg(min(struct(col("bp").as("p"), col("bs").as("s"))).as("minb"))
+    val aAgg = rlA.groupBy("host").agg(
+      sum(when(col("rk") <= col("deficit"), 1L).otherwise(0L)).as("takenA"),
+      max(when(col("rk") <= col("deficit"),
+        struct(col("priority").as("p"), col("surt_key").as("s")))).as("worstA"))
+    val settled0 = needy.join(aAgg, Seq("host"), "left")
+    val settled = keep((if (boundsMin == null) settled0.withColumn("minb",
+        lit(null).cast("struct<p:int,s:string>"))
+      else settled0.join(boundsMin, Seq("host"), "left"))
+      .select(col("host"), col("deficit"),
+        (coalesce(col("takenA"), lit(0L)) === col("deficit") &&
+          (col("minb").isNull || col("worstA") < col("minb"))).as("ok")))
+    val needyB = keep(needy.join(settled.filter(!col("ok")).select("host"), Seq("host"), "inner"))
+    val anyB = !needyB.isEmpty
+    val takenARows = rlA
+      .join(settled.filter(col("ok")).select("host"), Seq("host"), "inner")
+      .filter(col("rk") <= col("deficit"))
+      .select(pcols: _*)
+    val (takenBRows, bAgg) =
+      if (!anyB) (emptyPending, None)
+      else {
+        val bBuckets = needyB.select("bucket").distinct().as[Int].collect().toSet
+        val rlB = keep(liveRanked(backlogBucketDirs(backlogDirs(wave), bBuckets), needyB))
+        val agg = rlB.groupBy("host").agg(
+          count(lit(1)).as("liveCnt"),
+          sum(when(col("rk") <= col("deficit"), 1L).otherwise(0L)).as("takenCnt"),
+          max(when(col("rk") <= col("deficit"),
+            struct(col("priority").as("p"), col("surt_key").as("s")))).as("mx"))
+        (rlB.filter(col("rk") <= col("deficit")).select(pcols: _*), Some(agg))
+      }
+    // refilled rows APPEND to the head partition (as a subdir of the
+    // already-written head dir; needy and re-cut host sets are
+    // provably disjoint, so the re-cut fold never touched these)
+    takenARows.unionByName(takenBRows)
+      .write.mode("overwrite").parquet(headDir(wave) + "/refill")
+    // fence/bn updates for the NEEDY hosts only: settled hosts advance
+    // arithmetically (bn was exact, deficit rows left); phase-B hosts
+    // resync from the rows actually read — exact even if a compaction
+    // physically dropped dead rows
+    val aFence = rlA
+      .join(settled.filter(col("ok")).select("host"), Seq("host"), "inner")
+      .filter(col("rk") <= col("deficit"))
+      .groupBy("host").agg(
+        count(lit(1)).as("takenCntA"),
+        max(struct(col("priority").as("p"), col("surt_key").as("s"))).as("mxA"))
+    // a refill that TOOK rows plants stale copies in the current epoch —
+    // flip rf so a later re-cut of this host knows the cheap
+    // fence-lowering is no longer safe (aFence only has hosts with taken
+    // rows, so isNotNull == took > 0)
+    val withA = needy.join(aFence, Seq("host"), "left")
+      .select(col("host"),
+        when(col("takenCntA").isNotNull, col("mxA.p")).otherwise(col("fp")).as("fp"),
+        when(col("takenCntA").isNotNull, col("mxA.s")).otherwise(col("fs")).as("fs"),
+        when(col("takenCntA").isNotNull, col("bn") - col("takenCntA"))
+          .otherwise(col("bn")).as("bn"),
+        col("epoch"),
+        (col("rf") || col("takenCntA").isNotNull).as("rf"), col("rc"))
+    bAgg match {
+      case None => withA
+      case Some(agg) =>
+        val adj = needyB.select(col("host"), lit(true).as("isNeedy"))
+          .join(agg, Seq("host"), "left")
+        withA.join(adj, Seq("host"), "left")
+          .select(col("host"),
+            when(col("takenCnt").isNotNull && col("takenCnt") > 0, col("mx.p"))
+              .otherwise(col("fp")).as("fp"),
+            when(col("takenCnt").isNotNull && col("takenCnt") > 0, col("mx.s"))
+              .otherwise(col("fs")).as("fs"),
+            when(col("isNeedy"),
+              coalesce(col("liveCnt"), lit(0L)) - coalesce(col("takenCnt"), lit(0L)))
+              .otherwise(col("bn")).as("bn"),
+            col("epoch"),
+            (col("rf") ||
+              (col("takenCnt").isNotNull && col("takenCnt") > 0)).as("rf"),
+            col("rc"))
     }
+  }
+
+  /** Fence view step (scaladoc step 6): publish the FENCES marker and
+    * fold the wave's delta into the in-instance fence view for the next
+    * wave (see fenceViewCache): (previous view ∖ delta hosts) ∪ delta,
+    * checkpointed to a leaf so the chain never regrows lineage. Skipped
+    * (empty view, no job) while the crawl has no fences at all. */
+  private def foldFenceView(fencePrev: DataFrame, hasFences: Boolean, nDelta: Long,
+                            wave: Int): Unit = {
     markers.delete(s"FENCES-$wave.m")
     // fences are monotone: once any host is fenced the marker stays
-    val nDelta = deltaObs.get("n").asInstanceOf[Long]
     if (hasFences || nDelta > 0L)
       markers.publish(s"FENCES-$wave.m", "{}")
-    // incremental fence-view fold for the next wave (see fenceViewCache):
-    // (previous view ∖ delta hosts) ∪ delta, checkpointed to a leaf so
-    // the chain never regrows lineage. Skipped (empty view, no job)
-    // while the crawl has no fences at all.
     if (!hasFences && nDelta == 0L) fenceViewCache.set((wave, emptyFence))
     else {
+      jd("maint:fenceView")
       val deltaDf = spark.read.schema(FenceSchema)
         .parquet(fenceStore.deltaDir(wave))
-      val newView = fencePrev
+      fenceViewCache.set((wave, fencePrev
         .join(deltaDf.select(col("host")), Seq("host"), "left_anti")
         .unionByName(deltaDf)
-        .localCheckpoint()
-      fenceViewCache.set((wave, newView))
+        .localCheckpoint()))
     }
-    sub("fence view fold")
-    fj.unpersist(blocking = false)
-    info.unpersist(blocking = false)
-    refillPersists.foreach(_.unpersist(blocking = false))
-    recutPersists.foreach(_.unpersist(blocking = false))
   }
 
   /** Seen-membership probe: the fresh (never-seen) subset of `urls`

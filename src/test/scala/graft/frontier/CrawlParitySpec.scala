@@ -39,30 +39,24 @@ class CrawlParitySpec extends AnyFunSuite with SparkTestBase {
       seenShards = 8, outlinksPerUrl = 3, hostPool = 60), waves = 8)
   }
 
-  test("deamortized-refill parity: host-hash-phased EARLY refills never change the schedule, 6 waves") {
-    // refillSpread pulls refills 1 wave early on a host-hash phase —
-    // an early refill only adds rows worse than every head row, so
-    // the schedule must be bit-identical to the (refill-unaware)
-    // sequential reference
-    parityRun("crawl-parity-spread", FrontierConfig(
-      checkpointDir = graft.Scratch.dir("crawl-parity-spread").toString,
-      hostBudget = 4, headMult = 3, backlogBuckets = 8,
-      seenShards = 8, outlinksPerUrl = 3, hostPool = 60,
-      refillSpread = true), waves = 6)
-  }
-
   test("adversarial overgrowth parity: epoch'd per-host re-cuts still match the reference, 6 waves") {
     // "adversarial" discovery concentrates always-best priorities on a
     // tiny host set — every fresh row beats any fence, heads overgrow,
     // and the engine's epoch'd per-host re-cut (fence reset + epoch
     // bump) fires repeatedly. The schedule must STILL be bit-identical
     // to the sequential reference: the re-cut is a state reshape, never
-    // a semantic change.
-    parityRun("crawl-parity-recut", FrontierConfig(
-      checkpointDir = graft.Scratch.dir("crawl-parity-recut").toString,
-      hostBudget = 3, headMult = 2, backlogBuckets = 8,
-      seenShards = 8, outlinksPerUrl = 4, hostPool = 40,
-      outlinkMode = "adversarial"), waves = 6)
+    // a semantic change. Run on both re-cut paths: the driver-literal
+    // one (default cap) and the distributed join (cap 0).
+    for (collectMax <- recutPaths) {
+      val cfg = FrontierConfig(
+        checkpointDir = graft.Scratch.dir(s"crawl-parity-recut-$collectMax").toString,
+        hostBudget = 3, headMult = 2, backlogBuckets = 8,
+        seenShards = 8, outlinksPerUrl = 4, hostPool = 40,
+        outlinkMode = "adversarial", recutCollectMax = collectMax)
+      parityRun("crawl-parity-recut", cfg, waves = 6)
+      val (rc, _) = maxRecutAndEpoch(cfg, 6)
+      assert(rc >= 1, s"recutCollectMax=$collectMax: no host was ever re-cut")
+    }
   }
 
   test("pulse parity: refill-then-flood epoch-bump re-cuts still match the reference, 7 waves") {
@@ -71,12 +65,23 @@ class CrawlParitySpec extends AnyFunSuite with SparkTestBase {
     // where the cheap fence-lowering re-cut would resurrect copies and
     // the engine must take the epoch-bump path instead. Bit-identical
     // schedules prove both re-cut paths and the rf gate between them
-    // are pure state reshapes.
-    parityRun("crawl-parity-pulse", FrontierConfig(
-      checkpointDir = graft.Scratch.dir("crawl-parity-pulse").toString,
-      hostBudget = 3, headMult = 2, backlogBuckets = 8,
-      seenShards = 8, outlinksPerUrl = 4, hostPool = 3,
-      outlinkMode = "pulse"), waves = 7)
+    // are pure state reshapes. headMult=1 refills every drained head,
+    // and seeds on the same 3 hosts make the floods land on refilled
+    // hosts; the fence epoch check below keeps the test non-vacuous.
+    val seeds = Frontier.syntheticSeeds(spark, 600, hostPool = 3).collect()
+      .map(r => (r.getString(0), r.getInt(1))).toSeq
+    for (collectMax <- recutPaths) {
+      val cfg = FrontierConfig(
+        checkpointDir = graft.Scratch.dir(s"crawl-parity-pulse-$collectMax").toString,
+        hostBudget = 3, headMult = 1, backlogBuckets = 8,
+        seenShards = 8, outlinksPerUrl = 4, hostPool = 3,
+        outlinkMode = "pulse", recutCollectMax = collectMax)
+      parityRun("crawl-parity-pulse", cfg, waves = 7, seedRows = Some(seeds))
+      val (rc, epoch) = maxRecutAndEpoch(cfg, 7)
+      assert(rc >= 1, s"recutCollectMax=$collectMax: no host was ever re-cut")
+      assert(epoch >= 1,
+        s"recutCollectMax=$collectMax: pulse shape never forced the epoch-bump path")
+    }
   }
 
   test("real-robots parity: disallows, longest-match, group merge and crawl-delay k_eff match the reference, 5 waves") {
@@ -133,6 +138,17 @@ class CrawlParitySpec extends AnyFunSuite with SparkTestBase {
       assert(Robots.isAllowed(g.map(_.rules).getOrElse(Seq.empty), path),
         s"disallowed URL scheduled: $u")
     }
+  }
+
+  /** The two re-cut paths: driver-literal (default cap) and the
+    * distributed join (cap 0). */
+  private val recutPaths = Seq(FrontierConfig(checkpointDir = "").recutCollectMax, 0)
+
+  /** Max re-cut count and max fence epoch over all hosts as of `wave`. */
+  private def maxRecutAndEpoch(cfg: FrontierConfig, wave: Int): (Int, Int) = {
+    import org.apache.spark.sql.functions.max
+    val r = new Frontier(spark, cfg).fenceTableDf(wave).agg(max("rc"), max("epoch")).head()
+    (r.getInt(0), r.getInt(1))
   }
 
   /** Runs engine and sequential reference side by side; returns each

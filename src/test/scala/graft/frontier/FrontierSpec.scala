@@ -766,14 +766,13 @@ class FrontierSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("pulse discovery (refill-then-flood): heads stay ≤ 2×M and the EPOCH-BUMP re-cut path fires") {
-    // refillSpread=true: pulse bursts keep every head at/above budget,
-    // so only the deamortized (hc < 2×budget) trigger interleaves a
-    // refill between floods — exactly the refill-then-flood sequence
-    // the epoch-bump re-cut exists for
+    // headMult=1 (M = budget): every drained head refills before the
+    // next wave, so refills interleave with the pulse floods — exactly
+    // the refill-then-flood sequence the epoch-bump re-cut exists for
     val cfg = FrontierConfig(checkpointDir = tmpDir("recut-epoch"),
-      hostBudget = 3, headMult = 2, seenShards = 8, backlogBuckets = 8,
+      hostBudget = 3, headMult = 1, seenShards = 8, backlogBuckets = 8,
       outlinksPerUrl = 4, hostPool = 3, outlinkMode = "pulse",
-      compactEvery = 6, refillSpread = true)
+      compactEvery = 6)
     val f = new Frontier(spark, cfg)
     f.initialize(Frontier.syntheticSeeds(spark, 600, hostPool = 3))
     val M = math.max(cfg.hostBudget, cfg.headMult * cfg.hostBudget)

@@ -33,8 +33,9 @@ private[frontier] object CheckpointFiles {
     df.select("surt_key").collect().map(_.getString(0)).sorted.toVector
 }
 
-/** Marker reads and folded-run claims of the state stores, driven
-  * through the public Frontier API on a fault-injecting file system. */
+/** Marker reads and folded-run claims of the state stores, and GC
+  * failures of the per-wave prune, driven through the public Frontier
+  * API on a fault-injecting file system. */
 class StateStoreSpec extends AnyFunSuite with SparkTestBase {
   import CheckpointFiles._
 
@@ -99,5 +100,32 @@ class StateStoreSpec extends AnyFunSuite with SparkTestBase {
     val pend = keys(new Frontier(spark, cfg).pendingDf(6))
     val same = pend == truth
     assert(same, s"pending diverged: ${pend.size} rows vs ${truth.size}")
+  }
+
+  test("a failed level-file prune delete is counted, the wave commits, the next wave removes the file") {
+    val (ck, local) = faultyCk("prune")
+    val f = new Frontier(spark, FrontierConfig(checkpointDir = ck, hostBudget = 4,
+      seenShards = 16, compactEvery = 1000, fastMode = true))
+    f.initialize(Frontier.syntheticSeeds(spark, 3000, hostPool = 40))
+    val shards = local.resolve("shards")
+    def levels: Set[String] = Files.walk(shards).iterator().asScala
+      .map(p => shards.relativize(p).toString).filter(_.endsWith(".lvl")).toSet
+    def indexed(w: Int): Set[String] =
+      Files.readAllLines(shards.resolve(s"wave=$w/INDEX.txt")).asScala.drop(1)
+        .flatMap(_.trim.split(" ").drop(1)).toSet
+    FaultyFs.arm("delete", "\\.lvl$")
+    val faulted =
+      try (1 to 6).iterator.map(_ => f.runWave().wave).find(_ => FaultyFs.fired > 0)
+      finally FaultyFs.disarm()
+    assert(faulted.isDefined, "no superseded level file was pruned in 6 waves")
+    val w = faulted.get
+    assert(FaultyFs.fired == 1)
+    assert(f.latestCommittedWave() == w, s"wave $w did not commit")
+    assert(f.pruneFailures.get() == 1, "failed prune delete not counted")
+    val stale = levels -- indexed(w) -- indexed(w - 1)
+    assert(stale.size == 1, s"expected the one undeleted level, found $stale")
+    f.runWave()
+    assert(!Files.exists(shards.resolve(stale.head)), s"${stale.head} not retried")
+    assert(f.pruneFailures.get() == 1)
   }
 }
