@@ -1,11 +1,33 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Session factory with the engine's standard configuration. Local mode
   * mirrors the cluster layout: shuffle partitions sized to cores (not
   * 200), AQE on for runtime skew handling. */
 object GraftSession {
+  /** Entries in Spark's JVM-wide LRU cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). A frontier
+    * wave compiles ~180-270 classes, so under the default each wave
+    * evicts the classes the next one needs and recompiles its whole plan
+    * set with Janino (~2.2-3.2 s a wave on 4 cores), though the code is
+    * the same from wave to wave. Measured working set under a very large
+    * cache: the frozen `graft.Bench` at sf0.01, the largest one-JVM run,
+    * compiles 826 classes. Sizing rule: count the CodeGenerator
+    * logger's `Code generated in` lines (INFO) over that Bench run and
+    * round up to a power of two.
+    * Spark keys the cache by class loader as well as by code, so a class
+    * compiled on both the driver and a task thread takes two entries.
+    * A static conf: it must be on the builder before the first query. */
+  val CodegenCacheEntries: Int = 1024
+
+  /** JVM-wide codegen counters at this instant: (classes compiled, total
+    * compile ns) since the JVM started. Reading them runs no Spark job. */
+  def codegen: (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+
   def create(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
              shufflePartitions: Int = -1,
              extraConf: Map[String, String] = Map.empty,
@@ -51,6 +73,7 @@ object GraftSession {
         if (benchMode) "2" else "1")
       .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs",
         (!benchMode).toString)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // NOTE: spark.driver.memory cannot be set here — in local mode the

@@ -678,7 +678,7 @@ object SparkEntry {
       f.seenDf(0).write.mode("overwrite").parquet(StageDir + "/q43_seen.parquet")
       val probes = graft.frontier.Frontier.syntheticSeeds(sp, 2 * n)
       probes
-        .withColumn("c", call_udf("canon_all", $"url"))
+        .withColumn("c", udf(Functions.canonAllFn).apply($"url"))
         .select($"c._2".as("surt_key"))
         .filter($"surt_key".isNotNull)
         .write.mode("overwrite").parquet(StageDir + "/q43_probes.parquet")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import scala.concurrent.Await
 import scala.concurrent.duration.Duration
-import graft.Functions
+import graft.{Functions, GraftSession}
 
 /** The crawl frontier + fetch scheduler (north rule, BASELINE.json):
   * a per-host QUEUE-HEAD scheduler over head/fence/backlog state.
@@ -109,7 +109,6 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
                  * absent the deterministic synthetic rule applies */
                robots: Option[DataFrame] = None) {
   import spark.implicits._
-  Functions.registerAll(spark)
 
   private def dir(parts: String*): String = (cfg.checkpointDir +: parts).mkString("/")
 
@@ -154,10 +153,12 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
   // ----------------------------------------------------------------
 
   /** url → (surt_key, canonical_url, host); unparseable URLs dropped.
-    * Single fused UDF (one parse, one string-conversion boundary). */
+    * Single fused UDF (one parse, one string-conversion boundary), built
+    * here rather than looked up by name, so the frontier needs no
+    * registered SQL function in its session. */
   private def canonicalized(urls: DataFrame): DataFrame =
     urls
-      .withColumn("c", call_udf("canon_all", col("url")))
+      .withColumn("c", udf(Functions.canonAllFn).apply(col("url")))
       .withColumn("canonical_url", col("c._1"))
       .withColumn("surt_key", col("c._2"))
       .withColumn("host", col("c._3"))
@@ -1013,12 +1014,22 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     if (waves.isEmpty) -1 else waves.max
   }
 
-  private def commit(wave: Int, result: WaveResult): Unit = {
+  /** Publishes the wave's manifest. `codegen0` is the `GraftSession.codegen`
+    * reading taken when the wave began: `codegen_compiles` and
+    * `codegen_ms` are the classes compiled and the compile time from then
+    * until this commit. The counters are JVM-wide, so they include
+    * compiles of any query running concurrently in the same JVM. The
+    * prunes and periodic compaction that `commitWave` runs after this
+    * write fall in no wave's window, so a compacting wave's figure leaves
+    * out their compiles. */
+  private def commit(wave: Int, result: WaveResult, codegen0: (Long, Long)): Unit = {
+    val (compiles, nanos) = GraftSession.codegen
     val json =
       s"""{"wave":$wave,"candidates":${result.candidates},"deduped":${result.deduped},
          |"fresh":${result.fresh},"allowed":${result.allowed},"scheduled":${result.scheduled},
          |"seen_total":${result.seenTotal},"pending_total":${result.pendingTotal},
-         |"elapsed_sec":${result.elapsedSec}}""".stripMargin.replace("\n", "")
+         |"elapsed_sec":${result.elapsedSec},"codegen_compiles":${compiles - codegen0._1},
+         |"codegen_ms":${(nanos - codegen0._2) / 1000000L}}""".stripMargin.replace("\n", "")
     markers.publish(s"MANIFEST-$wave.json", json)
   }
 
@@ -1036,6 +1047,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     * I/O with zero exchanges. Commits wave 0. */
   def initialize(seeds: DataFrame): WaveResult = {
     val t0 = System.nanoTime()
+    val codegen0 = GraftSession.codegen
     // durable ROBOTS_EVER record BEFORE the first gated write (the
     // re-gate-skip decision depends on every snapshot that ever gated
     // inserts into this checkpoint — see gateUnchanged)
@@ -1074,7 +1086,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     val nAllowed = headObs.get("n").asInstanceOf[Long]
     val res = WaveResult(0, n, n, n, nAllowed, 0, n, nAllowed,
       (System.nanoTime() - t0) / 1e9)
-    commit(0, res)
+    commit(0, res, codegen0)
     res
   }
 
@@ -1108,6 +1120,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     require(layoutChecked)
     val wave = prev + 1
     val t0 = System.nanoTime()
+    val codegen0 = GraftSession.codegen
     val persisted = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
     val keep: DataFrame => DataFrame = { df =>
       persisted.add(df)
@@ -1163,7 +1176,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
         Seq(fSeen, fShards, fState).foreach(Await.result(_, Duration.Inf))
         (nFresh, nScheduled)
       } finally persisted.forEach(_.unpersist(false))
-    commitWave(wave, nFresh, nScheduled, t0)
+    commitWave(wave, nFresh, nScheduled, t0, codegen0)
   }
 
   private def hostOrder = Window.partitionBy(col("host")).orderBy(col("priority"), col("surt_key"))
@@ -1286,7 +1299,8 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
 
   /** Commit step: state-size reports (observability, skipped in bench
     * mode), the manifest, then GC and the periodic compaction. */
-  private def commitWave(wave: Int, nFresh: Long, nScheduled: Long, t0: Long): WaveResult = {
+  private def commitWave(wave: Int, nFresh: Long, nScheduled: Long, t0: Long,
+                         codegen0: (Long, Long)): WaveResult = {
     jd(s"wave$wave:commit")
     val fast = cfg.fastMode
     val nSeen = if (fast) -1L else seenUpTo(wave).count()
@@ -1295,7 +1309,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
         fenceDf(wave).agg(coalesce(sum(col("bn")), lit(0L))).head().getLong(0)
     val res = WaveResult(wave, nFresh, nFresh, nFresh, nScheduled,
       nScheduled, nSeen, nPending, (System.nanoTime() - t0) / 1e9)
-    commit(wave, res)
+    commit(wave, res, codegen0)
     // reclaim shard files superseded one wave ago (lag keeps a re-run
     // of THIS wave resolvable from the previous index), plus head/fence
     // dirs older than the resume horizon

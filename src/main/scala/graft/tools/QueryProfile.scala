@@ -2,7 +2,9 @@ package graft.tools
 
 import graft.{GraftSession, SparkEntry}
 
-/** Profile one SparkEntry query: warm run timings + formatted plan.
+/** Profile one SparkEntry query: per-run wall time, generated classes
+  * compiled and compile ms (JVM-wide codegen counters, so a first run's
+  * compile cost shows apart from warm execution) + formatted plan.
   * Usage: runMain graft.tools.QueryProfile <query-name> [sfDir] [runs]
   * GRAFT_JOBLOG=1 adds per-job/stage wall times (perf forensics). */
 object QueryProfile {
@@ -36,8 +38,11 @@ object QueryProfile {
     val fn = SparkEntry.queries(name)
     for (i <- 1 to runs) {
       val t0 = System.nanoTime()
+      val (compiles0, nanos0) = GraftSession.codegen
       val n = fn(spark, sfDir).count()
-      println(f"[profile] $name run $i: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
+      val (compiles, nanos) = GraftSession.codegen
+      println(f"[profile] $name run $i: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows), " +
+        f"${compiles - compiles0} classes compiled in ${(nanos - nanos0) / 1e6}%.0f ms")
     }
     if (sys.env.get("GRAFT_EXPLAIN").contains("1"))
       fn(spark, sfDir).explain("formatted")

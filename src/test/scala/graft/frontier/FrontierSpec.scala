@@ -2,6 +2,7 @@ package graft.frontier
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -876,6 +877,52 @@ class FrontierSpec extends AnyFunSuite with SparkTestBase {
     // and from now on the checkpoint is permanently multi-snapshot
     val f4 = new Frontier(spark, cfg, robots = Some(robots))
     assert(!f4.gateUnchanged, "multi-snapshot history must keep the re-gate on")
+  }
+
+  test("generated classes stay cached across crawls: an identical second crawl compiles ≤ 10% as many") {
+    def crawl(name: String): (Seq[(Long, Long)], Long) = {
+      val cfg = FrontierConfig(checkpointDir = tmpDir(name), hostBudget = 5, seenShards = 16)
+      val f = new Frontier(spark, cfg)
+      val rs = f.initialize(Frontier.syntheticSeeds(spark, 300)) +: (1 to 3).map(_ => f.runWave())
+      val compiles = rs.map { r =>
+        val m = new String(Files.readAllBytes(Paths.get(cfg.checkpointDir, s"MANIFEST-${r.wave}.json")),
+          "UTF-8")
+        """"codegen_compiles":(\d+)""".r.findFirstMatchIn(m).map(_.group(1).toLong)
+          .getOrElse(fail(s"no codegen_compiles in $m"))
+      }
+      (rs.map(r => (r.scheduled, r.deduped)), compiles.sum)
+    }
+    // start from an empty class cache (Spark-private, hence reflection),
+    // so the first crawl compiles its whole working set whatever earlier
+    // tests in this JVM left cached
+    val cacheOf = CodeGenerator.getClass.getDeclaredMethod("cache")
+    cacheOf.setAccessible(true)
+    val cache = cacheOf.invoke(CodeGenerator)
+    cache.getClass.getMethod("invalidateAll").invoke(cache)
+    val (counts1, compiles1) = crawl("codegen1")
+    val (counts2, compiles2) = crawl("codegen2")
+    info(s"classes compiled: first crawl $compiles1, second crawl $compiles2")
+    assert(counts2 == counts1, "the two crawls must do the same work")
+    // Spark's default 100-entry cache holds less than one wave's ~200
+    // classes, so there every wave recompiles and both crawls compile alike
+    assert(compiles2 * 10 <= compiles1,
+      s"second crawl recompiled: $compiles2 classes vs $compiles1 in the first")
+  }
+
+  test("a Frontier registers no SQL function: a fresh session runs a wave without canon_all") {
+    val s2 = spark.newSession()
+    val f = new Frontier(s2, FrontierConfig(checkpointDir = tmpDir("newsession"),
+      hostBudget = 5, seenShards = 8))
+    f.initialize(Frontier.syntheticSeeds(s2, 300))
+    assert(f.runWave().scheduled > 0)
+    assert(!s2.catalog.functionExists("canon_all"))
+  }
+
+  test("q43_seen_probe runs on a session with no registered SQL function") {
+    // a session as the Verify main builds it: no Functions.registerAll
+    val s2 = spark.newSession()
+    assert(graft.SparkEntry.queries("q43_seen_probe")(s2, sfDir).count() > 0)
+    assert(!s2.catalog.functionExists("canon_all"))
   }
 
   test("wave-loop driver listings are cached: per-wave FS list calls flat in crawl length") {
