@@ -62,13 +62,15 @@ object Functions {
   }
 
   // ---- Column API (native Catalyst expressions — codegen'd, no UDF
-  // boundary; the registered UDFs above remain for SQL-name compat) ----
+  // boundary — or the function values above as unnamed UDFs, so no call
+  // needs `registerAll` on its session; the registered UDFs above
+  // remain for SQL-name compat) ----
   def surt(c: Column): Column = graft.plans.NativeFunctions.surt(c)
   def canonicalizeUrl(c: Column): Column = graft.plans.NativeFunctions.canonicalUrl(c)
   def timestamp14(c: Column): Column = graft.plans.NativeFunctions.timestamp14(c)
   def sha1B32(c: Column): Column = graft.plans.NativeFunctions.sha1B32(c)
-  def decodePayload(p: Column, ce: Column, te: Column): Column = call_udf("decode_payload", p, ce, te)
-  def hostOf(c: Column): Column = call_udf("host_of", c)
+  def decodePayload(p: Column, ce: Column, te: Column): Column = udf(decodePayloadFn).apply(p, ce, te)
+  def hostOf(c: Column): Column = udf(hostOfFn).apply(c)
 
   /** Case-insensitive header lookup over Array[Struct[name,value]] using
     * only built-in (codegen'd) collection expressions — Fetch-Headers

@@ -29,7 +29,6 @@ object SparkEntry {
   def warcRoundTripCdx(spark0: SparkSession, dir: String): DataFrame = {
     implicit val spark: SparkSession = spark0
     import spark.implicits._
-    Functions.registerAll(spark)
     // the documents table is ONE small parquet file → a single scan
     // task; the per-row work here (gzip serialize + reparse) is the
     // query's whole cost, so spread it across the session's cores
@@ -196,7 +195,6 @@ object SparkEntry {
     }),
     // ---- P7: SURT over URL-shaped strings --------------------------
     "q17_surt" -> ((s, dir) => { implicit val sp = s; import sp.implicits._
-      Functions.registerAll(sp)
       t(dir, "documents")
         .select($"doc_id",
           concat(lit("https://www."), $"source", lit(".example.com/d/"), $"doc_id",
@@ -510,7 +508,6 @@ object SparkEntry {
     }),
     // ---- D1-D3: transfer + content decode round-trip -----------------
     "q37_payload_decode" -> ((s, dir) => { implicit val sp = s; import sp.implicits._
-      Functions.registerAll(sp)
       val docs = t(dir, "documents").select($"doc_id", $"text")
         .repartition(sp.sparkContext.defaultParallelism) // gzip encode+decode off the single scan task
       // chunk-encode then gzip each text; decode_payload must invert both
@@ -689,13 +686,12 @@ object SparkEntry {
     // split, name match, value extraction) — the parse itself is
     // cross-derived, not a reconstructed literal.
     "q32_parse_headers" -> ((s, dir) => { implicit val sp = s; import sp.implicits._
-      Functions.registerAll(sp)
       t(dir, "documents").select($"doc_id",
         concat(lit("Content-Type: text/plain\r\nX-Doc: d"), $"doc_id",
           lit("\r\nSet-Cookie: a=1\r\nSet-Cookie: b=2\r\n\r\n")).as("block"))
         .write.mode("overwrite").parquet(StageDir + "/q32_blocks.parquet")
       sp.read.parquet(StageDir + "/q32_blocks.parquet")
-        .select($"doc_id", expr("parse_headers(block)").as("headers"))
+        .select($"doc_id", udf(Functions.parseHeadersFn).apply($"block").as("headers"))
         .select($"doc_id", size($"headers").as("n_headers"),
           Functions.headerGet($"headers", "set-cookie").as("cookies"),
           Functions.headerGet($"headers", "x-doc").as("xdoc"))

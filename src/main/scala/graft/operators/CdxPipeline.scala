@@ -27,7 +27,10 @@ final case class CdxRow(
   * holds a whole file in order, so the greedy request/response pairing
   * fold runs fused inside the scan and the job has ZERO shuffles. A
   * merged, sorted CDX (the reason urlkey is SURT) adds exactly one
-  * `orderBy(urlkey, timestamp)` range exchange at the very end. */
+  * `orderBy(urlkey, timestamp)` range exchange at the very end. The
+  * exchange's range partitioner samples its input in a job of its own;
+  * that job and the map stage both read the rows `WarcScan.scanFold`
+  * persists, so each file is still inflated and parsed once. */
 object CdxPipeline {
 
   /** `index` CLI: JSONL projection of record fields; exact output parity

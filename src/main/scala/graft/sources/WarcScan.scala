@@ -1,6 +1,12 @@
 package graft.sources
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import scala.reflect.ClassTag
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.storage.StorageLevel
+import graft.SerializableHadoopConf
 import graft.core._
 
 /** One WARC record as a typed Dataset row. Headers are ordered
@@ -65,9 +71,14 @@ object WarcRow {
 
 /** The WARC scan (S1-S4): splittable parallel read of .warc / .warc.gz.
   *
-  * v1 strategy: `binaryFile` source lists/distributes the files (path
-  * column only — content is pruned away and never read by Spark), one
-  * task per file, and the task STREAMS the file through
+  * v1 strategy: the `binaryFile` source lists the files (path column
+  * only — content is pruned away and never read by Spark) and packs
+  * whole files into tasks: each file costs its length plus
+  * `spark.sql.files.openCostInBytes` (4 MB) against the task's
+  * `spark.sql.files.maxPartitionBytes` (16m in `GraftSession`), so
+  * small files share a task (four ~320 KB files each in the perfbench
+  * corpus) and a file at or above the cap has one to itself. A file is
+  * never split across tasks. The task STREAMS each file through
   * `WarcStreaming.parseStream` — O(one record) of task memory, no 2 GB
   * file cap, payload bytes skipped (not copied) when `withPayload`
   * is false. WARC files are bounded (typically ≤1 GiB by convention),
@@ -85,20 +96,23 @@ object WarcRow {
 object WarcScan {
 
   /** Open a file path (file:/hdfs:/s3a:… URI or local path) as a stream
-    * via the Hadoop FileSystem API — works on any cluster filesystem. */
-  def openPath(path: String): java.io.InputStream = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(new org.apache.hadoop.conf.Configuration()).open(p)
+    * via the Hadoop FileSystem API — works on any cluster filesystem.
+    * `conf` is the session's Hadoop conf: a bare `new Configuration()`
+    * re-parses the default resources on every call and misses the
+    * session's `spark.hadoop.*` settings. */
+  def openPath(path: String, conf: Configuration): java.io.InputStream = {
+    val p = new Path(path)
+    p.getFileSystem(conf).open(p)
   }
 
   /** Streaming per-file record iterator with the scan's leniency rule:
     * at corpus scale one corrupt file must not fail the job — log and
     * truncate that file's iteration (strict mode propagates). */
-  private def fileRecords(path: String, withPayload: Boolean,
+  private def fileRecords(path: String, conf: Configuration, withPayload: Boolean,
                           lenient: Boolean): (String, Iterator[FramedRecord]) = {
     val name = path.substring(path.lastIndexOf('/') + 1)
     val inner =
-      try WarcStreaming.parseStream(openPath(path), name,
+      try WarcStreaming.parseStream(openPath(path, conf), name,
         WarcFraming.isGzipName(name), keepPayload = withPayload)
       catch {
         case e: Exception if lenient =>
@@ -120,6 +134,30 @@ object WarcScan {
     (name, it)
   }
 
+  /** The session's Hadoop conf (`spark.hadoop.*` settings: file-system
+    * schemes, object-store credentials), shipped once per scan to its
+    * tasks. */
+  private def sessionConf(spark: SparkSession): Broadcast[SerializableHadoopConf] =
+    spark.sparkContext.broadcast(new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
+
+  /** The scan's file paths, one row per file. Globs are expanded here
+    * with the session conf: handed a single glob, the file source asks
+    * `FileStreamSink.hasMetadata` for its status and logs a WARN with a
+    * stack trace on every load. The matches are escaped so the source
+    * does not glob them again. A glob that matches nothing is passed
+    * through unchanged and fails in the source as a missing path. */
+  private def listing(spark: SparkSession, paths: Seq[String]): Dataset[String] = {
+    import spark.implicits._
+    val conf = spark.sessionState.newHadoopConf()
+    val files = paths.flatMap { p =>
+      val hp = new Path(p)
+      val hits = Option(hp.getFileSystem(conf).globStatus(hp)).getOrElse(Array.empty)
+      if (hits.isEmpty) Seq(p)
+      else hits.toSeq.map(_.getPath.toString.replaceAll("""([\\*?\[\]{}])""", """\\$1"""))
+    }
+    spark.read.format("binaryFile").load(files: _*).select("path").as[String]
+  }
+
   /** Read WARC files into a typed Dataset. Column pruning note: when the
     * downstream plan does not need `payload`, pass
     * `withPayload = false` so the scan SKIPS payload bytes inside the
@@ -128,25 +166,36 @@ object WarcScan {
   def warcRecords(spark: SparkSession, paths: Seq[String], withPayload: Boolean = true,
                   lenient: Boolean = true): Dataset[WarcRow] = {
     import spark.implicits._
-    val bin = spark.read.format("binaryFile").load(paths: _*).select("path").as[String]
-    bin.mapPartitions(_.flatMap { path =>
-      fileRecords(path, withPayload, lenient)._2.map(WarcRow.fromFramed)
+    val confB = sessionConf(spark)
+    listing(spark, paths).mapPartitions(_.flatMap { path =>
+      fileRecords(path, confB.value.value, withPayload, lenient)._2.map(WarcRow.fromFramed)
     })
   }
 
   /** Fused scan + per-file fold: applies `fold` to each file's records in
     * offset order inside the scan task — the zero-shuffle path for
     * order-dependent per-file operators. The iterator is streaming: the
-    * fold must consume in order and may hold O(1) records. */
-  def scanFold[T: org.apache.spark.sql.Encoder](
+    * fold must consume in order and may hold O(1) records.
+    *
+    * The folded rows are persisted (`MEMORY_AND_DISK`) at the RDD level:
+    * a sort over them runs a sampling job for its range partitioner
+    * before the map stage, and without the persist each job would
+    * inflate and parse the whole corpus again. The sampler computes and
+    * stores each partition; the map stage reads the stored blocks. The
+    * lineage stays, so a lost block is recomputed from its files;
+    * nothing is registered with the `CacheManager`, and the
+    * `ContextCleaner` drops the blocks once the Dataset is unreachable. */
+  def scanFold[T: Encoder](
       spark: SparkSession,
       paths: Seq[String]
   )(fold: (String, Iterator[FramedRecord]) => Iterator[T]): Dataset[T] = {
-    import spark.implicits._
-    val bin = spark.read.format("binaryFile").load(paths: _*).select("path").as[String]
-    bin.mapPartitions(_.flatMap { path =>
-      val (name, records) = fileRecords(path, withPayload = true, lenient = false)
+    implicit val tag: ClassTag[T] = implicitly[Encoder[T]].clsTag
+    val confB = sessionConf(spark)
+    val rows = listing(spark, paths).rdd.mapPartitions(_.flatMap { path =>
+      val (name, records) = fileRecords(path, confB.value.value, withPayload = true,
+        lenient = false)
       fold(name, records)
-    })
+    }).persist(StorageLevel.MEMORY_AND_DISK)
+    spark.createDataset(rows)
   }
 }

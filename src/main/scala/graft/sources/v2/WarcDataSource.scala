@@ -6,6 +6,9 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.{EqualTo, Filter, In}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -30,13 +33,18 @@ import scala.jdk.CollectionConverters._
   *    indexer.ts:74 vs :232);
   *  - `SupportsPushDownFilters`: warcType equality/IN filters drop
   *    records before row materialization.
+  * Files are listed, sized and opened with the session's Hadoop conf
+  * (`spark.hadoop.*` settings: schemes, object-store credentials); the
+  * readers get it serialized inside the reader factory.
   */
 class WarcDataSource extends TableProvider with org.apache.spark.sql.sources.DataSourceRegister {
   override def shortName(): String = "warc"
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = WarcSchema.schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new WarcTable(WarcSchema.resolvePaths(properties.asScala.toMap))
+                        properties: util.Map[String, String]): Table = {
+    val conf = SparkSession.active.sessionState.newHadoopConf()
+    new WarcTable(WarcSchema.resolvePaths(properties.asScala.toMap, conf), conf)
+  }
   override def supportsExternalMetadata(): Boolean = true
 }
 
@@ -66,7 +74,7 @@ object WarcSchema {
     StructField("warning", StringType)
   ))
 
-  def resolvePaths(props: Map[String, String]): Seq[String] = {
+  def resolvePaths(props: Map[String, String], conf: Configuration): Seq[String] = {
     val raw = props.get("paths") match {
       case Some(json) =>
         // simple JSON array of strings
@@ -77,8 +85,8 @@ object WarcSchema {
     raw.flatMap { p =>
       // Hadoop FS, not java.io.File: directory loads must work on any
       // scheme the partition reader itself supports (file:/hdfs:/s3a:)
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val fs = hp.getFileSystem(new org.apache.hadoop.conf.Configuration())
+      val hp = new Path(p)
+      val fs = hp.getFileSystem(conf)
       if (fs.isDirectory(hp))
         fs.listStatus(hp).filter(_.isFile)
           // Hadoop convention: dot/underscore files are metadata
@@ -90,7 +98,7 @@ object WarcSchema {
   }
 }
 
-class WarcTable(paths: Seq[String]) extends Table with SupportsRead {
+class WarcTable(paths: Seq[String], conf: Configuration) extends Table with SupportsRead {
   override def name(): String = s"warc(${paths.mkString(",")})"
   override def schema(): StructType = WarcSchema.schema
   override def capabilities(): util.Set[TableCapability] =
@@ -98,11 +106,11 @@ class WarcTable(paths: Seq[String]) extends Table with SupportsRead {
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val splitSize = Option(options.get("splitSize")).map(_.toLong)
       .getOrElse(128L * 1024 * 1024)
-    new WarcScanBuilder(paths, splitSize)
+    new WarcScanBuilder(paths, splitSize, conf)
   }
 }
 
-class WarcScanBuilder(paths: Seq[String], splitSize: Long) extends ScanBuilder
+class WarcScanBuilder(paths: Seq[String], splitSize: Long, conf: Configuration) extends ScanBuilder
     with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
   private var required: StructType = WarcSchema.schema
   private var typeFilter: Option[Set[String]] = None
@@ -129,7 +137,7 @@ class WarcScanBuilder(paths: Seq[String], splitSize: Long) extends ScanBuilder
 
   override def pushedFilters(): Array[Filter] = pushed
 
-  override def build(): Scan = new WarcScanV2(paths, required, typeFilter, splitSize)
+  override def build(): Scan = new WarcScanV2(paths, required, typeFilter, splitSize, conf)
 }
 
 /** One task = one file, or one RAW BYTE RANGE of an oversized .warc.gz
@@ -141,17 +149,14 @@ class WarcScanBuilder(paths: Seq[String], splitSize: Long) extends ScanBuilder
 case class WarcInputPartition(path: String, start: Long, end: Long) extends InputPartition
 
 class WarcScanV2(paths: Seq[String], required: StructType,
-                 typeFilter: Option[Set[String]], splitSize: Long) extends Scan with Batch {
+                 typeFilter: Option[Set[String]], splitSize: Long,
+                 conf: Configuration) extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def planInputPartitions(): Array[InputPartition] = {
     paths.flatMap { p =>
-      val size =
-        try {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(new org.apache.hadoop.conf.Configuration())
-            .getFileStatus(hp).getLen
-        } catch { case _: Exception => 0L }
+      val hp = new Path(p)
+      val size = hp.getFileSystem(conf).getFileStatus(hp).getLen
       // only .gz is boundary-splittable (member sync); small files and
       // plain .warc stay one-task-per-file
       if (size > splitSize && p.endsWith(".gz")) {
@@ -164,22 +169,23 @@ class WarcScanV2(paths: Seq[String], required: StructType,
     }.toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new WarcReaderFactory(required, typeFilter)
+    new WarcReaderFactory(required, typeFilter, new graft.SerializableHadoopConf(conf))
   override def description(): String =
     s"WarcScan(files=${paths.length}, columns=${required.fieldNames.mkString(",")}, " +
       s"typeFilter=${typeFilter.map(_.mkString("|")).getOrElse("none")}, splitSize=$splitSize)"
 }
 
-class WarcReaderFactory(required: StructType, typeFilter: Option[Set[String]])
+class WarcReaderFactory(required: StructType, typeFilter: Option[Set[String]],
+                        conf: graft.SerializableHadoopConf)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[WarcInputPartition]
-    new WarcPartitionReader(p, required, typeFilter)
+    new WarcPartitionReader(p, required, typeFilter, conf.value)
   }
 }
 
 class WarcPartitionReader(part: WarcInputPartition, required: StructType,
-                          typeFilter: Option[Set[String]])
+                          typeFilter: Option[Set[String]], conf: Configuration)
     extends PartitionReader[InternalRow] {
   import graft.core._
 
@@ -188,8 +194,8 @@ class WarcPartitionReader(part: WarcInputPartition, required: StructType,
   private val name = path.substring(path.lastIndexOf('/') + 1)
 
   private def openAt(off: Long): java.io.InputStream = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val hp = new Path(path)
+    val fs = hp.getFileSystem(conf)
     val in = fs.open(hp)
     if (off > 0) in.seek(off)
     in
