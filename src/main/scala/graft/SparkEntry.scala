@@ -351,12 +351,8 @@ object SparkEntry {
       // Scratch: deleted at JVM exit (the returned DataFrame lazily
       // reads this checkpoint, so it must outlive the query)
       val ck = Scratch.dir("frontier-q29").toString
-      // fastMode: skip observability-only jobs (sorted user-facing
-      // write, per-wave metrics, seen/pending state counts) — the
-      // query's output reads scheduledDf through its own total-order
-      // sort, so results are identical
       val cfg = graft.frontier.FrontierConfig(checkpointDir = ck, hostBudget = 5,
-        seenShards = 16, fastMode = true)
+        seenShards = 16)
       val f = new graft.frontier.Frontier(sp, cfg)
       val n = t(dir, "documents").count().toInt.max(100)
       f.initialize(graft.frontier.Frontier.syntheticSeeds(sp, n))
@@ -444,10 +440,8 @@ object SparkEntry {
       // pruned by hand (identical column values — see imageSeedTable)
       val images = graft.frontier.ImageSynth.imageSeedTable(sp, n)
       val ck = Scratch.dir("frontier-q35").toString
-      // fastMode: observability-only jobs skipped; output identical
-      // (same rationale as q29)
       val cfg = graft.frontier.FrontierConfig(checkpointDir = ck, hostBudget = 3,
-        seenShards = 8, fastMode = true)
+        seenShards = 8)
       val f = new graft.frontier.Frontier(sp, cfg)
       f.initialize(graft.frontier.Frontier.seedsFromImages(images))
       val hm5 = udf((h: String) =>

@@ -27,7 +27,9 @@ import graft.{Functions, GraftSession}
   *       fresh routes by fence, spill appends a bucketed backlog
   *       delta, needy hosts refill from their buckets only
   *     → scheduled wave committed with an atomic manifest; seen +
-  *       state + per-partition lineage metrics checkpointed
+  *       state + per-partition lineage metrics checkpointed; the
+  *       manifest's layer counts (candidates → fresh → allowed →
+  *       scheduled) and totals come from jobs the wave runs anyway
   *
   * Determinism: every ordering is total — (priority, surt_key) with surt
   * as the tiebreak — so the same seed list + budget reproduce the same
@@ -75,10 +77,10 @@ final case class FrontierConfig(
       * crawl's `seenUpTo` unions O(K) dirs instead of O(waves) with no
       * manual calls. ≤0 disables (manual compaction only). */
     compactEvery: Int = 8,
-    /** bench mode: skip observability-only jobs (sorted user-facing
-      * write, per-partition metrics, state count reports) — semantics
-      * unchanged. Defaults from the GRAFT_BENCH env for CLI runs. */
-    fastMode: Boolean = sys.env.get("GRAFT_BENCH").contains("1"),
+    /** No-op, kept so existing callers still compile: every wave runs
+      * the same jobs and writes the same manifest, schedule and lineage
+      * table whatever this says. */
+    fastMode: Boolean = false,
     /** re-cut host-slice collect threshold: a wave re-cutting ≤ this
       * many hosts builds its cut predicates and fence rows on the
       * driver (one tiny collect replaces five broadcast-join driver
@@ -92,6 +94,12 @@ final case class FrontierConfig(
     outlinkMode: String = "zipf"
 )
 
+/** One wave's manifest counts, layer by layer: `candidates` canonicalized
+  * outlinks (init: distinct seeds) → `fresh` (= `deduped`) in-batch
+  * distinct, never-seen keys → `allowed` fresh rows the robots gate
+  * admits → `scheduled`. `seenTotal` and `pendingTotal` (head rows + live
+  * backlog) are as of the wave's commit; `seenTotal` is -1 only on a
+  * crawl resumed from a checkpoint whose manifests never counted it. */
 final case class WaveResult(
     wave: Int,
     candidates: Long,
@@ -214,8 +222,6 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
   }
 
   private def writeIndex(wave: Int, idx: Map[Int, Seq[String]]): Unit = {
-    val p = indexFilePath(wave)
-    val f = p.getFileSystem(spark.sessionState.newHadoopConf())
     val sb = new StringBuilder
     sb.append(cfg.seenShards).append('\n')
     idx.foreach { case (s, paths) =>
@@ -223,8 +229,13 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
       paths.foreach(pp => sb.append(' ').append(pp))
       sb.append('\n')
     }
-    val out = f.create(p, true)
-    try out.write(sb.toString.getBytes("UTF-8")) finally out.close()
+    writeFile(indexFilePath(wave), sb.toString)
+  }
+
+  /** Driver-side overwrite of one small checkpoint file. */
+  private def writeFile(p: org.apache.hadoop.fs.Path, text: String): Unit = {
+    val out = p.getFileSystem(spark.sessionState.newHadoopConf()).create(p, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
   }
 
   /** Insert this wave's fresh keys into their shards: one shuffle of
@@ -411,8 +422,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
       sb.append(s); paths.foreach(pp => sb.append(' ').append(pp)); sb.append('\n')
     }
     val alt = new org.apache.hadoop.fs.Path(p.getParent, p.getName + ".reshard")
-    val out = fs.create(alt, true)
-    try out.write(sb.toString.getBytes("UTF-8")) finally out.close()
+    writeFile(alt, sb.toString)
     fs.delete(p, false)
     require(fs.rename(alt, p), s"reshard index swap failed: $p")
   }
@@ -1050,7 +1060,9 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     val codegen0 = GraftSession.codegen
     // durable ROBOTS_EVER record BEFORE the first gated write (the
     // re-gate-skip decision depends on every snapshot that ever gated
-    // inserts into this checkpoint — see gateUnchanged)
+    // inserts into this checkpoint — see gateUnchanged); a robots
+    // table's fingerprint job is part of the gated head step
+    jd("init:head")
     gateUnchanged
     val canon = canonicalized(seeds)
       .groupBy("surt_key")
@@ -1058,32 +1070,30 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
         min("canonical_url").as("canonical_url"), min("host").as("host"))
       .select("surt_key", "canonical_url", "host", "priority")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val obs = org.apache.spark.sql.Observation()
     val fSeen = Frontier.guarded {
-      canon.select("surt_key").observe(obs, count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(seenStore.deltaDir(0))
+      jd("init:seen")
+      writeCounted(canon.select("surt_key"), seenStore.deltaDir(0))
     }
     val fShards = Frontier.guarded {
+      jd("init:shards")
       writeIndex(0, updateShardFiles(Map.empty, canon.select("surt_key"), 0))
     }
-    val headObs = org.apache.spark.sql.Observation()
     val fState = Frontier.guarded {
+      jd("init:head")
       // LAZY head split: the ENTIRE allowed seed set becomes the head
       // — no window, no shuffle, a straight filtered write. Wave 1's
       // schedule window (which must sort the head anyway) performs the
       // per-host top-M cut and sets the first fences; init itself is
-      // O(seeds) I/O with zero exchanges.
-      applyRobots(canon).observe(headObs, count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(headDir(0))
-      // no fence state at init: the fence VIEW is empty until the first
-      // spill writes a delta (wave 1's lazy cut)
+      // O(seeds) I/O with zero exchanges. No fence state at init: the
+      // fence VIEW is empty until the first spill writes a delta.
+      writeCounted(applyRobots(canon), headDir(0))
     }
-    Seq(fSeen, fShards, fState).foreach(Await.result(_, Duration.Inf))
-    canon.unpersist(blocking = false)
-    val n = obs.get("n").asInstanceOf[Long]
+    Await.result(fShards, Duration.Inf)
     // allowed/pending reflect the robots-gated head actually written;
     // candidates/deduped/seen reflect pre-gate admission (seen parity)
-    val nAllowed = headObs.get("n").asInstanceOf[Long]
+    val n = Await.result(fSeen, Duration.Inf)
+    val nAllowed = Await.result(fState, Duration.Inf)
+    canon.unpersist(blocking = false)
     val res = WaveResult(0, n, n, n, nAllowed, 0, n, nAllowed,
       (System.nanoTime() - t0) / 1e9)
     commit(0, res, codegen0)
@@ -1126,7 +1136,10 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
       persisted.add(df)
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    val (nFresh, nScheduled) =
+    // main-thread jobs before discovery (a resumed instance's robots
+    // parse) belong to the schedule step
+    jd(s"wave$wave:schedule")
+    val res =
       try {
         val prevIdx = readIndex(prev)
         // FENCE-FREE FAST PATH: the previous wave records whether ANY
@@ -1144,7 +1157,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
           .select("host", "surt_key", "canonical_url", "priority", "rank_in_host", "wave")
         val scheduled = regate(scheduled0, keep)
         val fSched = writeSchedule(scheduled, wave)
-        val (fresh, nFresh) = discoverFresh(scheduled, prevIdx, wave, keep)
+        val (fresh, nFresh, nCandidates) = discoverFresh(scheduled, prevIdx, wave, keep)
         // state updates. The three sinks (seen delta, shard files, and
         // the head/fence/backlog maintenance chain) all hang off the
         // PERSISTED `fresh` and are mutually independent, so their jobs
@@ -1173,11 +1186,23 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
             wave, keep)
         }
         val nScheduled = Await.result(fSched, Duration.Inf)
-        Seq(fSeen, fShards, fState).foreach(Await.result(_, Duration.Inf))
-        (nFresh, nScheduled)
+        Seq(fSeen, fShards).foreach(Await.result(_, Duration.Inf))
+        val (nAllowed, nPending) = Await.result(fState, Duration.Inf)
+        // exact: fresh keys are in-batch distinct and disjoint from seen
+        val seenPrev = manifestLong(prev, "seen_total")
+        WaveResult(wave, nCandidates, nFresh, nFresh, nAllowed, nScheduled,
+          if (seenPrev < 0) -1L else seenPrev + nFresh, nPending, 0.0)
       } finally persisted.forEach(_.unpersist(false))
-    commitWave(wave, nFresh, nScheduled, t0, codegen0)
+    commitWave(res.copy(elapsedSec = (System.nanoTime() - t0) / 1e9), codegen0)
   }
+
+  /** A numeric field of a committed wave's manifest; -1 when absent (a
+    * checkpoint written before the field was counted). */
+  private def manifestLong(wave: Int, field: String): Long =
+    markers.read(s"MANIFEST-$wave.json").flatMap(graft.core.Json.parse(_).toOption)
+      .collect { case graft.core.JsValue.JsObj(kv) => kv }.toSeq.flatten
+      .collectFirst { case (`field`, graft.core.JsValue.JsNum(v)) => v.toLong }
+      .getOrElse(-1L)
 
   private def hostOrder = Window.partitionBy(col("host")).orderBy(col("priority"), col("surt_key"))
   private def pcols: Seq[org.apache.spark.sql.Column] = PendingSchema.fieldNames.toSeq.map(col)
@@ -1264,51 +1289,56 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
 
   /** Schedule-write step, submitted concurrently with discovery: both
     * hang off the same cached `ranked` frame and neither reads the
-    * other's output. The future yields the scheduled count, observed on
-    * the write job itself (no read-back count job). */
+    * other's output. The rows are written unsorted (readers that need
+    * an order sort). Each write task reports its partition's row and
+    * distinct-host counts; the driver writes them as the wave's lineage
+    * table (`metricsDf`), and their sum is the scheduled count the
+    * future yields — no read-back job. */
   private def writeSchedule(scheduled: DataFrame, wave: Int): scala.concurrent.Future[Long] = {
-    val out = if (cfg.fastMode) scheduled else scheduled.orderBy("priority", "host", "surt_key")
-    val obs = org.apache.spark.sql.Observation()
+    val parts = spark.sparkContext.collectionAccumulator[(Int, Long, Long)](s"wave$wave:schedule")
+    val hostAt = scheduled.schema.fieldIndex("host")
     Frontier.guarded {
       jd(s"wave$wave:schedule")
-      out.observe(obs, count(lit(1)).as("n"))
+      scheduled.mapPartitions { rows =>
+        val hosts = new java.util.HashSet[String]()
+        var n = 0L
+        rows.map { r => n += 1; hosts.add(r.getString(hostAt)); r } ++ {
+          if (n > 0) parts.add((org.apache.spark.TaskContext.getPartitionId(), n, hosts.size.toLong))
+          Iterator.empty
+        }
+      }(org.apache.spark.sql.Encoders.row(scheduled.schema))
         .write.mode("overwrite").parquet(dir("scheduled", s"wave=$wave"))
-      // per-partition lineage metrics (over the artifact just written)
-      if (!cfg.fastMode) {
-        spark.read.parquet(dir("scheduled", s"wave=$wave"))
-          .groupBy(spark_partition_id().as("partition_id"))
-          .agg(count(lit(1)).as("n_scheduled"), countDistinct(col("host")).as("n_hosts"))
-          .withColumn("wave", lit(wave))
-          .write.mode("overwrite").parquet(dir("metrics", s"wave=$wave"))
-      }
-      obs.get("n").asInstanceOf[Long]
+      import scala.jdk.CollectionConverters._
+      // keyed by partition: a re-run task's second report replaces its first
+      val rows = parts.value.asScala.map(p => p._1 -> p).toMap.values.toSeq.sortBy(_._1)
+      writeFile(new org.apache.hadoop.fs.Path(metricsPath(wave)), rows.map { case (p, n, h) =>
+        s"""{"partition_id":$p,"n_scheduled":$n,"n_hosts":$h,"wave":$wave}""" + "\n"
+      }.mkString)
+      rows.map(_._2).sum
     }
   }
+
+  private def metricsPath(wave: Int): String = dir("metrics", s"wave=$wave.json")
 
   /** Discover + seen-probe step: outlinks of the scheduled batch,
     * canonicalized, then dedup + seen-subtract in ONE shard-keyed
     * shuffle (`subtractSeen`). Returns the persisted fresh rows — every
-    * state sink reads them — and their count. */
+    * state sink reads them — their count, and the canonicalized
+    * candidates before dedup, observed on the same job. */
   private def discoverFresh(scheduled: DataFrame, prevIdx: Map[Int, Seq[String]], wave: Int,
-                            keep: DataFrame => DataFrame): (DataFrame, Long) = {
-    val discovered = canonicalized(discoverOutlinks(scheduled))
+                            keep: DataFrame => DataFrame): (DataFrame, Long, Long) = {
+    val obs = org.apache.spark.sql.Observation()
+    val discovered = canonicalized(discoverOutlinks(scheduled)).select(pcols: _*)
+      .observe(obs, count(lit(1)).as("n"))
     jd(s"wave$wave:discover")
-    val fresh = keep(subtractSeen(discovered.select(pcols: _*), prevIdx))
-    (fresh, fresh.count())
+    val fresh = keep(subtractSeen(discovered, prevIdx))
+    (fresh, fresh.count(), obs.get("n").asInstanceOf[Long])
   }
 
-  /** Commit step: state-size reports (observability, skipped in bench
-    * mode), the manifest, then GC and the periodic compaction. */
-  private def commitWave(wave: Int, nFresh: Long, nScheduled: Long, t0: Long,
-                         codegen0: (Long, Long)): WaveResult = {
+  /** Commit step: the manifest, then GC and the periodic compaction. */
+  private def commitWave(res: WaveResult, codegen0: (Long, Long)): WaveResult = {
+    val wave = res.wave
     jd(s"wave$wave:commit")
-    val fast = cfg.fastMode
-    val nSeen = if (fast) -1L else seenUpTo(wave).count()
-    val nPending = if (fast) -1L
-      else headDf(wave).count() +
-        fenceDf(wave).agg(coalesce(sum(col("bn")), lit(0L))).head().getLong(0)
-    val res = WaveResult(wave, nFresh, nFresh, nFresh, nScheduled,
-      nScheduled, nSeen, nPending, (System.nanoTime() - t0) / 1e9)
     commit(wave, res, codegen0)
     // reclaim shard files superseded one wave ago (lag keeps a re-run
     // of THIS wave resolvable from the previous index), plus head/fence
@@ -1379,11 +1409,16 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     *  6. the wave's FENCE DELTA — one row per touched, refilled or
     *     re-cut host — appends to the fence store; dormant and
     *     merely-draining hosts write NOTHING.
+    *
+    * Returns (robots-allowed fresh rows, pending rows after the wave):
+    * the first from the accounting aggregate, the second as head rows
+    * observed on the head and refill writes plus Σ bn observed on the
+    * fence-view fold — no job of its own.
     */
   private def maintainFrontier(ranked: DataFrame, fencePrev: DataFrame,
                                schedPreGate: DataFrame, fresh: DataFrame,
                                saltDropped: DataFrame, hasFences: Boolean, wave: Int,
-                               keep: DataFrame => DataFrame): Unit = {
+                               keep: DataFrame => DataFrame): (Long, Long) = {
     // a crashed earlier attempt may have left partial subdirs; the
     // wave's state is rebuilt from scratch (invisible until commit)
     val md = new org.apache.hadoop.fs.Path(maintDir(wave))
@@ -1392,10 +1427,12 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
       throw new java.io.IOException(s"cannot reset $md")
     bucketDirCache.remove(spillDir(wave))
 
-    val (headRows, spillRows, schedFence) =
+    val (headParts, spillParts, schedFence) =
       route(ranked, fencePrev, fresh, saltDropped, hasFences, keep)
-    val (info, nNeedy, nRecut, nRecutEpoch, bandIt) =
-      accounting(headRows, spillRows, schedPreGate, schedFence, fencePrev)
+    val headRows = headParts._1.unionByName(headParts._2)
+    val spillRows = spillParts._1.unionByName(spillParts._2)
+    val (info, nNeedy, nRecut, nRecutEpoch, bandIt, nAllowed) =
+      accounting(headParts, spillParts, schedPreGate, schedFence, fencePrev)
     val (headFinal, spillFinal, recutRows) =
       if (nRecut == 0) (headRows, spillRows, emptyFence)
       else if (nRecut <= cfg.recutCollectMax) recutOnDriver(info, headRows, spillRows, wave, keep)
@@ -1403,26 +1440,31 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     val deltaBase = info.filter(col("touched") && !needyCond && !recutCond)
       .select(fcols: _*)
     val recutDelta = recutRows.select(fcols: _*)
-    val nDelta =
-      if (nNeedy == 0)
-        writeState(headFinal, spillFinal, bandIt, wave, Some(deltaBase.unionByName(recutDelta))).get
-      else {
+    val (nHead, nDelta) =
+      if (nNeedy == 0) {
+        val (nh, nd) = writeState(headFinal, spillFinal, bandIt, wave,
+          Some(deltaBase.unionByName(recutDelta)))
+        (nh, nd.get)
+      } else {
         // the fence delta waits for the refill: refilled fences are part
         // of it, and the refill must see this wave's spill dir
-        writeState(headFinal, spillFinal, bandIt, wave, None)
-        val refilled = refill(info, wave, keep).select(fcols: _*)
-        writeFenceDelta(deltaBase.unionByName(refilled).unionByName(recutDelta), wave)
+        val (nh, _) = writeState(headFinal, spillFinal, bandIt, wave, None)
+        val (refilled, nRefilled) = refill(info, wave, keep)
+        (nh + nRefilled,
+          writeFenceDelta(deltaBase.unionByName(refilled.select(fcols: _*))
+            .unionByName(recutDelta), wave))
       }
-    foldFenceView(fencePrev, hasFences, nDelta, wave)
+    (nAllowed, nHead + foldFenceView(fencePrev, hasFences, nDelta, wave))
   }
 
   /** Route step (scaladoc steps 1–2): the lazy cut from the cached
     * schedule frame, then fresh routing against the POST-CUT fence view.
-    * Returns (head rows, spill rows, first-spill fences as host/nfp/nfs),
-    * all before any re-cut. */
+    * Returns the head rows and the spill rows, each as (rows carried
+    * over from the schedule frame, robots-allowed fresh rows), and the
+    * first-spill fences as host/nfp/nfs, all before any re-cut. */
   private def route(ranked: DataFrame, fencePrev: DataFrame, fresh: DataFrame,
-                    saltDropped: DataFrame, hasFences: Boolean,
-                    keep: DataFrame => DataFrame): (DataFrame, DataFrame, DataFrame) = {
+                    saltDropped: DataFrame, hasFences: Boolean, keep: DataFrame => DataFrame)
+      : ((DataFrame, DataFrame), (DataFrame, DataFrame), DataFrame) = {
     val M = headM
     val keepHead = ranked.filter(col("rank_in_host") > col("k_eff") &&
         (col("fp").isNotNull || col("rank_in_host") <= M))
@@ -1448,8 +1490,8 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     // routed fresh, persisted: head/spill slices, the head write, the
     // accounting aggregate and a possible re-cut all scan it
     val fj = keep(applyRobots(fresh.select(pcols: _*)).join(fenceRoute, Seq("host"), "left"))
-    (keepHead.unionByName(fj.filter(!aboveFence).select(pcols: _*)),
-      schedSpill.unionByName(fj.filter(aboveFence).select(bcols: _*)),
+    ((keepHead, fj.filter(!aboveFence).select(pcols: _*)),
+      (schedSpill, fj.filter(aboveFence).select(bcols: _*)),
       schedFence)
   }
 
@@ -1457,22 +1499,29 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     * over the SAME cached frames the writes scan — one row per candidate
     * host (scheduled pre-robots-re-gate, the safe superset, or receiving
     * rows) with prior fence state, this wave's spill count and pre-refill
-    * head count. Returns (info, needy hosts, re-cut hosts, epoch-bump
-    * re-cut hosts, whether the spill is banded). */
-  private def accounting(headRows: DataFrame, spillRows: DataFrame, schedPreGate: DataFrame,
-                         schedFence: DataFrame, fencePrev: DataFrame)
-      : (DataFrame, Long, Long, Long, Boolean) = {
+    * head count. `headParts`/`spillParts` are `route`'s (carried-over,
+    * robots-allowed fresh) pairs. Returns (info, needy hosts, re-cut
+    * hosts, epoch-bump re-cut hosts, whether the spill is banded,
+    * robots-allowed fresh rows). */
+  private def accounting(headParts: (DataFrame, DataFrame), spillParts: (DataFrame, DataFrame),
+                         schedPreGate: DataFrame, schedFence: DataFrame, fencePrev: DataFrame)
+      : (DataFrame, Long, Long, Long, Boolean, Long) = {
     // ONE union-aggregate: every broadcast join in a chain of count
     // shuffles and joins is a separate serial driver job. Pure sums keep
     // it a pipelined HashAggregate (a struct max in here would demote
-    // the whole 3-way union to a SortAggregate over every head+spill
-    // row); the tiny first-fence slice and the prior fence view join
-    // onto the result.
-    val stats = headRows.select(col("host"), lit(1L).as("hc1"), lit(0L).as("sp1"))
-      .unionByName(spillRows.select(col("host"), lit(0L).as("hc1"), lit(1L).as("sp1")))
-      .unionByName(schedPreGate.select(col("host"), lit(0L).as("hc1"), lit(0L).as("sp1")))
+    // the whole union to a SortAggregate over every head+spill row); the
+    // tiny first-fence slice and the prior fence view join onto the
+    // result. The fresh slices carry the allowed count: an aggregate
+    // column stays exact however the lazy checkpoint below runs, where
+    // an Observation would complete when that checkpoint is planned.
+    def tagged(rows: DataFrame, hc: Long, sp: Long, al: Long): DataFrame =
+      rows.select(col("host"), lit(hc).as("hc1"), lit(sp).as("sp1"), lit(al).as("al1"))
+    val stats = Seq(tagged(headParts._1, 1L, 0L, 0L), tagged(headParts._2, 1L, 0L, 1L),
+        tagged(spillParts._1, 0L, 1L, 0L), tagged(spillParts._2, 0L, 1L, 1L),
+        tagged(schedPreGate, 0L, 0L, 0L))
+      .reduce(_ unionByName _)
       .groupBy("host")
-      .agg(sum(col("hc1")).as("hc"), sum(col("sp1")).as("spilled"))
+      .agg(sum(col("hc1")).as("hc"), sum(col("sp1")).as("spilled"), sum(col("al1")).as("allowed"))
     // no broadcast hints: at 10^8 fenced hosts neither side may be
     // forced into the driver; Spark's stats pick BHJ at small scale
     val info0 = stats
@@ -1487,7 +1536,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
         coalesce(col("prf"), lit(false)).as("rf"),
         coalesce(col("prc"), lit(0)).as("rc"),
         (coalesce(col("pbn"), lit(0L)) + col("spilled")).as("bn"),
-        col("hc"), col("spilled"),
+        col("hc"), col("spilled"), col("allowed"),
         (col("spilled") > 0L || col("nfp").isNotNull).as("touched"))
     jd("maint:accounting")
     // LAZY localCheckpoint, materialized by the aggregate right below:
@@ -1502,13 +1551,14 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
       sum(when(needyCond, 1L).otherwise(0L)),
       sum(when(recutCond, 1L).otherwise(0L)),
       sum(when(recutCond && col("rf"), 1L).otherwise(0L)),
-      sum(col("spilled"))).head()
+      sum(col("spilled")),
+      sum(col("allowed"))).head()
     def n(i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
     // the spill is banded like the compacted base only when it is big
     // enough for bands to carry real mass (per-dir create+commit is a
     // fixed cost; small deltas collapse into band 0, which phase-A
     // refills always read anyway — superset reads stay exact)
-    (info, n(0), n(1), n(2), n(3) > 5000L * cfg.backlogBuckets * (MaxBand + 1))
+    (info, n(0), n(1), n(2), n(3) > 5000L * cfg.backlogBuckets * (MaxBand + 1), n(4))
   }
 
   /** The re-cut hosts' head rows `hr` cut back to their true top-M
@@ -1689,15 +1739,14 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
   /** Head/spill/delta write step: ONE write each, re-cut already folded
     * in, submitted together — all sinks read only cached/checkpointed
     * frames and prior waves' dirs. The fence delta is written here when
-    * given; returns its row count then. */
+    * given. Returns the head rows written and the delta's row count. */
   private def writeState(headFinal: DataFrame, spillFinal: DataFrame, bandIt: Boolean,
-                         wave: Int, delta: Option[DataFrame]): Option[Long] = {
+                         wave: Int, delta: Option[DataFrame]): (Long, Option[Long]) = {
     val fHead = Frontier.guarded {
       jd("maint:writeHead")
       // narrow coalesce: the union doubles partition count; halve it
       // back so the head dir keeps ~one file per core
-      headFinal.coalesce(spark.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(headDir(wave))
+      writeCounted(headFinal.coalesce(spark.sparkContext.defaultParallelism), headDir(wave))
     }
     val fSpill = Frontier.guarded {
       jd("maint:writeSpill")
@@ -1712,19 +1761,24 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
       bucketDirCache.remove(spillDir(wave))
     }
     val fDelta = delta.map(rows => Frontier.guarded(writeFenceDelta(rows, wave)))
-    Await.result(fHead, Duration.Inf)
     Await.result(fSpill, Duration.Inf)
-    fDelta.map(Await.result(_, Duration.Inf))
+    (Await.result(fHead, Duration.Inf), fDelta.map(Await.result(_, Duration.Inf)))
+  }
+
+  /** Overwrite `dest` with `rows`; returns the row count, observed on
+    * the write job. */
+  private def writeCounted(rows: DataFrame, dest: String): Long = {
+    val obs = org.apache.spark.sql.Observation()
+    rows.observe(obs, count(lit(1)).as("n")).write.mode("overwrite").parquet(dest)
+    obs.get("n").asInstanceOf[Long]
   }
 
   /** Append the wave's fence delta; returns its row count. */
   private def writeFenceDelta(rows: DataFrame, wave: Int): Long = {
     jd("maint:writeDelta")
-    val obs = org.apache.spark.sql.Observation()
-    rows.observe(obs, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(fenceStore.deltaDir(wave))
+    val n = writeCounted(rows, fenceStore.deltaDir(wave))
     fenceStore.addDelta(wave)
-    obs.get("n").asInstanceOf[Long]
+    n
   }
 
   /** Refill step (scaladoc step 4) — needy hosts only. TWO-PHASE BANDED
@@ -1733,8 +1787,9 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     * full deficit arrives with every taken row strictly better than its
     * best unread row; the rest re-read their buckets whole (phase B).
     * Refilled rows append to the head partition; returns the needy
-    * hosts' fence rows. */
-  private def refill(info: DataFrame, wave: Int, keep: DataFrame => DataFrame): DataFrame = {
+    * hosts' fence rows and the refilled row count. */
+  private def refill(info: DataFrame, wave: Int,
+                     keep: DataFrame => DataFrame): (DataFrame, Long) = {
     jd("maint:refill")
     val needy = keep(info.filter(needyCond)
       .select(col("host"), col("fp"), col("fs"), col("epoch"), col("rf"),
@@ -1789,8 +1844,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     // refilled rows APPEND to the head partition (as a subdir of the
     // already-written head dir; needy and re-cut host sets are
     // provably disjoint, so the re-cut fold never touched these)
-    takenARows.unionByName(takenBRows)
-      .write.mode("overwrite").parquet(headDir(wave) + "/refill")
+    val nRefilled = writeCounted(takenARows.unionByName(takenBRows), headDir(wave) + "/refill")
     // fence/bn updates for the NEEDY hosts only: settled hosts advance
     // arithmetically (bn was exact, deficit rows left); phase-B hosts
     // resync from the rows actually read — exact even if a compaction
@@ -1813,7 +1867,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
           .otherwise(col("bn")).as("bn"),
         col("epoch"),
         (col("rf") || col("takenCntA").isNotNull).as("rf"), col("rc"))
-    bAgg match {
+    val fenceRows = bAgg match {
       case None => withA
       case Some(agg) =>
         val adj = needyB.select(col("host"), lit(true).as("isNeedy"))
@@ -1832,28 +1886,33 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
               (col("takenCnt").isNotNull && col("takenCnt") > 0)).as("rf"),
             col("rc"))
     }
+    (fenceRows, nRefilled)
   }
 
   /** Fence view step (scaladoc step 6): publish the FENCES marker and
     * fold the wave's delta into the in-instance fence view for the next
     * wave (see fenceViewCache): (previous view ∖ delta hosts) ∪ delta,
     * checkpointed to a leaf so the chain never regrows lineage. Skipped
-    * (empty view, no job) while the crawl has no fences at all. */
+    * (empty view, no job) while the crawl has no fences at all. Returns
+    * the view's Σ bn (live backlog rows), observed on the fold job. */
   private def foldFenceView(fencePrev: DataFrame, hasFences: Boolean, nDelta: Long,
-                            wave: Int): Unit = {
+                            wave: Int): Long = {
     markers.delete(s"FENCES-$wave.m")
     // fences are monotone: once any host is fenced the marker stays
     if (hasFences || nDelta > 0L)
       markers.publish(s"FENCES-$wave.m", "{}")
-    if (!hasFences && nDelta == 0L) fenceViewCache.set((wave, emptyFence))
+    if (!hasFences && nDelta == 0L) { fenceViewCache.set((wave, emptyFence)); 0L }
     else {
       jd("maint:fenceView")
       val deltaDf = spark.read.schema(FenceSchema)
         .parquet(fenceStore.deltaDir(wave))
+      val obs = org.apache.spark.sql.Observation()
       fenceViewCache.set((wave, fencePrev
         .join(deltaDf.select(col("host")), Seq("host"), "left_anti")
         .unionByName(deltaDf)
+        .observe(obs, coalesce(sum(col("bn")), lit(0L)).as("bn"))
         .localCheckpoint()))
+      obs.get("bn").asInstanceOf[Long]
     }
   }
 
@@ -1890,7 +1949,12 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
   def fenceTableDf(wave: Int): DataFrame = fenceDf(wave)
   /** Full seen membership as of `wave` (union of committed deltas). */
   def seenDf(wave: Int): DataFrame = seenUpTo(wave)
-  def metricsDf(wave: Int): DataFrame = spark.read.parquet(dir("metrics", s"wave=$wave"))
+  /** Per-partition lineage of `wave`'s schedule write: one row per
+    * write task that wrote rows (partition_id, n_scheduled, n_hosts,
+    * wave). */
+  def metricsDf(wave: Int): DataFrame =
+    spark.read.schema("partition_id INT, n_scheduled BIGINT, n_hosts BIGINT, wave INT")
+      .json(metricsPath(wave))
 }
 
 object Frontier {

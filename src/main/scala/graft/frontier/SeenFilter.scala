@@ -5,15 +5,16 @@ package graft.frontier
   * Primary: a cuckoo filter (2-choice, 4-slot buckets, 16-bit
   * fingerprints → ~0.01% FP at 95% load, supports deletion). Fallback: a
   * blocked Bloom filter. Both serialize to byte arrays so the seen-set
-  * ships as PARTITIONED SHARDS: executors build one filter chain per hash
-  * shard, candidates shuffle to their shard's partition, and the probe
-  * happens executor-side in a cogroup — the driver never holds any filter
-  * state (north rule: "partitioned cuckoo-filter URL-seen set, bloom
-  * fallback per executor").
+  * lives as PARTITIONED SHARDS of level files: candidates shuffle to
+  * their shard's group, and each task loads its shard's levels from
+  * storage and probes them in-task (`Frontier.subtractSeen`) — the
+  * driver never holds any filter state (north rule: "partitioned
+  * cuckoo-filter URL-seen set, bloom fallback per executor").
   *
-  * Filters are a PREFILTER only — survivors still pass an exact
-  * anti-join, so false positives cannot drop URLs incorrectly; the
-  * filter exists to keep the exact join's probe side small. */
+  * Filters are a PREFILTER only: a filter hit is confirmed by binary
+  * search of the level's sorted run of exact 64-bit key hashes, so
+  * membership is 64-bit hash equality and a filter false positive never
+  * drops a URL. */
 object SeenFilter {
 
   private def mix64(z0: Long): Long = {

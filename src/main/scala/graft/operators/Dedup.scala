@@ -211,82 +211,9 @@ object Dedup {
   // Near-dup CLUSTERS: pairs → connected components → keeper choice
   // ---------------------------------------------------------------
 
-  /** Connected components over an undirected pair list (id_a, id_b):
-    * returns (id, component) with component = min id reachable. Used to
-    * turn near-dup PAIRS into dedup CLUSTERS (keep min id per cluster,
-    * drop the rest).
-    *
-    * Algorithm: iterative min-label propagation — per round, every node
-    * takes the min label over itself and its neighbors (one shuffle on
-    * the node id per round), stopping early when a round changes no
-    * label (cheap `limit(1)` probe, not a full count). Rounds needed =
-    * graph diameter; LSH-verified near-dup clusters are clique-like
-    * (diameter ≤ 2-3), so this converges in 2-4 rounds at any corpus
-    * size. If maxIter rounds pass without convergence (adversarially
-    * long path graphs), the operator FALLS BACK to the alternating
-    * large-star/small-star scheme (`connectedComponentsStar`), which
-    * converges in O(log n)-ish rounds on ANY graph shape — the result
-    * is always exact. */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 10,
-                          /** retained for source compatibility: the
-                            * star fallback makes every result exact,
-                            * so nothing is ever silently split */
-                          requireConverged: Boolean = false): DataFrame = {
-    val spark = pairs.sparkSession
-    val edges = pairs.select(col("id_a").cast("long").as("src"), col("id_b").cast("long").as("dst"))
-      .unionByName(pairs.select(col("id_b").cast("long").as("src"), col("id_a").cast("long").as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // localCheckpoint (not persist) per round: an iterative join grows
-    // the LOGICAL plan exponentially — the driver OOMs analyzing round
-    // 10's tree even on toy data; checkpointing truncates lineage so
-    // every round plans against a materialized leaf. EAGER on purpose:
-    // a lazily-checkpointed round was measured ~2x slower here — the
-    // downstream probe/fingerprint then plans against an unmaterialized
-    // subtree without size stats, losing broadcast choices.
-    var labels = edges.groupBy(col("src").as("id"))
-      .agg(least(min(col("dst")), first(col("src"))).as("component"))
-      .localCheckpoint()
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      // neighbor labels: for edge (src,dst), src can take dst's label
-      val neighborMin = edges.join(labels.withColumnRenamed("id", "dst"), "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min(col("component")).as("nmin"))
-      val next = labels.join(neighborMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("component"), coalesce(col("nmin"), col("component"))).as("component"))
-        .localCheckpoint()
-      val changed = next.as("n").join(labels.as("l"), "id")
-        .filter(col("n.component") =!= col("l.component"))
-        .limit(1).count() > 0
-      labels = next
-      converged = !changed
-      iter += 1
-    }
-    if (!converged) {
-      // min-label propagation needs ~diameter rounds: a path-shaped
-      // graph longer than maxIter+1 nodes would exit here with WRONG
-      // (split) labels. Hand the edge set to the star scheme, whose
-      // round count is ~O(log n) regardless of diameter.
-      System.err.println(s"[dedup] connectedComponents: diameter > $maxIter propagation " +
-        "rounds — switching to large-star/small-star (exact at any diameter)")
-      // <= keeps self-loop rows: Star drops them from its EDGE set but
-      // derives its NODE set from the pairs, so a node whose only edge
-      // is (x,x) still gets a component row — as the converged path
-      // would emit
-      val out = connectedComponentsStar(
-        edges.filter(col("src") <= col("dst"))
-          .select(col("src").as("id_a"), col("dst").as("id_b")))
-      edges.unpersist(blocking = false)
-      return out
-    }
-    edges.unpersist(blocking = false)
-    labels
-  }
-
-  /** Connected components via ALTERNATING LARGE-STAR/SMALL-STAR
+  /** Connected components over an undirected pair list (id_a, id_b),
+    * component = min id reachable — near-dup PAIRS become dedup
+    * CLUSTERS. Computed by ALTERNATING LARGE-STAR/SMALL-STAR
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
     * SOCC 2014 — public algorithm): each round rewires edges toward
     * per-neighborhood minima, halving effective component diameter, so

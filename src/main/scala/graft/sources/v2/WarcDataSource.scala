@@ -77,9 +77,12 @@ object WarcSchema {
   def resolvePaths(props: Map[String, String], conf: Configuration): Seq[String] = {
     val raw = props.get("paths") match {
       case Some(json) =>
-        // simple JSON array of strings
-        json.stripPrefix("[").stripSuffix("]").split(",")
-          .map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty).toSeq
+        // a JSON array of strings; names may hold commas and quotes
+        graft.core.Json.parse(json) match {
+          case Right(graft.core.JsValue.JsArr(vs)) =>
+            vs.collect { case graft.core.JsValue.JsStr(p) if p.nonEmpty => p }
+          case other => throw new IllegalArgumentException(s"bad paths option $json: $other")
+        }
       case None => props.get("path").toSeq
     }
     raw.flatMap { p =>

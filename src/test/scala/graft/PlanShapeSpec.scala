@@ -78,8 +78,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
 
   test("seen probe (freshOnly): one candidate exchange, NO join against any seen store") {
     val ck = graft.Scratch.dir("planshape-fresh").toString
-    val cfg = graft.frontier.FrontierConfig(checkpointDir = ck, seenShards = 8,
-      fastMode = true)
+    val cfg = graft.frontier.FrontierConfig(checkpointDir = ck, seenShards = 8)
     val f = new graft.frontier.Frontier(spark, cfg)
     f.initialize(graft.frontier.Frontier.syntheticSeeds(spark, 2000))
     val probe = f.freshOnly(graft.frontier.Frontier.syntheticSeeds(spark, 3000))

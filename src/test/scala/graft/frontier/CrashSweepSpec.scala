@@ -27,7 +27,7 @@ class CrashSweepSpec extends AnyFunSuite with SparkTestBase {
       _.compactBacklog(_), _.backlogStore))
 
   private def cfg(ck: String) = FrontierConfig(checkpointDir = ck, hostBudget = 4,
-    headMult = 1, backlogBuckets = 8, seenShards = 16, compactEvery = 1000, fastMode = true)
+    headMult = 1, backlogBuckets = 8, seenShards = 16, compactEvery = 1000)
 
   /** Four waves, every store compacted to 2: compacting to 4 then
     * writes a base, publishes a marker and GCs run 2 and deltas 3, 4. */

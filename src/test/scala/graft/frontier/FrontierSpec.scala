@@ -334,7 +334,7 @@ class FrontierSpec extends AnyFunSuite with SparkTestBase {
   test("auto-compaction inside the wave loop: long crawl keeps O(K) delta dirs, membership intact") {
     val ckDir = tmpDir("autocompact")
     val cfg = FrontierConfig(checkpointDir = ckDir, hostBudget = 4, seenShards = 16,
-      compactEvery = 4, fastMode = true)
+      compactEvery = 4)
     val f = new Frontier(spark, cfg)
     f.initialize(Frontier.syntheticSeeds(spark, 800))
     (1 to 12).foreach(_ => f.runWave())
@@ -360,7 +360,7 @@ class FrontierSpec extends AnyFunSuite with SparkTestBase {
     // headMult=1 maximizes refill traffic → maximum stale copies in the
     // backlog for compaction to reclaim
     val cfg = FrontierConfig(checkpointDir = ckDir, hostBudget = 4, headMult = 1,
-      backlogBuckets = 8, seenShards = 16, compactEvery = 4, fastMode = true)
+      backlogBuckets = 8, seenShards = 16, compactEvery = 4)
     val f = new Frontier(spark, cfg)
     f.initialize(Frontier.syntheticSeeds(spark, 3000, hostPool = 40))
     (1 to 10).foreach(_ => f.runWave())
@@ -385,7 +385,7 @@ class FrontierSpec extends AnyFunSuite with SparkTestBase {
   test("backlog merge is single-commit: crash between marker publish and folded GC duplicates nothing, heals") {
     val ckDir = tmpDir("backlogcrashgc")
     val cfg = FrontierConfig(checkpointDir = ckDir, hostBudget = 4, headMult = 1,
-      backlogBuckets = 8, seenShards = 16, compactEvery = 1000, fastMode = true)
+      backlogBuckets = 8, seenShards = 16, compactEvery = 1000)
     val f = new Frontier(spark, cfg)
     f.initialize(Frontier.syntheticSeeds(spark, 3000, hostPool = 40))
     (1 to 6).foreach(_ => f.runWave())
@@ -453,8 +453,7 @@ class FrontierSpec extends AnyFunSuite with SparkTestBase {
 
   test("legacy fence/wave=N checkpoint layout fails loudly on resume") {
     val ckDir = tmpDir("legacylayout")
-    val cfg = FrontierConfig(checkpointDir = ckDir, hostBudget = 4, seenShards = 8,
-      fastMode = true)
+    val cfg = FrontierConfig(checkpointDir = ckDir, hostBudget = 4, seenShards = 8)
     val f = new Frontier(spark, cfg)
     f.initialize(Frontier.syntheticSeeds(spark, 200))
     f.runWave()
@@ -475,8 +474,7 @@ class FrontierSpec extends AnyFunSuite with SparkTestBase {
 
   test("shard maintenance writes O(fresh) per wave: level files reused across waves") {
     val ckDir = tmpDir("lsm")
-    val cfg = FrontierConfig(checkpointDir = ckDir, hostBudget = 3, seenShards = 16,
-      fastMode = true)
+    val cfg = FrontierConfig(checkpointDir = ckDir, hostBudget = 3, seenShards = 16)
     val f = new Frontier(spark, cfg)
     f.initialize(Frontier.syntheticSeeds(spark, 100000))
     f.runWave(); f.runWave()
@@ -507,7 +505,7 @@ class FrontierSpec extends AnyFunSuite with SparkTestBase {
     spark.conf.set("spark.hadoop.graft.test.marker", "fence42")
     try {
       val f = new Frontier(spark, FrontierConfig(checkpointDir = tmpDir("confship"),
-        seenShards = 8, fastMode = true))
+        seenShards = 8))
       f.initialize(Frontier.syntheticSeeds(spark, 300)) // exercises storeLevel under this conf
       val confB = f.taskHadoopConfBroadcast
       // runtime session confs land in newHadoopConf() under their FULL
@@ -528,8 +526,7 @@ class FrontierSpec extends AnyFunSuite with SparkTestBase {
 
   test("shard prune is self-healing: orphan levels from a missed prune are reclaimed later") {
     val ckDir = tmpDir("selfheal")
-    val cfg = FrontierConfig(checkpointDir = ckDir, hostBudget = 5, seenShards = 16,
-      fastMode = true)
+    val cfg = FrontierConfig(checkpointDir = ckDir, hostBudget = 5, seenShards = 16)
     val f = new Frontier(spark, cfg)
     f.initialize(Frontier.syntheticSeeds(spark, 2000))
     f.runWave()
@@ -556,8 +553,7 @@ class FrontierSpec extends AnyFunSuite with SparkTestBase {
     val sp = spark
     import sp.implicits._
     val ckDir = tmpDir("queuehead-metrics")
-    val cfg = FrontierConfig(checkpointDir = ckDir, hostBudget = 5, seenShards = 16,
-      fastMode = true)
+    val cfg = FrontierConfig(checkpointDir = ckDir, hostBudget = 5, seenShards = 16)
     val f = new Frontier(spark, cfg)
     val seeds = spark.range(0, 1000000).select(
       concat(lit("https://www.h"), $"id" % 20, lit(".example.org/p/"), $"id").as("url"),
@@ -610,7 +606,7 @@ class FrontierSpec extends AnyFunSuite with SparkTestBase {
     val sp = spark
     import sp.implicits._
     val cfg = FrontierConfig(checkpointDir = tmpDir("shufflebytes"),
-      seenShards = 16, fastMode = true)
+      seenShards = 16)
     val f = new Frontier(spark, cfg)
     def urlsFor(from: Long, until: Long) = spark.range(from, until).select(
       concat(lit("https://www.h"), $"id" % 150, lit(".example.org/p/"), $"id").as("url"),
@@ -943,5 +939,89 @@ class FrontierSpec extends AnyFunSuite with SparkTestBase {
       s"listing calls grew with crawl length: ${deltas.toList}")
     assert(Seq(4, 5, 6, 8, 9, 10).map(deltas).forall(_ <= 64),
       s"steady-wave listing calls not O(changed dirs): ${deltas.toList}")
+  }
+
+  test("every job of initialize and of a wave carries its own step's label") {
+    import scala.concurrent.Await
+    import scala.concurrent.duration.Duration
+    // leave a stale label on every state-write pool thread and on this
+    // thread: a step that sets no label of its own would report it
+    val latch = new java.util.concurrent.CountDownLatch(8)
+    (1 to 8).map(_ => Frontier.guarded {
+      spark.sparkContext.setJobDescription("stale"); latch.countDown(); latch.await()
+    }).foreach(Await.result(_, Duration.Inf))
+    spark.sparkContext.setJobDescription("stale")
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        labels.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    def jobsOf(body: => Any): Seq[String] = {
+      body
+      org.apache.spark.SparkInternals.drainListenerBus(spark.sparkContext)
+      val out = labels.asScala.toVector
+      labels.clear()
+      out
+    }
+    val f = new Frontier(spark, FrontierConfig(checkpointDir = tmpDir("labels"),
+      hostBudget = 4, headMult = 1, seenShards = 16, backlogBuckets = 8))
+    val seeds = Frontier.syntheticSeeds(spark, 3000, hostPool = 40)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val init = jobsOf(f.initialize(seeds))
+      assert(init.toSet == Set("init:seen", "init:shards", "init:head"), s"init jobs: $init")
+      for (w <- 1 to 2) {
+        val jobs = jobsOf(f.runWave())
+        val foreign = jobs.filterNot(l =>
+          l.startsWith(s"wave$w:") || l.startsWith("wave:") || l.startsWith("maint:"))
+        assert(foreign.isEmpty, s"wave $w ran jobs labelled $foreign")
+        assert(Set(s"wave$w:schedule", s"wave$w:discover", "maint:accounting")
+          .subsetOf(jobs.toSet), s"wave $w jobs: ${jobs.distinct}")
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("every manifest field can be recomputed from the state the wave wrote") {
+    import org.apache.spark.sql.functions.{col, sum}
+    val cfg = FrontierConfig(checkpointDir = tmpDir("manifest"), hostBudget = 4,
+      headMult = 1, seenShards = 16, backlogBuckets = 8, compactEvery = 2)
+    def manifest(w: Int): Map[String, Double] = {
+      val js = new String(Files.readAllBytes(Paths.get(cfg.checkpointDir, s"MANIFEST-$w.json")),
+        "UTF-8")
+      graft.core.Json.parse(js) match {
+        case Right(graft.core.JsValue.JsObj(kv)) =>
+          kv.collect { case (k, graft.core.JsValue.JsNum(v)) => k -> v }.toMap
+        case other => fail(s"bad manifest $w: $other")
+      }
+    }
+    val f = new Frontier(spark, cfg)
+    f.initialize(Frontier.syntheticSeeds(spark, 3000, hostPool = 40))
+    assert(manifest(0)("seen_total") == f.seenDf(0).count())
+    assert(manifest(0)("pending_total") == f.headTableDf(0).count())
+    for (w <- 1 to 4) {
+      f.runWave()
+      val m = manifest(w)
+      assert(m.values.forall(_ >= 0), s"wave $w manifest holds a negative count: $m")
+      assert(m("seen_total") == f.seenDf(w).count(), s"wave $w seen_total")
+      val bn = f.fenceTableDf(w).agg(sum(col("bn"))).head()
+      val pending = f.headTableDf(w).count() + (if (bn.isNullAt(0)) 0L else bn.getLong(0))
+      assert(m("pending_total") == pending, s"wave $w pending_total")
+      val lineage = f.metricsDf(w).agg(sum(col("n_scheduled"))).head().getLong(0)
+      assert(m("scheduled") == f.scheduledDf(w).count() && m("scheduled") == lineage,
+        s"wave $w scheduled")
+      // every scheduled URL emits outlinksPerUrl parseable links, and
+      // the synthetic robots rule drops some fresh rows every wave
+      assert(m("candidates") == cfg.outlinksPerUrl * m("scheduled"), s"wave $w candidates: $m")
+      assert(m("allowed") < m("fresh") && m("fresh") <= m("candidates"), s"wave $w layers: $m")
+      assert(m("fresh") == m("deduped"))
+    }
+    assert(f.fenceTableDf(4).count() > 0 && manifest(4)("allowed") > 0, "no fences or no fresh rows")
+    // a wave re-run after its manifest is lost publishes the same one
+    val noTiming = (m: Map[String, Double]) =>
+      m -- Seq("elapsed_sec", "codegen_compiles", "codegen_ms")
+    val before = noTiming(manifest(4))
+    Files.delete(Paths.get(cfg.checkpointDir, "MANIFEST-4.json"))
+    assert(new Frontier(spark, cfg).runWave().wave == 4)
+    assert(noTiming(manifest(4)) == before)
   }
 }

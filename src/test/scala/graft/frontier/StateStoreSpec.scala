@@ -52,7 +52,7 @@ class StateStoreSpec extends AnyFunSuite with SparkTestBase {
   private def crashedBeforeGc(name: String): (FrontierConfig, Path, Vector[String]) = {
     val (ck, local) = faultyCk(name)
     val cfg = FrontierConfig(checkpointDir = ck, hostBudget = 4, headMult = 1,
-      backlogBuckets = 8, seenShards = 16, compactEvery = 1000, fastMode = true)
+      backlogBuckets = 8, seenShards = 16, compactEvery = 1000)
     val f = new Frontier(spark, cfg)
     f.initialize(Frontier.syntheticSeeds(spark, 3000, hostPool = 40))
     (1 to 6).foreach(_ => f.runWave())
@@ -105,7 +105,7 @@ class StateStoreSpec extends AnyFunSuite with SparkTestBase {
   test("a failed level-file prune delete is counted, the wave commits, the next wave removes the file") {
     val (ck, local) = faultyCk("prune")
     val f = new Frontier(spark, FrontierConfig(checkpointDir = ck, hostBudget = 4,
-      seenShards = 16, compactEvery = 1000, fastMode = true))
+      seenShards = 16, compactEvery = 1000))
     f.initialize(Frontier.syntheticSeeds(spark, 3000, hostPool = 40))
     val shards = local.resolve("shards")
     def levels: Set[String] = Files.walk(shards).iterator().asScala

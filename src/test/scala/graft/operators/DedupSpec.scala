@@ -60,31 +60,33 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     assert(acc.value >= 20, s"truncation accumulator not reporting (=${acc.value})")
   }
 
+  /** Driver-side union-find: id → min id of its component. */
+  private def unionFind(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toSeq.map(x => x -> find(x)).toMap
+  }
+
   test("connectedComponents: chain, clique, and singletons-in-pairs resolve to min id") {
     import spark.implicits._
     // chain 1-2-3-4 (diameter 3), clique {10,11,12}, isolated pair {20,21}
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (10L, 12L), (11L, 12L), (20L, 21L))
-      .toDF("id_a", "id_b")
-    val cc = Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (10L, 12L), (11L, 12L), (20L, 21L))
+    val pairs = edges.toDF("id_a", "id_b")
+    val cc = Dedup.connectedComponentsStar(pairs).as[(Long, Long)].collect().toMap
     assert(cc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))
-    val keep = Dedup.keepPerComponent(Dedup.connectedComponents(pairs))
+    assert(cc == unionFind(edges))
+    val keep = Dedup.keepPerComponent(Dedup.connectedComponentsStar(pairs))
       .filter(org.apache.spark.sql.functions.col("keep")).select("id")
       .as[Long].collect().toSet
     assert(keep == Set(1L, 10L, 20L))
-  }
-
-  test("connectedComponents: diameter > maxIter falls back to star scheme, result exact") {
-    import spark.implicits._
-    // path of 16 nodes: diameter 15 — propagation cannot converge in 2
-    // rounds; the large-star/small-star fallback must return EXACT
-    // labels anyway (r3 failed loudly here; the star scheme removes
-    // the failure mode entirely)
-    val path = (0L until 15L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val cc = Dedup.connectedComponents(path, maxIter = 2, requireConverged = true)
-      .as[(Long, Long)].collect().toMap
-    assert(cc.size == 16 && cc.values.toSet == Set(0L),
-      s"fallback labels wrong: $cc")
   }
 
   test("connectedComponentsStar: 10^4-node path converges in O(log n) rounds, exact labels") {
@@ -105,31 +107,26 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       s"star scheme took ${Dedup.lastStarRounds} rounds — not O(log n)")
   }
 
-  test("star fallback keeps self-loop-only nodes (converged/fallback membership identical)") {
+  test("connectedComponentsStar keeps self-loop-only nodes") {
     import spark.implicits._
-    // 20-node path (won't converge in 2 rounds) + an isolated node
-    // whose only edge is the self-loop (99,99): the fallback must
-    // still emit a row for 99, as the converged path does
-    val pairs = ((0L until 19L).map(i => (i, i + 1)) :+ (99L, 99L)).toDF("id_a", "id_b")
-    val viaFallback = Dedup.connectedComponents(pairs, maxIter = 2)
+    // a 20-node path + an isolated node whose only edge is the
+    // self-loop (99,99): it still gets its own component row
+    val edges = (0L until 19L).map(i => (i, i + 1)) :+ ((99L, 99L))
+    val cc = Dedup.connectedComponentsStar(edges.toDF("id_a", "id_b"))
       .as[(Long, Long)].collect().toMap
-    val viaConverged = Dedup.connectedComponents(pairs, maxIter = 30)
-      .as[(Long, Long)].collect().toMap
-    assert(viaFallback == viaConverged,
-      s"fallback membership diverged: ${viaFallback.toSet.diff(viaConverged.toSet)}")
-    assert(viaFallback(99L) == 99L && viaFallback.size == 21)
+    assert(cc == unionFind(edges), s"diverged: ${cc.toSet.diff(unionFind(edges).toSet)}")
+    assert(cc(99L) == 99L && cc.size == 21)
   }
 
-  test("connectedComponentsStar == min-label propagation on random graphs") {
+  test("connectedComponentsStar == union-find oracle on random graphs") {
     import spark.implicits._
     val rnd = new scala.util.Random(7)
-    val pairs = (0 until 400).map(_ => (rnd.nextInt(300).toLong, rnd.nextInt(300).toLong))
+    val edges = (0 until 400).map(_ => (rnd.nextInt(300).toLong, rnd.nextInt(300).toLong))
       .filter { case (a, b) => a != b }
-      .toDF("id_a", "id_b")
-    val viaStar = Dedup.connectedComponentsStar(pairs).as[(Long, Long)].collect().toMap
-    val viaProp = Dedup.connectedComponents(pairs, maxIter = 40).as[(Long, Long)].collect().toMap
-    assert(viaStar == viaProp,
-      s"star vs propagation disagree on ${viaStar.toSet.diff(viaProp.toSet)}")
+    val viaStar = Dedup.connectedComponentsStar(edges.toDF("id_a", "id_b"))
+      .as[(Long, Long)].collect().toMap
+    val oracle = unionFind(edges)
+    assert(viaStar == oracle, s"star vs union-find disagree on ${viaStar.toSet.diff(oracle.toSet)}")
   }
 
   test("simhashPairs: mutated near-copies found, over-cap reported") {

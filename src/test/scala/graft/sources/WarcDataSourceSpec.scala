@@ -76,6 +76,18 @@ class WarcDataSourceSpec extends AnyFunSuite with SparkTestBase {
     assert(df.rdd.getNumPartitions == 2)
   }
 
+  test("multi-path load reads a file whose name holds a comma") {
+    val dir = graft.Scratch.dir("warccomma")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(fixturePath("example.warc.gz")),
+      dir.resolve("a,b.warc.gz"))
+    java.nio.file.Files.copy(java.nio.file.Paths.get(fixturePath("example-resource.warc.gz")),
+      dir.resolve("c.warc.gz"))
+    def n(paths: String*): Long = spark.read.format("warc").load(paths: _*).count()
+    val (ab, c) = (n(s"$dir/a,b.warc.gz"), n(s"$dir/c.warc.gz"))
+    assert(ab > 0 && c > 0)
+    assert(n(s"$dir/a,b.warc.gz", s"$dir/c.warc.gz") == ab + c)
+  }
+
   test("directory load resolves through Hadoop FS, including a file: URI") {
     val dir = graft.Scratch.dir("warcdirload")
     val src = java.nio.file.Paths.get(fixturePath("example.warc.gz"))
