@@ -63,8 +63,9 @@ final case class FrontierConfig(
       * wave (maximum backlog traffic, still exact). */
     headMult: Int = 4,
     /** backlog host-hash buckets: refills read ONLY the buckets of
-      * needy hosts (directory-level pruning). Production sizing:
-      * ~total-backlog/bucket should fit a comfortable scan unit. */
+      * needy hosts (a `bkb` predicate that parquet row-group and page
+      * statistics prune on). Production sizing: ~total-backlog/bucket
+      * should fit a comfortable scan unit. */
     backlogBuckets: Int = 64,
     seenShards: Int = 64,
     outlinksPerUrl: Int = 3,
@@ -95,7 +96,7 @@ final case class FrontierConfig(
 )
 
 /** One wave's manifest counts, layer by layer: `candidates` canonicalized
-  * outlinks (init: distinct seeds) → `fresh` (= `deduped`) in-batch
+  * outlinks (init: canonicalized seeds) → `fresh` (= `deduped`) in-batch
   * distinct, never-seen keys → `allowed` fresh rows the robots gate
   * admits → `scheduled`. `seenTotal` and `pendingTotal` (head rows + live
   * backlog) are as of the wave's commit; `seenTotal` is -1 only on a
@@ -131,9 +132,9 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
   private[frontier] def taskHadoopConfBroadcast = taskConfB
 
   /** Per-instance count of real FileSystem list/exists calls issued by
-    * the memoized listings (the state stores' marker and delta listings
-    * and the backlog `bkb=` child listings) — a steady wave must issue
-    * O(changed dirs), not O(all delta dirs × buckets). */
+    * the state stores' memoized marker and delta listings, the one-time
+    * layout check and the refill's bounds-sidecar probes — a steady wave
+    * must issue O(changed dirs), not O(all delta dirs). */
   private[frontier] val fsListOps = new java.util.concurrent.atomic.AtomicLong
 
   /** Thread-local job description — makes GRAFT_JOBLOG attribution
@@ -150,11 +151,6 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     "fence_base", "FENCE_BASE-", "fence_delta", None, fsListOps)
   private[frontier] val backlogStore = new StateStore(spark, markers, cfg.checkpointDir,
     "backlog_base", "BACKLOG_BASE-", "maint", Some("dest=spill"), fsListOps)
-
-  /** Memoized `bkb=` child listings of backlog dirs (immutable once
-    * written; the writer invalidates the one dir it rewrites). */
-  private val bucketDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, String)]]()
 
   // ----------------------------------------------------------------
   // URL canonicalization + keys
@@ -253,13 +249,24 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     val ckDir = cfg.checkpointDir
     val prevIdxB = spark.sparkContext.broadcast(prevIdx)
     val confB = taskConfB
-    import spark.implicits._
-    newKeys.select(col("surt_key")).as[String]
-      .groupByKey(k => java.lang.Math.floorMod(SeenFilter.hashKey(k), n.toLong).toInt)
-      .flatMapGroups { (shard, keys) =>
+    // each map task groups its hashes per shard, so the shuffle moves one
+    // primitive array per (task, shard), not a serialized tuple per key;
+    // an explicit partitioner spreads the shards over every core (AQE
+    // coalesces a Dataset groupByKey's small exchange into one task)
+    newKeys.select(col("surt_key")).as[String].rdd
+      .mapPartitions { keys =>
+        val byShard = Array.fill(n)(new scala.collection.mutable.ArrayBuilder.ofLong)
+        keys.foreach { k =>
+          val h = SeenFilter.hashKey(k)
+          byShard(java.lang.Math.floorMod(h, n.toLong).toInt) += h
+        }
+        byShard.iterator.zipWithIndex.collect { case (b, s) if b.length > 0 => (s, b.result()) }
+      }
+      .groupByKey(new org.apache.spark.HashPartitioner(spark.sparkContext.defaultParallelism))
+      .map { case (shard, parts) =>
         val prevPaths = prevIdxB.value.getOrElse(shard, Nil)
         val counts = prevPaths.map(Frontier.levelCountFromPath)
-        val batch = keys.map(SeenFilter.hashKey).toArray
+        val batch = Array.concat(parts.toSeq: _*)
         val k = SeenFilter.levelsToMerge(counts, batch.length)
         val (retained, merged) = prevPaths.splitAt(prevPaths.length - k)
         // oldest-first merge keeps accumulation sorted
@@ -267,7 +274,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
         val run = SeenFilter.mergeIntoRun(batch, mergedRuns.reverse)
         val rel = Frontier.storeLevel(ckDir, wave, shard, SeenFilter.buildLevel(run),
           run.length, confB.value.value)
-        Iterator.single((shard, retained :+ rel))
+        (shard, retained :+ rel)
       }.collect().toMap
   }
 
@@ -657,8 +664,9 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
   // Costs per wave: scheduling shuffles O(head); insertion shuffles
   // O(fresh + hosts) (fence join + host group); spill appends
   // O(spilled) as a new bucketed delta (never rewrites the backlog);
-  // refill reads ONLY the backlog buckets containing needy hosts —
-  // directory-pruned — amortized O(scheduled) rows moved per wave.
+  // refill reads ONLY the backlog buckets containing needy hosts — a
+  // `bkb` predicate over bkb-sorted files, pruned by parquet statistics
+  // — amortized O(scheduled) rows moved per wave.
   // Nothing anywhere is O(pending).
 
   private val PendingSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -685,10 +693,10 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     * Refills read band 0 first and provably stop there when every
     * taken row's priority stays inside it — O(taken)-ish reads instead
     * of re-scanning a host's whole deep queue on every refill. Band
-    * and bucket are FOLDED into one partition value `bkb = bucket*16 +
-    * band` (dir `bkb=<v>`): a single partition column keeps the
-    * dynamic-partition writer on its fast path while preserving both
-    * prunings. */
+    * and bucket are FOLDED into one column `bkb = bucket*16 + band`
+    * that every backlog file carries and is sorted by: one range
+    * predicate on it selects buckets, bands or both, and parquet
+    * statistics skip the rest (`bkbIn`). */
   private val BandWidth = 8
   private val MaxBand = 15
   private def bandCol: org.apache.spark.sql.Column =
@@ -699,10 +707,9 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
 
   /** One maintenance dir per wave holding the wave's state
     * partitions: `dest=head` (flat files + an optional `refill`
-    * subdir) and `dest=spill/bkb=<bucket*16+band>` (the backlog
-    * delta), written as two concurrent jobs; per-host head/spill
-    * counts come back as cheap columnar reads of what was written.
-    * (The per-host fence deltas live separately under
+    * subdir) and `dest=spill` (the backlog delta: bkb-sorted files in
+    * `data`, plus a `bounds` sidecar when banded), written as two
+    * concurrent jobs. (The per-host fence deltas live separately under
     * `fence_delta/wave=N`.) */
   private def maintDir(wave: Int): String = dir("maint", s"wave=$wave")
   private def headDir(wave: Int): String = maintDir(wave) + "/dest=head"
@@ -719,8 +726,9 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
   private def emptyBacklog: DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], BacklogSchema)
 
-  /** Schema-pinned recursive read (bucket subdirs are storage layout,
-    * not data); empty frame when the dest partition wrote no rows. */
+  /** Schema-pinned recursive read (the head's `refill` subdir is
+    * storage layout, not data); empty frame when the dest partition
+    * wrote no rows. */
   private def readDest(d: String): DataFrame =
     if (!pathExists(d)) emptyPending
     else spark.read.schema(PendingSchema).option("recursiveFileLookup", "true").parquet(d)
@@ -828,40 +836,22 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     * read set (compacted runs + newer spill deltas). */
   private def backlogDirs(wave: Int): Seq[String] = backlogStore.readSet(wave)
 
-  /** Memoized `bkb=` child listing of one backlog store dir (the
-    * single listing path shared by the data-dir and bounds-sidecar
-    * readers — the two differ only in which bkb values they collect). */
-  private def bkbChildren(d: String,
-                          conf: org.apache.hadoop.conf.Configuration): Seq[(Int, String)] =
-    bucketDirCache.computeIfAbsent(d, { dd =>
-      val p = new org.apache.hadoop.fs.Path(dd)
-      val fs = p.getFileSystem(conf)
-      fsListOps.incrementAndGet()
-      if (!fs.exists(p)) Nil
-      else fs.listStatus(p).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        n.stripPrefix("bkb=").toIntOption match {
-          case Some(v) if n.startsWith("bkb=") => Some((v, st.getPath.toString))
-          case _                               => None
-        }
-      }
-    })
+  /** Backlog store files: backlog rows plus their `bkb`. */
+  private val BacklogFileSchema =
+    BacklogSchema.add("bkb", org.apache.spark.sql.types.IntegerType)
 
-  /** The bkb=<bucket*16+band> data subdirectories of the backlog dirs
-    * `tops` whose logical bucket is in `buckets` and which physically
-    * exist — the directory-pruned read set. `bandZeroOnly` keeps only
-    * band-0 dirs. */
-  private def backlogBucketDirs(tops: Seq[String],
-                                buckets: Set[Int] = (0 until cfg.backlogBuckets).toSet,
-                                bandZeroOnly: Boolean = false): Seq[String] = {
-    val conf = spark.sessionState.newHadoopConf()
-    tops.flatMap { d =>
-      bkbChildren(d, conf).collect {
-        // v == -1 is the per-host BOUNDS sidecar, never row data
-        case (v, path) if v >= 0 && buckets.contains(v / (MaxBand + 1)) &&
-            (!bandZeroOnly || v % (MaxBand + 1) == 0) => path
-      }
-    }
+  /** The `bkb` predicate selecting `buckets` (band 0 only when
+    * `bandZeroOnly`): one closed range per run of consecutive values, a
+    * form parquet row-group and page statistics prune on exactly. */
+  private def bkbIn(buckets: Set[Int], bandZeroOnly: Boolean = false)
+      : org.apache.spark.sql.Column = {
+    val w = MaxBand + 1
+    val vals = buckets.toSeq.sorted.flatMap(b => if (bandZeroOnly) Seq(b * w) else b * w until b * w + w)
+    vals.foldLeft(List.empty[(Int, Int)]) {
+      case ((lo, hi) :: done, v) if v == hi + 1 => (lo, v) :: done
+      case (done, v)                            => (v, v) :: done
+    }.map { case (lo, hi) => col("bkb").between(lo, hi) }
+      .reduceOption(_ || _).getOrElse(lit(false))
   }
 
   /** Strictly above the host's fence (fp, fs). */
@@ -875,22 +865,27 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     * the fence (stale copies of refilled rows drop out) AND of the
     * host's current epoch (rows of re-cut hosts' old epochs drop out).
     * The one liveness rule of every backlog read. */
-  private def backlogLive(dirs: Seq[String], fence: DataFrame): DataFrame =
-    backlogRows(dirs).join(fence.withColumnRenamed("epoch", "__fe"), Seq("host"), "inner")
+  private def backlogLive(dirs: Seq[String], fence: DataFrame,
+                          sel: Option[org.apache.spark.sql.Column] = None): DataFrame =
+    backlogRows(dirs, sel).join(fence.withColumnRenamed("epoch", "__fe"), Seq("host"), "inner")
       .filter(liveBacklogRow)
 
-  /** Schema-pinned recursive read of backlog data dirs. */
-  private def backlogRows(dirs: Seq[String]): DataFrame =
+  /** One schema-pinned read of the backlog store dirs `dirs`, keeping
+    * the rows `sel` selects (a `bkbIn` predicate; every row when None). */
+  private def backlogRows(dirs: Seq[String],
+                          sel: Option[org.apache.spark.sql.Column] = None): DataFrame =
     if (dirs.isEmpty) emptyBacklog
-    else spark.read.schema(BacklogSchema)
-      .option("recursiveFileLookup", "true").parquet(dirs: _*)
+    else {
+      val all = spark.read.schema(BacklogFileSchema).parquet(dirs.map(dataDir): _*)
+      sel.fold(all)(all.filter).select(bcols: _*)
+    }
 
   private def liveBacklogRow: org.apache.spark.sql.Column =
     aboveFence && coalesce(col("epoch"), lit(0)) === coalesce(col("__fe"), lit(0))
 
   /** Per-host BOUNDS sidecar schema: the best (priority, surt) among a
-    * banded store's rows OUTSIDE band 0 — written as the `bkb=-1`
-    * partition of that store. A refill that met its deficit from
+    * banded store's rows OUTSIDE band 0 — written to the fixed path
+    * `boundsDir` inside that store. A refill that met its deficit from
     * band-0 rows all strictly better than every bounds row has
     * provably seen the host's true next rows; stores that collapsed
     * entirely into band 0 have no unread rows and write no sidecar.
@@ -902,14 +897,15 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     org.apache.spark.sql.types.StructField("bp", org.apache.spark.sql.types.IntegerType),
     org.apache.spark.sql.types.StructField("bs", org.apache.spark.sql.types.StringType)))
 
-  /** The bkb=-1 bounds sidecars present among the readable backlog
-    * stores (memoized child listings, like the data dirs). */
-  private def backlogBoundsDirs(wave: Int): Seq[String] = {
-    val conf = spark.sessionState.newHadoopConf()
-    backlogDirs(wave).flatMap { d =>
-      bkbChildren(d, conf).collect { case (v, path) if v == -1 => path }
-    }
-  }
+  /** A backlog store dir holds its bkb-sorted row files in `data` and,
+    * when banded, its bounds sidecar in `bounds`. */
+  private def dataDir(store: String): String = store + "/data"
+  private def boundsDir(store: String): String = store + "/bounds"
+
+  /** The bounds sidecars of the readable backlog stores: one exists
+    * probe per store, no listing. */
+  private def backlogBoundsDirs(wave: Int): Seq[String] =
+    backlogDirs(wave).map(boundsDir).filter { d => fsListOps.incrementAndGet(); pathExists(d) }
 
   private def writeBounds(rows: DataFrame, bandColRef: org.apache.spark.sql.Column,
                           dest: String): Unit =
@@ -918,7 +914,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
       .agg(min(struct(col("priority").as("p"), col("surt_key").as("s"))).as("b"))
       .select(col("host"), col("b.p").as("bp"), col("b.s").as("bs"))
       .coalesce(1)
-      .write.mode("overwrite").parquet(dest + "/bkb=-1")
+      .write.mode("overwrite").parquet(boundsDir(dest))
 
   /** TIERED backlog compaction. Normally folds only the accumulated
     * deltas into ONE new rank-banded run (O(deltas), flat in pending);
@@ -926,7 +922,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     * reach half the largest run (or ≥ 4 runs exist) — classic LSM
     * tiering, so per-wave amortized compaction I/O is O(fresh × log),
     * never O(backlog/K). Each run: band 0 = each host's top-B0 live
-    * rows at fold time, later bands geometric, plus a bkb=-1 bounds
+    * rows at fold time, later bands geometric, plus a bounds
     * sidecar (best row outside band 0) that keeps the refill phase-A
     * settle exact — the old priority bands made band 0 a fixed
     * fraction of the WHOLE backlog (O(pending/16) per refill wave,
@@ -949,11 +945,9 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     val smallSum = runSizes.map(_._2).sum - largest + deltaDirs.map(bytesOf).sum
     val merge = runs.nonEmpty && (runs.size >= 4 || smallSum * 2 >= largest)
     val foldedRuns = if (merge) runs else Seq.empty
-    // source data dirs: bkb>=0 children only (the bkb=-1 bounds
-    // sidecars are a different schema and are regenerated below)
-    val srcData = backlogBucketDirs(foldedRuns.map(backlogStore.baseDir) ++ deltaDirs)
-    if (srcData.isEmpty) return
-    val live = backlogLive(srcData, fenceDf(upTo).select("host", "fp", "fs", "epoch"))
+    val srcDirs = foldedRuns.map(backlogStore.baseDir) ++ deltaDirs
+    if (srcDirs.isEmpty) return
+    val live = backlogLive(srcDirs, fenceDf(upTo).select("host", "fp", "fs", "epoch"))
       .select("surt_key", "canonical_url", "host", "priority", "epoch")
     val b0 = math.max(2 * headM, 16)
     backlogStore.commit(upTo, foldedRuns) { out =>
@@ -964,17 +958,15 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
             least(lit(MaxBand), (floor(
               log(4.0, (col("__rk") - 1).cast("double") / b0)) + 1).cast("int"))))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      banded.select(col("surt_key"), col("canonical_url"), col("host"), col("priority"),
-          col("epoch"), (bucketCol * lit(MaxBand + 1) + col("__band")).as("bkb"))
-        .repartition(col("bkb"))
-        .write.partitionBy("bkb").mode("overwrite").parquet(out)
+      // range-partitioned: at scale each file covers a contiguous
+      // bkb range, so statistics prune whole files
+      banded.select(bcols :+ (bucketCol * lit(MaxBand + 1) + col("__band")).as("bkb"): _*)
+        .repartitionByRange(spark.sparkContext.defaultParallelism, col("bkb"))
+        .sortWithinPartitions("bkb")
+        .write.mode("overwrite").parquet(dataDir(out))
       writeBounds(banded, col("__band"), out)
       banded.unpersist(blocking = false)
-      bucketDirCache.remove(out)
     }
-    // drop the child listings of the dirs the commit GC'd
-    import scala.jdk.CollectionConverters._
-    bucketDirCache.keySet().retainAll(backlogDirs(Int.MaxValue).asJava)
   }
 
   /** Delete superseded per-wave state: stale FENCES markers and the
@@ -1064,15 +1056,20 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     // table's fingerprint job is part of the gated head step
     jd("init:head")
     gateUnchanged
+    // `copies`: canonicalized seeds per distinct key, summed on the
+    // seen write into wave 0's candidates
     val canon = canonicalized(seeds)
       .groupBy("surt_key")
       .agg(min("priority").as("priority"),
-        min("canonical_url").as("canonical_url"), min("host").as("host"))
-      .select("surt_key", "canonical_url", "host", "priority")
+        min("canonical_url").as("canonical_url"), min("host").as("host"),
+        count(lit(1)).as("copies"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val fSeen = Frontier.guarded {
       jd("init:seen")
-      writeCounted(canon.select("surt_key"), seenStore.deltaDir(0))
+      val obs = org.apache.spark.sql.Observation()
+      canon.observe(obs, count(lit(1)).as("n"), coalesce(sum(col("copies")), lit(0L)).as("c"))
+        .select("surt_key").write.mode("overwrite").parquet(seenStore.deltaDir(0))
+      (obs.get("n").asInstanceOf[Long], obs.get("c").asInstanceOf[Long])
     }
     val fShards = Frontier.guarded {
       jd("init:shards")
@@ -1086,25 +1083,26 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
       // per-host top-M cut and sets the first fences; init itself is
       // O(seeds) I/O with zero exchanges. No fence state at init: the
       // fence VIEW is empty until the first spill writes a delta.
-      writeCounted(applyRobots(canon), headDir(0))
+      writeCounted(applyRobots(canon.select(pcols: _*)), headDir(0))
     }
     Await.result(fShards, Duration.Inf)
     // allowed/pending reflect the robots-gated head actually written;
     // candidates/deduped/seen reflect pre-gate admission (seen parity)
-    val n = Await.result(fSeen, Duration.Inf)
+    val (n, nCandidates) = Await.result(fSeen, Duration.Inf)
     val nAllowed = Await.result(fState, Duration.Inf)
     canon.unpersist(blocking = false)
-    val res = WaveResult(0, n, n, n, nAllowed, 0, n, nAllowed,
+    val res = WaveResult(0, nCandidates, n, n, nAllowed, 0, n, nAllowed,
       (System.nanoTime() - t0) / 1e9)
     commit(0, res, codegen0)
     res
   }
 
-  /** Fail loudly on a pre-round-5 checkpoint: its fence lived in
-    * fence/wave=N dirs, which the fence_base/fence_delta reader never
-    * consults — resuming one would silently produce an EMPTY fence
-    * view, so every previously fenced host's backlog would never
-    * refill. Same loud-failure contract as the seen-shard mismatch
+  /** Fail loudly on a checkpoint of an older layout: a pre-round-5
+    * fence lived in fence/wave=N dirs, which the fence_base/fence_delta
+    * reader never consults — resuming one would silently produce an
+    * EMPTY fence view, so every previously fenced host's backlog would
+    * never refill; a backlog of bkb=<v> dirs predates the bkb-sorted
+    * files. Same loud-failure contract as the seen-shard mismatch
     * above. Required by `runWave` and by every fence-store read
     * (`fenceDf`); passes at most once per instance. */
   private lazy val layoutChecked: Boolean = {
@@ -1114,6 +1112,18 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
       s"checkpoint ${cfg.checkpointDir} holds a legacy fence/wave=N store; " +
         "this build reads fence_base/fence_delta only — resuming would lose " +
         "every fence. Re-crawl or migrate the fence store first")
+    // likewise a backlog store of bkb=<v> dirs: it has none of the
+    // `data`/`bounds` dirs this build reads
+    val bucketDirs = backlogDirs(Int.MaxValue).filter { d =>
+      val p = new org.apache.hadoop.fs.Path(d)
+      fsListOps.incrementAndGet()
+      fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.startsWith("bkb="))
+    }
+    require(bucketDirs.isEmpty,
+      s"checkpoint ${cfg.checkpointDir} holds legacy bkb=<v> backlog dirs in " +
+        s"${bucketDirs.mkString(", ")}; this build reads flat bkb-sorted backlog " +
+        "files only — resuming would misread the backlog. Re-crawl or migrate " +
+        "the backlog store first")
     true
   }
 
@@ -1425,7 +1435,6 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     val mfs = md.getFileSystem(spark.sessionState.newHadoopConf())
     if (!mfs.delete(md, true) && mfs.exists(md))
       throw new java.io.IOException(s"cannot reset $md")
-    bucketDirCache.remove(spillDir(wave))
 
     val (headParts, spillParts, schedFence) =
       route(ranked, fencePrev, fresh, saltDropped, hasFences, keep)
@@ -1612,8 +1621,8 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     val (spillEpoch, epochCnt) =
       if (expR.isEmpty) (emptyBacklog, Map.empty[String, Long])
       else {
-        // the hosts' live backlog — committed dirs (this wave's spill dir
-        // does not exist yet) plus this wave's routed spill for them from
+        // the hosts' live backlog — the dirs committed by wave-1 (this
+        // wave's spill is not written yet) plus this wave's routed spill for them from
         // the CACHED frame — is rewritten under epoch+1; one recount
         // collect yields the new bn. Bucket ids come from the engine's
         // own hash expression (never re-derive bucketing on the driver).
@@ -1625,7 +1634,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
           .select(bucketCol.as("b")).collect().map(_.getInt(0)).toSet
         val fenceOf = typedlit(expR.map(r => r.getString(0) ->
           ((r.getInt(1), r.getString(2), r.getInt(3)))).toMap)
-        val liveOld = backlogRows(backlogBucketDirs(backlogDirs(wave), bucketsOf))
+        val liveOld = backlogRows(backlogDirs(wave - 1), Some(bkbIn(bucketsOf)))
           .filter(col("host").isin(expHosts: _*))
           .withColumn("__f", element_at(fenceOf, col("host")))
           .withColumn("fp", col("__f._1")).withColumn("fs", col("__f._2"))
@@ -1695,12 +1704,12 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
       if (!anyEpoch) emptyBacklog
       else {
         val expens = keep(recutHosts.filter(col("rf")))
-        // the hosts' live backlog: committed dirs (epoch-filtered —
-        // this wave's spill dir does not exist yet) plus this wave's
+        // the hosts' live backlog: the dirs committed by wave-1
+        // (epoch-filtered — this wave's spill is not written yet) plus this wave's
         // routed spill for them from the CACHED frame
         val rBuckets = expens.select("bucket").distinct().as[Int].collect().toSet
-        val liveOld = backlogLive(backlogBucketDirs(backlogDirs(wave), rBuckets),
-            expens.select("host", "fp", "fs", "epoch"))
+        val liveOld = backlogLive(backlogDirs(wave - 1), expens.select("host", "fp", "fs", "epoch"),
+            Some(bkbIn(rBuckets)))
           .select(pcols: _*)
         val liveNew = spillRows.join(expens.select("host"), Seq("host"), "left_semi")
           .select(pcols: _*)
@@ -1750,15 +1759,15 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     }
     val fSpill = Frontier.guarded {
       jd("maint:writeSpill")
+      // no shuffle: ~one bkb-sorted file per core, whatever the bucket count
       spillFinal.withColumn("bkb", if (bandIt) bkbCol else bucketCol * lit(MaxBand + 1))
-        .repartition(col("bkb")) // one file per (bucket, band) dir
-        .write.partitionBy("bkb").mode("overwrite").parquet(spillDir(wave))
+        .coalesce(spark.sparkContext.defaultParallelism).sortWithinPartitions("bkb")
+        .write.mode("overwrite").parquet(dataDir(spillDir(wave)))
       // banded stores carry a bounds sidecar so phase-A refills can
       // settle exactly against the unread bands; single-band deltas
       // have no unread rows and need none
       if (bandIt) writeBounds(spillFinal, bandCol, spillDir(wave))
       backlogStore.addDelta(wave)
-      bucketDirCache.remove(spillDir(wave))
     }
     val fDelta = delta.map(rows => Frontier.guarded(writeFenceDelta(rows, wave)))
     Await.result(fSpill, Duration.Inf)
@@ -1796,14 +1805,13 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
         col("rc"), col("bn"),
         (lit(headM.toLong) - col("hc")).as("deficit"), bucketCol.as("bucket")))
     val buckets = needy.select("bucket").distinct().as[Int].collect().toSet
-    def liveRanked(dirs: Seq[String], who: DataFrame): DataFrame =
-      backlogLive(dirs, who.select("host", "fp", "fs", "epoch", "deficit"))
+    def liveRanked(sel: org.apache.spark.sql.Column, who: DataFrame): DataFrame =
+      backlogLive(backlogDirs(wave), who.select("host", "fp", "fs", "epoch", "deficit"), Some(sel))
         .withColumn("rk", row_number().over(hostOrder))
-    val rlA = keep(liveRanked(
-      backlogBucketDirs(backlogDirs(wave), buckets, bandZeroOnly = true), needy))
+    val rlA = keep(liveRanked(bkbIn(buckets, bandZeroOnly = true), needy))
     // per-host phase-A outcome: settled iff the full deficit arrived
     // with every taken row strictly better than the host's best row
-    // OUTSIDE band 0 (the bkb=-1 bounds sidecars, reduced per host; a
+    // OUTSIDE band 0 (the bounds sidecars, reduced per host; a
     // host with no bounds row has no unread banded rows at all) — exact
     // at any fence height
     val boundsDirs = backlogBoundsDirs(wave)
@@ -1833,7 +1841,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
       if (!anyB) (emptyPending, None)
       else {
         val bBuckets = needyB.select("bucket").distinct().as[Int].collect().toSet
-        val rlB = keep(liveRanked(backlogBucketDirs(backlogDirs(wave), bBuckets), needyB))
+        val rlB = keep(liveRanked(bkbIn(bBuckets), needyB))
         val agg = rlB.groupBy("host").agg(
           count(lit(1)).as("liveCnt"),
           sum(when(col("rk") <= col("deficit"), 1L).otherwise(0L)).as("takenCnt"),
@@ -1939,8 +1947,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     * are pruned). */
   def pendingDf(wave: Int): DataFrame =
     headDf(wave).unionByName(
-      backlogLive(backlogBucketDirs(backlogDirs(wave)),
-          fenceDf(wave).select("host", "fp", "fs", "epoch"))
+      backlogLive(backlogDirs(wave), fenceDf(wave).select("host", "fp", "fs", "epoch"))
         .select("surt_key", "canonical_url", "host", "priority"))
   /** Per-host queue-head table as of `wave` (the rows wave+1's
     * scheduling actually consults). */

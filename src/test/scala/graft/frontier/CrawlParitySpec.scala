@@ -29,10 +29,10 @@ class CrawlParitySpec extends AnyFunSuite with SparkTestBase {
 
   test("compacted-refill parity: rank-banded base + bounds settle stays exact across compactions, 8 waves") {
     // headMult=1 forces a refill EVERY wave; compactEvery=2 folds the
-    // backlog into the rank-banded base (with bkb=-1 bounds sidecars)
-    // repeatedly mid-crawl — every refill after wave 2 reads the new
-    // banded layout, and the bounds-based settle must keep schedules
-    // bit-identical to the sequential reference
+    // backlog into the rank-banded base (bkb-sorted files plus a bounds
+    // sidecar per store) repeatedly mid-crawl — every refill after wave
+    // 2 reads the new banded layout, and the bounds-based settle must
+    // keep schedules bit-identical to the sequential reference
     parityRun("crawl-parity-compact-refill", FrontierConfig(
       checkpointDir = graft.Scratch.dir("crawl-parity-compact-refill").toString,
       hostBudget = 4, headMult = 1, backlogBuckets = 8, compactEvery = 2,

@@ -472,6 +472,85 @@ class FrontierSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("legacy bkb=<v> backlog layout fails loudly on resume") {
+    val ckDir = tmpDir("legacybkb")
+    val cfg = FrontierConfig(checkpointDir = ckDir, hostBudget = 4, headMult = 1,
+      seenShards = 8, backlogBuckets = 8)
+    val f = new Frontier(spark, cfg)
+    f.initialize(Frontier.syntheticSeeds(spark, 3000, hostPool = 40))
+    f.runWave()
+    val spill = Paths.get(ckDir, "maint", "wave=1", "dest=spill")
+    assert(Files.exists(spill), "test premise broken: wave 1 spilled nothing")
+    // a backlog written before the flat bkb-sorted files kept one
+    // bkb=<v> dir per (bucket, band) — resume must refuse, not misread it
+    Files.createDirectories(spill.resolve("bkb=0"))
+    val f2 = new Frontier(spark, cfg)
+    val e = intercept[IllegalArgumentException] { f2.runWave() }
+    assert(e.getMessage.contains("legacy bkb="), e.getMessage)
+    Seq[() => Any](() => f2.pendingDf(1), () => f2.fenceTableDf(1),
+        () => f2.compactBacklog(1)).foreach { read =>
+      val e2 = intercept[IllegalArgumentException] { read() }
+      assert(e2.getMessage.contains("legacy bkb="), e2.getMessage)
+    }
+  }
+
+  test("refill reads O(needy buckets): statistics prune the bkb-sorted backlog") {
+    import org.apache.spark.sql.functions._
+    val sp = spark
+    import sp.implicits._
+    val buckets = 64
+    // 256 hosts × 3000 urls: wave 1's cut spills ~766k rows over every
+    // bucket. Crawl-delay 60 caps every host but one at one fetch a
+    // wave, so wave 2 refills that one host from its one bucket.
+    val seeds = spark.range(0, 256L * 3000).select(
+      concat(lit("https://s"), $"id" % 256, lit(".buckets.test/p/"), $"id").as("url"),
+      ($"id" % 97).cast("int").as("priority"))
+    val fast = "s7.buckets.test"
+    val robots = (0 until 256).map { i =>
+      val h = s"s$i.buckets.test"
+      (h, if (h == fast) "User-agent: *\nAllow: /\n" else "User-agent: *\nCrawl-delay: 60\n")
+    }.toDF("host", "robots_txt")
+    val ckDir = tmpDir("refillprune")
+    val cfg = FrontierConfig(checkpointDir = ckDir, hostBudget = 4, headMult = 2,
+      seenShards = 16, backlogBuckets = buckets, compactEvery = 1000)
+    val f = new Frontier(spark, cfg, robots = Some(robots))
+    f.initialize(seeds)
+    f.runWave()
+    val backlogRows = f.fenceTableDf(1).agg(sum($"bn")).head().getLong(0)
+    val backlogBytes = Files.walk(Paths.get(ckDir, "maint", "wave=1", "dest=spill")).iterator()
+      .asScala.filter(Files.isRegularFile(_)).map(Files.size(_)).sum
+    assert(backlogRows > 700000 && backlogBytes > 4L * 1024 * 1024,
+      s"test premise broken: backlog only $backlogRows rows, $backlogBytes B")
+    // input records of every refill job: the parquet rows it scanned,
+    // plus one per cached block it re-reads. (Not bytesRead: parquet's
+    // vectored page reads run outside the task thread, whose FS
+    // statistics then count ~the footers alone, filtered or not.)
+    val refillStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val rowsRead = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.job.description") == "maint:refill")
+          e.stageIds.foreach(refillStages.add)
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (refillStages.contains(e.stageId) && e.taskMetrics != null)
+          rowsRead.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      f.runWave()
+      org.apache.spark.SparkInternals.drainListenerBus(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val refilled = f.headTableDf(2).filter($"host".endsWith(".buckets.test"))
+      .groupBy("host").count().filter($"count" === cfg.headMult * cfg.hostBudget)
+      .as[(String, Long)].collect().map(_._1).toSeq
+    assert(refilled == Seq(fast), s"wave 2 refilled $refilled, expected only $fast")
+    info(s"refill read ${rowsRead.get()} of $backlogRows backlog rows")
+    // reading every bucket would scan the whole backlog; one bucket's
+    // rows are 1/64 of it, plus up to a page (20k rows) per file
+    assert(rowsRead.get() > 0 && rowsRead.get() * 8 < backlogRows,
+      s"refill of 1/$buckets buckets read ${rowsRead.get()} of $backlogRows backlog rows")
+  }
+
   test("shard maintenance writes O(fresh) per wave: level files reused across waves") {
     val ckDir = tmpDir("lsm")
     val cfg = FrontierConfig(checkpointDir = ckDir, hostBudget = 3, seenShards = 16)
@@ -995,7 +1074,13 @@ class FrontierSpec extends AnyFunSuite with SparkTestBase {
       }
     }
     val f = new Frontier(spark, cfg)
-    f.initialize(Frontier.syntheticSeeds(spark, 3000, hostPool = 40))
+    // ~10 % of the seeds listed twice: wave 0's candidates count them all
+    val base = Frontier.syntheticSeeds(spark, 3000, hostPool = 40)
+    val seeds = base.unionByName(base.filter(col("url").endsWith("0")))
+    f.initialize(seeds)
+    assert(manifest(0)("candidates") == seeds.count())
+    assert(manifest(0)("candidates") > manifest(0)("deduped"))
+    assert(manifest(0)("deduped") == f.seenDf(0).count())
     assert(manifest(0)("seen_total") == f.seenDf(0).count())
     assert(manifest(0)("pending_total") == f.headTableDf(0).count())
     for (w <- 1 to 4) {
