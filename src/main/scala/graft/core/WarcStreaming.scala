@@ -502,9 +502,9 @@ object WarcStreaming {
     * (one-member-per-record layout — exactly the files worth splitting;
     * anything else yields no candidates and the range reads empty while
     * the range owning the member start reads through).
-    * `openAt(off)` must return a fresh stream positioned at `off`. */
-  def syncToMemberStart(openAt: Long => InputStream, start: Long, end: Long): Long = {
-    val in = new java.io.BufferedInputStream(openAt(start), 1 << 16)
+    * `openFrom(off)` must return a fresh stream positioned at `off`. */
+  def syncToMemberStart(openFrom: Long => InputStream, start: Long, end: Long): Long = {
+    val in = new java.io.BufferedInputStream(openFrom(start), 1 << 16)
     try {
       var pos = start
       var b0 = -1; var b1 = -1
@@ -512,7 +512,7 @@ object WarcStreaming {
       while (b >= 0 && pos < end + 2) { // magic must START before `end`
         if (b0 == 0x1f && b1 == 0x8b && b == 8) {
           val cand = pos - 2
-          if (cand < end && validMemberStart(openAt, cand)) return cand
+          if (cand < end && validMemberStart(openFrom, cand)) return cand
         }
         b0 = b1; b1 = b
         pos += 1
@@ -522,8 +522,8 @@ object WarcStreaming {
     } finally in.close()
   }
 
-  private def validMemberStart(openAt: Long => InputStream, off: Long): Boolean = {
-    val in = openAt(off)
+  private def validMemberStart(openFrom: Long => InputStream, off: Long): Boolean = {
+    val in = openFrom(off)
     try {
       val feed = new GzipFeed(in, off)
       val head = new Array[Byte](5)

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import graft.core.{FramedRecord, WarcFraming, WarcStreaming, WarcWriter}
@@ -30,17 +31,17 @@ object LazyPayload {
     * non-conformant gzip member spanning several records every record
     * shares one offset — the target must then be selected by
     * WARC-Record-ID or the sink would alias record 1's payload onto
-    * every pointer. null = the first record at the offset. */
-  def streamRecordAt(path: String, offset: Long,
+    * every pointer. null = the first record at the offset.
+    *
+    * `conf`: the caller's Hadoop conf — the session's
+    * (`spark.sessionState.newHadoopConf()`) on the driver, or its copy
+    * shipped to a task — so `spark.hadoop.*` file-system settings
+    * reach the open (`WarcScan.open`). */
+  def streamRecordAt(path: String, offset: Long, conf: Configuration,
                      sink: (Array[Byte], Int, Int) => Unit,
-                     recordId: String = null,
-                     conf: org.apache.hadoop.conf.Configuration =
-                       new org.apache.hadoop.conf.Configuration()): FramedRecord = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(conf)
-    val in = fs.open(hp)
+                     recordId: String = null): FramedRecord = {
+    val in = WarcScan.open(path, conf, offset)
     try {
-      if (offset > 0) in.seek(offset)
       val name = path.substring(path.lastIndexOf('/') + 1)
       def idMatches(hdrs: Seq[graft.core.HeaderKV]): Boolean =
         hdrs.exists(kv => kv.name.equalsIgnoreCase("WARC-Record-ID") && kv.value == recordId)
@@ -67,14 +68,12 @@ object LazyPayload {
   /** Chunked payload digest at a pointer: `(formattedDigest,
     * payloadLength)`. A multi-GB payload digests in O(64 KiB) memory.
     * Pass `recordId` for records sharing a member-granular offset. */
-  def digestPayloadAt(path: String, offset: Long,
+  def digestPayloadAt(path: String, offset: Long, conf: Configuration,
                       opts: WarcWriter.DigestOpts = WarcWriter.CdxDigest,
-                      recordId: String = null,
-                      conf: org.apache.hadoop.conf.Configuration =
-                        new org.apache.hadoop.conf.Configuration()): (String, Long) = {
+                      recordId: String = null): (String, Long) = {
     val md = mdFor(opts)
     var n = 0L
-    streamRecordAt(path, offset, (b, o, l) => { md.update(b, o, l); n += l }, recordId, conf)
+    streamRecordAt(path, offset, conf, (b, o, l) => { md.update(b, o, l); n += l }, recordId)
     (WarcWriter.formatDigest(md.digest(), opts), n)
   }
 
@@ -101,7 +100,7 @@ object LazyPayload {
       .as[(String, Long, String)]
       .mapPartitions { it =>
         it.map { case (p, off, rid) =>
-          val (digest, len) = digestPayloadAt(p, off, opts, rid, confB.value.value)
+          val (digest, len) = digestPayloadAt(p, off, confB.value.value, opts, rid)
           (p, off, digest, len)
         }
       }.toDF("path", "offset", "payload_digest", "payload_length")

@@ -2,9 +2,15 @@ package graft.sources
 
 import scala.reflect.ClassTag
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.spark.broadcast.Broadcast
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, Path}
+import org.apache.spark.{Partition, SparkContext, TaskContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{FilePartition, FileStatusWithMetadata,
+  PartitionedFile}
+import org.apache.spark.sql.graftbridge.InputBytes
 import org.apache.spark.storage.StorageLevel
 import graft.SerializableHadoopConf
 import graft.core._
@@ -69,113 +75,123 @@ object WarcRow {
       w.httpHeaders.toVector, Set.empty, w.payload, w.warning)
 }
 
-/** The WARC scan (S1-S4): splittable parallel read of .warc / .warc.gz.
+/** The WARC scan (S1-S4): the one reader core under both read paths,
+  * the fused per-file fold (`scanFold`, behind every `CdxPipeline`
+  * entry) and the DSv2 source (`spark.read.format("warc")`).
   *
-  * v1 strategy: the `binaryFile` source lists the files (path column
-  * only — content is pruned away and never read by Spark) and packs
-  * whole files into tasks: each file costs its length plus
-  * `spark.sql.files.openCostInBytes` (4 MB) against the task's
-  * `spark.sql.files.maxPartitionBytes` (16m in `GraftSession`), so
-  * small files share a task (four ~320 KB files each in the perfbench
-  * corpus) and a file at or above the cap has one to itself. A file is
-  * never split across tasks. The task STREAMS each file through
-  * `WarcStreaming.parseStream` — O(one record) of task memory, no 2 GB
-  * file cap, payload bytes skipped (not copied) when `withPayload`
-  * is false. WARC files are bounded (typically ≤1 GiB by convention),
-  * so file-granular tasks give a clean parallel unit at any corpus
-  * size; a 100 TB crawl is ~100k files → ~100k tasks, ideal for a
-  * 1000-executor cluster. Oversized files additionally split by gzip
-  * member ranges in the DSv2 source (`format("warc")`). Offsets and
-  * record lengths match warcio's accounting exactly (member-based for
-  * .gz), verified by fixture goldens.
+  *  - `resolve`: globs, directories (minus `_`/`.` files) and plain
+  *    files, with the session's Hadoop conf.
+  *  - `plan`: Spark's file-source packing. Each file costs its length
+  *    plus `spark.sql.files.openCostInBytes` (4 MB) against the task's
+  *    `spark.sql.files.maxPartitionBytes` (16m in `GraftSession`),
+  *    largest first, so small files share a task (four ~320 KB files
+  *    each in the perfbench corpus) and a large one has a task to
+  *    itself. Only the DSv2 source cuts a `.gz` file above that size
+  *    into raw byte ranges.
+  *  - `open`: the one way a file is opened (scan tasks, range syncs,
+  *    `LazyPayload` pointer re-reads).
+  *  - `records`: one planned piece's records, STREAMED through
+  *    `WarcStreaming.parseStream` — O(one record) of task memory, no
+  *    2 GB file cap, payload bytes skipped when not kept.
   *
-  * Because each task sees a whole file in order, order-dependent
-  * operators (request/response pairing) run fused inside the scan with
-  * ZERO shuffle — see CdxPipeline.
+  * Offsets and record lengths match warcio's accounting exactly
+  * (member-based for .gz), verified by fixture goldens. Because a fold
+  * task sees whole files in order, order-dependent operators
+  * (request/response pairing) run fused inside the scan with ZERO
+  * shuffle — see CdxPipeline.
   */
 object WarcScan {
 
-  /** Open a file path (file:/hdfs:/s3a:… URI or local path) as a stream
-    * via the Hadoop FileSystem API — works on any cluster filesystem.
-    * `conf` is the session's Hadoop conf: a bare `new Configuration()`
-    * re-parses the default resources on every call and misses the
-    * session's `spark.hadoop.*` settings. */
-  def openPath(path: String, conf: Configuration): java.io.InputStream = {
+  /** Open `path` (file:/hdfs:/s3a:… URI or local path) at byte
+    * `offset` via the Hadoop FileSystem API. `conf` is the session's
+    * Hadoop conf: a bare `new Configuration()` re-parses the default
+    * resources on every call and misses the session's `spark.hadoop.*`
+    * settings. */
+  def open(path: String, conf: Configuration, offset: Long): FSDataInputStream = {
     val p = new Path(path)
-    p.getFileSystem(conf).open(p)
+    val in = p.getFileSystem(conf).open(p)
+    if (offset > 0) in.seek(offset)
+    in
   }
 
-  /** Streaming per-file record iterator with the scan's leniency rule:
-    * at corpus scale one corrupt file must not fail the job — log and
-    * truncate that file's iteration (strict mode propagates). */
-  private def fileRecords(path: String, conf: Configuration, withPayload: Boolean,
-                          lenient: Boolean): (String, Iterator[FramedRecord]) = {
-    val name = path.substring(path.lastIndexOf('/') + 1)
-    val inner =
-      try WarcStreaming.parseStream(openPath(path, conf), name,
-        WarcFraming.isGzipName(name), keepPayload = withPayload)
-      catch {
-        case e: Exception if lenient =>
-          System.err.println(s"[warc-scan] skipping corrupt file $name: ${e.getMessage}")
-          Iterator.empty
+  /** The files `paths` name: a glob's matches, a directory's files
+    * (Hadoop's `_`/`.` metadata files left out) and plain files. A path
+    * that matches nothing fails here, at planning. */
+  def resolve(paths: Seq[String], conf: Configuration): Seq[FileStatus] =
+    paths.flatMap { p =>
+      val hp = new Path(p)
+      val fs = hp.getFileSystem(conf)
+      val hits = Option(fs.globStatus(hp)).getOrElse(Array.empty[FileStatus])
+      if (hits.isEmpty) throw new java.io.FileNotFoundException(s"Path does not exist: $p")
+      hits.toSeq.flatMap { st =>
+        if (!st.isDirectory) Seq(st)
+        else fs.listStatus(st.getPath).toSeq
+          .filter(f => f.isFile && !f.getPath.getName.startsWith(".") &&
+            !f.getPath.getName.startsWith("_"))
+          .sortBy(_.getPath.toString)
       }
-    val it = if (!lenient) inner else new Iterator[FramedRecord] {
+    }
+
+  /** `files` packed into tasks by Spark's file-source rule (the packing
+    * of every built-in file source). With `splitGz`, a .gz
+    * file above the task size is cut into raw byte ranges; a range task
+    * syncs to a gzip member boundary (`records`). */
+  def plan(spark: SparkSession, files: Seq[FileStatus], splitGz: Boolean): Seq[FilePartition] = {
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    val maxSplit = FilePartition.maxSplitBytes(spark, files.map(_.getLen + openCost).sum)
+    val pieces = files.flatMap { st =>
+      PartitionedFileUtil.splitFiles(FileStatusWithMetadata(st), st.getPath,
+        splitGz && st.getPath.getName.endsWith(".gz"), maxSplit, InternalRow.empty)
+    }.sortBy(-_.length)
+    FilePartition.getFilePartitions(spark, pieces, maxSplit)
+  }
+
+  /** The records of one planned piece, in offset order. A whole file
+    * streams from byte 0; a byte range `[start, end)` syncs to the
+    * first gzip member at or after `start` and owns every record whose
+    * member starts before `end` (the last may read past `end`). Strict
+    * mode propagates a corrupt file's error; `lenient` logs it and ends
+    * that file's records there, so at corpus scale one bad file does
+    * not fail the job. The file is closed when its records run out or
+    * the task ends. */
+  def records(piece: PartitionedFile, conf: Configuration, keepPayload: Boolean,
+              lenient: Boolean): Iterator[FramedRecord] = {
+    val path = piece.toPath.toString
+    val name = piece.toPath.getName
+    val end = piece.start + piece.length
+    def parseFrom(offset: Long): Iterator[FramedRecord] = {
+      val in = open(path, conf, offset)
+      Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => in.close()))
+      WarcStreaming.parseStream(in, name, WarcFraming.isGzipName(name),
+        keepPayload = keepPayload, rawBase = offset)
+    }
+    def parse: Iterator[FramedRecord] =
+      if (piece.start == 0 && piece.length == piece.fileSize) parseFrom(0L)
+      else {
+        val sync = WarcStreaming.syncToMemberStart(open(path, conf, _), piece.start, end)
+        if (sync < 0) Iterator.empty else parseFrom(sync).takeWhile(_.offset < end)
+      }
+    if (!lenient) parse
+    else new Iterator[FramedRecord] {
+      private var inner: Iterator[FramedRecord] = _
       private var broken = false
       def hasNext: Boolean = !broken && {
-        try inner.hasNext catch {
+        try { if (inner == null) inner = parse; inner.hasNext } catch {
           case e: Exception =>
-            System.err.println(s"[warc-scan] truncating corrupt file $name: ${e.getMessage}")
+            System.err.println(s"[warc-scan] ending corrupt file $name: ${e.getMessage}")
             broken = true
             false
         }
       }
-      def next(): FramedRecord = inner.next()
+      def next(): FramedRecord = if (hasNext) inner.next() else Iterator.empty.next()
     }
-    (name, it)
-  }
-
-  /** The session's Hadoop conf (`spark.hadoop.*` settings: file-system
-    * schemes, object-store credentials), shipped once per scan to its
-    * tasks. */
-  private def sessionConf(spark: SparkSession): Broadcast[SerializableHadoopConf] =
-    spark.sparkContext.broadcast(new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
-
-  /** The scan's file paths, one row per file. Globs are expanded here
-    * with the session conf: handed a single glob, the file source asks
-    * `FileStreamSink.hasMetadata` for its status and logs a WARN with a
-    * stack trace on every load. The matches are escaped so the source
-    * does not glob them again. A glob that matches nothing is passed
-    * through unchanged and fails in the source as a missing path. */
-  private def listing(spark: SparkSession, paths: Seq[String]): Dataset[String] = {
-    import spark.implicits._
-    val conf = spark.sessionState.newHadoopConf()
-    val files = paths.flatMap { p =>
-      val hp = new Path(p)
-      val hits = Option(hp.getFileSystem(conf).globStatus(hp)).getOrElse(Array.empty)
-      if (hits.isEmpty) Seq(p)
-      else hits.toSeq.map(_.getPath.toString.replaceAll("""([\\*?\[\]{}])""", """\\$1"""))
-    }
-    spark.read.format("binaryFile").load(files: _*).select("path").as[String]
-  }
-
-  /** Read WARC files into a typed Dataset. Column pruning note: when the
-    * downstream plan does not need `payload`, pass
-    * `withPayload = false` so the scan SKIPS payload bytes inside the
-    * parser (the reference's skipFully-vs-readFully distinction,
-    * indexer.ts:74) — they are never inflated into the task. */
-  def warcRecords(spark: SparkSession, paths: Seq[String], withPayload: Boolean = true,
-                  lenient: Boolean = true): Dataset[WarcRow] = {
-    import spark.implicits._
-    val confB = sessionConf(spark)
-    listing(spark, paths).mapPartitions(_.flatMap { path =>
-      fileRecords(path, confB.value.value, withPayload, lenient)._2.map(WarcRow.fromFramed)
-    })
   }
 
   /** Fused scan + per-file fold: applies `fold` to each file's records in
     * offset order inside the scan task — the zero-shuffle path for
-    * order-dependent per-file operators. The iterator is streaming: the
-    * fold must consume in order and may hold O(1) records.
+    * order-dependent per-file operators. Files are whole (never range
+    * cut) and the scan is strict. The iterator is streaming: the fold
+    * must consume in order and may hold O(1) records.
     *
     * The folded rows are persisted (`MEMORY_AND_DISK`) at the RDD level:
     * a sort over them runs a sampling job for its range partitioner
@@ -190,12 +206,27 @@ object WarcScan {
       paths: Seq[String]
   )(fold: (String, Iterator[FramedRecord]) => Iterator[T]): Dataset[T] = {
     implicit val tag: ClassTag[T] = implicitly[Encoder[T]].clsTag
-    val confB = sessionConf(spark)
-    val rows = listing(spark, paths).rdd.mapPartitions(_.flatMap { path =>
-      val (name, records) = fileRecords(path, confB.value.value, withPayload = true,
-        lenient = false)
-      fold(name, records)
+    val conf = spark.sessionState.newHadoopConf()
+    val parts = plan(spark, resolve(paths, conf), splitGz = false)
+    // the session conf (`spark.hadoop.*`: schemes, object-store
+    // credentials), shipped once per scan to its tasks
+    val confB = spark.sparkContext.broadcast(new SerializableHadoopConf(conf))
+    val rows = new PieceRDD(spark.sparkContext, parts).mapPartitions(_.flatMap { f =>
+      fold(f.toPath.getName, records(f, confB.value.value, keepPayload = true, lenient = false))
     }).persist(StorageLevel.MEMORY_AND_DISK)
     spark.createDataset(rows)
+  }
+
+  /** One partition per planned task, yielding its pieces. The task's
+    * input bytes are the bytes it reads, as in Spark's own file scans. */
+  private final class PieceRDD(sc: SparkContext, parts: Seq[FilePartition])
+      extends RDD[PartitionedFile](sc, Nil) {
+    override protected def getPartitions: Array[Partition] = parts.toArray
+    override protected def getPreferredLocations(p: Partition): Seq[String] =
+      p.asInstanceOf[FilePartition].preferredLocations().toSeq
+    override def compute(p: Partition, ctx: TaskContext): Iterator[PartitionedFile] = {
+      InputBytes.track(ctx)
+      p.asInstanceOf[FilePartition].files.iterator
+    }
   }
 }

@@ -6,33 +6,36 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.{EqualTo, Filter, In}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.FileStatus
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+import org.apache.spark.sql.execution.datasources.FilePartition
 import java.util
 import scala.jdk.CollectionConverters._
+import graft.SerializableHadoopConf
+import graft.core.{Json, JsValue}
+import graft.sources.{WarcRow, WarcScan}
 
-/** DataSource V2 WARC reader: `spark.read.format("warc").load(paths…)`.
+/** DataSource V2 WARC reader: `spark.read.format("warc").load(paths…)`,
+  * a `WarcRow` per record.
   *
-  * The genuinely custom physical component (SURVEY.md §4): a splittable
-  * scan over .warc/.warc.gz with
-  *  - one input partition per file, and for .gz files larger than
-  *    `splitSize` (option, default 128 MiB) MULTIPLE raw-byte-range
-  *    partitions per file — the reader syncs to a gzip-member boundary,
-  *    so one megafile fans out instead of pinning one task; offsets and
-  *    lengths stay byte-exact (member-based);
-  *  - STREAMING record-at-a-time parse (WarcStreaming): O(one record)
-  *    task memory, no 2 GB file cap;
+  * The genuinely custom physical component (SURVEY.md §4), on the
+  * `WarcScan` core (resolve, plan, open, records):
+  *  - paths may be globs, directories or files;
+  *  - whole files are packed into tasks by `spark.sql.files.*`, and a
+  *    .gz file above the task size fans out as raw-byte-range tasks
+  *    synced to gzip-member boundaries; offsets and lengths stay
+  *    byte-exact (member-based);
   *  - `SupportsPushDownRequiredColumns`: when `payload` isn't selected
   *    payload bytes are SKIPPED inside the parser, never inflated into
   *    the task (the reference's skipFully-vs-readFully distinction,
   *    indexer.ts:74 vs :232);
   *  - `SupportsPushDownFilters`: warcType equality/IN filters drop
   *    records before row materialization.
+  * Option `lenient` (default false): a corrupt file ends its own
+  * records instead of failing the query.
   * Files are listed, sized and opened with the session's Hadoop conf
   * (`spark.hadoop.*` settings: schemes, object-store credentials); the
   * readers get it serialized inside the reader factory.
@@ -42,85 +45,47 @@ class WarcDataSource extends TableProvider with org.apache.spark.sql.sources.Dat
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = WarcSchema.schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    new WarcTable(WarcSchema.resolvePaths(properties.asScala.toMap, conf), conf)
+    val props = properties.asScala
+    // `load(a, b)` passes a JSON array (names may hold commas and
+    // quotes); `load(a)` passes one path
+    val paths = props.get("paths").toSeq.flatMap { json =>
+      Json.parse(json) match {
+        case Right(JsValue.JsArr(vs)) => vs.collect { case JsValue.JsStr(p) if p.nonEmpty => p }
+        case other => throw new IllegalArgumentException(s"bad paths option $json: $other")
+      }
+    } ++ props.get("path")
+    val spark = SparkSession.active
+    val conf = spark.sessionState.newHadoopConf()
+    new WarcTable(spark, WarcScan.resolve(paths, conf), new SerializableHadoopConf(conf))
   }
   override def supportsExternalMetadata(): Boolean = true
 }
 
 object WarcSchema {
-  val headerType: ArrayType = ArrayType(StructType(Seq(
-    StructField("name", StringType), StructField("value", StringType))))
-
-  val schema: StructType = StructType(Seq(
-    StructField("filename", StringType),
-    StructField("offset", LongType),
-    StructField("length", LongType),
-    StructField("warcType", StringType),
-    StructField("targetUri", StringType),
-    StructField("warcDate", StringType),
-    StructField("recordId", StringType),
-    StructField("contentType", StringType),
-    StructField("contentLength", LongType),
-    StructField("payloadDigest", StringType),
-    StructField("blockDigest", StringType),
-    StructField("warcVersion", StringType),
-    StructField("warcHeaders", headerType),
-    StructField("httpStatusline", StringType),
-    StructField("httpStatus", IntegerType),
-    StructField("httpContentType", StringType),
-    StructField("httpHeaders", headerType),
-    StructField("payload", BinaryType),
-    StructField("warning", StringType)
-  ))
-
-  def resolvePaths(props: Map[String, String], conf: Configuration): Seq[String] = {
-    val raw = props.get("paths") match {
-      case Some(json) =>
-        // a JSON array of strings; names may hold commas and quotes
-        graft.core.Json.parse(json) match {
-          case Right(graft.core.JsValue.JsArr(vs)) =>
-            vs.collect { case graft.core.JsValue.JsStr(p) if p.nonEmpty => p }
-          case other => throw new IllegalArgumentException(s"bad paths option $json: $other")
-        }
-      case None => props.get("path").toSeq
-    }
-    raw.flatMap { p =>
-      // Hadoop FS, not java.io.File: directory loads must work on any
-      // scheme the partition reader itself supports (file:/hdfs:/s3a:)
-      val hp = new Path(p)
-      val fs = hp.getFileSystem(conf)
-      if (fs.isDirectory(hp))
-        fs.listStatus(hp).filter(_.isFile)
-          // Hadoop convention: dot/underscore files are metadata
-          // (markers, _SUCCESS, .crc), never data
-          .filter(st => { val n = st.getPath.getName; !n.startsWith(".") && !n.startsWith("_") })
-          .map(_.getPath.toString).sorted.toSeq
-      else Seq(p)
-    }
-  }
+  val schema: StructType = Encoders.product[WarcRow].schema
 }
 
-class WarcTable(paths: Seq[String], conf: Configuration) extends Table with SupportsRead {
-  override def name(): String = s"warc(${paths.mkString(",")})"
+class WarcTable(spark: SparkSession, files: Seq[FileStatus], conf: SerializableHadoopConf)
+    extends Table with SupportsRead {
+  override def name(): String = s"warc(${files.map(_.getPath).mkString(",")})"
   override def schema(): StructType = WarcSchema.schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val splitSize = Option(options.get("splitSize")).map(_.toLong)
-      .getOrElse(128L * 1024 * 1024)
-    new WarcScanBuilder(paths, splitSize, conf)
-  }
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new WarcScanBuilder(spark, files, options.getBoolean("lenient", false), conf)
 }
 
-class WarcScanBuilder(paths: Seq[String], splitSize: Long, conf: Configuration) extends ScanBuilder
+class WarcScanBuilder(spark: SparkSession, files: Seq[FileStatus], lenient: Boolean,
+                      conf: SerializableHadoopConf) extends ScanBuilder
     with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
   private var required: StructType = WarcSchema.schema
   private var typeFilter: Option[Set[String]] = None
   private var pushed: Array[Filter] = Array.empty
 
+  // top-level columns only: a nested-pruned header struct is read whole
+  // and Spark prunes it after the scan
   override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
+    required = StructType(requiredSchema.fieldNames.map(WarcSchema.schema(_)))
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val (accepted, rest) = filters.partition {
@@ -140,137 +105,49 @@ class WarcScanBuilder(paths: Seq[String], splitSize: Long, conf: Configuration) 
 
   override def pushedFilters(): Array[Filter] = pushed
 
-  override def build(): Scan = new WarcScanV2(paths, required, typeFilter, splitSize, conf)
+  override def build(): Scan = new WarcScanV2(spark, files, required, typeFilter, lenient, conf)
 }
 
-/** One task = one file, or one RAW BYTE RANGE of an oversized .warc.gz
-  * (`start`/`end`; `end = -1` ⇒ whole file). A range task syncs to the
-  * first gzip-member boundary at/after `start` and owns every record
-  * whose member starts before `end` — so a single 100 GB megafile fans
-  * out across the cluster instead of pinning one task (SURVEY §2.1/S3:
-  * member boundaries are the key to parallel scan). */
-case class WarcInputPartition(path: String, start: Long, end: Long) extends InputPartition
-
-class WarcScanV2(paths: Seq[String], required: StructType,
-                 typeFilter: Option[Set[String]], splitSize: Long,
-                 conf: Configuration) extends Scan with Batch {
+/** One task = a group of whole files, or one RAW BYTE RANGE of an
+  * oversized .warc.gz (`WarcScan.plan`) — so a single 100 GB megafile
+  * fans out across the cluster instead of pinning one task (SURVEY
+  * §2.1/S3: member boundaries are the key to parallel scan). */
+class WarcScanV2(spark: SparkSession, files: Seq[FileStatus], required: StructType,
+                 typeFilter: Option[Set[String]], lenient: Boolean,
+                 conf: SerializableHadoopConf) extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] = {
-    paths.flatMap { p =>
-      val hp = new Path(p)
-      val size = hp.getFileSystem(conf).getFileStatus(hp).getLen
-      // only .gz is boundary-splittable (member sync); small files and
-      // plain .warc stay one-task-per-file
-      if (size > splitSize && p.endsWith(".gz")) {
-        val n = ((size + splitSize - 1) / splitSize).toInt
-        (0 until n).map { i =>
-          WarcInputPartition(p, i.toLong * splitSize,
-            math.min((i + 1).toLong * splitSize, size))
-        }
-      } else Seq(WarcInputPartition(p, 0L, -1L))
-    }.toArray
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    WarcScan.plan(spark, files, splitGz = true).toArray
   override def createReaderFactory(): PartitionReaderFactory =
-    new WarcReaderFactory(required, typeFilter, new graft.SerializableHadoopConf(conf))
+    new WarcReaderFactory(required, typeFilter, lenient, conf)
   override def description(): String =
-    s"WarcScan(files=${paths.length}, columns=${required.fieldNames.mkString(",")}, " +
-      s"typeFilter=${typeFilter.map(_.mkString("|")).getOrElse("none")}, splitSize=$splitSize)"
+    s"WarcScan(files=${files.length}, columns=${required.fieldNames.mkString(",")}, " +
+      s"typeFilter=${typeFilter.map(_.mkString("|")).getOrElse("none")}, lenient=$lenient)"
 }
 
+/** Streams each piece's records (`WarcScan.records`) through the
+  * `WarcRow` encoder, projected to the required columns. */
 class WarcReaderFactory(required: StructType, typeFilter: Option[Set[String]],
-                        conf: graft.SerializableHadoopConf)
+                        lenient: Boolean, conf: SerializableHadoopConf)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[WarcInputPartition]
-    new WarcPartitionReader(p, required, typeFilter, conf.value)
-  }
-}
-
-class WarcPartitionReader(part: WarcInputPartition, required: StructType,
-                          typeFilter: Option[Set[String]], conf: Configuration)
-    extends PartitionReader[InternalRow] {
-  import graft.core._
-
-  private val needPayload = required.fieldNames.contains("payload")
-  private val path = part.path
-  private val name = path.substring(path.lastIndexOf('/') + 1)
-
-  private def openAt(off: Long): java.io.InputStream = {
-    val hp = new Path(path)
-    val fs = hp.getFileSystem(conf)
-    val in = fs.open(hp)
-    if (off > 0) in.seek(off)
-    in
-  }
-
-  /** STREAMING read — O(one record) of task memory, payload skipped
-    * inside the parser when pruned (never inflated into the task). For a
-    * range partition, sync to the first valid member ≥ start and own
-    * records whose member starts before `end` (the last such record may
-    * read past `end`; records are emitted in offset order so the
-    * takeWhile cut is exact). */
-  private var stream: java.io.InputStream = _
-  private lazy val records: Iterator[FramedRecord] = {
-    val base: Iterator[FramedRecord] =
-      if (part.end < 0) {
-        stream = openAt(0)
-        WarcStreaming.parseStream(stream, name,
-          WarcFraming.isGzipName(name), keepPayload = needPayload)
-      } else {
-        val sync = WarcStreaming.syncToMemberStart(openAt, part.start, part.end)
-        if (sync < 0) Iterator.empty
-        else {
-          stream = openAt(sync)
-          WarcStreaming.parseStream(stream, name, isGzip = true,
-            keepPayload = needPayload, rawBase = sync)
-            .takeWhile(_.offset < part.end)
-        }
+    val keepPayload = required.fieldNames.contains("payload")
+    val toRow = ExpressionEncoder[WarcRow]().createSerializer()
+    val project = UnsafeProjection.create(required.fields.map(f =>
+      BoundReference(WarcSchema.schema.fieldIndex(f.name), f.dataType, f.nullable)).toSeq)
+    val records = partition.asInstanceOf[FilePartition].files.iterator
+      .flatMap(WarcScan.records(_, conf.value, keepPayload, lenient))
+      .filter(r => typeFilter.forall(_.contains(Option(r.warcType).getOrElse(""))))
+    new PartitionReader[InternalRow] {
+      private var row: InternalRow = _
+      override def next(): Boolean = records.hasNext && {
+        row = project(toRow(WarcRow.fromFramed(records.next())))
+        true
       }
-    base.filter(r => typeFilter.forall(_.contains(Option(r.warcType).getOrElse(""))))
-  }
-  private var current: FramedRecord = _
-
-  override def next(): Boolean =
-    if (records.hasNext) { current = records.next(); true } else false
-
-  private def utf8(s: String): UTF8String = if (s == null) null else UTF8String.fromString(s)
-  private def headersArray(hs: Seq[HeaderKV]): ArrayData =
-    new GenericArrayData(hs.map(kv =>
-      new GenericInternalRow(Array[Any](utf8(kv.name), utf8(kv.value)))).toArray[Any])
-
-  override def get(): InternalRow = {
-    val r = current
-    val sah = StatusAndHeaders(r.warcVersion, r.warcHeaders, r.warcReencoded)
-    def field(nameF: String): Any = nameF match {
-      case "filename"       => utf8(r.filename)
-      case "offset"         => r.offset
-      case "length"         => r.length
-      case "warcType"       => utf8(r.warcType)
-      case "targetUri"      => utf8(r.warcTargetURI)
-      case "warcDate"       => utf8(sah.get("WARC-Date").orNull)
-      case "recordId"       => utf8(sah.get("WARC-Record-ID").orNull)
-      case "contentType"    => utf8(sah.get("Content-Type").orNull)
-      case "contentLength"  => sah.get("Content-Length").flatMap(v =>
-        try Some(v.trim.toLong) catch { case _: Exception => None }).getOrElse(0L)
-      case "payloadDigest"  => utf8(sah.get("WARC-Payload-Digest").orNull)
-      case "blockDigest"    => utf8(sah.get("WARC-Block-Digest").orNull)
-      case "warcVersion"    => utf8(r.warcVersion)
-      case "warcHeaders"    => headersArray(r.warcHeaders)
-      case "httpStatusline" => utf8(r.httpStatusline)
-      case "httpStatus" =>
-        r.http.flatMap(h =>
-          if (r.warcType == "response" || r.warcType == "revisit") h.statusCode else None)
-          .map(Int.box).orNull
-      case "httpContentType" => utf8(r.http.flatMap(_.get("content-type")).orNull)
-      case "httpHeaders"     => headersArray(r.httpHeaders)
-      case "payload"         => if (needPayload) r.payload else null
-      case "warning"         => utf8(r.warning)
-      case other             => throw new IllegalArgumentException(s"unknown column $other")
+      override def get(): InternalRow = row
+      // every file `WarcScan.records` opens is closed by its end or the task's
+      override def close(): Unit = ()
     }
-    new GenericInternalRow(required.fieldNames.map(field))
   }
-
-  override def close(): Unit =
-    if (stream != null) { try stream.close() catch { case _: Exception => } }
 }

@@ -39,6 +39,28 @@ class CrawlParitySpec extends AnyFunSuite with SparkTestBase {
       seenShards = 8, outlinksPerUrl = 3, hostPool = 60), waves = 8)
   }
 
+  test("drained-band parity: a run's unread band-1 rows beat a newer store's band-0 rows, 6 waves") {
+    // one host seeded 80 rows deep at the best priority; discovery
+    // reaches it only at random (mostly worse) priorities, so its fresh
+    // rows spill behind its fence and it is never re-cut. The wave-3
+    // compaction bands its backlog as of wave 2 into one run (band 0 =
+    // its top 16 rows then); budget 8 with headMult=1 refills 8 rows a
+    // wave, so the refills of waves 3 and 4 drain that band 0. Wave 5's
+    // phase A then finds a full deficit of band-0 rows in the newer
+    // spill deltas, all worse than the run's unread band-1 rows: only
+    // the run's bounds sidecar sends the host to phase B, so wave 6
+    // schedules the band-1 rows. (With the bounds ignored, wave 6
+    // differs from the reference.)
+    val deep = "www.host30.example.org"
+    val seeds = Frontier.syntheticSeeds(spark, 1000).collect()
+      .map(r => (r.getString(0), r.getInt(1))).toSeq ++
+      (0 until 80).map(i => (s"https://$deep/seed/$i", 0))
+    parityRun("crawl-parity-drained-band", FrontierConfig(
+      checkpointDir = graft.Scratch.dir("crawl-parity-drained-band").toString,
+      hostBudget = 8, headMult = 1, backlogBuckets = 8, compactEvery = 3,
+      seenShards = 8, outlinksPerUrl = 3, hostPool = 60), waves = 6, seedRows = Some(seeds))
+  }
+
   test("adversarial overgrowth parity: epoch'd per-host re-cuts still match the reference, 6 waves") {
     // "adversarial" discovery concentrates always-best priorities on a
     // tiny host set — every fresh row beats any fence, heads overgrow,
@@ -194,13 +216,14 @@ class CrawlParitySpec extends AnyFunSuite with SparkTestBase {
 
 class WarcSinkSpec extends AnyFunSuite with SparkTestBase {
   test("distributed WARC sink: write then rescan round-trips records") {
-    import graft.sources.{WarcScan, WarcSink}
-    val src = WarcScan.warcRecords(spark, Seq(fixturePath("example.warc.gz")))
+    import graft.sources.{WarcRow, WarcSink}
+    import spark.implicits._
+    val src = spark.read.format("warc").load(fixturePath("example.warc.gz")).as[WarcRow]
     val outDir = graft.Scratch.dir("warcsink").toString
     WarcSink.write(src.repartition(2), outDir)
     val files = new java.io.File(outDir).listFiles().filter(_.getName.endsWith(".warc.gz"))
     assert(files.nonEmpty)
-    val back = WarcScan.warcRecords(spark, files.map(_.getPath).toSeq)
+    val back = spark.read.format("warc").load(files.map(_.getPath).toSeq: _*).as[WarcRow]
     val origKey = src.collect().map(r => (r.recordId, r.warcType, r.targetUri,
       Option(r.payload).map(_.length).getOrElse(0))).toSet
     val backKey = back.collect().map(r => (r.recordId, r.warcType, r.targetUri,

@@ -49,10 +49,11 @@ class CdxPipelineSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("pairDataset (explicit shuffle variant) agrees with fused path") {
+    import spark.implicits._
     val paths = Seq(fixturePath("example.warc.gz"), fixturePath("post-test.warc.gz"))
     val fused = CdxPipeline.cdxDataset(spark, paths).collect().toSet
     val viaDs = CdxPipeline.pairDataset(spark,
-      graft.sources.WarcScan.warcRecords(spark, paths)).collect().toSet
+      spark.read.format("warc").load(paths: _*).as[graft.sources.WarcRow]).collect().toSet
     assert(fused == viaDs)
   }
 

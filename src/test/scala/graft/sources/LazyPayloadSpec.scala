@@ -6,6 +6,8 @@ import graft.core.{Base32, WarcWriter}
 
 class LazyPayloadSpec extends AnyFunSuite with SparkTestBase {
 
+  private def conf = spark.sessionState.newHadoopConf()
+
   private def sha1b32(bytes: Array[Byte]): String = {
     val md = java.security.MessageDigest.getInstance("SHA-1")
     "sha1:" + Base32.encode(md.digest(bytes))
@@ -62,7 +64,7 @@ class LazyPayloadSpec extends AnyFunSuite with SparkTestBase {
       WarcWriter.serialize(r2, WarcWriter.CdxDigest)
     val f = dir.resolve("multi.warc.gz")
     java.nio.file.Files.write(f, graft.core.GzipMembers.gzipMember(plain))
-    val (digest, len) = LazyPayload.digestPayloadAt(f.toString, 0)
+    val (digest, len) = LazyPayload.digestPayloadAt(f.toString, 0, conf)
     assert(len == b1.length.toLong, s"sink leaked past record 1: $len bytes")
     assert(digest == sha1b32(b1))
     // records 2..m share the member-granular offset: they must resolve
@@ -71,7 +73,7 @@ class LazyPayloadSpec extends AnyFunSuite with SparkTestBase {
       .select("recordId", "targetUri", "offset").collect()
     assert(scanned.length == 2 && scanned.forall(_.getLong(2) == 0L))
     val rid2 = scanned.find(_.getString(1) == "https://ex.org/2").get.getString(0)
-    val (d2, l2) = LazyPayload.digestPayloadAt(f.toString, 0, recordId = rid2)
+    val (d2, l2) = LazyPayload.digestPayloadAt(f.toString, 0, conf, recordId = rid2)
     assert(l2 == b2.length.toLong, s"record-2 pointer aliased record 1: $l2 bytes")
     assert(d2 == sha1b32(b2))
   }
@@ -85,7 +87,7 @@ class LazyPayloadSpec extends AnyFunSuite with SparkTestBase {
     val f = dir.resolve("trunc.warc")
     java.nio.file.Files.write(f, full.take(full.length - 20000)) // cut mid-payload
     intercept[java.io.EOFException] {
-      LazyPayload.digestPayloadAt(f.toString, 0)
+      LazyPayload.digestPayloadAt(f.toString, 0, conf)
     }
   }
 
@@ -99,9 +101,14 @@ class LazyPayloadSpec extends AnyFunSuite with SparkTestBase {
     java.nio.file.Files.write(f, WarcWriter.serialize(r, WarcWriter.CdxDigest))
     val off = spark.read.format("warc").load(f.toString)
       .select("offset").collect().head.getLong(0)
-    val (digest, len) = LazyPayload.digestPayloadAt(f.toString, off)
+    val (digest, len) = LazyPayload.digestPayloadAt(f.toString, off, conf)
     // http payload digest covers the BODY only (headers skipped)
     assert(digest == sha1b32(body))
     assert(len == body.length.toLong)
+    // the caller's conf reaches the open: the faulty scheme exists only
+    // in the session's
+    graft.FaultyFs.register(spark)
+    assert(LazyPayload.digestPayloadAt(graft.FaultyFs.uri(f.toString), off,
+      spark.sessionState.newHadoopConf()) == ((digest, len)))
   }
 }

@@ -16,13 +16,16 @@ class WarcDataSourceSpec extends AnyFunSuite with SparkTestBase {
       (2621L, 586L, "revisit"), (3207L, 609L, "request")))
   }
 
-  test("v2 scan agrees with the v1 binaryFile scan") {
+  test("v2 scan agrees with the fold scan") {
+    import spark.implicits._
     val v2 = spark.read.format("warc").load(fixturePath("example.warc")).collect()
-    val v1 = WarcScan.warcRecords(spark, Seq(fixturePath("example.warc"))).toDF().collect()
-    assert(v2.length == v1.length)
+    val fold = WarcScan.scanFold(spark, Seq(fixturePath("example.warc"))) { (_, records) =>
+      records.map(WarcRow.fromFramed)
+    }.toDF().collect()
+    assert(v2.length == fold.length)
     val key = (r: org.apache.spark.sql.Row) =>
       (r.getAs[Long]("offset"), r.getAs[String]("warcType"), r.getAs[String]("recordId"))
-    assert(v2.map(key).toSet == v1.map(key).toSet)
+    assert(v2.map(key).toSet == fold.map(key).toSet)
   }
 
   test("column pruning reaches the scan (payload not materialized)") {
@@ -59,14 +62,20 @@ class WarcDataSourceSpec extends AnyFunSuite with SparkTestBase {
       .select("offset", "length", "recordId").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
 
-    val split = spark.read.format("warc").option("splitSize", "4096")
-      .load(f.toString)
-    assert(split.rdd.getNumPartitions > 1,
-      s"expected >1 partitions for a ${bytes.length}-byte file at splitSize=4096")
-    val splitRows = split.select("offset", "length", "recordId").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-    assert(splitRows.length == 120, "split scan duplicated or dropped records")
-    assert(splitRows.toSet == whole, "split offsets/lengths differ from whole-file scan")
+    // ranges follow the session's task size; odd sizes cut members
+    // at different points
+    val key = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.get(key)
+    try for (size <- Seq(2999, 4096, 10007)) {
+      spark.conf.set(key, size.toString)
+      val split = spark.read.format("warc").load(f.toString)
+      assert(split.rdd.getNumPartitions > 1,
+        s"expected >1 partitions for a ${bytes.length}-byte file at $key=$size")
+      val splitRows = split.select("offset", "length", "recordId").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
+      assert(splitRows.length == 120, s"split scan duplicated or dropped records at $size")
+      assert(splitRows.toSet == whole, s"split offsets/lengths differ from whole-file scan at $size")
+    } finally spark.conf.set(key, saved)
   }
 
   test("multi-file load unions per-file partitions") {
@@ -97,6 +106,8 @@ class WarcDataSourceSpec extends AnyFunSuite with SparkTestBase {
     assert(plain.select("filename").distinct().count() == 2)
     val viaUri = spark.read.format("warc").load("file:" + dir.toString)
     assert(viaUri.count() == plain.count())
+    val viaGlob = spark.read.format("warc").load(s"$dir/*.warc.gz")
+    assert(viaGlob.count() == plain.count())
   }
 }
 
@@ -108,7 +119,9 @@ class LenientScanSpec extends org.scalatest.funsuite.AnyFunSuite with graft.Spar
     // truncated gzip: invalid member
     val corrupt = java.nio.file.Files.readAllBytes(good).take(100)
     java.nio.file.Files.write(dir.resolve("bad.warc.gz"), corrupt)
-    val rows = WarcScan.warcRecords(spark, Seq(dir.toString)).collect()
+    import spark.implicits._
+    val rows = spark.read.format("warc").option("lenient", "true").load(dir.toString)
+      .as[WarcRow].collect()
     assert(rows.length == 6) // only the good file's records
     assert(rows.forall(_.filename == "good.warc.gz"))
   }

@@ -57,7 +57,7 @@ class StreamsSpec extends AnyFunSuite with SparkTestBase {
     val sp = spark
     import sp.implicits._
     // stage: batch-scan a fixture into parquet WarcRow dir, then stream it
-    val rows = graft.sources.WarcScan.warcRecords(spark, Seq(fixturePath("example.warc.gz")))
+    val rows = spark.read.format("warc").load(fixturePath("example.warc.gz"))
     val dir = graft.Scratch.dir("warcstream").toString
     rows.write.mode("overwrite").parquet(dir)
     val streamed = Streams.runAvailableNow(Streams.streamingCdx(spark, dir), "cdx_stream")
