@@ -23,6 +23,18 @@ object GraftSession {
     * A static conf: it must be on the builder before the first query. */
   val CodegenCacheEntries: Int = 1024
 
+  /** Hadoop `file://` file system class of every session
+    * (`fs.file.impl`). Without libhadoop (Hadoop's `NativeCodeLoader`
+    * WARN), Hadoop's local file system forks a `chmod` process on every
+    * file create and mkdir: parquet part files and their `.crc` files,
+    * committer `_temporary` dirs, `_SUCCESS`, markers, manifests, seen
+    * levels and the CDX output. A 30k-seed crawl (init + 4 waves)
+    * forked about 1,080 of them, most on task threads.
+    * `NioLocalFileSystem` sets the same mode bits in-process. Hadoop
+    * caches one file system per scheme and user JVM-wide, so a `file://`
+    * file system created before the first session keeps its class. */
+  val LocalFileSystemImpl: String = classOf[NioLocalFileSystem].getName
+
   /** JVM-wide codegen counters at this instant: (classes compiled, total
     * compile ns) since the JVM started. Reading them runs no Spark job. */
   def codegen: (Long, Long) =
@@ -74,6 +86,7 @@ object GraftSession {
       .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs",
         (!benchMode).toString)
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.hadoop.fs.file.impl", LocalFileSystemImpl)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // NOTE: spark.driver.memory cannot be set here — in local mode the

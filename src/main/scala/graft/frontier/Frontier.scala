@@ -1402,8 +1402,12 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     *     anything is written; state then lands in TWO concurrent writes
     *     (shuffle-free head from cached scans; one small bucketed/banded
     *     spill shuffle).
-    *  4. REFILL when the head dropped below the politeness budget:
-    *     two-phase banded reads; fences RAISE to the max refilled row.
+    *  4. REFILL when the head dropped below the politeness budget,
+    *     from the needy buckets the accounting collected: a band-0
+    *     read settles every host with no bounds row and every host
+    *     whose deficit it provably met; a second, whole-bucket read
+    *     runs only for the rest, which needs a banded store. Fences
+    *     RAISE to the max refilled row.
     *  5. EPOCH'D PER-HOST RE-CUT — the fenced-host head-overgrowth
     *     adversary (discovery persistently emitting better-than-fence
     *     rows grows a head without bound; the fence cannot be lowered
@@ -1440,7 +1444,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
       route(ranked, fencePrev, fresh, saltDropped, hasFences, keep)
     val headRows = headParts._1.unionByName(headParts._2)
     val spillRows = spillParts._1.unionByName(spillParts._2)
-    val (info, nNeedy, nRecut, nRecutEpoch, bandIt, nAllowed) =
+    val (info, needyBuckets, nRecut, nRecutEpoch, bandIt, nAllowed) =
       accounting(headParts, spillParts, schedPreGate, schedFence, fencePrev)
     val (headFinal, spillFinal, recutRows) =
       if (nRecut == 0) (headRows, spillRows, emptyFence)
@@ -1450,7 +1454,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
       .select(fcols: _*)
     val recutDelta = recutRows.select(fcols: _*)
     val (nHead, nDelta) =
-      if (nNeedy == 0) {
+      if (needyBuckets.isEmpty) {
         val (nh, nd) = writeState(headFinal, spillFinal, bandIt, wave,
           Some(deltaBase.unionByName(recutDelta)))
         (nh, nd.get)
@@ -1458,7 +1462,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
         // the fence delta waits for the refill: refilled fences are part
         // of it, and the refill must see this wave's spill dir
         val (nh, _) = writeState(headFinal, spillFinal, bandIt, wave, None)
-        val (refilled, nRefilled) = refill(info, wave, keep)
+        val (refilled, nRefilled) = refill(info, needyBuckets, wave, keep)
         (nh + nRefilled,
           writeFenceDelta(deltaBase.unionByName(refilled.select(fcols: _*))
             .unionByName(recutDelta), wave))
@@ -1509,12 +1513,12 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     * host (scheduled pre-robots-re-gate, the safe superset, or receiving
     * rows) with prior fence state, this wave's spill count and pre-refill
     * head count. `headParts`/`spillParts` are `route`'s (carried-over,
-    * robots-allowed fresh) pairs. Returns (info, needy hosts, re-cut
-    * hosts, epoch-bump re-cut hosts, whether the spill is banded,
-    * robots-allowed fresh rows). */
+    * robots-allowed fresh) pairs. Returns (info, the needy hosts'
+    * backlog buckets, re-cut hosts, epoch-bump re-cut hosts, whether
+    * the spill is banded, robots-allowed fresh rows). */
   private def accounting(headParts: (DataFrame, DataFrame), spillParts: (DataFrame, DataFrame),
                          schedPreGate: DataFrame, schedFence: DataFrame, fencePrev: DataFrame)
-      : (DataFrame, Long, Long, Long, Boolean, Long) = {
+      : (DataFrame, Set[Int], Long, Long, Boolean, Long) = {
     // ONE union-aggregate: every broadcast join in a chain of count
     // shuffles and joins is a separate serial driver job. Pure sums keep
     // it a pipelined HashAggregate (a struct max in here would demote
@@ -1557,7 +1561,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     // whose re-run is exact (writes invisible until commit).
     val info = info0.localCheckpoint(false)
     val r = info.agg(
-      sum(when(needyCond, 1L).otherwise(0L)),
+      collect_set(when(needyCond, bucketCol)),
       sum(when(recutCond, 1L).otherwise(0L)),
       sum(when(recutCond && col("rf"), 1L).otherwise(0L)),
       sum(col("spilled")),
@@ -1567,7 +1571,8 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     // enough for bands to carry real mass (per-dir create+commit is a
     // fixed cost; small deltas collapse into band 0, which phase-A
     // refills always read anyway — superset reads stay exact)
-    (info, n(0), n(1), n(2), n(3) > 5000L * cfg.backlogBuckets * (MaxBand + 1), n(4))
+    (info, r.getSeq[Int](0).toSet, n(1), n(2),
+      n(3) > 5000L * cfg.backlogBuckets * (MaxBand + 1), n(4))
   }
 
   /** The re-cut hosts' head rows `hr` cut back to their true top-M
@@ -1790,111 +1795,91 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     n
   }
 
-  /** Refill step (scaladoc step 4) — needy hosts only. TWO-PHASE BANDED
-    * read: phase A reads the needy buckets' spill deltas plus only the
-    * BAND-0 slice of the compacted base; a host settles there when its
-    * full deficit arrives with every taken row strictly better than its
-    * best unread row; the rest re-read their buckets whole (phase B).
-    * Refilled rows append to the head partition; returns the needy
-    * hosts' fence rows and the refilled row count. */
-  private def refill(info: DataFrame, wave: Int,
+  /** Refill step (scaladoc step 4) — needy hosts only, in the needy
+    * `buckets` the accounting collected. Phase A reads the buckets'
+    * spill deltas plus only the BAND-0 slice of the compacted runs. A
+    * host settles there when it has no bounds row — phase A then read
+    * every live row it has: only banded stores hold rows outside band 0,
+    * and each writes a bounds row for them — or when its full deficit
+    * arrived with every taken row strictly better than its best unread
+    * row. Phase B re-reads the other hosts' buckets whole; only a crawl
+    * with some bounds sidecar can have such hosts. Refilled rows append
+    * to the head partition; returns the needy hosts' fence rows and the
+    * refilled row count. */
+  private def refill(info: DataFrame, buckets: Set[Int], wave: Int,
                      keep: DataFrame => DataFrame): (DataFrame, Long) = {
     jd("maint:refill")
     val needy = keep(info.filter(needyCond)
       .select(col("host"), col("fp"), col("fs"), col("epoch"), col("rf"),
         col("rc"), col("bn"),
         (lit(headM.toLong) - col("hc")).as("deficit"), bucketCol.as("bucket")))
-    val buckets = needy.select("bucket").distinct().as[Int].collect().toSet
     def liveRanked(sel: org.apache.spark.sql.Column, who: DataFrame): DataFrame =
-      backlogLive(backlogDirs(wave), who.select("host", "fp", "fs", "epoch", "deficit"), Some(sel))
-        .withColumn("rk", row_number().over(hostOrder))
-    val rlA = keep(liveRanked(bkbIn(buckets, bandZeroOnly = true), needy))
-    // per-host phase-A outcome: settled iff the full deficit arrived
-    // with every taken row strictly better than the host's best row
-    // OUTSIDE band 0 (the bounds sidecars, reduced per host; a
-    // host with no bounds row has no unread banded rows at all) — exact
-    // at any fence height
+      keep(backlogLive(backlogDirs(wave), who.select("host", "fp", "fs", "epoch", "deficit"), Some(sel))
+        .withColumn("rk", row_number().over(hostOrder)))
+    val inDeficit = col("rk") <= col("deficit")
+    // per host of `who`: live rows read, rows taken, worst row taken
+    // (no aggregate row, so zero and null, for a host with no rows read)
+    def outcome(who: DataFrame, rl: DataFrame): DataFrame =
+      who.join(rl.groupBy("host").agg(
+          count(lit(1)).as("live"),
+          sum(when(inDeficit, 1L).otherwise(0L)).as("taken"),
+          max(when(inDeficit, struct(col("priority").as("p"), col("surt_key").as("s")))).as("worst")),
+          Seq("host"), "left")
+        .withColumn("live", coalesce(col("live"), lit(0L)))
+        .withColumn("taken", coalesce(col("taken"), lit(0L)))
+    // fence rows: a refill that TOOK rows raises the fence to its worst
+    // taken row and flips rf (it planted stale copies in the current
+    // epoch, so a later re-cut of this host may not lower the fence in
+    // place); bn is `left` minus the rows taken
+    def fenceRows(o: DataFrame, left: org.apache.spark.sql.Column): DataFrame = {
+      val took = col("taken") > 0L
+      o.select(col("host"),
+        when(took, col("worst.p")).otherwise(col("fp")).as("fp"),
+        when(took, col("worst.s")).otherwise(col("fs")).as("fs"),
+        (left - col("taken")).as("bn"), col("epoch"), (col("rf") || took).as("rf"), col("rc"))
+    }
+    val rlA = liveRanked(bkbIn(buckets, bandZeroOnly = true), needy)
+    // settled in phase A: no bounds row, or the full deficit with every
+    // taken row strictly better than the host's best row OUTSIDE band 0
+    // (the bounds sidecars, reduced per host) — exact at any fence height
     val boundsDirs = backlogBoundsDirs(wave)
-    val boundsMin =
-      if (boundsDirs.isEmpty) null
-      else spark.read.schema(BoundsSchema).parquet(boundsDirs: _*)
-        .groupBy("host")
-        .agg(min(struct(col("bp").as("p"), col("bs").as("s"))).as("minb"))
-    val aAgg = rlA.groupBy("host").agg(
-      sum(when(col("rk") <= col("deficit"), 1L).otherwise(0L)).as("takenA"),
-      max(when(col("rk") <= col("deficit"),
-        struct(col("priority").as("p"), col("surt_key").as("s")))).as("worstA"))
-    val settled0 = needy.join(aAgg, Seq("host"), "left")
-    val settled = keep((if (boundsMin == null) settled0.withColumn("minb",
-        lit(null).cast("struct<p:int,s:string>"))
-      else settled0.join(boundsMin, Seq("host"), "left"))
-      .select(col("host"), col("deficit"),
-        (coalesce(col("takenA"), lit(0L)) === col("deficit") &&
-          (col("minb").isNull || col("worstA") < col("minb"))).as("ok")))
-    val needyB = keep(needy.join(settled.filter(!col("ok")).select("host"), Seq("host"), "inner"))
-    val anyB = !needyB.isEmpty
-    val takenARows = rlA
-      .join(settled.filter(col("ok")).select("host"), Seq("host"), "inner")
-      .filter(col("rk") <= col("deficit"))
+    val settle = keep(
+      if (boundsDirs.isEmpty) outcome(needy, rlA).withColumn("ok", lit(true))
+      else outcome(needy, rlA)
+        .join(spark.read.schema(BoundsSchema).parquet(boundsDirs: _*)
+          .groupBy("host")
+          .agg(min(struct(col("bp").as("p"), col("bs").as("s"))).as("minb")), Seq("host"), "left")
+        .withColumn("ok", col("minb").isNull ||
+          (col("taken") === col("deficit") && col("worst") < col("minb"))))
+    val needyB = settle.filter(!col("ok")).select(needy.columns.toSeq.map(col): _*)
+    val bBuckets =
+      if (boundsDirs.isEmpty) Set.empty[Int]
+      else needyB.select("bucket").distinct().as[Int].collect().toSet
+    val takenA = rlA.filter(inDeficit)
+    // with no bounds every host settled: no semi-join, and the settle
+    // frame is first computed by the fence delta write (fewer jobs than
+    // computing it here for the semi-join)
+    val takenARows = (if (boundsDirs.isEmpty) takenA
+      else takenA.join(settle.filter(col("ok")).select("host"), Seq("host"), "left_semi"))
       .select(pcols: _*)
-    val (takenBRows, bAgg) =
-      if (!anyB) (emptyPending, None)
+    // settled hosts advance arithmetically (bn was exact, the deficit
+    // left); a host short of its deficit had no bounds row, so phase A
+    // read all its live rows and it resyncs from them, exact even if a
+    // compaction physically dropped dead rows
+    val fenceA = fenceRows(settle.filter(col("ok")),
+      when(col("taken") < col("deficit"), col("live")).otherwise(col("bn")))
+    val (takenBRows, fenceB) =
+      if (bBuckets.isEmpty) (emptyPending, emptyFence)
       else {
-        val bBuckets = needyB.select("bucket").distinct().as[Int].collect().toSet
-        val rlB = keep(liveRanked(bkbIn(bBuckets), needyB))
-        val agg = rlB.groupBy("host").agg(
-          count(lit(1)).as("liveCnt"),
-          sum(when(col("rk") <= col("deficit"), 1L).otherwise(0L)).as("takenCnt"),
-          max(when(col("rk") <= col("deficit"),
-            struct(col("priority").as("p"), col("surt_key").as("s")))).as("mx"))
-        (rlB.filter(col("rk") <= col("deficit")).select(pcols: _*), Some(agg))
+        // phase-B hosts resync from the rows actually read
+        val rlB = liveRanked(bkbIn(bBuckets), needyB)
+        (rlB.filter(inDeficit).select(pcols: _*), fenceRows(outcome(needyB, rlB), col("live")))
       }
     // refilled rows APPEND to the head partition (as a subdir of the
     // already-written head dir; needy and re-cut host sets are
     // provably disjoint, so the re-cut fold never touched these)
     val nRefilled = writeCounted(takenARows.unionByName(takenBRows), headDir(wave) + "/refill")
-    // fence/bn updates for the NEEDY hosts only: settled hosts advance
-    // arithmetically (bn was exact, deficit rows left); phase-B hosts
-    // resync from the rows actually read — exact even if a compaction
-    // physically dropped dead rows
-    val aFence = rlA
-      .join(settled.filter(col("ok")).select("host"), Seq("host"), "inner")
-      .filter(col("rk") <= col("deficit"))
-      .groupBy("host").agg(
-        count(lit(1)).as("takenCntA"),
-        max(struct(col("priority").as("p"), col("surt_key").as("s"))).as("mxA"))
-    // a refill that TOOK rows plants stale copies in the current epoch —
-    // flip rf so a later re-cut of this host knows the cheap
-    // fence-lowering is no longer safe (aFence only has hosts with taken
-    // rows, so isNotNull == took > 0)
-    val withA = needy.join(aFence, Seq("host"), "left")
-      .select(col("host"),
-        when(col("takenCntA").isNotNull, col("mxA.p")).otherwise(col("fp")).as("fp"),
-        when(col("takenCntA").isNotNull, col("mxA.s")).otherwise(col("fs")).as("fs"),
-        when(col("takenCntA").isNotNull, col("bn") - col("takenCntA"))
-          .otherwise(col("bn")).as("bn"),
-        col("epoch"),
-        (col("rf") || col("takenCntA").isNotNull).as("rf"), col("rc"))
-    val fenceRows = bAgg match {
-      case None => withA
-      case Some(agg) =>
-        val adj = needyB.select(col("host"), lit(true).as("isNeedy"))
-          .join(agg, Seq("host"), "left")
-        withA.join(adj, Seq("host"), "left")
-          .select(col("host"),
-            when(col("takenCnt").isNotNull && col("takenCnt") > 0, col("mx.p"))
-              .otherwise(col("fp")).as("fp"),
-            when(col("takenCnt").isNotNull && col("takenCnt") > 0, col("mx.s"))
-              .otherwise(col("fs")).as("fs"),
-            when(col("isNeedy"),
-              coalesce(col("liveCnt"), lit(0L)) - coalesce(col("takenCnt"), lit(0L)))
-              .otherwise(col("bn")).as("bn"),
-            col("epoch"),
-            (col("rf") ||
-              (col("takenCnt").isNotNull && col("takenCnt") > 0)).as("rf"),
-            col("rc"))
-    }
-    (fenceRows, nRefilled)
+    (fenceA.unionByName(fenceB), nRefilled)
   }
 
   /** Fence view step (scaladoc step 6): publish the FENCES marker and

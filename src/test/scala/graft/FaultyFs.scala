@@ -1,8 +1,7 @@
 package graft
 
 import java.net.URI
-import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FilterFileSystem, Path,
-  RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FilterFileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.SparkSession
@@ -40,8 +39,10 @@ class FaultyFs extends FilterFileSystem(new FaultyFs.Local) {
 object FaultyFs {
   val Scheme = "faulty"
 
-  /** Raw local fs reporting the `faulty` scheme, so paths keep it. */
-  class Local extends RawLocalFileSystem {
+  /** The engine's raw local fs (`NioLocalFileSystem.Raw`, the one under
+    * every session's `file://`) reporting the `faulty` scheme, so paths
+    * keep it. */
+  class Local extends NioLocalFileSystem.Raw {
     override def getUri: URI = URI.create(s"$Scheme:///")
   }
 
