@@ -1,23 +1,21 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge.{column, expression}
 import graft.core._
+import graft.plans.{CanonUrlExpr, Sha1Base32Expr, SurtExpr, Timestamp14Expr}
 
 /** Column-level function layer (SURVEY.md §2.11). Everything Spark's
   * built-ins can express stays built-in (codegen'd); the WARC-specific
-  * scalars are registered Scala UDFs (deterministic, null-safe), usable
-  * from both the Column API and SQL. */
+  * scalars are native Catalyst expressions (`surt`, `canonicalizeUrl`,
+  * `timestamp14`, `sha1B32`) or Scala UDFs (deterministic, null-safe).
+  * SQL reaches the same builders: `GraftExtensions` binds each SQL name
+  * to the Column function here, so SQL and Column results cannot
+  * differ. No call needs a registration step on its session. */
 object Functions {
 
-  // ---- pure wrappers (usable without a session) ----
-  val surtFn: String => String = UrlCanon.surt
-  val canonFn: String => String = url => if (url == null) null else UrlCanon.hrefOrSelf(url)
-  val ts14Fn: String => String = d => if (d == null) "" else d.replaceAll("[-:T]", "").take(14)
-  val sha1B32Fn: Array[Byte] => String = bytes => {
-    if (bytes == null) null
-    else Base32.encode(java.security.MessageDigest.getInstance("SHA-1").digest(bytes))
-  }
+  // ---- UDF bodies (usable without a session) ----
   val decodePayloadFn: (Array[Byte], String, String) => Array[Byte] =
     (p, ce, te) => PayloadDecode.decodePayload(p, ce, te)
   val dechunkFn: Array[Byte] => Array[Byte] = b => if (b == null) null else PayloadDecode.dechunk(b)
@@ -46,31 +44,23 @@ object Functions {
     }
   }
 
-  /** Register every engine scalar for SQL + Column use. Idempotent. */
-  def registerAll(spark: SparkSession): Unit = {
-    val u = spark.udf
-    u.register("surt", surtFn)
-    u.register("canonicalize_url", canonFn)
-    u.register("timestamp14", ts14Fn)
-    u.register("sha1_b32", sha1B32Fn)
-    u.register("decode_payload", decodePayloadFn)
-    u.register("dechunk", dechunkFn)
-    u.register("post_to_get", postToGetFn)
-    u.register("parse_headers", parseHeadersFn)
-    u.register("host_of", hostOfFn)
-    u.register("canon_all", canonAllFn)
-  }
-
-  // ---- Column API (native Catalyst expressions — codegen'd, no UDF
-  // boundary — or the function values above as unnamed UDFs, so no call
-  // needs `registerAll` on its session; the registered UDFs above
-  // remain for SQL-name compat) ----
-  def surt(c: Column): Column = graft.plans.NativeFunctions.surt(c)
-  def canonicalizeUrl(c: Column): Column = graft.plans.NativeFunctions.canonicalUrl(c)
-  def timestamp14(c: Column): Column = graft.plans.NativeFunctions.timestamp14(c)
-  def sha1B32(c: Column): Column = graft.plans.NativeFunctions.sha1B32(c)
+  // ---- Column API ----
+  def surt(c: Column): Column = column(SurtExpr(expression(c)))
+  /** WHATWG href of the URL; NULL when it does not parse. */
+  def canonicalizeUrl(c: Column): Column = column(CanonUrlExpr(expression(c)))
+  def timestamp14(c: Column): Column = column(Timestamp14Expr(expression(c)))
+  def sha1B32(c: Column): Column = column(Sha1Base32Expr(expression(c)))
   def decodePayload(p: Column, ce: Column, te: Column): Column = udf(decodePayloadFn).apply(p, ce, te)
+  def dechunk(c: Column): Column = udf(dechunkFn).apply(c)
+  /** struct(_1 = GET-form url, _2 = the body's query string); a GET
+    * keeps its url and has a NULL `_2`. */
+  def postToGet(url: Column, method: Column, contentType: Column, body: Column): Column =
+    udf(postToGetFn).apply(url, method, contentType, body)
+  def parseHeaders(c: Column): Column = udf(parseHeadersFn).apply(c)
   def hostOf(c: Column): Column = udf(hostOfFn).apply(c)
+  /** struct(_1 = canonical url, _2 = surt key, _3 = host); all NULL when
+    * the URL does not parse. */
+  def canonAll(c: Column): Column = udf(canonAllFn).apply(c)
 
   /** Case-insensitive header lookup over Array[Struct[name,value]] using
     * only built-in (codegen'd) collection expressions — Fetch-Headers
@@ -80,9 +70,4 @@ object Functions {
     when(size(matches) > 0, array_join(transform(matches, _.getField("value")), ", "))
       .otherwise(lit(null))
   }
-
-  /** digest column convention: strip the `algo:` prefix (CDX `digest`
-    * field, reference indexer.ts:431-433). */
-  def stripDigestPrefix(c: Column): Column =
-    when(c.isNotNull && c.contains(":"), substring_index(c, ":", -1)).otherwise(lit(null))
 }

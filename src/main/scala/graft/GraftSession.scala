@@ -6,7 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Session factory with the engine's standard configuration. Local mode
   * mirrors the cluster layout: shuffle partitions sized to cores (not
-  * 200), AQE on for runtime skew handling. */
+  * 200), AQE on for runtime skew handling. The engine's SQL function
+  * names come from `spark.sql.extensions` (`GraftExtensions`); nothing
+  * is registered after the session is built. */
 object GraftSession {
   /** Entries in Spark's JVM-wide LRU cache of compiled generated classes
     * (`spark.sql.codegen.cache.maxEntries`, default 100). A frontier
@@ -94,7 +96,6 @@ object GraftSession {
       // javaOptions (-Xmx) or spark-submit --driver-memory on a cluster.
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    Functions.registerAll(spark)
     spark
   }
 }

@@ -669,7 +669,7 @@ object SparkEntry {
       f.seenDf(0).write.mode("overwrite").parquet(StageDir + "/q43_seen.parquet")
       val probes = graft.frontier.Frontier.syntheticSeeds(sp, 2 * n)
       probes
-        .withColumn("c", udf(Functions.canonAllFn).apply($"url"))
+        .withColumn("c", Functions.canonAll($"url"))
         .select($"c._2".as("surt_key"))
         .filter($"surt_key".isNotNull)
         .write.mode("overwrite").parquet(StageDir + "/q43_probes.parquet")
@@ -685,7 +685,7 @@ object SparkEntry {
           lit("\r\nSet-Cookie: a=1\r\nSet-Cookie: b=2\r\n\r\n")).as("block"))
         .write.mode("overwrite").parquet(StageDir + "/q32_blocks.parquet")
       sp.read.parquet(StageDir + "/q32_blocks.parquet")
-        .select($"doc_id", udf(Functions.parseHeadersFn).apply($"block").as("headers"))
+        .select($"doc_id", Functions.parseHeaders($"block").as("headers"))
         .select($"doc_id", size($"headers").as("n_headers"),
           Functions.headerGet($"headers", "set-cookie").as("cookies"),
           Functions.headerGet($"headers", "x-doc").as("xdoc"))

@@ -82,12 +82,6 @@ final case class FrontierConfig(
       * the same jobs and writes the same manifest, schedule and lineage
       * table whatever this says. */
     fastMode: Boolean = false,
-    /** re-cut host-slice collect threshold: a wave re-cutting ≤ this
-      * many hosts builds its cut predicates and fence rows on the
-      * driver (one tiny collect replaces five broadcast-join driver
-      * jobs); beyond it the distributed join path runs instead. ~100 B
-      * per host of driver memory at the cap. */
-    recutCollectMax: Int = 20000,
     /** synthetic discovery shape: "zipf" (default crawl-like skew) or
       * "adversarial" (a tiny host set emitting always-best priorities —
       * the fenced-host head-overgrowth adversary the epoch'd re-cut
@@ -137,6 +131,10 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     * must issue O(changed dirs), not O(all delta dirs). */
   private[frontier] val fsListOps = new java.util.concurrent.atomic.AtomicLong
 
+  /** Re-cut path threshold, `Frontier.RecutCollectMax`; tests set 0 to
+    * run the distributed join path on a small crawl. */
+  private[frontier] var recutCollectMax: Int = Frontier.RecutCollectMax
+
   /** Thread-local job description — makes GRAFT_JOBLOG attribution
     * exact (broadcast-build jobs otherwise report opaque call sites). */
   private def jd(label: String): Unit =
@@ -158,11 +156,11 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
 
   /** url → (surt_key, canonical_url, host); unparseable URLs dropped.
     * Single fused UDF (one parse, one string-conversion boundary), built
-    * here rather than looked up by name, so the frontier needs no
-    * registered SQL function in its session. */
+    * as a Column rather than looked up by name, so the frontier needs no
+    * SQL function in its session. */
   private def canonicalized(urls: DataFrame): DataFrame =
     urls
-      .withColumn("c", udf(Functions.canonAllFn).apply(col("url")))
+      .withColumn("c", Functions.canonAll(col("url")))
       .withColumn("canonical_url", col("c._1"))
       .withColumn("surt_key", col("c._2"))
       .withColumn("host", col("c._3"))
@@ -1448,7 +1446,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
       accounting(headParts, spillParts, schedPreGate, schedFence, fencePrev)
     val (headFinal, spillFinal, recutRows) =
       if (nRecut == 0) (headRows, spillRows, emptyFence)
-      else if (nRecut <= cfg.recutCollectMax) recutOnDriver(info, headRows, spillRows, wave, keep)
+      else if (nRecut <= recutCollectMax) recutOnDriver(info, headRows, spillRows, wave, keep)
       else recutDistributed(info, headRows, spillRows, nRecutEpoch > 0, wave, keep)
     val deltaBase = info.filter(col("touched") && !needyCond && !recutCond)
       .select(fcols: _*)
@@ -1591,7 +1589,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
   }
 
   /** Re-cut step (scaladoc step 5), DRIVER-LITERAL path — the norm, for
-    * ≤ recutCollectMax hosts (re-cut hosts are the few Zipf-hot heads of
+    * ≤ `RecutCollectMax` hosts (re-cut hosts are the few Zipf-hot heads of
     * a wave): one tiny collect off the checkpointed accounting leaf
     * replaces five broadcast joins, each a separate serial driver job.
     * Host predicates become InSet literals, per-host epochs a map
@@ -1686,7 +1684,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
   }
 
   /** Re-cut step, DISTRIBUTED JOIN path — a wave re-cutting more hosts
-    * than the driver should hold (> recutCollectMax); the same semantics
+    * than the driver should hold (> `RecutCollectMax`); the same semantics
     * as `recutOnDriver`, with host-keyed joins instead of literals.
     * `anyEpoch` tells whether some re-cut host takes the epoch bump.
     * Returns (final head rows, final spill rows, re-cut fence rows). */
@@ -1950,6 +1948,13 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
 }
 
 object Frontier {
+
+  /** Re-cut host-slice collect threshold: a wave re-cutting ≤ this many
+    * hosts builds its cut predicates and fence rows on the driver (one
+    * tiny collect replaces five broadcast-join driver jobs); beyond it
+    * the distributed join path runs instead. ~100 B per host of driver
+    * memory at the cap. */
+  val RecutCollectMax: Int = 20000
 
   /** Small shared pool for concurrent state-write job submission (the
     * jobs themselves run on the cluster; these threads only block on

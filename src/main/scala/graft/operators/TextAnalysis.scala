@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for training-data pipelines: language ID,
@@ -91,9 +91,6 @@ object TextAnalysis {
     }
     if (total == 0) ("und", 0.0) else (bestLang, bestScore.toDouble / total)
   }
-
-  def registerLangId(spark: SparkSession): Unit =
-    spark.udf.register("lang_id", (t: String) => langIdPair(t)._1)
 
   def langId(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val u = udf((t: String) => { val (l, c) = langIdPair(t); (l, c) })

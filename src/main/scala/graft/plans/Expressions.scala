@@ -2,16 +2,16 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
+import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.sql.{Column, SparkSession}
 
 /** Native Catalyst expressions for the hot scalar functions (SURVEY.md
   * §2.11 promotion path: UDF → Expression). Unlike Scala UDFs these
   * generate inline Java calls with NO encoder/serializer boundary — the
   * value stays a UTF8String/byte[] end-to-end — and they participate in
   * whole-stage codegen, null-intolerant short-circuiting and constant
-  * folding (they are deterministic). */
+  * folding (they are deterministic). Each `prettyName` is the SQL name
+  * `GraftExtensions` binds, so EXPLAIN shows e.g. `surt(url)`. */
 object Kernels {
   // static entry points referenced from generated code
   def surt(u: UTF8String): UTF8String =
@@ -48,7 +48,7 @@ case class SurtExpr(child: Expression) extends UnaryExpression {
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.surt($c)")
   override protected def withNewChildInternal(c: Expression): SurtExpr = copy(child = c)
-  override def prettyName: String = "surt_native"
+  override def prettyName: String = "surt"
 }
 
 /** WHATWG-style URL normalization (href) as a codegen expression. */
@@ -59,7 +59,7 @@ case class CanonUrlExpr(child: Expression) extends UnaryExpression {
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.canonAll($c)")
   override protected def withNewChildInternal(c: Expression): CanonUrlExpr = copy(child = c)
-  override def prettyName: String = "canonical_url_native"
+  override def prettyName: String = "canonicalize_url"
 }
 
 /** SHA-1 → RFC4648 base32 (the CDX digest convention). */
@@ -70,7 +70,7 @@ case class Sha1Base32Expr(child: Expression) extends UnaryExpression {
   override def nullSafeEval(v: Any): Any = Kernels.sha1B32(v.asInstanceOf[Array[Byte]])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.sha1B32($c)")
-  override def prettyName: String = "sha1_b32_native"
+  override def prettyName: String = "sha1_b32"
 }
 
 /** WARC-Date → 14-digit CDX timestamp. */
@@ -81,25 +81,5 @@ case class Timestamp14Expr(child: Expression) extends UnaryExpression {
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"graft.plans.Kernels.timestamp14($c)")
   override protected def withNewChildInternal(c: Expression): Timestamp14Expr = copy(child = c)
-  override def prettyName: String = "timestamp14_native"
-}
-
-object NativeFunctions {
-  import org.apache.spark.sql.graftbridge.Bridge.{column, expression}
-
-  def surt(c: Column): Column = column(SurtExpr(expression(c)))
-  def canonicalUrl(c: Column): Column = column(CanonUrlExpr(expression(c)))
-  def sha1B32(c: Column): Column = column(Sha1Base32Expr(expression(c)))
-  def timestamp14(c: Column): Column = column(Timestamp14Expr(expression(c)))
-
-  /** SQL registration: surt_native(url) etc. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def one(name: String, f: Expression => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, exprs => f(exprs.head), "built-in")
-    one("surt_native", SurtExpr.apply)
-    one("canonical_url_native", CanonUrlExpr.apply)
-    one("sha1_b32_native", Sha1Base32Expr.apply)
-    one("timestamp14_native", Timestamp14Expr.apply)
-  }
+  override def prettyName: String = "timestamp14"
 }

@@ -9,8 +9,14 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object Bridge {
   def column(e: Expression): Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
+  /** Converts now: `ExpressionUtils.expression` may return a lazy
+    * `ColumnNodeExpression`, which a SQL function builder's result never
+    * gets converted from (codegen then fails on it). */
   def expression(c: Column): Expression =
-    org.apache.spark.sql.classic.ExpressionUtils.expression(c)
+    org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
+  /** Spark's own analysis error for a call with the wrong arity. */
+  def wrongNumArgs(name: String, arity: Int, actual: Int): Throwable =
+    org.apache.spark.sql.errors.QueryCompilationErrors.wrongNumArgsError(name, Seq(arity), actual)
 }
 
 /** Task input bytes for a scan that opens its files itself: the bytes

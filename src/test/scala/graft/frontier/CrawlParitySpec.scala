@@ -74,8 +74,8 @@ class CrawlParitySpec extends AnyFunSuite with SparkTestBase {
         checkpointDir = graft.Scratch.dir(s"crawl-parity-recut-$collectMax").toString,
         hostBudget = 3, headMult = 2, backlogBuckets = 8,
         seenShards = 8, outlinksPerUrl = 4, hostPool = 40,
-        outlinkMode = "adversarial", recutCollectMax = collectMax)
-      parityRun("crawl-parity-recut", cfg, waves = 6)
+        outlinkMode = "adversarial")
+      parityRun("crawl-parity-recut", cfg, waves = 6, recutCollectMax = collectMax)
       val (rc, _) = maxRecutAndEpoch(cfg, 6)
       assert(rc >= 1, s"recutCollectMax=$collectMax: no host was ever re-cut")
     }
@@ -97,8 +97,9 @@ class CrawlParitySpec extends AnyFunSuite with SparkTestBase {
         checkpointDir = graft.Scratch.dir(s"crawl-parity-pulse-$collectMax").toString,
         hostBudget = 3, headMult = 1, backlogBuckets = 8,
         seenShards = 8, outlinksPerUrl = 4, hostPool = 3,
-        outlinkMode = "pulse", recutCollectMax = collectMax)
-      parityRun("crawl-parity-pulse", cfg, waves = 7, seedRows = Some(seeds))
+        outlinkMode = "pulse")
+      parityRun("crawl-parity-pulse", cfg, waves = 7, seedRows = Some(seeds),
+        recutCollectMax = collectMax)
       val (rc, epoch) = maxRecutAndEpoch(cfg, 7)
       assert(rc >= 1, s"recutCollectMax=$collectMax: no host was ever re-cut")
       assert(epoch >= 1,
@@ -164,7 +165,7 @@ class CrawlParitySpec extends AnyFunSuite with SparkTestBase {
 
   /** The two re-cut paths: driver-literal (default cap) and the
     * distributed join (cap 0). */
-  private val recutPaths = Seq(FrontierConfig(checkpointDir = "").recutCollectMax, 0)
+  private val recutPaths = Seq(Frontier.RecutCollectMax, 0)
 
   /** Max re-cut count and max fence epoch over all hosts as of `wave`. */
   private def maxRecutAndEpoch(cfg: FrontierConfig, wave: Int): (Int, Int) = {
@@ -177,7 +178,8 @@ class CrawlParitySpec extends AnyFunSuite with SparkTestBase {
     * wave's schedule as (priority, host, surt, rank, url) rows. */
   private def parityRun(name: String, cfg: FrontierConfig, waves: Int,
                         seedRows: Option[Seq[(String, Int)]] = None,
-                        robots: Option[(Map[String, String], org.apache.spark.sql.DataFrame)] = None)
+                        robots: Option[(Map[String, String], org.apache.spark.sql.DataFrame)] = None,
+                        recutCollectMax: Int = Frontier.RecutCollectMax)
       : Vector[Vector[(Int, String, String, Int, String)]] = {
 
     // identical seed list on both sides
@@ -188,6 +190,7 @@ class CrawlParitySpec extends AnyFunSuite with SparkTestBase {
     sim.initialize(seeds)
 
     val f = new Frontier(spark, cfg, robots.map(_._2))
+    f.recutCollectMax = recutCollectMax
     import spark.implicits._
     f.initialize(seeds.toDF("url", "priority"))
 
@@ -211,27 +214,5 @@ class CrawlParitySpec extends AnyFunSuite with SparkTestBase {
     val engineSeen = f.seenDf(waves).collect().map(_.getString(0)).toSet
     assert(engineSeen == sim.seenSet, "seen membership differs from reference")
     out.result()
-  }
-}
-
-class WarcSinkSpec extends AnyFunSuite with SparkTestBase {
-  test("distributed WARC sink: write then rescan round-trips records") {
-    import graft.sources.{WarcRow, WarcSink}
-    import spark.implicits._
-    val src = spark.read.format("warc").load(fixturePath("example.warc.gz")).as[WarcRow]
-    val outDir = graft.Scratch.dir("warcsink").toString
-    WarcSink.write(src.repartition(2), outDir)
-    val files = new java.io.File(outDir).listFiles().filter(_.getName.endsWith(".warc.gz"))
-    assert(files.nonEmpty)
-    val back = spark.read.format("warc").load(files.map(_.getPath).toSeq: _*).as[WarcRow]
-    val origKey = src.collect().map(r => (r.recordId, r.warcType, r.targetUri,
-      Option(r.payload).map(_.length).getOrElse(0))).toSet
-    val backKey = back.collect().map(r => (r.recordId, r.warcType, r.targetUri,
-      Option(r.payload).map(_.length).getOrElse(0))).toSet
-    assert(backKey == origKey)
-    // payload digests preserved verbatim through the sink
-    val origDig = src.collect().flatMap(r => Option(r.payloadDigest)).toSet
-    val backDig = back.collect().flatMap(r => Option(r.payloadDigest)).toSet
-    assert(backDig == origDig)
   }
 }

@@ -985,7 +985,7 @@ class FrontierSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("a Frontier registers no SQL function: a fresh session runs a wave without canon_all") {
-    val s2 = spark.newSession()
+    val s2 = bareSession()
     val f = new Frontier(s2, FrontierConfig(checkpointDir = tmpDir("newsession"),
       hostBudget = 5, seenShards = 8))
     f.initialize(Frontier.syntheticSeeds(s2, 300))
@@ -994,8 +994,7 @@ class FrontierSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("q43_seen_probe runs on a session with no registered SQL function") {
-    // a session as the Verify main builds it: no Functions.registerAll
-    val s2 = spark.newSession()
+    val s2 = bareSession()
     assert(graft.SparkEntry.queries("q43_seen_probe")(s2, sfDir).count() > 0)
     assert(!s2.catalog.functionExists("canon_all"))
   }
