@@ -53,8 +53,9 @@ object SparkEntry {
           recordId = f"00000000-0000-0000-0001-${docId}%012d")
         val bytes = graft.core.WarcWriter.serialize(resp, graft.core.WarcWriter.CdxDigest, gzip = true) ++
           graft.core.WarcWriter.serialize(req, graft.core.WarcWriter.CdxDigest, gzip = true)
-        val records = graft.core.WarcFraming.parseFile(bytes, s"doc$docId.warc.gz", isGzip = true)
-        graft.core.CdxIndexing.pairRecords(records.iterator).flatMap(CdxPipeline.toCdxRow)
+        val records = graft.core.WarcStreaming.parseStream(
+          new java.io.ByteArrayInputStream(bytes), s"doc$docId.warc.gz", isGzip = true)
+        graft.core.CdxIndexing.pairRecords(records).flatMap(CdxPipeline.toCdxRow)
       }
     }
     cdx.toDF().orderBy($"urlkey", $"timestamp", $"filename")
@@ -470,7 +471,8 @@ object SparkEntry {
             payload = body, recordId = f"00000000-0000-0000-0000-$docId%012d")
           val respBytes = graft.core.WarcWriter.serialize(resp, graft.core.WarcWriter.CdxDigest, gzip = true)
           val out = scala.collection.mutable.ArrayBuffer(
-            ("resp", graft.core.WarcFraming.parseFile(respBytes, s"d$docId.warc.gz", isGzip = true).head))
+            ("resp", graft.core.WarcStreaming.parseStream(new java.io.ByteArrayInputStream(respBytes),
+              s"d$docId.warc.gz", isGzip = true).next()))
           if (docId % 5 == 0) {
             val digest = out.head._2.warcHeader("WARC-Payload-Digest").get
             val rev = graft.core.WarcWriter.create(url = url + "?rev=1",
@@ -479,7 +481,8 @@ object SparkEntry {
               recordId = f"00000000-0000-0000-0001-$docId%012d")
             val revBytes = graft.core.WarcWriter.serialize(rev, graft.core.WarcWriter.CdxDigest,
               gzip = true, payloadDigestForRevisit = digest)
-            out += (("rev", graft.core.WarcFraming.parseFile(revBytes, s"r$docId.warc.gz", isGzip = true).head))
+            out += (("rev", graft.core.WarcStreaming.parseStream(new java.io.ByteArrayInputStream(revBytes),
+              s"r$docId.warc.gz", isGzip = true).next()))
           }
           out.iterator.map { case (kind, fr) =>
             (kind, fr.warcTargetURI, fr.warcHeader("WARC-Payload-Digest").orNull, fr.filename)

@@ -26,8 +26,4 @@ object Base32 {
     while (sb.length % 8 != 0) sb.append('=')
     sb.toString
   }
-
-  /** SHA-1 digests (20 bytes) produce a 32-char base32 string with no
-    * padding — the common CDX case. */
-  def encodeNoPadCheck(data: Array[Byte]): String = encode(data)
 }

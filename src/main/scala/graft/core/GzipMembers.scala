@@ -2,10 +2,11 @@ package graft.core
 
 import java.util.zip.Inflater
 
-/** Gzip member splitting + inflation. WARC.gz files hold one gzip member
-  * per record; member boundaries are what make the format splittable for
-  * parallel scan AND what define the compressed record offset/length the
-  * CDX index reports.
+/** Gzip member splitting + inflation for payload content decoding
+  * (`inflateAuto`), and the writer's one-member-per-record compression
+  * (`gzipMember`). Record framing, whose member boundaries define the
+  * compressed record offset/length the CDX index reports, tracks members
+  * itself (`WarcStreaming`'s streaming gzip feed).
   * Behavior reference: /root/reference/src/lib/readers.ts:20-26,272-335
   * (raw-offset accounting at each member end). */
 object GzipMembers {

@@ -1,10 +1,8 @@
 package graft.core
 
-import java.nio.charset.StandardCharsets
-import scala.collection.mutable.ArrayBuffer
-
-/** A fully framed WARC record as produced by the scan. `payload` is the
-  * RAW payload (after HTTP headers, before transfer/content decoding). */
+/** A fully framed WARC record, as `WarcStreaming.parseStream` emits it.
+  * `payload` is the RAW payload (after HTTP headers, before
+  * transfer/content decoding). */
 final case class FramedRecord(
     filename: String,
     offset: Long,
@@ -27,226 +25,9 @@ final case class FramedRecord(
     else Some(StatusAndHeaders(httpStatusline, httpHeaders, httpReencoded))
 }
 
-/** Sequential WARC framing over an in-memory byte array — the per-split
-  * kernel of the Spark scan (one file/split per task). Mirrors the
-  * reference's tolerant framing exactly:
-  *  - record = version line, header block to CRLFCRLF, Content-Length
-  *    payload, CRLFCRLF;
-  *  - leftover bytes before the separator ⇒ "Content-Length Too Small"
-  *    warning with the reference's exact text;
-  *  - extra blank lines between records consumed;
-  *  - a "WARC/x.y" line immediately after the payload starts the next
-  *    record without updating the offset (reference quirk).
-  * Behavior reference (studied, not copied):
-  * /root/reference/src/lib/warcparser.ts:57-183. */
 object WarcFraming {
 
-  /** Parse one WARC file. Gzip is detected by content (magic bytes), not
-    * extension — the reference's reader always tries gzip and falls back
-    * to passthrough (readers.ts:316-322), so a gzipped file named `.warc`
-    * still parses compressed. */
-  def parseFile(bytes: Array[Byte], filename: String, isGzip: Boolean,
-                keepCase: Boolean = false): Vector[FramedRecord] = {
-    if (isGzip || looksGzip(bytes)) parseGzip(bytes, filename, keepCase)
-    else parseUncompressed(bytes, filename, keepCase)
-  }
-
-  def isGzipName(path: String): Boolean =
-    path.endsWith(".gz") || path.endsWith(".warc.gz") || path.endsWith(".wacz.gz")
-
-  def looksGzip(bytes: Array[Byte]): Boolean =
-    bytes.length >= 2 && (bytes(0) & 0xff) == 0x1f && (bytes(1) & 0xff) == 0x8b
-
-  private def parseGzip(bytes: Array[Byte], filename: String, keepCase: Boolean): Vector[FramedRecord] = {
-    val members = GzipMembers.splitMembers(bytes)
-    // decompressed stream + boundary map (decompressed pos → member)
-    val totalLen = members.iterator.map(_.data.length.toLong).sum
-    require(totalLen < Int.MaxValue, s"decompressed WARC too large for single split: $filename")
-    val all = new Array[Byte](totalLen.toInt)
-    var off = 0
-    val bounds = ArrayBuffer.empty[(Long, GzipMembers.Member)] // decompStart → member
-    for (m <- members) {
-      bounds += ((off.toLong, m))
-      System.arraycopy(m.data, 0, all, off, m.data.length)
-      off += m.data.length
-    }
-    def memberAt(decompPos: Long): GzipMembers.Member = {
-      // last member whose decompressed start <= pos
-      var lo = 0; var hi = bounds.length - 1; var ans = 0
-      while (lo <= hi) {
-        val mid = (lo + hi) / 2
-        if (bounds(mid)._1 <= decompPos) { ans = mid; lo = mid + 1 } else hi = mid - 1
-      }
-      bounds(ans)._2
-    }
-    parseStream(all, filename, keepCase, (recStart, recEndDecomp) => {
-      val m = memberAt(recStart)
-      // recordLength for compressed input is the LAST member's total_in
-      // (reference readers.ts:446-453); for conformant one-member-per-
-      // record files this is the member size
-      val endM = memberAt(Math.max(recStart, recEndDecomp - 1))
-      (m.rawStart, endM.rawLen)
-    })
-  }
-
-  private def parseUncompressed(bytes: Array[Byte], filename: String, keepCase: Boolean): Vector[FramedRecord] =
-    parseStream(bytes, filename, keepCase, (start, end) => (start, end - start))
-
-  /** Core framing loop. `offsetFn(recordStartPos, payloadEndPos)` maps
-    * decompressed positions to reported (offset, length). */
-  private def parseStream(
-      data: Array[Byte],
-      filename: String,
-      keepCase: Boolean,
-      offsetFn: (Long, Long) => (Long, Long)
-  ): Vector[FramedRecord] = {
-    val out = Vector.newBuilder[FramedRecord]
-    val n = data.length
-    var pos = 0
-
-    // readlineRaw: returns (start, endExclusive incl. \n) or null at EOF
-    def readline(): (Int, Int) = {
-      if (pos >= n) return null
-      val start = pos
-      var i = pos
-      while (i < n && data(i) != '\n') i += 1
-      val end = if (i < n) i + 1 else n
-      pos = end
-      (start, end)
-    }
-
-    def indexOfCrlfCrlf(from: Int): Int = {
-      var i = from
-      while (i + 3 < n) {
-        if (data(i) == '\r' && data(i + 1) == '\n' && data(i + 2) == '\r' && data(i + 3) == '\n')
-          return i + 3
-        i += 1
-      }
-      -1
-    }
-
-    var firstLineStart = -1 // start of the pending version line
-
-    // Initial: first record's version line
-    val line0 = readline()
-    if (line0 == null) return out.result()
-    firstLineStart = line0._1
-
-    var done = false
-    while (!done) {
-      val recStart = firstLineStart
-      // header block: from after the version line to CRLFCRLF (inclusive)
-      val statuslineRaw = new String(data, recStart, Math.max(0, pos - recStart), StandardCharsets.UTF_8)
-      val statusline = statuslineRaw.replaceAll("[\\s]+$", "")
-      if (statusline.isEmpty) { done = true }
-      else {
-        val hdrEnd = indexOfCrlfCrlf(pos)
-        val blockEnd = if (hdrEnd < 0) n else hdrEnd + 1
-        val headerBuff = new String(data, pos, blockEnd - pos, StandardCharsets.UTF_8)
-        pos = blockEnd
-        val (warcHdrs0, warcReenc) = WarcHeaders.parseHeaderBlock(headerBuff, keepCase)
-        // wget fix-up: strip <...> around WARC-Target-URI
-        // (reference warcrecord.ts:228-234)
-        val warcHdrs = warcHdrs0.map {
-          case HeaderKV(n, v) if n.equalsIgnoreCase("WARC-Target-URI") &&
-              v.startsWith("<") && v.endsWith(">") =>
-            HeaderKV(n, v.substring(1, v.length - 1))
-          case kv => kv
-        }
-        val sah = StatusAndHeaders(statusline, warcHdrs, warcReenc)
-        val contentLength: Long =
-          sah.get("Content-Length").flatMap(v => try Some(v.trim.toLong) catch { case _: Exception => None }).getOrElse(0L)
-        val warcType = sah.get("WARC-Type").getOrElse("")
-
-        // HTTP parse decision (parseHttp=true default)
-        val parseHttp = warcType match {
-          case "response" | "request" => true
-          case "revisit"              => contentLength > 0
-          case _                      => false
-        }
-
-        val bodyStart = pos
-        var httpStatusline: String = null
-        var httpHeaders: Vector[HeaderKV] = Vector.empty
-        var httpReenc: Set[String] = Set.empty
-        var payload: Array[Byte] = Array.emptyByteArray
-
-        if (parseHttp) {
-          // statusline: readline bounded by remaining limit (tolerate EOF)
-          val sl = readline()
-          if (sl != null) {
-            val slStr0 = new String(data, sl._1, sl._2 - sl._1, StandardCharsets.UTF_8)
-            val slStr = slStr0.replaceAll("[\\s]+$", "")
-            if (slStr.nonEmpty) {
-              httpStatusline = slStr
-              val hEnd = indexOfCrlfCrlf(pos)
-              val hBlockEnd = if (hEnd < 0) n else hEnd + 1
-              val hBuff = new String(data, pos, hBlockEnd - pos, StandardCharsets.UTF_8)
-              pos = hBlockEnd
-              val parsed = WarcHeaders.parseHeaderBlock(hBuff, keepCase)
-              httpHeaders = parsed._1
-              httpReenc = parsed._2
-            }
-          }
-          val headersLen = pos - bodyStart
-          val payloadLen = Math.max(0L, contentLength - headersLen)
-          val avail = Math.min(payloadLen, (n - pos).toLong).toInt
-          payload = java.util.Arrays.copyOfRange(data, pos, pos + avail)
-          pos += avail
-        } else {
-          val avail = Math.min(contentLength, (n - pos).toLong).toInt
-          payload = java.util.Arrays.copyOfRange(data, pos, pos + avail)
-          pos += avail
-        }
-
-        val payloadEnd = pos
-        val (offset, length) = offsetFn(recStart.toLong, payloadEnd.toLong)
-
-        // --- readToNextRecord: consume separators, detect leftovers ---
-        var warning: String = null
-        var nextVersionLineStart = -1
-        val nl = readline()
-        if (nl == null) {
-          // EOF right after payload
-        } else {
-          val lineLen0 = nl._2 - nl._1 - 1
-          val asStr = new String(data, nl._1, nl._2 - nl._1, StandardCharsets.UTF_8)
-          if (lineLen0 == 9 && asStr.startsWith("WARC/")) {
-            // next record starts immediately (no separators consumed);
-            // reference quirk: offset not advanced for it
-            nextVersionLineStart = nl._1
-          } else {
-            var lineLen = nl._2 - nl._1
-            while (lineLen > 0 && (data(nl._1 + lineLen - 1) == '\n' || data(nl._1 + lineLen - 1) == '\r'))
-              lineLen -= 1
-            if (lineLen > 0) {
-              warning = s"Content-Length Too Small: Record not followed by newline, " +
-                s"Remainder Length: $lineLen, Offset: ${nl._1}"
-            }
-          }
-        }
-
-        if (nextVersionLineStart >= 0) {
-          firstLineStart = nextVersionLineStart
-          // pos already past the version line
-        } else if (nl == null) {
-          done = true
-        } else {
-          // consume 2-byte (blank CRLF) lines until a real line — the
-          // reference checks byteLength===2 only, not content
-          var l2 = readline()
-          while (l2 != null && (l2._2 - l2._1) == 2) l2 = readline()
-          if (l2 == null) done = true
-          else firstLineStart = l2._1
-        }
-
-        out += FramedRecord(
-          filename, offset, length,
-          statusline, warcHdrs, warcReenc,
-          httpStatusline, httpHeaders, httpReenc,
-          payload, warning)
-      }
-    }
-    out.result()
-  }
+  /** Names the scan opens as gzip (`.gz`, hence `.warc.gz`/`.wacz.gz`);
+    * `parseStream` also detects gzip by its magic bytes. */
+  def isGzipName(path: String): Boolean = path.endsWith(".gz")
 }

@@ -4,17 +4,27 @@ import java.io.InputStream
 import java.nio.charset.StandardCharsets
 import scala.collection.mutable
 
-/** Record-at-a-time streaming WARC framing (S1/S4 at scale).
-  *
-  * The batch kernel (`WarcFraming.parseFile`) materializes the whole file
-  * plus all records before emitting row 1 — fine at the ≤1 GiB WARC
-  * convention, fatal for oversized or concatenated files (and capped at
-  * 2 GB by JVM arrays). This parser consumes an `InputStream` and holds
+/** The engine's one WARC framer (S1/S4): the Spark scan, `LazyPayload`,
+  * `CdxPipeline` and the in-memory captures of q25/q36 all frame
+  * through `parseStream`. It consumes an `InputStream` and holds
   * O(one record) of task memory, mirroring the reference's streaming
-  * design — `AsyncIterReader` (readers.ts:100-480) and
-  * `WARCParser.readToNextRecord` (warcparser.ts:57-117) — with byte-exact
-  * tolerant-framing parity (verified by parity tests against the batch
-  * kernel on every reference fixture).
+  * design — `AsyncIterReader` (readers.ts:100-480) and `WARCParser`
+  * (warcparser.ts:57-183). Its tolerant framing:
+  *  - record = version line, header block to CRLFCRLF, Content-Length
+  *    payload, CRLFCRLF;
+  *  - leftover bytes before the separator ⇒ "Content-Length Too Small"
+  *    warning with the reference's exact text;
+  *  - extra blank lines between records consumed;
+  *  - a "WARC/x.y" line immediately after the payload starts the next
+  *    record without updating the offset (reference quirk);
+  *  - wget's `<uri>` around WARC-Target-URI stripped
+  *    (warcrecord.ts:228-234).
+  * Every field of every record of the ten reference fixtures is checked
+  * against recorded goldens (`WarcStreamingSpec`, resource
+  * `goldens/framing.jsonl`).
+  *
+  * A `.warc.gz` member cut short — the deflate stream or its 8-byte
+  * CRC/ISIZE trailer — throws `truncated gzip member`.
   *
   * `keepPayload = false` SKIPS payload bytes without buffering or copying
   * them (the reference's `skipFully`, indexer.ts:74) — so column pruning
@@ -123,8 +133,7 @@ object WarcStreaming {
       else { val b = inBuf(inStart) & 0xff; inStart += 1; rawPos += 1; b }
 
     /** Parse a gzip header starting at the current raw position; returns
-      * false at clean raw EOF, throws on garbage (matching the batch
-      * kernel's "not a gzip member" contract). */
+      * false at clean raw EOF, throws "not a gzip member" on garbage. */
     private def startMember(): Boolean = {
       if (!ensureInput()) return false
       val memberStart = rawPos
@@ -306,8 +315,8 @@ object WarcStreaming {
     private def drain(): Unit = {
       if (!gz) return
       // early stop mid-stream (empty statusline): finish consuming so the
-      // open members' raw lengths resolve (the batch kernel inflates all
-      // members upfront and reports full member lengths)
+      // open members' raw lengths resolve and records report full
+      // member lengths
       if (exhausted && pendingGz.nonEmpty &&
           feed.memberRawLen(pendingGz.last._3).isEmpty)
         feed.skip(Long.MaxValue)
@@ -392,9 +401,8 @@ object WarcStreaming {
 
     private def trimEnd(s: String): String = s.replaceAll("[\\s]+$", "")
 
-    /** One iteration of the framing loop — mirrors
-      * WarcFraming.parseStream (tolerance matrix identical; parity
-      * tested fixture-by-fixture). */
+    /** One iteration of the framing loop (tolerance matrix: see the
+      * object doc). */
     private def parseOne(): Unit = {
       val first =
         if (pendingLine != null) { val t = pendingLine; pendingLine = null; t }

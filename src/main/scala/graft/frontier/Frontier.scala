@@ -140,6 +140,14 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
   private def jd(label: String): Unit =
     spark.sparkContext.setJobDescription(label)
 
+  /** Runs a public entry point's `body` under its own job labels, then
+    * gives the calling thread back its own description, on success and
+    * on failure. */
+  private def ownLabels[T](body: => T): T = {
+    val caller = spark.sparkContext.getLocalProperty("spark.job.description")
+    try body finally spark.sparkContext.setJobDescription(caller)
+  }
+
   private val markers = new Markers(spark, cfg.checkpointDir)
 
   // The three versioned state stores (protocol: see StateStore).
@@ -1045,7 +1053,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     * LAZY (wave 1's schedule window, which must sort the head anyway,
     * trims it and sets the first fences), so init is pure O(seeds)
     * I/O with zero exchanges. Commits wave 0. */
-  def initialize(seeds: DataFrame): WaveResult = {
+  def initialize(seeds: DataFrame): WaveResult = ownLabels {
     val t0 = System.nanoTime()
     val codegen0 = GraftSession.codegen
     // durable ROBOTS_EVER record BEFORE the first gated write (the
@@ -1132,7 +1140,7 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     * fence delta + view fold → commit. Every frame a step persists goes
     * through `keep` onto ONE per-wave list, unpersisted once the wave's
     * state writes are done. */
-  def runWave(): WaveResult = {
+  def runWave(): WaveResult = ownLabels {
     val prev = latestCommittedWave()
     require(prev >= 0, "frontier not initialized")
     require(layoutChecked)

@@ -71,7 +71,6 @@ object ReferenceCrawler {
     }
 
     def seenSet: Set[String] = seen.toSet
-    def pendingCount: Int = pending.size
 
     def runWave(): Vector[(Entry, Int)] = {
       // robots filter (synthetic rule, or the parsed real-robots gate)

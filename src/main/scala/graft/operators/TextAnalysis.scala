@@ -4,26 +4,18 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for training-data pipelines: language ID,
-  * quality scoring, token counting, document fingerprinting. Quality and
+  * quality features, token counting, document fingerprinting. Quality and
   * token metrics are pure built-in column expressions (codegen'd); the
   * language heuristic and winnowing fingerprint are single-pass UDFs. */
 object TextAnalysis {
 
-  // ---- token counting (whitespace + a BPE-ish subword estimate) ----
+  // ---- token counting ----
 
   /** whitespace token count — matches `len(string_split(text, ' '))`
     * oracle semantics when using single-space split. */
   def wsTokenCount(text: Column): Column = size(split(text, " "))
 
-  /** BPE-ish token estimate: words plus an extra token per 4 chars of
-    * long words (subword splits), digits/punct runs counted separately. */
-  def bpeIshTokenCount(text: Column): Column = {
-    val words = filter(split(text, "\\s+"), w => length(w) > 0)
-    aggregate(words, lit(0),
-      (acc, w) => acc + lit(1) + floor(length(w) / lit(5)).cast("int"))
-  }
-
-  // ---- quality scoring (pure columns) ----
+  // ---- quality features (pure columns) ----
 
   /** Composite quality features: length, alpha ratio, punctuation ratio,
     * mean word length, stopword ratio — the standard crawl-filtering
@@ -46,18 +38,6 @@ object TextAnalysis {
       (nChars.cast("double") / greatest(nWords, lit(1))).as("mean_word_len"),
       (stop.cast("double") / greatest(nWords, lit(1))).as("stopword_ratio"))
   }
-
-  /** Scalar quality score in [0,1] from the features (simple weighted
-    * clamp — deterministic, monotone in each signal). */
-  def qualityScore(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    qualityFeatures(df, idCol, textCol).select(
-      col(idCol),
-      least(lit(1.0), greatest(lit(0.0),
-        lit(0.3) * least(col("n_words").cast("double") / 100.0, lit(1.0))
-          + lit(0.4) * col("alpha_ratio")
-          + lit(0.2) * (lit(1.0) - least(col("punct_ratio") * 10.0, lit(1.0)))
-          + lit(0.1) * least(col("stopword_ratio") * 5.0, lit(1.0))
-      )).as("quality"))
 
   // ---- language ID (n-gram/stopword heuristic) ----
 

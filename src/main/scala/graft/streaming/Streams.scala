@@ -66,13 +66,7 @@ object Streams {
     import spark.implicits._
     val schema = org.apache.spark.sql.Encoders.product[graft.sources.WarcRow].schema
     val stream = spark.readStream.schema(schema).parquet(inputDir)
-    stream.as[graft.sources.WarcRow]
-      .groupByKey(_.filename)
-      .flatMapGroups { (_, rows) =>
-        val sorted = rows.toVector.sortBy(_.offset)
-        graft.core.CdxIndexing.pairRecords(sorted.iterator.map(graft.sources.WarcRow.toFramed))
-          .flatMap(graft.operators.CdxPipeline.toCdxRow)
-      }.toDF()
+    graft.operators.CdxPipeline.pairDataset(spark, stream.as[graft.sources.WarcRow]).toDF()
   }
 
   /** Run any streaming DF to completion over currently-available input
@@ -82,7 +76,7 @@ object Streams {
     val q = df.writeStream
       .format("memory")
       .queryName(name)
-      .outputMode(if (df.isStreaming) OutputMode.Append() else OutputMode.Append())
+      .outputMode(OutputMode.Append())
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()

@@ -14,6 +14,10 @@ class ContentDecodeSpec extends AnyFunSuite {
   private def fixture(name: String): Array[Byte] =
     Files.readAllBytes(Paths.get(getClass.getResource(s"/warcio/$name").toURI))
 
+  private def parse(name: String): Vector[FramedRecord] =
+    WarcStreaming.parseStream(new java.io.ByteArrayInputStream(fixture(name)), name,
+      WarcFraming.isGzipName(name)).toVector
+
   private def decodeContent(r: FramedRecord): Array[Byte] = {
     val http = r.http
     PayloadDecode.decodePayload(
@@ -23,8 +27,7 @@ class ContentDecodeSpec extends AnyFunSuite {
   }
 
   test("chunked warc read: dechunked content matches goldens") {
-    val records = WarcFraming.parseFile(
-      fixture("example-iana.org-chunked.warc"), "example-iana.org-chunked.warc", isGzip = false)
+    val records = parse("example-iana.org-chunked.warc")
     val resp = records.find(_.warcType == "response").get
     assert(resp.http.get.get("Transfer-Encoding").contains("chunked"))
     val text = new String(decodeContent(resp), StandardCharsets.UTF_8)
@@ -33,7 +36,7 @@ class ContentDecodeSpec extends AnyFunSuite {
   }
 
   test("CDXAndRecord triple golden: cdx + decoded record + paired request") {
-    val records = WarcFraming.parseFile(fixture("example.warc.gz"), "example.warc.gz", isGzip = true)
+    val records = parse("example.warc.gz")
     val triples = CdxIndexing.pairRecords(records.iterator).flatMap { p =>
       CdxIndexing.cdxRow(p, CdxIndexing.DEFAULT_CDX_FIELDS).map { row =>
         val m = row.toMap
@@ -49,7 +52,7 @@ class ContentDecodeSpec extends AnyFunSuite {
   }
 
   test("--noSurt urlkey keeps the raw URL") {
-    val records = WarcFraming.parseFile(fixture("example.warc.gz"), "example.warc.gz", isGzip = true)
+    val records = parse("example.warc.gz")
     val keys = CdxIndexing.pairRecords(records.iterator)
       .flatMap(p => CdxIndexing.cdxRow(p, CdxIndexing.DEFAULT_CDX_FIELDS, noSurt = true))
       .map(_.toMap.apply("urlkey")).toVector

@@ -13,7 +13,8 @@ class IndexerFixtureSpec extends AnyFunSuite {
   }
 
   private def parse(name: String): Vector[FramedRecord] =
-    WarcFraming.parseFile(fixture(name), name, WarcFraming.isGzipName(name))
+    WarcStreaming.parseStream(new java.io.ByteArrayInputStream(fixture(name)), name,
+      WarcFraming.isGzipName(name)).toVector
 
   private def indexCli(name: String, fields: Seq[String]): String =
     parse(name)

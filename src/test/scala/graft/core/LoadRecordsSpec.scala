@@ -57,7 +57,8 @@ class LoadRecordsSpec extends AnyFunSuite {
       "\r\n"
 
   private lazy val records =
-    WarcFraming.parseFile(input.getBytes(StandardCharsets.UTF_8), "t.warc", isGzip = false)
+    WarcStreaming.parseStream(new java.io.ByteArrayInputStream(input.getBytes(StandardCharsets.UTF_8)),
+      "t.warc", isGzip = false).toVector
 
   test("three records, types and URIs") {
     assert(records.length == 3)

@@ -12,6 +12,10 @@ class SerializerSpec extends AnyFunSuite {
 
   private def utf8(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
 
+  private def parse(bytes: Array[Byte], keepCase: Boolean): Vector[FramedRecord] =
+    WarcStreaming.parseStream(new java.io.ByteArrayInputStream(bytes), "t.warc",
+      isGzip = false, keepCase = keepCase).toVector
+
   test("compute digest, buffering (parse then serialize)") {
     val input =
       "WARC/1.0\r\n" +
@@ -27,7 +31,7 @@ class SerializerSpec extends AnyFunSuite {
         "Custom-Header: somevalue\r\n" +
         "\r\n" +
         "some\ntext\r\n\r\n"
-    val rec = WarcFraming.parseFile(utf8(input), "t.warc", isGzip = false, keepCase = true).head
+    val rec = parse(utf8(input), keepCase = true).head
     val out = new String(WarcWriter.serializeFramed(rec, sha1b32), StandardCharsets.UTF_8)
     assert(out ==
       "WARC/1.0\r\n" +
@@ -252,7 +256,7 @@ class SerializerSpec extends AnyFunSuite {
         "Content-Type: text/html\r\n" +
         "Foo: Bar\r\n" +
         "\r\n\r\n\r\n")) {
-      val rec = WarcFraming.parseFile(utf8(input), "t.warc", isGzip = false, keepCase = true).head
+      val rec = parse(utf8(input), keepCase = true).head
       val out = new String(WarcWriter.serializeFramed(rec, sha1b32), StandardCharsets.UTF_8)
       assert(out == input)
     }
@@ -260,7 +264,7 @@ class SerializerSpec extends AnyFunSuite {
 
   test("warc1.1 serialize records match (redirect.warc full round-trip)") {
     val input = Files.readAllBytes(Paths.get(getClass.getResource("/warcio/redirect.warc").toURI))
-    val records = WarcFraming.parseFile(input, "redirect.warc", isGzip = false, keepCase = true)
+    val records = parse(input, keepCase = true)
     val serialized = records.flatMap(r => WarcWriter.serializeFramed(r).toSeq).toArray
     assert(java.util.Arrays.equals(serialized, input))
   }
@@ -306,7 +310,7 @@ class SerializerSpec extends AnyFunSuite {
         "Set-Cookie: name=world\r\n" +
         "\r\n" +
         "some\ntext\r\n\r\n"
-    val rec = WarcFraming.parseFile(utf8(input), "t.warc", isGzip = false).head
+    val rec = parse(utf8(input), keepCase = false).head
     assert(rec.httpHeaders.filter(_.name.equalsIgnoreCase("set-cookie")).map(_.value) ==
       Vector("greeting=hello", "name=world"))
     assert(new String(rec.payload, StandardCharsets.UTF_8) == "some\ntext")

@@ -4,10 +4,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.io.{ByteArrayInputStream, InputStream}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
-/** The streaming parser must be byte-equivalent to the batch kernel
-  * (which carries the reference-fixture goldens) AND hold O(one record)
-  * of memory. */
+/** The framer's output on every reference fixture must equal the recorded
+  * goldens (`goldens/framing.jsonl`, one JSON line per record: offset,
+  * length, version line, WARC and HTTP headers, payload length + SHA-256,
+  * framing warning), and the framer must hold O(one record) of memory. */
 class WarcStreamingSpec extends AnyFunSuite {
 
   private val fixtures = Seq(
@@ -23,16 +25,46 @@ class WarcStreamingSpec extends AnyFunSuite {
     (r.offset, r.length, r.warcVersion, r.warcHeaders, r.httpStatusline,
       r.httpHeaders, r.payload.toSeq, r.warning)
 
-  test("parity with batch kernel on every reference fixture (both case modes)") {
-    for (f <- fixtures; keepCase <- Seq(false, true)) {
-      val bytes = fixtureBytes(f)
-      val batch = WarcFraming.parseFile(bytes, f, WarcFraming.isGzipName(f), keepCase)
-      val streamed = WarcStreaming.parseStream(new ByteArrayInputStream(bytes), f,
-        WarcFraming.isGzipName(f), keepCase).toVector
-      assert(streamed.size == batch.size, s"$f record count")
-      for ((s, b) <- streamed.zip(batch))
-        assert(key(s) == key(b), s"$f keepCase=$keepCase record mismatch")
-    }
+  /** One golden line: `key`'s fields, the payload as length + SHA-256;
+    * strings JSON-quoted with every non-printable-ASCII char escaped. */
+  private def render(file: String, keepCase: Boolean, i: Int, r: FramedRecord): String = {
+    def q(v: String): String =
+      if (v == null) "null"
+      else v.flatMap {
+        case '"' => "\\\""
+        case '\\' => "\\\\"
+        case c if c < 0x20 || c > 0x7e => f"\\u${c.toInt}%04x"
+        case c => c.toString
+      }.mkString("\"", "", "\"")
+    def hs(h: Vector[HeaderKV]) = h.map(kv => s"[${q(kv.name)},${q(kv.value)}]").mkString("[", ",", "]")
+    val sha = java.security.MessageDigest.getInstance("SHA-256").digest(r.payload)
+      .map(b => f"${b & 0xff}%02x").mkString
+    s"""{"file":${q(file)},"keepCase":$keepCase,"record":$i,"offset":${r.offset},""" +
+      s""""length":${r.length},"warcVersion":${q(r.warcVersion)},"warcHeaders":${hs(r.warcHeaders)},""" +
+      s""""httpStatusline":${q(r.httpStatusline)},"httpHeaders":${hs(r.httpHeaders)},""" +
+      s""""payloadLength":${r.payload.length},"payloadSha256":"$sha","warning":${q(r.warning)}}"""
+  }
+
+  test("recorded framing goldens on every reference fixture (both case modes)") {
+    val golden = Files.readAllLines(Paths.get(
+      getClass.getResource("/goldens/framing.jsonl").toURI)).asScala.toVector
+    val framed = for {
+      f <- fixtures
+      keepCase <- Seq(false, true)
+      (r, i) <- WarcStreaming.parseStream(new ByteArrayInputStream(fixtureBytes(f)), f,
+        WarcFraming.isGzipName(f), keepCase).zipWithIndex
+    } yield render(f, keepCase, i, r)
+    for ((got, want) <- framed.zip(golden)) assert(got == want)
+    assert(framed.size == golden.size, "record count")
+  }
+
+  test("a .warc.gz whose last member lacks its CRC/ISIZE trailer fails loudly") {
+    def parse(b: Array[Byte]) =
+      WarcStreaming.parseStream(new ByteArrayInputStream(b), "cut.warc.gz", isGzip = true).toVector
+    val file = WarcStreamingSpec.twoMemberGz()
+    assert(parse(file).size == 2)
+    val ex = intercept[IllegalArgumentException](parse(file.dropRight(8)))
+    assert(ex.getMessage == "truncated gzip member")
   }
 
   test("keepPayload=false: payloads skipped, all other fields identical") {
@@ -147,4 +179,14 @@ class WarcStreamingSpec extends AnyFunSuite {
       new ByteArrayInputStream(file2, off.toInt, file2.length - off.toInt)
     assert(WarcStreaming.syncToMemberStart(openAt2, 0, file2.length) == 64L)
   }
+}
+
+object WarcStreamingSpec {
+
+  /** A `.warc.gz` of two `WarcWriter` gzip members, one record each. */
+  def twoMemberGz(): Array[Byte] = (0 until 2).map { i =>
+    WarcWriter.serialize(WarcWriter.create(url = s"https://ex.org/$i", date = "2020-01-01T00:00:00Z",
+      warcType = "resource", payload = s"body $i".getBytes(StandardCharsets.UTF_8),
+      recordId = f"00000000-0000-0000-0000-$i%012d"), WarcWriter.CdxDigest, gzip = true)
+  }.reduce(_ ++ _)
 }

@@ -1059,6 +1059,24 @@ class FrontierSpec extends AnyFunSuite with SparkTestBase {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("initialize and runWave give the caller its own job description back") {
+    def desc = spark.sparkContext.getLocalProperty("spark.job.description")
+    val cfg = FrontierConfig(checkpointDir = tmpDir("callerLabel"), hostBudget = 4,
+      headMult = 1, seenShards = 16, backlogBuckets = 8)
+    spark.sparkContext.setJobDescription("caller")
+    try {
+      val f = new Frontier(spark, cfg)
+      f.initialize(Frontier.syntheticSeeds(spark, 2000, hostPool = 20))
+      assert(desc == "caller", "after initialize")
+      f.runWave()
+      assert(desc == "caller", "after runWave")
+      // a call that fails after setting its first label: seeds with no url column
+      val g = new Frontier(spark, cfg.copy(checkpointDir = tmpDir("callerLabelFail")))
+      intercept[Exception](g.initialize(spark.range(3).toDF("x")))
+      assert(desc == "caller", "after a failed initialize")
+    } finally spark.sparkContext.setJobDescription(null)
+  }
+
   test("every manifest field can be recomputed from the state the wave wrote") {
     import org.apache.spark.sql.functions.{col, sum}
     val cfg = FrontierConfig(checkpointDir = tmpDir("manifest"), hostBudget = 4,

@@ -125,4 +125,25 @@ class LenientScanSpec extends org.scalatest.funsuite.AnyFunSuite with graft.Spar
     assert(rows.length == 6) // only the good file's records
     assert(rows.forall(_.filename == "good.warc.gz"))
   }
+
+  test("lenient scan ends a .warc.gz cut inside its last gzip trailer, keeping the good file") {
+    val dir = graft.Scratch.dir("lenient-trailer")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(fixturePath("example.warc.gz")),
+      dir.resolve("good.warc.gz"))
+    // the second member's CRC32/ISIZE trailer cut off
+    java.nio.file.Files.write(dir.resolve("cut.warc.gz"),
+      graft.core.WarcStreamingSpec.twoMemberGz().dropRight(8))
+    import spark.implicits._
+    val rows = spark.read.format("warc").option("lenient", "true").load(dir.toString)
+      .as[WarcRow].collect()
+    assert(rows.count(_.filename == "good.warc.gz") == 6)
+    // the cut file's records end at its broken member: the record of its
+    // intact first member is kept, the second record is not
+    assert(rows.filter(_.filename == "cut.warc.gz").map(_.targetUri).toSeq ==
+      Seq("https://ex.org/0"))
+    // strict mode fails the job on the same file
+    val ex = intercept[Exception](spark.read.format("warc").load(dir.toString).collect())
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("truncated gzip member")))
+  }
 }
