@@ -260,8 +260,8 @@ object SparkEntry {
         concat($"text", lit(" zzextra")).as("text"))
       val hashes = Dedup.simhashes(docs.unionByName(mutated), "doc_id", "text")
       hashes.write.mode("overwrite").parquet(StageDir + "/q22_simhash.parquet")
-      Dedup.simhashPairsFromHashes(
-          sp.read.parquet(StageDir + "/q22_simhash.parquet"), maxDist = 3)
+      Dedup.hammingPairs(
+          sp.read.parquet(StageDir + "/q22_simhash.parquet"), "id", "sh", maxDist = 3)
         .orderBy($"id_a", $"id_b")
     }),
     "q23_fingerprint" -> ((s, dir) => { implicit val sp = s; import sp.implicits._
@@ -404,8 +404,8 @@ object SparkEntry {
       val ph = Multimodal.imageFeatures(images).toDF()
         .filter($"decode_ok").select($"image_id", $"phash")
       ph.write.mode("overwrite").parquet(StageDir + "/q31_phash.parquet")
-      Multimodal.imageNearDupsFromHashes(
-          sp.read.parquet(StageDir + "/q31_phash.parquet"), maxDist = 6)
+      Dedup.hammingPairs(
+          sp.read.parquet(StageDir + "/q31_phash.parquet"), "image_id", "phash", maxDist = 6)
         .orderBy($"id_a", $"id_b")
     }),
     // ---- streaming: watermarked windowed agg over events (AvailableNow)

@@ -64,6 +64,19 @@ object CdxIndexing {
     warcSah(record).get(field).filter(_.nonEmpty).map(_.asInstanceOf[Any])
   }
 
+  /** The CDX 14-digit timestamp of a WARC-Date: its first 14 characters
+    * that are not `-`, `:` or `T` (SQL `timestamp14` calls this too). */
+  def timestamp14(d: String): String = {
+    val sb = new java.lang.StringBuilder(14)
+    var i = 0
+    while (i < d.length && sb.length < 14) {
+      val c = d.charAt(i)
+      if (c != '-' && c != ':' && c != 'T') sb.append(c)
+      i += 1
+    }
+    sb.toString
+  }
+
   /** CDXIndexer.getField on top of the base projection. `urlkeyUrl` is
     * the (possibly POST-rewritten) URL. */
   def getCdxField(
@@ -77,7 +90,7 @@ object CdxIndexing {
       if (noSurt) v.map(_.asInstanceOf[Any]) else v.map(UrlCanon.surt(_).asInstanceOf[Any])
     case "timestamp" =>
       val d = warcSah(record).get("WARC-Date").getOrElse("")
-      Some(d.replaceAll("[-:T]", "").take(14))
+      Some(timestamp14(d))
     case "url" => Option(record.warcTargetURI)
     case "mime" =>
       record.warcType match {

@@ -34,7 +34,10 @@ object GzipMembers {
     if (p > buf.length) -1 else p
   }
 
-  /** Split a .warc.gz byte array into members, inflating each. */
+  /** Split a .warc.gz byte array into members, inflating each. A member
+    * whose deflate data or 8-byte CRC/ISIZE trailer runs past the buffer
+    * throws `truncated gzip member`, the rule `WarcStreaming`'s gzip feed
+    * applies (so `inflateAuto` falls back to the raw bytes). */
   def splitMembers(buf: Array[Byte]): Vector[Member] = {
     val out = Vector.newBuilder[Member]
     var pos = 0
@@ -55,6 +58,7 @@ object GzipMembers {
       val consumed = (buf.length - dataStart) - inflater.getRemaining
       inflater.end()
       val memberEnd = dataStart + consumed + 8 // CRC32 + ISIZE trailer
+      if (memberEnd > buf.length) throw new IllegalArgumentException("truncated gzip member")
       val data = new Array[Byte](total)
       var off = 0
       for (c <- chunks.result()) { System.arraycopy(c, 0, data, off, c.length); off += c.length }

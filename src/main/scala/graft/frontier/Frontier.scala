@@ -1619,7 +1619,8 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     jd("maint:recut")
     val M = headM
     val rws = info.filter(recutCond)
-      .select("host", "fp", "fs", "epoch", "rf", "rc", "bn", "hc").collect()
+      .select(col("host"), col("fp"), col("fs"), col("epoch"), col("rf"), col("rc"),
+        col("bn"), col("hc"), bucketCol.as("bucket")).collect()
     val allHosts = rws.map(_.getString(0)).toSeq
     val expR = rws.filter(_.getBoolean(4))
     val expHosts = expR.map(_.getString(0)).toSeq
@@ -1636,16 +1637,11 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
         // wave's spill is not written yet) plus this wave's routed spill for them from
         // the CACHED frame — is rewritten under epoch+1; one recount
         // collect yields the new bn. Bucket ids come from the engine's
-        // own hash expression (never re-derive bucketing on the driver).
-        val bucketsOf = spark.createDataFrame(
-            spark.sparkContext.parallelize(expHosts.map(org.apache.spark.sql.Row(_)), 1),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("host",
-                org.apache.spark.sql.types.StringType))))
-          .select(bucketCol.as("b")).collect().map(_.getInt(0)).toSet
+        // own hash expression, evaluated in the `rws` collect (never
+        // re-derive bucketing on the driver).
         val fenceOf = typedlit(expR.map(r => r.getString(0) ->
           ((r.getInt(1), r.getString(2), r.getInt(3)))).toMap)
-        val liveOld = backlogRows(backlogDirs(wave - 1), Some(bkbIn(bucketsOf)))
+        val liveOld = backlogRows(backlogDirs(wave - 1), Some(bkbIn(expR.map(_.getInt(8)).toSet)))
           .filter(col("host").isin(expHosts: _*))
           .withColumn("__f", element_at(fenceOf, col("host")))
           .withColumn("fp", col("__f._1")).withColumn("fs", col("__f._2"))

@@ -201,11 +201,6 @@ object SeenFilter {
       new Probe { def mightContainHash(h: Long): Boolean = b.mightContainHash(h) }
     }
 
-  /** Polymorphic probe over a serialized shard (cuckoo or bloom) —
-    * convenience for tests; use ShardProbe/parse in hot paths. */
-  def mightContain(shardBytes: Array[Byte], key: String): Boolean =
-    parse(shardBytes).mightContainHash(hashKey(key))
-
   // =================================================================
   // LSM LEVELS — the storage unit of seen-set shard state
   // =================================================================

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{LongType, StringType}
+import scala.reflect.runtime.universe.TypeTag
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
@@ -11,12 +12,15 @@ import org.apache.spark.sql.expressions.Window
   * joins; the only O(n²) work is inside hash buckets whose size is
   * bounded by the banding parameters. Signatures are computed in one
   * pass per row (UDF over the text, no explode of shingles across rows).
+  * `hammingPairs` is the one exact Hamming pigeonhole join: SimHash
+  * documents (`simhashPairs`, q22, q42) and image phashes
+  * (`Multimodal.imageNearDups`, q31) pair through it.
   *
-  * Bucket caps are NOT silent: every capped operator reports dropped
-  * docs through a named LongAccumulator (visible in the Spark UI /
-  * status API) and an executor log line — on a real corpus hot buckets
-  * are boilerplate near-dup classes, and silently under-deleting there
-  * is a dedup pipeline lying about its recall.
+  * Bucket caps are NOT silent: every bucket loop caps through `capLen`,
+  * which reports dropped docs through a named LongAccumulator (visible
+  * in the Spark UI / status API) and an executor log line — on a real
+  * corpus hot buckets are boilerplate near-dup classes, and silently
+  * under-deleting there is a dedup pipeline lying about its recall.
   */
 object Dedup {
 
@@ -26,22 +30,9 @@ object Dedup {
       : org.apache.spark.util.LongAccumulator =
     df.sparkSession.sparkContext.longAccumulator(name)
 
-  /** Cap a sorted bucket, recording + logging the overflow. */
-  private def capBucket[T](ds: Seq[T], cap: Int, what: String,
-                           acc: org.apache.spark.util.LongAccumulator): Seq[T] = {
-    if (ds.length <= cap) ds
-    else {
-      val dropped = ds.length - cap
-      acc.add(dropped.toLong)
-      System.err.println(
-        s"[dedup] $what bucket over cap: ${ds.length} docs, cap $cap — " +
-          s"$dropped docs dropped from pair generation (accumulator '${acc.name.getOrElse("")}')")
-      ds.take(cap)
-    }
-  }
-
-  /** Cap bookkeeping shared by the primitive-array bucket loops: same
-    * accumulator/log semantics as capBucket; returns the kept length. */
+  /** Cap bookkeeping of every bucket loop (minhash, Hamming,
+    * embedding): counts the overflow in `acc`, logs it, and returns the
+    * kept length. */
   private def capLen(n: Int, cap: Int, what: String,
                      acc: org.apache.spark.util.LongAccumulator): Int = {
     if (n <= cap) n
@@ -353,55 +344,78 @@ object Dedup {
     df.select(col(idCol).cast("long").as("id"), shUdf(col(textCol)).as("sh"))
   }
 
-  /** SimHash near-dup pairs within Hamming distance `maxDist`, using the
-    * pigeonhole banding trick: split 64 bits into maxDist+1 chunks; any
-    * pair within distance must agree exactly on ≥1 chunk → candidates
-    * are chunk-equality groups (shuffle on small chunk keys only).
-    * Recall is EXACTLY 1 for distance ≤ maxDist (pigeonhole), so the
-    * output equals the all-pairs hamming join — DuckDB-oracle-able. */
+  /** SimHash near-dup pairs within Hamming distance `maxDist`: the
+    * pigeonhole join `hammingPairs` over `simhashes`. Returns
+    * (id_a, id_b, hamming) with id_a < id_b. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String, maxDist: Int = 3,
                    maxBucket: Int = 1000,
                    truncAcc: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame =
-    simhashPairsFromHashes(simhashes(df, idCol, textCol), maxDist, maxBucket, truncAcc)
+    hammingPairs(simhashes(df, idCol, textCol), "id", "sh", maxDist, maxBucket, truncAcc)
 
-  /** Pair generation over a precomputed `(id, sh)` simhash table. */
-  def simhashPairsFromHashes(withSh: DataFrame, maxDist: Int = 3,
-                             maxBucket: Int = 1000,
-                             truncAcc: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
+  // ---------------------------------------------------------------
+  // Hamming pigeonhole join (SimHash docs, image phashes)
+  // ---------------------------------------------------------------
+
+  /** Pairs of rows whose 64-bit `hashCol` values lie within Hamming
+    * distance `maxDist` — the one pigeonhole join (q22/q42 over SimHash,
+    * q31 over image phash). Split 64 bits into maxDist+1 chunks: ≤
+    * maxDist differing bits cannot touch all of them, so any pair within
+    * distance agrees exactly on ≥1 chunk, and candidates are chunk-
+    * equality groups (shuffle on small chunk keys only). Recall is
+    * EXACTLY 1 at any maxDist, so the output equals the all-pairs
+    * hamming join — DuckDB-oracle-able. (With 64/chunks rounded down
+    * some top bits go uncovered; harmless — differences there only
+    * reduce the number of disagreeing chunks, and the full 64-bit
+    * distance is verified per candidate pair.)
+    *
+    * `idCol` is bigint or string. Its natural order sorts each bucket,
+    * so id_a < id_b in that order, and an over-cap bucket keeps its
+    * first `maxBucket` ids. Returns (id_a, id_b, hamming), the min
+    * distance per pair. */
+  def hammingPairs(df: DataFrame, idCol: String, hashCol: String, maxDist: Int,
+                   maxBucket: Int = 1000,
+                   truncAcc: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame =
+    df.schema(idCol).dataType match {
+      case LongType   => hammingJoin[Long](df, idCol, hashCol, maxDist, maxBucket, truncAcc)
+      case StringType => hammingJoin[String](df, idCol, hashCol, maxDist, maxBucket, truncAcc)
+      case t => throw new IllegalArgumentException(
+        s"hammingPairs: id column '$idCol' is ${t.simpleString}, expected bigint or string")
+    }
+
+  private def hammingJoin[T: TypeTag: Ordering](
+      df: DataFrame, idCol: String, hashCol: String, maxDist: Int, maxBucket: Int,
+      truncAcc: Option[org.apache.spark.util.LongAccumulator]): DataFrame = {
     require(maxDist >= 0 && maxDist < 32, s"maxDist=$maxDist out of range [0,31]")
-    val acc = truncAcc.getOrElse(truncationAccumulator(withSh, "graft.dedup.simhash.truncated_docs"))
+    val acc = truncAcc.getOrElse(truncationAccumulator(df, "graft.dedup.hamming.truncated_docs"))
     val chunks = maxDist + 1
     val bits = 64 / chunks
     // JVM shifts are mod 64: 1L<<64 == 1, so the maxDist=0 single-chunk
     // mask must be spelled out as all-ones
     val mask = if (bits >= 64) -1L else (1L << bits) - 1
     val chunkCols = (0 until chunks).map { c =>
-      struct(lit(c).as("chunk"),
-        col("sh").bitwiseAND(lit(mask << (c * bits))).as("ck"))
+      struct(lit(c).as("chunk"), col("h").bitwiseAND(lit(mask << (c * bits))).as("ck"))
     }
-    val exploded = withSh.withColumn("k", explode(array(chunkCols: _*)))
-      .select(col("k.chunk"), col("k.ck"), col("id"), col("sh"))
-    val buckets = exploded.groupBy(col("chunk"), col("ck"))
-      .agg(collect_list(struct(col("id"), col("sh"))).as("docs"))
+    val buckets = df.select(col(idCol).as("id"), col(hashCol).as("h"))
+      .withColumn("k", explode(array(chunkCols: _*)))
+      .groupBy(col("k.chunk"), col("k.ck"))
+      .agg(collect_list(struct(col("id"), col("h"))).as("docs"))
       .filter(size(col("docs")) > 1)
-    val pairUdf = udf((docs: Seq[org.apache.spark.sql.Row]) => {
-      // primitive arrays once per bucket: the O(n²) loop must not pay
-      // per-access Row boxing (capped buckets run ~500k iterations)
-      val arr = docs.iterator.map(r => (r.getLong(0), r.getLong(1))).toArray
-      scala.util.Sorting.quickSort(arr)(Ordering.by((t: (Long, Long)) => t._1))
-      val n = capLen(arr.length, maxBucket, "simhash", acc)
-      val ids = new Array[Long](n)
-      val shs = new Array[Long](n)
+    val pairUdf = udf((docs: Seq[Row]) => {
+      // sort once per bucket, then a primitive hash array: the O(n²)
+      // loop must not pay per-access Row boxing (capped buckets run
+      // ~500k iterations)
+      val arr = docs.iterator.map(r => (r.getAs[T](0), r.getLong(1))).toArray
+      scala.util.Sorting.quickSort(arr)(Ordering.by((t: (T, Long)) => t._1))
+      val n = capLen(arr.length, maxBucket, "hamming", acc)
+      val hs = Array.tabulate(n)(arr(_)._2)
+      val out = scala.collection.mutable.ArrayBuffer.empty[(T, T, Int)]
       var i = 0
-      while (i < n) { ids(i) = arr(i)._1; shs(i) = arr(i)._2; i += 1 }
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
-      i = 0
       while (i < n) {
-        val shi = shs(i)
+        val hi = hs(i)
         var j = i + 1
         while (j < n) {
-          val d = java.lang.Long.bitCount(shi ^ shs(j))
-          if (d <= maxDist) out += ((ids(i), ids(j), d))
+          val d = java.lang.Long.bitCount(hi ^ hs(j))
+          if (d <= maxDist) out += ((arr(i)._1, arr(j)._1, d))
           j += 1
         }
         i += 1

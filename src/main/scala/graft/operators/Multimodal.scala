@@ -12,7 +12,8 @@ import java.awt.image.BufferedImage
   * Audio/video decodes are STUBBED behind deterministic fakes (the
   * codec libraries are not in this container) — the Spark-side plumbing
   * (schema, batching, partitioning) is real and tested; swap the stub
-  * for an FFI decode on a real cluster. */
+  * for an FFI decode on a real cluster. Image near-dups pair by phash
+  * through the shared Hamming join, `Dedup.hammingPairs`. */
 object Multimodal {
 
   final case class ImageFeatures(
@@ -76,81 +77,16 @@ object Multimodal {
       }.toDF("image_id", "bytes", "w", "h")
   }
 
-  /** Near-duplicate images via phash hamming distance ≤ maxDist,
-    * pigeonhole-banded like SimHash (shuffle on 16-bit chunk keys).
-    * Over-cap buckets report dropped docs via accumulator + log. */
+  /** Near-duplicate images: decoded images whose phash values lie
+    * within Hamming distance `maxDist`, paired by `Dedup.hammingPairs`
+    * over (image_id, phash). Returns (id_a, id_b, hamming) with
+    * id_a < id_b; over-cap buckets report dropped images via the
+    * accumulator + log. */
   def imageNearDups(images: DataFrame, maxDist: Int = 6, maxBucket: Int = 1000,
                     truncAcc: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame =
-    imageNearDupsFromHashes(
+    Dedup.hammingPairs(
       imageFeatures(images).toDF().filter(col("decode_ok")).select("image_id", "phash"),
-      maxDist, maxBucket, truncAcc)
-
-  /** Pair generation over a precomputed `(image_id, phash)` table —
-    * exposed so the pigeonhole bucket join can be oracle-checked over a
-    * staged copy. `chunks = maxDist + 1` (same formula as
-    * `Dedup.simhashPairsFromHashes`): ≤ maxDist differing bits cannot
-    * touch all maxDist+1 chunks, so ≥1 chunk agrees exactly and recall
-    * is EXACTLY 1 at any maxDist — the output equals the all-pairs
-    * hamming join. (With 64/chunks rounded down some top bits go
-    * uncovered; harmless — differences there only reduce the number of
-    * disagreeing chunks, and the full 64-bit hamming is verified per
-    * candidate pair.) */
-  def imageNearDupsFromHashes(feats: DataFrame, maxDist: Int = 6, maxBucket: Int = 1000,
-                              truncAcc: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
-    require(maxDist >= 0 && maxDist < 32, s"maxDist=$maxDist out of range [0,31]")
-    val chunks = maxDist + 1
-    val bits = 64 / chunks
-    // JVM shifts are mod 64: 1L<<64 == 1, so the maxDist=0 single-chunk
-    // mask must be spelled out as all-ones
-    val mask = if (bits >= 64) -1L else (1L << bits) - 1
-    val spark = feats.sparkSession
-    val acc = truncAcc.getOrElse(
-      spark.sparkContext.longAccumulator("graft.multimodal.phash.truncated_docs"))
-    val chunkCols = (0 until chunks).map { c =>
-      struct(lit(c).as("chunk"),
-        col("phash").bitwiseAND(lit(mask << (c * bits))).as("ck"))
-    }
-    val exploded = feats
-      .withColumn("k", explode(array(chunkCols: _*)))
-      .select(col("k.chunk"), col("k.ck"), col("image_id"), col("phash"))
-    val pairUdf = udf((docs: Seq[org.apache.spark.sql.Row]) => {
-      // primitive arrays once per bucket — no per-access Row boxing in
-      // the O(n²) loop (same sort/cap/emission semantics)
-      val arr = docs.iterator.map(r => (r.getString(0), r.getLong(1))).toArray
-      scala.util.Sorting.quickSort(arr)(Ordering.by((t: (String, Long)) => t._1))
-      val n =
-        if (arr.length <= maxBucket) arr.length
-        else {
-          acc.add((arr.length - maxBucket).toLong)
-          System.err.println(s"[multimodal] phash bucket over cap: ${arr.length} docs, " +
-            s"cap $maxBucket — ${arr.length - maxBucket} dropped (accumulator)")
-          maxBucket
-        }
-      val ids = new Array[String](n)
-      val phs = new Array[Long](n)
-      var i = 0
-      while (i < n) { ids(i) = arr(i)._1; phs(i) = arr(i)._2; i += 1 }
-      val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, Int)]
-      i = 0
-      while (i < n) {
-        val pi = phs(i)
-        var j = i + 1
-        while (j < n) {
-          val d = java.lang.Long.bitCount(pi ^ phs(j))
-          if (d <= maxDist) out += ((ids(i), ids(j), d))
-          j += 1
-        }
-        i += 1
-      }
-      out.toSeq
-    })
-    exploded.groupBy(col("chunk"), col("ck"))
-      .agg(collect_list(struct(col("image_id"), col("phash"))).as("docs"))
-      .filter(size(col("docs")) > 1)
-      .select(explode(pairUdf(col("docs"))).as("p"))
-      .select(col("p._1").as("id_a"), col("p._2").as("id_b"), col("p._3").as("hamming"))
-      .groupBy("id_a", "id_b").agg(min("hamming").as("hamming"))
-  }
+      "image_id", "phash", maxDist, maxBucket, truncAcc)
 
   // ----------------------------------------------------------------
   // Audio / video. REAL decode for the JDK-decodable formats:

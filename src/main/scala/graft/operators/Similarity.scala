@@ -55,6 +55,19 @@ object Similarity {
     if (n == 0) v else v.map(_ / n)
   }
 
+  /** Index of the centroid with the largest dot product with `v` (the
+    * first on ties): nearest by cosine for unit vectors. */
+  private def nearestCentroid(cs: Array[Array[Double]], v: Array[Double]): Int = {
+    var best = 0; var bestDot = Double.MinValue; var c = 0
+    while (c < cs.length) {
+      var dot = 0.0; var i = 0
+      while (i < v.length) { dot += v(i) * cs(c)(i); i += 1 }
+      if (dot > bestDot) { bestDot = dot; best = c }
+      c += 1
+    }
+    best
+  }
+
   /** Deterministic hash-sample of `nlist` vectors (k-means seeding). */
   private def sampleCentroids(df: DataFrame, vecCol: String, nlist: Int): Array[Array[Double]] =
     df.select(col(vecCol).cast("array<double>"))
@@ -71,7 +84,7 @@ object Similarity {
     * renormalized each round (assignment is by dot product = cosine on
     * unit vectors). Empty cells keep their previous centroid. */
   def kmeansCentroids(df: DataFrame, vecCol: String, nlist: Int,
-                      iters: Int = 5, seed: Long = 42L): Array[Array[Double]] = {
+                      iters: Int = 5): Array[Array[Double]] = {
     val spark = df.sparkSession
     import spark.implicits._
     var centroids = sampleCentroids(df, vecCol, nlist)
@@ -85,13 +98,7 @@ object Similarity {
         val counts = new Array[Long](cs.length)
         it.foreach { sv =>
           val v = sv.toArray
-          var best = 0; var bestDot = Double.MinValue; var c = 0
-          while (c < cs.length) {
-            var dot = 0.0; var i = 0
-            while (i < v.length) { dot += v(i) * cs(c)(i); i += 1 }
-            if (dot > bestDot) { bestDot = dot; best = c }
-            c += 1
-          }
+          val best = nearestCentroid(cs, v)
           var i = 0
           while (i < dim) { sums(best)(i) += v(i); i += 1 }
           counts(best) += 1
@@ -120,26 +127,13 @@ object Similarity {
     * augmented with a `ivf_cell` column; store partitioned by it so a
     * query scans only `nprobe` cells. */
   def ivfAssign(df: DataFrame, idCol: String, vecCol: String,
-                nlist: Int = 64, seed: Long = 42L,
-                kmeansIters: Int = 5): (DataFrame, Array[Array[Double]]) = {
+                nlist: Int = 64, kmeansIters: Int = 5): (DataFrame, Array[Array[Double]]) = {
     val spark = df.sparkSession
     val centroids =
       if (kmeansIters <= 0) sampleCentroids(df, vecCol, nlist)
-      else kmeansCentroids(df, vecCol, nlist, kmeansIters, seed)
+      else kmeansCentroids(df, vecCol, nlist, kmeansIters)
     val b = spark.sparkContext.broadcast(centroids)
-    val assignUdf = udf((v: Seq[Double]) => {
-      val cs = b.value
-      var best = 0
-      var bestDot = Double.MinValue
-      var c = 0
-      while (c < cs.length) {
-        var dot = 0.0; var i = 0
-        while (i < v.length) { dot += v(i) * cs(c)(i); i += 1 }
-        if (dot > bestDot) { bestDot = dot; best = c }
-        c += 1
-      }
-      best
-    })
+    val assignUdf = udf((v: Seq[Double]) => nearestCentroid(b.value, v.toArray))
     (df.withColumn("ivf_cell", assignUdf(col(vecCol).cast("array<double>"))), centroids)
   }
 

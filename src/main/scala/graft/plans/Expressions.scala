@@ -26,18 +26,8 @@ object Kernels {
     if (b == null) null
     else UTF8String.fromString(
       graft.core.Base32.encode(java.security.MessageDigest.getInstance("SHA-1").digest(b)))
-  def timestamp14(d: UTF8String): UTF8String = {
-    if (d == null) return null
-    val s = d.toString
-    val sb = new java.lang.StringBuilder(14)
-    var i = 0
-    while (i < s.length && sb.length < 14) {
-      val c = s.charAt(i)
-      if (c != '-' && c != ':' && c != 'T') sb.append(c)
-      i += 1
-    }
-    UTF8String.fromString(sb.toString)
-  }
+  def timestamp14(d: UTF8String): UTF8String =
+    if (d == null) null else UTF8String.fromString(graft.core.CdxIndexing.timestamp14(d.toString))
 }
 
 /** SURT canonicalization as a codegen expression. */

@@ -89,6 +89,15 @@ class ReadersSpec extends AnyFunSuite {
     assert(members.last.rawStart + members.last.rawLen == bos.toByteArray.length)
   }
 
+  test("a gzip member cut inside its CRC/ISIZE trailer is truncated; content decoding keeps the raw bytes") {
+    val file = WarcStreamingSpec.twoMemberGz()
+    assert(GzipMembers.splitMembers(file).length == 2)
+    val cut = file.dropRight(8)
+    val ex = intercept[IllegalArgumentException](GzipMembers.splitMembers(cut))
+    assert(ex.getMessage == "truncated gzip member")
+    assert(PayloadDecode.decodePayload(cut, "gzip", null) sameElements cut)
+  }
+
   test("property: member split is chunk-layout invariant (seeded sweep)") {
     val rnd = new scala.util.Random(42)
     for (_ <- 1 to 50) {

@@ -2,7 +2,8 @@ package graft.frontier
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
-import graft.operators.Multimodal
+import graft.operators.{Dedup, Multimodal}
+import org.apache.spark.sql.functions.col
 
 /** Per-row invariants from BASELINE.json: decoded-pixel PSNR ≥ 40 dB for
   * lossy rows, byte-exact for lossless; caption byte-exact equality. */
@@ -113,44 +114,77 @@ class ImageSpec extends AnyFunSuite with SparkTestBase {
     assert(dups.exists(r => r.getAs[String]("id_a") == "dup0" && r.getAs[String]("id_b") == "dup1"))
   }
 
-  test("maxDist = 0 single-chunk mask is all 64 bits (1L<<64 wraps to 1)") {
+  /** `Dedup.hammingPairs` over (id, hash) rows with bigint ids, or with
+    * the same ids as decimal strings (whose order differs: "10" < "2"). */
+  private def hamming(rows: Seq[(Long, Long)], maxDist: Int, asString: Boolean,
+                      maxBucket: Int = 1000,
+                      acc: Option[org.apache.spark.util.LongAccumulator] = None): Set[(Any, Any, Int)] = {
     import spark.implicits._
+    val df = rows.toDF("image_id", "phash")
+    val typed = if (asString) df.withColumn("image_id", col("image_id").cast("string")) else df
+    Dedup.hammingPairs(typed, "image_id", "phash", maxDist, maxBucket, acc)
+      .collect().map(r => (r.get(0), r.get(1), r.getInt(2))).toSet
+  }
+
+  /** The all-pairs Hamming join oracle, each pair oriented in the id
+    * type's order (Long order, or String order of the decimal ids). */
+  private def allPairs(rows: Seq[(Long, Long)], maxDist: Int, asString: Boolean): Set[(Any, Any, Int)] =
+    (for {
+      i <- rows.indices
+      j <- (i + 1) until rows.length
+      d = java.lang.Long.bitCount(rows(i)._2 ^ rows(j)._2)
+      if d <= maxDist
+    } yield {
+      val (x, y) = (rows(i)._1, rows(j)._1)
+      val xFirst = if (asString) x.toString < y.toString else x < y
+      val (a, b) = if (xFirst) (x, y) else (y, x)
+      if (asString) (a.toString, b.toString, d) else (a, b, d)
+    }).toSet
+
+  test("maxDist = 0 single-chunk mask is all 64 bits (1L<<64 wraps to 1)") {
     val rnd = new scala.util.Random(3)
-    val base = (0 until 50).map(i => (f"a$i%03d", rnd.nextLong()))
-    val dups = base.take(10).zipWithIndex.map { case ((_, h), i) => (f"d$i%03d", h) }
-    val got = Multimodal.imageNearDupsFromHashes(
-        (base ++ dups).toDF("image_id", "phash"), maxDist = 0)
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    // exactly the 10 exact-hash pairs — a zero mask would have bucketed
-    // ALL rows together and still passed small cases by brute force
-    assert(got == base.take(10).zipWithIndex
-      .map { case ((a, _), i) => (a, f"d$i%03d") }.toSet)
+    val base = (0 until 50).map(i => (i.toLong, rnd.nextLong()))
+    val dups = base.take(10).map { case (i, h) => (100 + i, h) }
+    for (asString <- Seq(true, false)) {
+      val got = hamming(base ++ dups, maxDist = 0, asString)
+      // exactly the 10 exact-hash pairs — a zero mask would have bucketed
+      // ALL rows together and still passed small cases by brute force
+      assert(got.size == 10, s"asString=$asString: ${got.size} pairs")
+      assert(got == allPairs(base ++ dups, 0, asString), s"asString=$asString")
+    }
   }
 
   test("phash pigeonhole recall is exactly 1 at the DEFAULT maxDist = 6") {
     // r2 verdict: the old 4-chunk layout broke the guarantee above
-    // distance 3 — chunks = maxDist+1 must equal all-pairs hamming
-    import spark.implicits._
+    // distance 3 — chunks = maxDist+1 must equal all-pairs hamming at
+    // imageNearDups' default maxDist
     val rnd = new scala.util.Random(7)
-    val base = (0 until 200).map(i => (f"b$i%04d", rnd.nextLong()))
-    val mutated = base.zipWithIndex.map { case ((_, h), i) =>
-      val d = 1 + i % 8 // distances 1..8 straddle the threshold
+    val base = (0 until 200).map(i => (i.toLong, rnd.nextLong()))
+    val mutated = base.map { case (i, h) =>
+      val d = 1 + (i % 8).toInt // distances 1..8 straddle the threshold
       var m = h
       rnd.shuffle((0 until 64).toList).take(d).foreach(b => m ^= (1L << b))
-      (f"m$i%04d", m)
+      (1000 + i, m)
     }
     val all = base ++ mutated
-    val got = Multimodal.imageNearDupsFromHashes(all.toDF("image_id", "phash")).collect()
-      .map(r => (r.getAs[String]("id_a"), r.getAs[String]("id_b"), r.getAs[Int]("hamming"))).toSet
-    val exp = (for {
-      i <- all.indices
-      j <- (i + 1) until all.length
-      d = java.lang.Long.bitCount(all(i)._2 ^ all(j)._2)
-      if d <= 6
-    } yield {
-      val (a, b) = if (all(i)._1 < all(j)._1) (all(i)._1, all(j)._1) else (all(j)._1, all(i)._1)
-      (a, b, d)
-    }).toSet
-    assert(got == exp, s"got ${got.size} pairs, expected ${exp.size}")
+    for (asString <- Seq(true, false)) {
+      val got = hamming(all, maxDist = 6, asString)
+      val exp = allPairs(all, 6, asString)
+      assert(got == exp, s"asString=$asString: got ${got.size} pairs, expected ${exp.size}")
+    }
+  }
+
+  test("hammingPairs over-cap bucket counts n - cap and pairs only the first cap ids in the id type's order") {
+    // five ids share one hash (one maxDist = 0 bucket), cap 3: Long order
+    // keeps 2, 3, 10; String order keeps "10", "100", "11"
+    val hot = Seq(2L, 3L, 10L, 11L, 100L).map(i => (i, 0x5eedL))
+    val rnd = new scala.util.Random(5)
+    val singles = (0 until 20).map(i => (1000L + i, rnd.nextLong()))
+    for ((asString, kept) <- Seq(false -> Seq(2L, 3L, 10L), true -> Seq(10L, 100L, 11L))) {
+      val acc = spark.sparkContext.longAccumulator(s"test.hamming.trunc.$asString")
+      val got = hamming(hot ++ singles, maxDist = 0, asString, maxBucket = 3, acc = Some(acc))
+      assert(acc.value == 2, s"asString=$asString: accumulator ${acc.value}, expected 5 - 3")
+      assert(got == allPairs(kept.map(i => (i, 0x5eedL)), 0, asString), s"asString=$asString")
+    }
   }
 }

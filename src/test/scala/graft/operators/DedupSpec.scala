@@ -129,7 +129,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     assert(viaStar == oracle, s"star vs union-find disagree on ${viaStar.toSet.diff(oracle.toSet)}")
   }
 
-  test("simhashPairs: mutated near-copies found, over-cap reported") {
+  test("simhashPairs: mutated near-copies found") {
     // simhash is a weighted bit-majority: one extra word flips only bits
     // whose vote margin is ≤1, so near-copy detection needs docs long
     // enough that a single-word edit stays within maxDist (300 words ⇒
