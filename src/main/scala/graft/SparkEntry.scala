@@ -510,7 +510,7 @@ object SparkEntry {
       // chunk-encode then gzip each text; decode_payload must invert both
       val encoded = docs.as[(Long, String)].map { case (id, text) =>
         val raw = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val gz = graft.core.GzipMembers.gzipMember(raw)
+        val gz = graft.core.WarcWriter.gzipMember(raw)
         val chunked = new java.io.ByteArrayOutputStream()
         gz.grouped(100).foreach { c =>
           chunked.write((c.length.toHexString + "\r\n").getBytes)

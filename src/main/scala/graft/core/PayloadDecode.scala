@@ -1,7 +1,10 @@
 package graft.core
 
 /** Chunked transfer decoding + content decoding for record payloads, with
-  * the reference's tolerance rules.
+  * the reference's tolerance rules. Gzip content is read by
+  * `WarcStreaming`'s gzip-member feed (`WarcStreaming.gunzip`), the
+  * engine's one gzip-member reader. Every `Inflater` a decode opens is
+  * ended before the decode returns or throws.
   *
   * Behavior reference (studied, not copied):
   *  - /root/reference/src/lib/readers.ts:165-226 (dechunk + tolerance:
@@ -111,6 +114,56 @@ object PayloadDecode {
     var enc = Option(contentEncoding).getOrElse("")
     if (enc.isEmpty && !chunked) enc = Option(transferEncoding).getOrElse("")
     val dechunked = if (chunked) dechunk(payload) else payload
-    if (enc.isEmpty) dechunked else GzipMembers.inflateAuto(dechunked, enc)
+    if (enc.isEmpty) dechunked else inflateAuto(dechunked, enc)
+  }
+
+  /** Inflate a gzip/deflate/deflateRaw payload with the reference's
+    * auto-detection: "deflate" retries as deflateRaw on error; any
+    * inflate failure falls back to the raw bytes
+    * (reference readers.ts:287-322). Multi-member gzip
+    * inputs are concatenated. */
+  private def inflateAuto(data: Array[Byte], encoding: String): Array[Byte] = {
+    if (data.isEmpty) return data
+    // pako's inflater auto-detects gzip vs zlib wrappers for both the
+    // "gzip" and "deflate" settings; only "deflate" additionally retries
+    // as raw deflate on error (readers.ts:287-299). Truth table verified
+    // by the reference's testReaders.test.ts:298-321.
+    def wrapped(): Array[Byte] =
+      if (data.length >= 2 && (data(0) & 0xff) == 0x1f && (data(1) & 0xff) == 0x8b)
+        WarcStreaming.gunzip(data)
+      else inflateOne(data, raw = false)
+    encoding match {
+      case "gzip" | "x-gzip" =>
+        try wrapped()
+        catch { case _: Exception => data }
+      case "deflate" =>
+        try wrapped()
+        catch {
+          case _: Exception =>
+            try inflateOne(data, raw = true)
+            catch { case _: Exception => data }
+        }
+      case "deflateRaw" =>
+        try inflateOne(data, raw = true)
+        catch { case _: Exception => data }
+      case _ => data
+    }
+  }
+
+  /** Inflate one zlib (`raw = false`) or raw deflate stream. */
+  private def inflateOne(data: Array[Byte], raw: Boolean): Array[Byte] = {
+    val inflater = new java.util.zip.Inflater(raw)
+    try {
+      inflater.setInput(data)
+      val bos = new java.io.ByteArrayOutputStream(math.min(data.length.toLong * 4, 1L << 16).toInt)
+      val tmp = new Array[Byte](64 * 1024)
+      while (!inflater.finished()) {
+        val n = inflater.inflate(tmp)
+        if (n > 0) bos.write(tmp, 0, n)
+        else if (inflater.needsInput() || inflater.needsDictionary())
+          throw new IllegalArgumentException("truncated/invalid deflate stream")
+      }
+      bos.toByteArray
+    } finally inflater.end()
   }
 }

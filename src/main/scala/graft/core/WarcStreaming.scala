@@ -26,6 +26,13 @@ import scala.collection.mutable
   * A `.warc.gz` member cut short — the deflate stream or its 8-byte
   * CRC/ISIZE trailer — throws `truncated gzip member`.
   *
+  * `GzipFeed` is the engine's one gzip-member reader: it also decodes
+  * `gzip` content (`gunzip`, called by `PayloadDecode`). Inflater
+  * lifetime: a feed ends its `Inflater` at each member end, on every
+  * error (truncated or garbage member, `DataFormatException`) and on
+  * `close()`. The iterator `parseStream` returns closes its feed and
+  * stream when it runs out; a caller that stops early calls `close()`.
+  *
   * `keepPayload = false` SKIPS payload bytes without buffering or copying
   * them (the reference's `skipFully`, indexer.ts:74) — so column pruning
   * reaches the parser, not just the emitted row.
@@ -63,6 +70,8 @@ object WarcStreaming {
     def memberRawStart(idx: Int): Long
     /** Raw length of member `idx`, defined once fully consumed. */
     def memberRawLen(idx: Int): Option[Long]
+    /** Release the feed's resources and close its stream. */
+    def close(): Unit
   }
 
   private final class PlainFeed(in0: InputStream) extends Feed {
@@ -89,12 +98,14 @@ object WarcStreaming {
     def memberIdx: Int = 0
     def memberRawStart(idx: Int): Long = 0L
     def memberRawLen(idx: Int): Option[Long] = None
+    def close(): Unit = in.close()
   }
 
   /** Streaming gzip-member inflater: one member inflated at a time in
     * 64 KiB chunks; raw (compressed) offsets tracked at member
     * granularity. `rawBase` offsets all raw positions — used by range
-    * splits that start mid-file. */
+    * splits that start mid-file. An error or `close()` ends the open
+    * member's inflater; the feed then reads as EOF. */
   private final class GzipFeed(in: InputStream, rawBase: Long = 0L) extends Feed {
     private val inBuf = new Array[Byte](1 << 16)
     private var inStart = 0
@@ -161,8 +172,18 @@ object WarcStreaming {
       true
     }
 
+    private def release(): Unit = {
+      eof = true
+      if (inflater != null) { inflater.end(); inflater = null }
+    }
+
+    def close(): Unit = { release(); in.close() }
+
     /** Refill outBuf with the next decompressed chunk; false at EOF. */
-    private def fill(): Boolean = {
+    private def fill(): Boolean =
+      try refill() catch { case e: Throwable => release(); throw e }
+
+    private def refill(): Boolean = {
       while (true) {
         if (eof) return false
         if (inflater == null) {
@@ -215,6 +236,14 @@ object WarcStreaming {
       k
     }
 
+    /** Write the rest of the content to `out`, chunk by chunk, without
+      * advancing `pos` (content decoding reads no offsets). */
+    def drainTo(out: java.io.OutputStream): Unit =
+      while (outStart < outEnd || fill()) {
+        out.write(outBuf, outStart, outEnd - outStart)
+        outStart = outEnd
+      }
+
     def skip(n: Long): Long = {
       var done = 0L
       while (done < n) {
@@ -233,10 +262,22 @@ object WarcStreaming {
 
   private final case class Line(bytes: Array[Byte], start: Long, startMember: Int)
 
+  /** The concatenated content of the gzip members in `data`. Throws
+    * on a truncated member or on bytes after the last member that are
+    * not one; the feed's inflater is ended either way. */
+  private[core] def gunzip(data: Array[Byte]): Array[Byte] = {
+    val feed = new GzipFeed(new java.io.ByteArrayInputStream(data))
+    try {
+      val out = new java.io.ByteArrayOutputStream(math.min(data.length.toLong * 4, 1L << 16).toInt)
+      feed.drainTo(out)
+      out.toByteArray
+    } finally feed.close()
+  }
+
   /** Parse one WARC stream. Gzip is detected by magic bytes (the
     * reference always tries gzip regardless of extension,
-    * readers.ts:316-322). The returned iterator owns `in` and closes it
-    * on exhaustion. */
+    * readers.ts:316-322). The returned iterator owns `in`: it closes
+    * `in` and ends its inflater on exhaustion or on `close()`. */
   def parseStream(
       in: InputStream,
       filename: String,
@@ -263,15 +304,19 @@ object WarcStreaming {
         * records, a pointer to record k must select k by identity
         * (e.g. WARC-Record-ID), not by position. null = first record. */
       sinkWhen: (String, Seq[HeaderKV]) => Boolean = null
-  ): Iterator[FramedRecord] = {
+  ): Iterator[FramedRecord] with java.io.Closeable = {
     val pin = new java.io.PushbackInputStream(in, 2)
-    val b0 = pin.read()
-    val b1 = if (b0 >= 0) pin.read() else -1
-    if (b1 >= 0) pin.unread(b1)
-    if (b0 >= 0) pin.unread(b0)
+    val (b0, b1) =
+      try {
+        val b0 = pin.read()
+        val b1 = if (b0 >= 0) pin.read() else -1
+        if (b1 >= 0) pin.unread(b1)
+        if (b0 >= 0) pin.unread(b0)
+        (b0, b1)
+      } catch { case e: Throwable => in.close(); throw e }
     val gz = isGzip || (b0 == 0x1f && b1 == 0x8b)
     val feed: Feed = if (gz) new GzipFeed(pin, rawBase) else new PlainFeed(pin)
-    new RecordIterator(feed, pin, filename, gz, keepCase, keepPayload, strictHeaders,
+    new RecordIterator(feed, filename, gz, keepCase, keepPayload, strictHeaders,
       payloadSink, sinkWhen)
   }
 
@@ -279,7 +324,6 @@ object WarcStreaming {
 
   private final class RecordIterator(
       feed: Feed,
-      underlying: InputStream,
       filename: String,
       gz: Boolean,
       keepCase: Boolean,
@@ -287,7 +331,7 @@ object WarcStreaming {
       strictHeaders: Boolean,
       payloadSink: (Array[Byte], Int, Int) => Unit = null,
       sinkWhen: (String, Seq[HeaderKV]) => Boolean = null
-  ) extends Iterator[FramedRecord] {
+  ) extends Iterator[FramedRecord] with java.io.Closeable {
 
     // records parsed but awaiting their end-member's raw length (gz only)
     private val pendingGz = mutable.Queue.empty[(FramedRecord, Int, Int)]
@@ -304,12 +348,19 @@ object WarcStreaming {
     override def hasNext: Boolean = { advance(); ready.nonEmpty }
     override def next(): FramedRecord = { advance(); ready.dequeue() }
 
+    /** Ends the feed's inflater and closes the stream; the iterator then
+      * yields only records already parsed. Idempotent. */
+    def close(): Unit = if (!closed) {
+      closed = true; pendingGz.clear()
+      try feed.close() catch { case _: Exception => }
+    }
+
     private def advance(): Unit = {
-      while (ready.isEmpty && !(exhausted && pendingGz.isEmpty)) {
+      while (!closed && ready.isEmpty && !(exhausted && pendingGz.isEmpty)) {
         if (!exhausted) parseOne()
         drain()
       }
-      if (exhausted && !closed) { closed = true; try underlying.close() catch { case _: Exception => } }
+      if (exhausted && pendingGz.isEmpty) close()
     }
 
     private def drain(): Unit = {
@@ -531,15 +582,14 @@ object WarcStreaming {
   }
 
   private def validMemberStart(openFrom: Long => InputStream, off: Long): Boolean = {
-    val in = openFrom(off)
+    val feed = new GzipFeed(openFrom(off), off)
     try {
-      val feed = new GzipFeed(in, off)
       val head = new Array[Byte](5)
       var got = 0
       var r = 0
       while (got < 5 && { r = feed.readInto(head, got, 5 - got); r > 0 }) got += r
       got == 5 && head.sameElements("WARC/".getBytes(StandardCharsets.US_ASCII))
     } catch { case _: Exception => false }
-    finally in.close()
+    finally feed.close()
   }
 }

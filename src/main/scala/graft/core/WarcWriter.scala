@@ -217,7 +217,18 @@ object WarcWriter {
     out.write(record.payload)
     out.write('\r'); out.write('\n'); out.write('\r'); out.write('\n')
     val raw = out.toByteArray
-    if (gzip) GzipMembers.gzipMember(raw) else raw
+    if (gzip) gzipMember(raw) else raw
+  }
+
+  /** Gzip-compress one record block as one member, the serializer's
+    * one-member-per-record layout
+    * (reference warcserializer.ts:100-167). */
+  def gzipMember(data: Array[Byte]): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream(data.length / 2 + 64)
+    val gz = new java.util.zip.GZIPOutputStream(bos)
+    gz.write(data)
+    gz.close()
+    bos.toByteArray
   }
 
   /** Re-serialize a parsed record (keep-case parse) — the round-trip

@@ -3,6 +3,8 @@ package graft.frontier
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
+import graft.core.Json
+import graft.core.JsValue.{JsArr, JsNum, JsObj}
 
 /** Atomic JSON marker files in the checkpoint root — the commit points
   * of the frontier (MANIFEST, FENCES, ROBOTS_*, and the state stores'
@@ -99,8 +101,6 @@ final class StateStore(spark: SparkSession, markers: Markers, ckDir: String,
   val gcFailures = new AtomicLong
 
   private val MarkerRe = (java.util.regex.Pattern.quote(prefix) + "(\\d+)\\.json").r
-  private val FoldedRe = """"folded"\s*:\s*\[([0-9,\s]*)\]""".r
-  private val UptoRe = """"upto"\s*:\s*(-?\d+)""".r
 
   private var published: Set[Int] = null
   private var deltas: Set[Int] = null
@@ -145,14 +145,14 @@ final class StateStore(spark: SparkSession, markers: Markers, ckDir: String,
     val direct = claims.getOrElseUpdate(run, {
       val js = markers.read(markerName(run)).getOrElse(
         throw new IllegalStateException(s"marker ${markerName(run)} vanished from $ckDir"))
-      require(UptoRe.findFirstMatchIn(js).exists(_.group(1).toInt == run),
+      val fields = Json.parse(js).toOption.collect { case JsObj(kv) => kv.toMap }
+      require(fields.exists(_.get("upto").contains(JsNum(run))),
         s"unreadable state marker ${markerName(run)} in $ckDir: $js")
-      if (!js.contains("\"folded\"")) None
-      else FoldedRe.findFirstMatchIn(js) match {
-        case Some(m) => Some(m.group(1).split(",").toSeq.map(_.trim).filter(_.nonEmpty)
-          .map(_.toInt).toSet)
-        case None => throw new IllegalArgumentException(
-          s"unreadable folded claim in ${markerName(run)} in $ckDir: $js")
+      def badClaim = new IllegalArgumentException(
+        s"unreadable folded claim in ${markerName(run)} in $ckDir: $js")
+      fields.get.get("folded").map {
+        case JsArr(vs) => vs.map { case JsNum(v) if v.isValidInt => v.toInt; case _ => throw badClaim }.toSet
+        case _ => throw badClaim
       }
     })
     direct.getOrElse(runs.filter(_ < run))

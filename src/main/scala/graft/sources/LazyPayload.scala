@@ -40,23 +40,20 @@ object LazyPayload {
   def streamRecordAt(path: String, offset: Long, conf: Configuration,
                      sink: (Array[Byte], Int, Int) => Unit,
                      recordId: String = null): FramedRecord = {
-    val in = WarcScan.open(path, conf, offset)
+    val name = path.substring(path.lastIndexOf('/') + 1)
+    def idMatches(hdrs: Seq[graft.core.HeaderKV]): Boolean =
+      hdrs.exists(kv => kv.name.equalsIgnoreCase("WARC-Record-ID") && kv.value == recordId)
+    val it = WarcStreaming.parseStream(WarcScan.open(path, conf, offset), name,
+      isGzip = WarcFraming.isGzipName(name), keepPayload = false,
+      rawBase = offset, payloadSink = sink,
+      sinkWhen = if (recordId == null) null else (_, hdrs) => idMatches(hdrs))
     try {
-      val name = path.substring(path.lastIndexOf('/') + 1)
-      def idMatches(hdrs: Seq[graft.core.HeaderKV]): Boolean =
-        hdrs.exists(kv => kv.name.equalsIgnoreCase("WARC-Record-ID") && kv.value == recordId)
-      val it = WarcStreaming.parseStream(in, name,
-        isGzip = WarcFraming.isGzipName(name), keepPayload = false,
-        rawBase = offset, payloadSink = sink,
-        sinkWhen = if (recordId == null) null else (_, hdrs) => idMatches(hdrs))
       val found = it.find(r =>
         recordId == null || r.warcHeader("WARC-Record-ID").contains(recordId))
       require(found.isDefined,
         s"no record${if (recordId != null) s" with id $recordId" else ""} at $path:$offset")
       found.get
-    } finally {
-      try in.close() catch { case _: Exception => }
-    }
+    } finally it.close()
   }
 
   private def mdFor(opts: WarcWriter.DigestOpts): java.security.MessageDigest =

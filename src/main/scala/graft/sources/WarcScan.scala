@@ -159,17 +159,22 @@ object WarcScan {
     val path = piece.toPath.toString
     val name = piece.toPath.getName
     val end = piece.start + piece.length
-    def parseFrom(offset: Long): Iterator[FramedRecord] = {
-      val in = open(path, conf, offset)
-      Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => in.close()))
-      WarcStreaming.parseStream(in, name, WarcFraming.isGzipName(name),
-        keepPayload = keepPayload, rawBase = offset)
+    def parseFrom(offset: Long): Iterator[FramedRecord] with java.io.Closeable = {
+      val it = WarcStreaming.parseStream(open(path, conf, offset), name,
+        WarcFraming.isGzipName(name), keepPayload = keepPayload, rawBase = offset)
+      Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => it.close()))
+      it
     }
     def parse: Iterator[FramedRecord] =
       if (piece.start == 0 && piece.length == piece.fileSize) parseFrom(0L)
       else {
         val sync = WarcStreaming.syncToMemberStart(open(path, conf, _), piece.start, end)
-        if (sync < 0) Iterator.empty else parseFrom(sync).takeWhile(_.offset < end)
+        if (sync < 0) Iterator.empty
+        else {
+          val it = parseFrom(sync)
+          // the first record past the range ends the read: close the file now
+          it.takeWhile(r => r.offset < end || { it.close(); false })
+        }
       }
     if (!lenient) parse
     else new Iterator[FramedRecord] {

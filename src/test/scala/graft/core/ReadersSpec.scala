@@ -2,7 +2,8 @@ package graft.core
 
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.charset.StandardCharsets
-import java.util.zip.{Deflater, DeflaterOutputStream}
+import java.io.{ByteArrayInputStream, InputStream}
+import java.util.zip.{CRC32, Deflater, DeflaterOutputStream}
 
 /** Decoding tolerance goldens ported from
   * /root/reference/test/testReaders.test.ts (chunked tolerance matrix
@@ -38,7 +39,7 @@ class ReadersSpec extends AnyFunSuite {
   }
 
   test("chunked + gzip actually compressed") {
-    val gz = GzipMembers.gzipMember(utf8("ABCDE"))
+    val gz = WarcWriter.gzipMember(utf8("ABCDE"))
     val chunked = new java.io.ByteArrayOutputStream()
     chunked.write(utf8(gz.length.toHexString + "\r\n")); chunked.write(gz)
     chunked.write(utf8("\r\n0\r\n\r\n"))
@@ -63,7 +64,7 @@ class ReadersSpec extends AnyFunSuite {
       (null, null, true), (null, "gzip", false), (null, "deflate", false), (null, "deflateRaw", false))
     for ((decompress, compress, valid) <- cases) {
       val compressed = compress match {
-        case "gzip"       => GzipMembers.gzipMember(data)
+        case "gzip"       => WarcWriter.gzipMember(data)
         case "deflate"    => zlib(data, raw = false)
         case "deflateRaw" => zlib(data, raw = true)
         case null         => data
@@ -74,26 +75,55 @@ class ReadersSpec extends AnyFunSuite {
     }
   }
 
+  /** One uncompressed WARC resource record holding `body`. */
+  private def record(i: Int, body: String): Array[Byte] =
+    WarcWriter.serialize(WarcWriter.create(url = s"https://ex.org/$i", date = "2020-01-01T00:00:00Z",
+      warcType = "resource", payload = utf8(body), recordId = f"00000000-0000-0000-0000-$i%012d"),
+      WarcWriter.CdxDigest)
+
+  private def parse(in: InputStream): Vector[FramedRecord] =
+    WarcStreaming.parseStream(in, "t.warc.gz", isGzip = true).toVector
+
+  private def parse(file: Array[Byte]): Vector[FramedRecord] = parse(new ByteArrayInputStream(file))
+
+  /** `data` as one gzip member whose header sets the flags `flg` (FHCRC
+    * 0x02, FEXTRA 0x04, FNAME 0x08, FCOMMENT 0x10) and their fields. */
+  private def flaggedMember(data: Array[Byte], flg: Int): Array[Byte] = {
+    val plain = WarcWriter.gzipMember(data)
+    val h = new java.io.ByteArrayOutputStream()
+    h.write(Array[Byte](0x1f, 0x8b.toByte, 8, flg.toByte, 0, 0, 0, 0, 0, 3))
+    if ((flg & 0x04) != 0) h.write(Array[Byte](3, 0, 'x'.toByte, 0, 'y'.toByte)) // XLEN 3, a NUL inside
+    if ((flg & 0x08) != 0) h.write(utf8("name.warc\u0000"))
+    if ((flg & 0x10) != 0) h.write(utf8("a comment\u0000"))
+    if ((flg & 0x02) != 0) {
+      val crc = new CRC32
+      crc.update(h.toByteArray)
+      h.write(crc.getValue.toInt & 0xff); h.write((crc.getValue.toInt >> 8) & 0xff)
+    }
+    h.write(plain, 10, plain.length - 10)
+    h.toByteArray
+  }
+
   test("multi-member gzip: offsets account raw bytes, data concatenates") {
     val texts = Seq("Some Data", "Some\n More Data", "Another Chunk of Data", "extra data")
-    val bos = new java.io.ByteArrayOutputStream()
-    texts.foreach(t => bos.write(GzipMembers.gzipMember(utf8(t))))
-    val members = GzipMembers.splitMembers(bos.toByteArray)
-    assert(members.length == 4)
-    assert(members.map(m => str(m.data)) == texts)
-    // members tile the file exactly: start_i + len_i == start_{i+1}
-    members.sliding(2).foreach {
-      case Vector(a, b) => assert(a.rawStart + a.rawLen == b.rawStart)
-      case _            =>
-    }
-    assert(members.last.rawStart + members.last.rawLen == bos.toByteArray.length)
+    val recs = texts.zipWithIndex.map { case (t, i) => record(i, t) }
+    val members = recs.map(WarcWriter.gzipMember)
+    val file = members.reduce(_ ++ _)
+    assert(PayloadDecode.decodePayload(file, "gzip", null) sameElements recs.reduce(_ ++ _))
+    val framed = parse(file)
+    assert(framed.map(r => str(r.payload)) == texts)
+    // one member per record: each record spans its member's raw bytes,
+    // and the members tile the file
+    val starts = members.scanLeft(0L)(_ + _.length)
+    assert(framed.map(r => (r.offset, r.length)) == starts.zip(members.map(_.length.toLong)))
+    assert(starts.last == file.length)
   }
 
   test("a gzip member cut inside its CRC/ISIZE trailer is truncated; content decoding keeps the raw bytes") {
     val file = WarcStreamingSpec.twoMemberGz()
-    assert(GzipMembers.splitMembers(file).length == 2)
+    assert(parse(file).length == 2)
     val cut = file.dropRight(8)
-    val ex = intercept[IllegalArgumentException](GzipMembers.splitMembers(cut))
+    val ex = intercept[IllegalArgumentException](parse(cut))
     assert(ex.getMessage == "truncated gzip member")
     assert(PayloadDecode.decodePayload(cut, "gzip", null) sameElements cut)
   }
@@ -102,11 +132,51 @@ class ReadersSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(42)
     for (_ <- 1 to 50) {
       val parts = (1 to (1 + rnd.nextInt(6))).map(_ => rnd.nextString(1 + rnd.nextInt(40))).toList
-      val bos = new java.io.ByteArrayOutputStream()
-      parts.foreach(p => bos.write(GzipMembers.gzipMember(utf8(p))))
-      val members = GzipMembers.splitMembers(bos.toByteArray)
-      assert(members.map(m => str(m.data)) == parts)
+      val file = parts.zipWithIndex.map { case (p, i) => WarcWriter.gzipMember(record(i, p)) }.reduce(_ ++ _)
+      val whole = parse(file)
+      // the same bytes, delivered in reads of 1 to 17 bytes
+      val dribbled = parse(new ByteArrayInputStream(file) {
+        override def read(b: Array[Byte], off: Int, len: Int): Int =
+          super.read(b, off, math.min(len, 1 + rnd.nextInt(17)))
+      })
+      assert(whole.map(r => str(r.payload)) == parts)
+      assert(dribbled.map(r => (r.offset, r.length, str(r.payload))) ==
+        whole.map(r => (r.offset, r.length, str(r.payload))))
     }
+  }
+
+  test("gzip header flags FEXTRA, FNAME, FCOMMENT and FHCRC: parseStream and decodePayload read the same bytes") {
+    val flags = Seq(0x02, 0x04, 0x08, 0x10, 0x1e)
+    val recs = flags.indices.map(i => record(i, s"body $i"))
+    val flagged = recs.zip(flags).map { case (r, f) => flaggedMember(r, f) }.reduce(_ ++ _)
+    assert(PayloadDecode.decodePayload(flagged, "gzip", null) sameElements recs.reduce(_ ++ _))
+    val plain = parse(recs.map(WarcWriter.gzipMember).reduce(_ ++ _))
+    val framed = parse(flagged)
+    assert(framed.map(r => str(r.payload)) == flags.indices.map(i => s"body $i"))
+    assert(framed.map(r => (r.warcHeaders, str(r.payload))) == plain.map(r => (r.warcHeaders, str(r.payload))))
+  }
+
+  test("bytes after the last gzip member that are not a gzip member make decodePayload return its input") {
+    val members = WarcWriter.gzipMember(utf8("one")) ++ WarcWriter.gzipMember(utf8("two"))
+    assert(str(PayloadDecode.decodePayload(members, "gzip", null)) == "onetwo")
+    for (suffix <- Seq(utf8("not gzip"), Array[Byte](0x1f), Array[Byte](0x1f, 0x8b.toByte, 8, 0))) {
+      val body = members ++ suffix
+      assert(PayloadDecode.decodePayload(body, "gzip", null) sameElements body)
+    }
+  }
+
+  test("a parse closed after its first record closes its underlying stream") {
+    var closes = 0
+    val in = new ByteArrayInputStream(WarcStreamingSpec.twoMemberGz()) {
+      override def close(): Unit = { closes += 1; super.close() }
+    }
+    val it = WarcStreaming.parseStream(in, "t.warc.gz", isGzip = true)
+    assert(it.next().warcTargetURI == "https://ex.org/0")
+    assert(closes == 0)
+    it.close()
+    it.close()
+    assert(closes == 1)
+    assert(!it.hasNext)
   }
 
   test("property: dechunk inverts chunked encoding at any chunk size (seeded sweep)") {

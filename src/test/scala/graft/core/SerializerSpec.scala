@@ -88,7 +88,7 @@ class SerializerSpec extends AnyFunSuite {
       statusline = "HTTP/1.1 404 Not Found",
       payload = utf8("some\ntext"))
     val gz = WarcWriter.serialize(rec, gzip = true)
-    val out = new String(GzipMembers.inflateGzipAllMembers(gz), StandardCharsets.UTF_8)
+    val out = new String(PayloadDecode.decodePayload(gz, "gzip", null), StandardCharsets.UTF_8)
     assert(out ==
       "WARC/1.0\r\n" +
         "WARC-Record-ID: <urn:uuid:12345678-feb0-11e6-8f83-68a86d1772ce>\r\n" +

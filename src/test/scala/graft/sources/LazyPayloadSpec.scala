@@ -63,7 +63,7 @@ class LazyPayloadSpec extends AnyFunSuite with SparkTestBase {
     val plain = WarcWriter.serialize(r1, WarcWriter.CdxDigest) ++
       WarcWriter.serialize(r2, WarcWriter.CdxDigest)
     val f = dir.resolve("multi.warc.gz")
-    java.nio.file.Files.write(f, graft.core.GzipMembers.gzipMember(plain))
+    java.nio.file.Files.write(f, graft.core.WarcWriter.gzipMember(plain))
     val (digest, len) = LazyPayload.digestPayloadAt(f.toString, 0, conf)
     assert(len == b1.length.toLong, s"sink leaked past record 1: $len bytes")
     assert(digest == sha1b32(b1))
